@@ -91,18 +91,12 @@ object Bench {
       // 128-key sort-based fallback (see TopK.ensureHashAggKeyRoom)
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         "65536")
-      // FIFO scheduling (r13): the r12 session-wide FAIR switch shipped to
-      // get the 10M planner spread under 1.5 and did the opposite — the
-      // driver's clean-band 10M filter artifacts read subindex 2,323 →
-      // 1,922 q/s, planner spread 1.86 → 3.34, exact scan 324 → 267 at
-      // identical knobs, the only session-wide change riding every job
-      // (VERDICT r12 "What's wrong" #1). FIFO is also the guide-§2.6
-      // backfill shape concurrent stripe jobs actually want: the earliest
-      // job's tail frees slots the next job's tasks fill, instead of FAIR
-      // time-slicing every in-flight job thin. SPARK_GRAFT_SCHEDULER=FAIR
-      // keeps the r12 arm reproducible for the A/B.
-      .config("spark.scheduler.mode",
-        sys.env.getOrElse("SPARK_GRAFT_SCHEDULER", "FIFO"))
+      // Spark's default FIFO scheduling: a session-wide FAIR switch (r12)
+      // measured worse on every 10M filter row — subindex 2,323 → 1,922
+      // q/s, planner spread 1.86 → 3.34, exact scan 324 → 267 at identical
+      // knobs. FIFO is also the backfill shape concurrent stripe jobs
+      // want: the earliest job's tail frees slots the next job's tasks
+      // fill, instead of time-slicing every in-flight job thin.
       // fixture passes over the scaled corpora are scan-bound: 64 MB
       // splits give local[32] full parallelism on a ~2.6 GB parquet
       // (default 128 MB → ~20 tasks pins a third of the box idle)
@@ -504,23 +498,10 @@ object Bench {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
       try {
         val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        // each branch names its own scheduler pool. Under the default
-        // FIFO session (r13) the property is inert — FIFO has no pools,
-        // and the r12 A/B showed the FAIR split hurt the whole 10M track
-        // (subindex −17%, planner spread 1.86 → 3.34) — but it keeps the
-        // SPARK_GRAFT_SCHEDULER=FAIR arm of the A/B meaningful: under
-        // FAIR the branches land in these pools exactly as r12 ran them.
-        // Pool locality is per thread; probeGroupsBatch's internal
-        // stripe threads are created after the property is set, so they
-        // inherit the graph pool.
         val fa = scala.concurrent.Future {
-          spark.sparkContext.setLocalProperty("spark.scheduler.pool",
-            "graft_planner_scan")
           filterServed.probeBatch(plannerScanQs, k = 10)
         }(ec)
         val fb = scala.concurrent.Future {
-          spark.sparkContext.setLocalProperty("spark.scheduler.pool",
-            "graft_planner_graph")
           tagRegistry.probeGroupsBatch(plannerGroups, k = 10,
             efSearch = subindexEf, slices = subSlices)
         }(ec)
@@ -736,19 +717,14 @@ object Bench {
     // the grid, not the algorithm. Sub-1M corpora keep the r8 grid exactly.
     val graphSweepEfs = Seq(8, 16, 24, 32, 48, 64, 96, 128) ++
       (if (n >= 1000000L) Seq(256, 512) else Seq.empty)
-    // r13 (VERDICT r12 item 7) — measured and NOT adopted: replacing the
-    // r12 concurrent-job striping with a one-job in-task fan
-    // (probeBatch(fan=) over FanoutRDD, parts × fan tasks in ONE job) read
-    // SLOWER on this host (graph track A/B: 12.5k → 10.6k q/s; ProbeFloor
-    // medians 47.7 → 49.5 ms at ef8, 48.7 → 57.3 ms at ef32) — the sf0.1
-    // floor is per-TASK event-loop bookkeeping (64 launches either way),
-    // which concurrent jobs already pipeline, not the per-job submit. The
-    // fan stays a tested library capability (KnnSpec parity); the rows
-    // keep striping. What DID land from the same measurement: probeBatch
-    // no longer broadcasts its (almost always empty) tombstone/delta
-    // collections — 2 creations + 2 blocking destroys per stripe per
-    // batch of driver-serialized bookkeeping, ~26% of the striped batch
-    // wall in the floor harness (65.8 → 48.7 ms at ef32).
+    // Concurrent-job striping stays: a one-job in-task fan-out (parts ×
+    // stripes tasks in ONE job) read SLOWER on the graph track (12.5k →
+    // 10.6k q/s; batch medians 47.7 → 49.5 ms at ef8, 48.7 → 57.3 ms at
+    // ef32) — the sf0.1 floor is per-TASK event-loop bookkeeping (64
+    // launches either way), which concurrent jobs already pipeline, not the
+    // per-job submit. Dropping the per-batch tombstone/delta broadcasts
+    // (2 creations + 2 blocking destroys per stripe) cut the striped batch
+    // from 65.8 to 48.7 ms at ef32; a batch now ships one broadcast.
     def graphFamily(family: String, resident: index.HnswResident,
                     truth: DataFrame): (Int, Double) = {
       val recalls = graphSweepEfs.map { ef =>

@@ -61,6 +61,12 @@ final class HnswIndex(m: Int = 16, efConstruction: Int = 100,
 
   def size: Int = ids.length
 
+  /** Vector dimension of the indexed rows; -1 while empty. */
+  def dim: Int =
+    if (vecs.nonEmpty) vecs(0).length
+    else if (codes.nonEmpty) codes(0).length
+    else -1
+
   /** SQ8 storage (hnswalg.h:132-136 memory model: the graph keeps uint8
     * codes, traversal distances are integer): present iff `quant` is set.
     * Code = round(255·(x−min_d)/span_d) clamped to [0,255], one byte per

@@ -22,7 +22,8 @@ final case class HnswNodeRow(part: Int, seq: Int, id: Long, vec: Array[Float],
   * [[HnswKnn.probeSaved]]/[[HnswKnn.knn]] on the same build. Call
   * [[unload]] when done — the graphs hold executor storage until then. */
 final class HnswResident(spark: SparkSession,
-                         rdd: org.apache.spark.rdd.RDD[(HnswIndex, Map[Long, Array[Int]])]) {
+                         rdd: org.apache.spark.rdd.RDD[(HnswIndex, Map[Long, Array[Int]])],
+                         dim: Int) {
 
   private def run(qs: Array[(Long, Array[Float], Array[Int])], k: Int,
                   efSearch: Int, filtered: Boolean,
@@ -74,92 +75,52 @@ final class HnswResident(spark: SparkSession,
     * server's QPS loop actually measures (the reference's harness feeds a
     * resident index from a preloaded array and collects results client-side
     * per batch, faiss.py:196-205 + the bench loop). One broadcast + ONE
-    * narrow job per batch: per-partition top-k candidates come back to the
-    * driver (k·nq·P rows — driver-sized by the same argument that lets the
-    * query set broadcast) and merge in a per-query bounded sort, skipping
-    * the global top-k exchange stage entirely. Output rows are (qid, id,
-    * dist, rank), sorted by (qid, rank).
+    * narrow job per batch ([[ResidentServe]]): per-partition top-k
+    * candidates come back to the driver (k·nq·P rows — driver-sized by the
+    * same argument that lets the query set broadcast) and merge in a
+    * per-query bounded sort, skipping the global top-k exchange stage
+    * entirely. Output rows are (qid, id, dist, rank), sorted by (qid,
+    * rank).
     *
-    * `fan` > 1 (r13, VERDICT r12 item 7) widens the SAME single job to
-    * parts × fan tasks via [[FanoutRDD]]: task (shard s, stripe t) probes
-    * round-robin stripe t of the batch against shard s, so idle cores fill
-    * WITHOUT the per-job floor that r12's concurrent-job striping paid per
-    * stripe (~10–14 ms/job on this host, measured in graft.ProbeFloor —
-    * the sf0.1 serving rows were bounded by it). Every (query, shard) pair
-    * is still computed exactly once with the unchanged kernel, so results
-    * are identical row-for-row at any fan (KnnSpec asserts it);
-    * `fan = 1` is the pre-r13 path byte-for-byte. */
+    * `tombstones` are excluded in-traversal (see [[probe]]). `delta` holds
+    * rows inserted since the resident generation was built, served by
+    * exact scan and merged with the graph candidates (the FreshDiskANN
+    * shape: immutable built index + small mutable delta), striped across
+    * partitions so the scan parallelizes with the probe; the caller bounds
+    * its size. Both ride in the batch's one broadcast, so a clean batch
+    * pays nothing for them. */
   def probeBatch(qs: Array[(Long, Array[Float])], k: Int, efSearch: Int = 64,
                  tombstones: Set[Long] = Set.empty,
                  delta: Array[(Long, Array[Float])] = Array.empty,
-                 treeMergeAt: Int = 64,
-                 fan: Int = 1): Array[(Long, Long, Double, Long)] = {
-    val f = math.max(1, math.min(fan, math.max(1, qs.length)))
-    val bq = spark.sparkContext.broadcast(qs)
-    // empty tombstone/delta collections skip their broadcasts entirely
-    // (r13): the CLEAN-index serving batch — every headline row but the
-    // mutated one — paid 2 broadcast creations + 2 blocking destroys per
-    // batch (per STRIPE under r12 striping) for two empty collections,
-    // and that driver-side bookkeeping is a measured part of the sf0.1
-    // submit floor (graft.ProbeFloor: ~1.6 ms per empty create+destroy,
-    // serialized on the driver).
-    val bt = if (tombstones.isEmpty) None
-             else Some(spark.sparkContext.broadcast(tombstones))
-    // delta buffer: rows inserted since the resident generation was built,
-    // served by exact scan and merged with the graph candidates (the
-    // FreshDiskANN shape: immutable built index + small mutable delta).
-    // Striped across partitions so the scan parallelizes with the probe;
-    // the caller bounds its size, so the broadcast is small by construction.
-    val bd = if (delta.isEmpty) None
-             else Some(spark.sparkContext.broadcast(delta))
+                 treeMergeAt: Int = 64): Array[(Long, Long, Double, Long)] = {
+    ResidentServe.validate(k, dim, qs.iterator.map(_._2.length))
     val nParts = math.max(rdd.getNumPartitions, 1)
-    val local = Fanout.of(rdd, f).flatMap { case ((idx, _), stripe) =>
-      val dead = bt.map(_.value).getOrElse(Set.empty[Long])
-      // parent shard index: child partitions pack as shard * fan + stripe
-      val part = TaskContext.getPartitionId() / f
-      // this SHARD's stripe of the delta buffer (delta placement must not
-      // depend on the query fan, or fanned and unfanned results could
-      // diverge in which shard ranks a delta row)
-      val slice = Array.newBuilder[(Long, Array[Float])]
-      var di = part
-      val dArr = bd.map(_.value).getOrElse(Array.empty[(Long, Array[Float])])
-      while (di < dArr.length) { slice += dArr(di); di += nParts }
-      val mySlice = slice.result()
-      val qarr = bq.value
-      Iterator.range(stripe, qarr.length, f).flatMap { qi =>
-        val (qid, qv) = qarr(qi)
+    // per-query merge with id-dedup (an id can arrive from both the graph
+    // and the delta with bit-identical distance): driver merge at serving
+    // partition counts, two-level treeAggregate past `treeMergeAt` shards
+    ResidentServe.probe(rdd, (qs, tombstones, delta), qs.length, k,
+        treeMergeAt) { (shard, batch) =>
+      val (idx, _) = shard
+      val (queries, dead, dArr) = batch
+      // this shard's stripe of the delta buffer
+      val mine = Iterator.range(TaskContext.getPartitionId(), dArr.length, nParts)
+        .map(dArr).filterNot { case (id, _) => dead.contains(id) }.toArray
+      queries.iterator.flatMap { case (qid, qv) =>
         val res =
           if (dead.nonEmpty)
             idx.searchFiltered(qv, k, efSearch, id => !dead.contains(id))
           else idx.search(qv, k, efSearch)
-        val extra = mySlice.iterator
-          .filterNot { case (id, _) => dead.contains(id) }
-          .map { case (id, v) => (id, idx.pairDist(qv, v)) }
-        // keep the contract: k DISTINCT candidate rows per (query,
-        // partition) — a re-inserted graph-resident id shows up in both
-        // sources with bit-identical distance, and counting it twice here
-        // could evict a genuine k-th candidate
-        val dup = scala.collection.mutable.HashSet.empty[Long]
-        (res.iterator ++ extra).toArray.sortBy { case (id, d) => (d, id) }
-          .iterator.filter { case (id, _) => dup.add(id) }
-          .take(k).map { case (id, d) => (qid, id, d) }
+        // k DISTINCT candidates per (query, partition): a re-inserted
+        // graph-resident id shows up in both sources with bit-identical
+        // distance, and counting it twice could evict a genuine k-th
+        val top = new TopKBuffer(k)
+        res.foreach { case (id, d) => top.offer(d, id) }
+        mine.foreach { case (id, v) =>
+          if (!top.contains(id)) top.offer(idx.pairDist(qv, v), id)
+        }
+        top.rows(qid)
       }
     }
-    // per-query merge with id-dedup (an id can arrive from both the graph
-    // and the delta with bit-identical distance): driver merge at serving
-    // partition counts, two-level treeAggregate past `treeMergeAt` shards
-    // (see [[ProbeMerge]]) — the driver stops being the fan-in ceiling.
-    // The tree gate scales by `f`: fan multiplies TASK count, not candidate
-    // volume (each (query, shard) pair still emits from exactly one child),
-    // and the volume bound `estRows` is unchanged — without the scaling a
-    // fanned sf0.1 batch would spill into the treeAggregate regime (an
-    // exchange) on partition count alone.
-    val out = ProbeMerge.topK(local, k, treeMergeAt * f,
-      estRows = qs.length.toLong * k * nParts)
-    // a serving loop issues many batches against one resident index: drop
-    // the per-batch broadcasts eagerly or the driver accumulates them
-    bq.destroy(); bt.foreach(_.destroy()); bd.foreach(_.destroy())
-    out
   }
 
   /** [[probeBatch]] with DataFrame plumbing on both ends. Results equal
@@ -175,26 +136,12 @@ final class HnswResident(spark: SparkSession,
 
   def numPartitions: Int = rdd.getNumPartitions
 
-  /** Loan the PRE-MERGE candidate rows (qid, id, dist) of one probe batch
-    * — per-partition top-k, the stream [[probeBatch]] feeds [[ProbeMerge]]
-    * — to `f`, destroying the batch broadcast after `f` has run its jobs.
-    * For serving reduces that fold MORE than a plain top-k merge into the
-    * candidate fan-in ([[MaxSimServe]]'s distributed regime) without a
-    * second probe pass over the graphs. */
-  private[index] def withCandidates[T](qs: Array[(Long, Array[Float])],
-                                       k: Int, efSearch: Int)(
-      f: org.apache.spark.rdd.RDD[(Long, Long, Double)] => T): T = {
-    val bq = spark.sparkContext.broadcast(qs)
-    try f(rdd.flatMap { case (idx, _) =>
-      bq.value.iterator.flatMap { case (qid, qv) =>
-        idx.search(qv, k, efSearch).iterator.map { case (id, d) => (qid, id, d) }
-      }
-    })
-    finally bq.destroy()
-  }
-
-  /** [[withCandidates]] at ARRAY granularity: one (qid, sorted candidates)
-    * row per (query, partition) instead of one row per candidate. The
+  /** Loan the PRE-MERGE candidates of one probe batch to `f` — one (qid,
+    * sorted candidates) row per (query, partition), the stream
+    * [[probeBatch]] feeds [[ProbeMerge]] — destroying the batch broadcast
+    * after `f` has run its jobs. For serving reduces that fold MORE than a
+    * plain top-k merge into the candidate fan-in ([[MaxSimServe]]'s
+    * distributed regime) without a second probe pass over the graphs. The
     * arrays arrive already (dist asc, id asc)-sorted from the search, so a
     * downstream `reduceByKey(ProbeMerge.mergeTwo(_, _, c))` costs
     * O(P · c) per query — merging P sorted arrays — where the singleton
@@ -205,13 +152,14 @@ final class HnswResident(spark: SparkSession,
   private[index] def withCandidateArrays[T](qs: Array[(Long, Array[Float])],
                                             k: Int, efSearch: Int)(
       f: org.apache.spark.rdd.RDD[(Long, Array[(Long, Double)])] => T): T = {
-    val bq = spark.sparkContext.broadcast(qs)
-    try f(rdd.flatMap { case (idx, _) =>
-      bq.value.iterator.map { case (qid, qv) =>
-        (qid, idx.search(qv, k, efSearch))
-      }
-    })
-    finally bq.destroy()
+    ResidentServe.validate(k, dim, qs.iterator.map(_._2.length))
+    ResidentServe.withBroadcast(rdd, qs) { bq =>
+      f(rdd.flatMap { case (idx, _) =>
+        bq.value.iterator.map { case (qid, qv) =>
+          (qid, idx.search(qv, k, efSearch))
+        }
+      })
+    }
   }
 
   private[index] def graphs: org.apache.spark.rdd.RDD[(HnswIndex, Map[Long, Array[Int]])] = rdd
@@ -498,9 +446,13 @@ object HnswKnn {
         Iterator.single((idx, tagMap.result()))
       }
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    built.count() // materialize the graphs before the first probe
-    new HnswResident(spark, built)
+    new HnswResident(spark, built, materialize(built))
   }
+
+  /** Pin freshly persisted graphs; returns their vector dimension. */
+  private def materialize(
+      rdd: org.apache.spark.rdd.RDD[(HnswIndex, Map[Long, Array[Int]])]): Int =
+    ResidentServe.materialize(rdd)(g => Iterator(g._1.dim).filter(_ >= 0))
 
   def loadResident(spark: SparkSession, path: String): HnswResident = {
     import spark.implicits._
@@ -514,8 +466,7 @@ object HnswKnn {
         (idx, arr.map(r => r.id -> r.tags).toMap)
       }
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    rdd.count() // materialize the graphs before the first probe
-    new HnswResident(spark, rdd)
+    new HnswResident(spark, rdd, materialize(rdd))
   }
 
   /** One persisted row of a QUANTIZED partition-local graph: uint8 codes

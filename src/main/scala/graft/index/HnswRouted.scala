@@ -33,12 +33,11 @@ final class HnswRouted(spark: SparkSession,
     * convention). Ties break to the lower cid. */
   private def rankCentroids(qv: Array[Float]): Array[(Double, Int)] =
     centroids.map { case (cid, c) =>
-      var acc = 0.0; var i = 0
-      val n = math.min(qv.length, c.length)
-      if (ipMetric) { while (i < n) { acc -= qv(i).toDouble * c(i).toDouble; i += 1 } }
-      else { while (i < n) { val d = qv(i).toDouble - c(i).toDouble; acc += d * d; i += 1 } }
-      (acc, cid)
+      (ResidentServe.dist(qv, c, ipMetric), cid)
     }.sortBy(identity)
+
+  /** The routed index's vector dimension; -1 without centroids. */
+  private val dim: Int = centroids.headOption.fold(-1)(_._2.length)
 
   /** Route one query: the `nprobe` nearest cluster ids. */
   private def route(qv: Array[Float], nprobe: Int): Array[Int] =
@@ -114,6 +113,7 @@ final class HnswRouted(spark: SparkSession,
   private def probeRouted(qs: Array[(Long, Array[Float])],
                           routeFn: Array[Float] => Array[Int], k: Int,
                           efSearch: Int): Array[(Long, Long, Double, Long)] = {
+    ResidentServe.validate(k, dim, qs.iterator.map(_._2.length))
     val byPart = scala.collection.mutable.HashMap.empty[Int, scala.collection.mutable.ArrayBuffer[Int]]
     qs.iterator.zipWithIndex.foreach { case ((_, qv), qi) =>
       routeFn(qv).foreach { cid =>
@@ -122,11 +122,21 @@ final class HnswRouted(spark: SparkSession,
     }
     val routesByPart: Map[Int, Array[Int]] =
       byPart.iterator.map { case (cid, qis) => cid -> qis.toArray }.toMap
-    val bq = spark.sparkContext.broadcast(qs)
-    val br = spark.sparkContext.broadcast(routesByPart)
-    val local = rdd.flatMap { case (part, idx) =>
-      val queries = bq.value
-      br.value.get(part) match {
+    // the merge-regime gate is the ESTIMATED fan-in itself — each probed
+    // cluster emits k rows per routed query, so the fan-in is (routed
+    // pairs)·k: at C=20,000 with a 25% sweep point that is ~25M rows (>1 GB
+    // serialized), which must reduce to nq·k BEFORE the driver (the grid's
+    // big-fraction points killed the first 10M-row run on
+    // spark.driver.maxResultSize). routesByPart is in hand before the job
+    // launches; the partition count alone would not gate it — a large-C
+    // index whose node parquet reads in fewer than treeAt splits would
+    // otherwise take the raw collect with the same oversized fan-in.
+    val fanIn = routesByPart.valuesIterator.map(_.length.toLong).sum * k
+    ResidentServe.probe(rdd, (qs, routesByPart), qs.length, k,
+        estRows = fanIn) { (shard, batch) =>
+      val (part, idx) = shard
+      val (queries, routes) = batch
+      routes.get(part) match {
         case None => Iterator.empty
         case Some(qis) => qis.iterator.flatMap { qi =>
           val (qid, qv) = queries(qi)
@@ -134,20 +144,6 @@ final class HnswRouted(spark: SparkSession,
         }
       }
     }
-    // ProbeMerge, not a raw collect: each probed cluster emits k rows per
-    // routed query, so the fan-in is (routed pairs)·k — at C=20,000 with a
-    // 25% sweep point that is ~25M rows (>1 GB serialized), which must
-    // reduce to nq·k BEFORE the driver (the grid's big-fraction points
-    // killed the first 10M-row run on spark.driver.maxResultSize). The
-    // regime gate is the ESTIMATED fan-in itself — routesByPart is in hand
-    // before the job launches — not the partition count: a large-C index
-    // whose node parquet reads in fewer than treeAt splits would otherwise
-    // take the raw collect with the same oversized fan-in. Small fan-ins
-    // keep the one-narrow-job driver merge, byte-identical rows.
-    val fanIn = routesByPart.valuesIterator.map(_.length.toLong).sum * k
-    val out = ProbeMerge.topK(local, k, estRows = fanIn)
-    bq.destroy(); br.destroy()
-    out
   }
 
   /** [[probeBatch]] with DataFrame plumbing on both ends. */

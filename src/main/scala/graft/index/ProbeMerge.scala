@@ -36,41 +36,6 @@ private[index] object ProbeMerge {
     * hand), and the collect regime is taken only when BOTH gates pass. */
   val maxCollectRows: Long = 4000000L
 
-  /** Bounded (dist asc, id asc) top-k over `filled` parallel (id, dist)
-    * entries — the per-(query, shard) emission bound for refine-style
-    * probes. A row lives in exactly one shard, so the global top-k is a
-    * subset of the union of per-shard top-k's: shards emit k rows per
-    * query, not `rerank`. (Until r7 the refine emitted every reranked
-    * candidate, making the fan-in nq·rerank·P rows — with the
-    * corpus-relative rerank at 10x rows the merge, not the scan, was the
-    * serving bottleneck: ann_adc_served with NO routing ran at the same
-    * 274 q/s as the 75%-pruned IVF rows at sf1.) O(filled·k) insertion;
-    * k is 10-ish, filled ≤ rerank. */
-  private[index] def selectTopK(ids: Array[Long], dists: Array[Double],
-                                filled: Int, k: Int): Array[(Long, Double)] = {
-    val kk = math.min(k, filled)
-    val bid = new Array[Long](kk)
-    val bd = new Array[Double](kk)
-    var used = 0
-    var i = 0
-    while (i < filled) {
-      val id = ids(i)
-      val d = dists(i)
-      if (used < kk || d < bd(used - 1) ||
-          (d == bd(used - 1) && id < bid(used - 1))) {
-        var pos = math.min(used, kk - 1)
-        while (pos > 0 && (bd(pos - 1) > d ||
-               (bd(pos - 1) == d && bid(pos - 1) > id))) {
-          bd(pos) = bd(pos - 1); bid(pos) = bid(pos - 1); pos -= 1
-        }
-        bd(pos) = d; bid(pos) = id
-        if (used < kk) used += 1
-      }
-      i += 1
-    }
-    Array.tabulate(used)(j => (bid(j), bd(j)))
-  }
-
   /** Merge two (id, dist) arrays, each sorted by (dist asc, id asc), into
     * one: dedup by id, truncate to k. Package-visible: [[MaxSimServe]]'s
     * distributed regime reuses it as its reduceByKey combiner. */

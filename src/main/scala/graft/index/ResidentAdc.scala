@@ -49,7 +49,7 @@ final case class AdcShard(ids: Array[Long], codes: Array[Short], m: Int,
   * gate. */
 final class ResidentAdc(spark: SparkSession, rdd: RDD[AdcShard],
                         cb: Pq.Codebook, metric: String,
-                        rot: Option[Opq.Rotation] = None) {
+                        rot: Option[Opq.Rotation], dim: Int) {
 
   /** Serving-form batch probe: (qid, qvec) rows in, (qid, id, dist, rank)
     * out, dist = the exact metric distance of the re-ranked rows, ordering
@@ -57,6 +57,7 @@ final class ResidentAdc(spark: SparkSession, rdd: RDD[AdcShard],
   def probeBatch(qs: Array[(Long, Array[Float])], k: Int, rerank: Int,
                  treeMergeAt: Int = 64): Array[(Long, Long, Double, Long)] = {
     require(rerank >= k, s"rerank $rerank must be >= k $k")
+    ResidentServe.validate(k, dim, qs.iterator.map(_._2.length))
     val stride = cb.stride
     val ip = metric == Metric.Ip
     // per-query LUTs prepared once per batch, client-side (the reference
@@ -67,16 +68,13 @@ final class ResidentAdc(spark: SparkSession, rdd: RDD[AdcShard],
     val luts = qs.map { case (qid, qv) =>
       (qid, qv, Pq.lutLocal(rot.map(_(qv)).getOrElse(qv), cb, metric))
     }
-    val bq = spark.sparkContext.broadcast(luts)
-    val local = rdd.flatMap { shard =>
+    ResidentServe.probe(rdd, luts, qs.length, k, treeMergeAt) { (shard, batch) =>
       val m = shard.m
       val n = shard.ids.length
-      bq.value.iterator.flatMap { case (qid, qv, lut) =>
-        // bounded worst-first insertion buffer over ADC distances
-        val r = rerank
-        val bd = new Array[Double](r)
-        val bi = new Array[Int](r) // row indices, for the float gather
-        var filled = 0
+      batch.iterator.flatMap { case (qid, qv, lut) =>
+        // rerank-bounded buffer over ADC distances, carrying each row's
+        // floats for the refine
+        val coarse = new TopKBuffer(rerank, carryVecs = true)
         var row = 0
         while (row < n) {
           val off = row * m
@@ -86,50 +84,15 @@ final class ResidentAdc(spark: SparkSession, rdd: RDD[AdcShard],
             acc += lut(j * stride + shard.codes(off + j))
             j += 1
           }
-          val id = shard.ids(row)
-          if (filled < r || acc < bd(filled - 1) ||
-              (acc == bd(filled - 1) && id < shard.ids(bi(filled - 1)))) {
-            var pos = math.min(filled, r - 1)
-            while (pos > 0 && (bd(pos - 1) > acc ||
-                   (bd(pos - 1) == acc && shard.ids(bi(pos - 1)) > id))) {
-              bd(pos) = bd(pos - 1); bi(pos) = bi(pos - 1); pos -= 1
-            }
-            bd(pos) = acc; bi(pos) = row
-            if (filled < r) filled += 1
-          }
+          coarse.offer(acc, shard.ids(row), shard.vecs(row))
           row += 1
         }
         // exact re-rank of the survivors against the resident floats —
         // the refine step, touching only `rerank` rows per (query, shard) —
-        // then emit only this shard's k best (ProbeMerge.selectTopK)
-        val rid = new Array[Long](filled)
-        val rdv = new Array[Double](filled)
-        var i2 = 0
-        while (i2 < filled) {
-          val v = shard.vecs(bi(i2))
-          val d0 = math.min(qv.length, v.length)
-          var acc = 0.0
-          var x = 0
-          if (ip) {
-            while (x < d0) { acc += qv(x).toDouble * v(x).toDouble; x += 1 }
-            acc = -acc
-          } else {
-            while (x < d0) {
-              val t = qv(x).toDouble - v(x).toDouble; acc += t * t; x += 1
-            }
-          }
-          rid(i2) = shard.ids(bi(i2))
-          rdv(i2) = acc
-          i2 += 1
-        }
-        ProbeMerge.selectTopK(rid, rdv, filled, k).iterator
-          .map { case (id, dd) => (qid, id, dd) }
+        // then emit only this shard's k best
+        coarse.refine(k)(v => ResidentServe.dist(qv, v, ip)).rows(qid)
       }
     }
-    val out = ProbeMerge.topK(local, k, treeMergeAt,
-      estRows = qs.length.toLong * k * local.getNumPartitions)
-    bq.destroy() // serving loop: don't accumulate per-batch broadcasts
-    out
   }
 
   /** [[probeBatch]] with DataFrame plumbing on both ends. */
@@ -190,7 +153,7 @@ object ResidentAdc {
         Iterator.single(AdcShard(rows.map(_._1), codes, m, rows.map(_._2)))
       }
       .persist(StorageLevel.MEMORY_AND_DISK)
-    rdd.count() // materialize before the first probe
-    new ResidentAdc(spark, rdd, cb, metric, rot)
+    new ResidentAdc(spark, rdd, cb, metric, rot,
+      ResidentServe.materialize(rdd)(_.vecs.iterator.map(_.length)))
   }
 }

@@ -28,51 +28,26 @@ final case class BinaryShard(ids: Array[Long], codes: Array[Array[Long]],
   * [[ProbeMerge]] as every other resident form. Typical use: binary
   * first-pass retrieval feeding a float re-rank (the candidates-first
   * pattern of [[graft.operators.Dedup.embedNearDups]]). */
-final class ResidentBinary(spark: SparkSession, rdd: RDD[BinaryShard]) {
+final class ResidentBinary(spark: SparkSession, rdd: RDD[BinaryShard],
+                           words: Int, dim: Int) {
 
   /** Serving-form batch probe: `qs` = (qid, packed query code). Returns
     * (qid, id, dist, rank) sorted by (qid, rank); dist is the integer
     * Hamming distance carried as double (≤ dim, exact). */
   def probeBatch(qs: Array[(Long, Array[Long])], k: Int,
                  treeMergeAt: Int = 64): Array[(Long, Long, Double, Long)] = {
-    val bq = spark.sparkContext.broadcast(qs)
-    val local = rdd.flatMap { shard =>
-      val n = shard.ids.length
-      bq.value.iterator.flatMap { case (qid, qc) =>
-        val bd = new Array[Double](k)
-        val bi = new Array[Long](k)
-        var filled = 0
+    ResidentServe.validate(k, words, qs.iterator.map(_._2.length))
+    ResidentServe.probe(rdd, qs, qs.length, k, treeMergeAt) { (shard, queries) =>
+      queries.iterator.flatMap { case (qid, qc) =>
+        val top = new TopKBuffer(k)
         var r = 0
-        while (r < n) {
-          val c = shard.codes(r)
-          val w = math.min(qc.length, c.length)
-          var acc = 0L
-          var i = 0
-          while (i < w) {
-            acc += java.lang.Long.bitCount(qc(i) ^ c(i))
-            i += 1
-          }
-          val d = acc.toDouble
-          val id = shard.ids(r)
-          if (filled < k || d < bd(filled - 1) ||
-              (d == bd(filled - 1) && id < bi(filled - 1))) {
-            var pos = math.min(filled, k - 1)
-            while (pos > 0 && (bd(pos - 1) > d ||
-                   (bd(pos - 1) == d && bi(pos - 1) > id))) {
-              bd(pos) = bd(pos - 1); bi(pos) = bi(pos - 1); pos -= 1
-            }
-            bd(pos) = d; bi(pos) = id
-            if (filled < k) filled += 1
-          }
+        while (r < shard.ids.length) {
+          top.offer(ResidentBinary.hamming(qc, shard.codes(r)).toDouble, shard.ids(r))
           r += 1
         }
-        (0 until filled).iterator.map(i => (qid, bi(i), bd(i)))
+        top.rows(qid)
       }
     }
-    val out = ProbeMerge.topK(local, k, treeMergeAt,
-      estRows = qs.length.toLong * k * local.getNumPartitions)
-    bq.destroy()
-    out
   }
 
   /** Two-tier serving probe: per shard, the packed codes pick the `c`
@@ -92,12 +67,13 @@ final class ResidentBinary(spark: SparkSession, rdd: RDD[BinaryShard]) {
                        c: Int, treeMergeAt: Int = 64,
                        metric: String = graft.operators.Metric.L2): Array[(Long, Long, Double, Long)] = {
     require(c >= k, s"rerank budget c=$c must be >= k=$k")
+    ResidentServe.validate(k, words, qs.iterator.map(_._2.length))
+    ResidentServe.validate(k, dim, qs.iterator.map(_._3.length))
     // tier 2's float kernel: L2 or negated inner product (the OOD track's
     // metric — text2image-style corpora rerank by ip, and the binary tier
     // is metric-blind so only this refine step changes)
     val ip = metric == graft.operators.Metric.Ip
-    val bq = spark.sparkContext.broadcast(qs)
-    val local = rdd.flatMap { shard =>
+    ResidentServe.probe(rdd, qs, qs.length, k, treeMergeAt) { (shard, queries) =>
       require(shard.vecs.nonEmpty || shard.ids.isEmpty,
         "probeBatchRerank needs pinFloats=true at load")
       val n = shard.ids.length
@@ -105,69 +81,19 @@ final class ResidentBinary(spark: SparkSession, rdd: RDD[BinaryShard]) {
       // exact-degenerate point, not a giant allocation)
       val cc = math.max(1, math.min(c, n))
       if (n == 0) Iterator.empty
-      else bq.value.iterator.flatMap { case (qid, qc, qv) =>
-        // tier 1: Hamming top-c over packed codes (insertion buffer)
-        val cd = new Array[Long](cc)
-        val ci = new Array[Int](cc) // shard-local row index, resolves floats
-        var filled = 0
+      else queries.iterator.flatMap { case (qid, qc, qv) =>
+        // tier 1: Hamming top-c over packed codes
+        val coarse = new TopKBuffer(cc, carryVecs = true)
         var r = 0
         while (r < n) {
-          val code = shard.codes(r)
-          val w = math.min(qc.length, code.length)
-          var hd = 0L
-          var i = 0
-          while (i < w) { hd += java.lang.Long.bitCount(qc(i) ^ code(i)); i += 1 }
-          val id = shard.ids(r)
-          if (filled < cc || hd < cd(filled - 1) ||
-              (hd == cd(filled - 1) && id < shard.ids(ci(filled - 1)))) {
-            var pos = math.min(filled, cc - 1)
-            while (pos > 0 && (cd(pos - 1) > hd ||
-                   (cd(pos - 1) == hd && shard.ids(ci(pos - 1)) > id))) {
-              cd(pos) = cd(pos - 1); ci(pos) = ci(pos - 1); pos -= 1
-            }
-            cd(pos) = hd; ci(pos) = r
-            if (filled < cc) filled += 1
-          }
+          coarse.offer(ResidentBinary.hamming(qc, shard.codes(r)).toDouble,
+            shard.ids(r), shard.vecs(r))
           r += 1
         }
-        // tier 2: exact float L2 on the survivors only, top-k
-        val bd = new Array[Double](k)
-        val bi = new Array[Long](k)
-        var kept = 0
-        var s = 0
-        while (s < filled) {
-          val row = ci(s)
-          val v = shard.vecs(row)
-          val d0 = math.min(qv.length, v.length)
-          var acc = 0.0
-          var i = 0
-          if (ip) {
-            while (i < d0) { acc -= qv(i).toDouble * v(i).toDouble; i += 1 }
-          } else {
-            while (i < d0) {
-              val d = qv(i).toDouble - v(i).toDouble; acc += d * d; i += 1
-            }
-          }
-          val id = shard.ids(row)
-          if (kept < k || acc < bd(kept - 1) ||
-              (acc == bd(kept - 1) && id < bi(kept - 1))) {
-            var pos = math.min(kept, k - 1)
-            while (pos > 0 && (bd(pos - 1) > acc ||
-                   (bd(pos - 1) == acc && bi(pos - 1) > id))) {
-              bd(pos) = bd(pos - 1); bi(pos) = bi(pos - 1); pos -= 1
-            }
-            bd(pos) = acc; bi(pos) = id
-            if (kept < k) kept += 1
-          }
-          s += 1
-        }
-        (0 until kept).iterator.map(i => (qid, bi(i), bd(i)))
+        // tier 2: exact float distance on the survivors only, top-k
+        coarse.refine(k)(v => ResidentServe.dist(qv, v, ip)).rows(qid)
       }
     }
-    val out = ProbeMerge.topK(local, k, treeMergeAt,
-      estRows = qs.length.toLong * k * local.getNumPartitions)
-    bq.destroy()
-    out
   }
 
   /** [[probeBatchRerank]] with DataFrame plumbing: `queries` needs
@@ -229,7 +155,21 @@ object ResidentBinary {
           if (pinFloats) rows.map(_._3) else Array.empty))
       }
       .persist(StorageLevel.MEMORY_AND_DISK)
-    rdd.count() // materialize the shards before the first probe
-    new ResidentBinary(spark, rdd)
+    // pinned floats fix the dimension, and vec_sign_pack's one word per 64
+    // components the code width; codes-only shards know only their width
+    val d = ResidentServe.materialize(rdd)(s =>
+      if (pinFloats) s.vecs.iterator.map(_.length)
+      else s.codes.iterator.map(_.length))
+    if (pinFloats) new ResidentBinary(spark, rdd,
+      if (d < 0) -1 else (d + 63) >>> 6, d)
+    else new ResidentBinary(spark, rdd, d, -1)
+  }
+
+  /** Hamming distance between two packed sign codes of equal length. */
+  private def hamming(a: Array[Long], b: Array[Long]): Long = {
+    var acc = 0L
+    var i = 0
+    while (i < a.length) { acc += java.lang.Long.bitCount(a(i) ^ b(i)); i += 1 }
+    acc
   }
 }

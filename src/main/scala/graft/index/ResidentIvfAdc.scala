@@ -132,6 +132,7 @@ final class ResidentIvfAdc(spark: SparkSession, rdd: RDD[IvfAdcShard],
                            rerank: Int,
                            treeMergeAt: Int): Array[(Long, Long, Double, Long)] = {
     require(rerank >= k, s"rerank $rerank must be >= k $k")
+    ResidentServe.validate(k, router.dim, qs.iterator.map(_._2.length))
     val stride = cb.stride
     val dsub = cb.dsub
     val ip = metric == Metric.Ip
@@ -153,8 +154,7 @@ final class ResidentIvfAdc(spark: SparkSession, rdd: RDD[IvfAdcShard],
           var j = 0
           while (j < mSub) {
             val off = j * dsub
-            val lim = math.max(0,
-              math.min(dsub, math.min(qv.length, cv.length) - off))
+            val lim = math.max(0, math.min(dsub, qv.length - off))
             var acc = 0.0
             var i = 0
             while (i < lim) {
@@ -167,17 +167,12 @@ final class ResidentIvfAdc(spark: SparkSession, rdd: RDD[IvfAdcShard],
         } else null
       (qid, qv, lut, cids, qc)
     }
-    val bq = spark.sparkContext.broadcast(routed)
-    val local = rdd.flatMap { shard =>
+    ResidentServe.probe(rdd, routed, qs.length, k, treeMergeAt) { (shard, batch) =>
       val m = shard.m
       val t2map = if (isRes) t2.value else null
       val scratch = if (isRes) new Array[Double](m * stride) else null
-      bq.value.iterator.flatMap { case (qid, qv, lutPlain, cids, qc) =>
-        val r = rerank
-        val bd = new Array[Double](r)
-        val bId = new Array[Long](r)
-        val bVec = new Array[Array[Float]](r)
-        var filled = 0
+      batch.iterator.flatMap { case (qid, qv, lutPlain, cids, qc) =>
+        val coarse = new TopKBuffer(rerank, carryVecs = true)
         var ci = 0
         while (ci < cids.length) {
           val lut =
@@ -199,9 +194,8 @@ final class ResidentIvfAdc(spark: SparkSession, rdd: RDD[IvfAdcShard],
             } else lutPlain
           shard.clusters.get(cids(ci)) match {
             case Some((ids, codes, vecs)) =>
-              val n = ids.length
               var row = 0
-              while (row < n) {
+              while (row < ids.length) {
                 val off = row * m
                 var acc = 0.0
                 var j = 0
@@ -209,18 +203,7 @@ final class ResidentIvfAdc(spark: SparkSession, rdd: RDD[IvfAdcShard],
                   acc += lut(j * stride + codes(off + j))
                   j += 1
                 }
-                val id = ids(row)
-                if (filled < r || acc < bd(filled - 1) ||
-                    (acc == bd(filled - 1) && id < bId(filled - 1))) {
-                  var pos = math.min(filled, r - 1)
-                  while (pos > 0 && (bd(pos - 1) > acc ||
-                         (bd(pos - 1) == acc && bId(pos - 1) > id))) {
-                    bd(pos) = bd(pos - 1); bId(pos) = bId(pos - 1)
-                    bVec(pos) = bVec(pos - 1); pos -= 1
-                  }
-                  bd(pos) = acc; bId(pos) = id; bVec(pos) = vecs(row)
-                  if (filled < r) filled += 1
-                }
+                coarse.offer(acc, ids(row), vecs(row))
                 row += 1
               }
             case None =>
@@ -228,33 +211,10 @@ final class ResidentIvfAdc(spark: SparkSession, rdd: RDD[IvfAdcShard],
           ci += 1
         }
         // float refine of the survivors (the reference's refine step),
-        // then emit only this shard's k best — see ProbeMerge.selectTopK
-        val rd = new Array[Double](filled)
-        var i2 = 0
-        while (i2 < filled) {
-          val v = bVec(i2)
-          val d0 = math.min(qv.length, v.length)
-          var acc = 0.0
-          var x = 0
-          if (ip) {
-            while (x < d0) { acc += qv(x).toDouble * v(x).toDouble; x += 1 }
-            acc = -acc
-          } else {
-            while (x < d0) {
-              val t = qv(x).toDouble - v(x).toDouble; acc += t * t; x += 1
-            }
-          }
-          rd(i2) = acc
-          i2 += 1
-        }
-        ProbeMerge.selectTopK(bId, rd, filled, k).iterator
-          .map { case (id, dd) => (qid, id, dd) }
+        // then emit only this shard's k best
+        coarse.refine(k)(v => ResidentServe.dist(qv, v, ip)).rows(qid)
       }
     }
-    val out = ProbeMerge.topK(local, k, treeMergeAt,
-      estRows = qs.length.toLong * k * local.getNumPartitions)
-    bq.destroy() // serving loop: don't accumulate per-batch broadcasts
-    out
   }
 
   /** [[probeBatch]] with DataFrame plumbing on both ends. */

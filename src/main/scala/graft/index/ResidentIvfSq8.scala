@@ -55,10 +55,9 @@ final class ResidentIvfSq8(spark: SparkSession, rdd: RDD[IvfSq8Shard],
     * (same round-half-up on the same double expression), so served coarse
     * distances equal the dataflow form's bit-for-bit. */
   private def encode(qv: Array[Float]): Array[Short] = {
-    val n = math.min(qv.length, mins.length)
-    val out = new Array[Short](n)
+    val out = new Array[Short](qv.length)
     var i = 0
-    while (i < n) {
+    while (i < qv.length) {
       out(i) = math.round(255.0 * (qv(i).toDouble - mins(i)) / spans(i)).toShort
       i += 1
     }
@@ -73,6 +72,7 @@ final class ResidentIvfSq8(spark: SparkSession, rdd: RDD[IvfSq8Shard],
                  treeMergeAt: Int = 64,
                  efRoute: Int = Int.MaxValue): Array[(Long, Long, Double, Long)] = {
     require(rerank >= k, s"rerank $rerank must be >= k $k")
+    ResidentServe.validate(k, router.dim, qs.iterator.map(_._2.length))
     val rt = router
     val routed = Router.parallelMap(qs) { case (qid, qv) =>
       (qid, qv, encode(qv), rt.byNprobeGraph(qv, nprobe, efRoute))
@@ -94,6 +94,7 @@ final class ResidentIvfSq8(spark: SparkSession, rdd: RDD[IvfSq8Shard],
                      shardRoute: Option[Boolean] = None,
                      efRoute: Int = Int.MaxValue): Array[(Long, Long, Double, Long)] = {
     require(rerank >= k, s"rerank $rerank must be >= k $k")
+    ResidentServe.validate(k, router.dim, qs.iterator.map(_._2.length))
     // graph routing drops the per-query routing term from O(C·d) to
     // O(efRoute·log C), so the shard-route bound scales by the work the
     // graph actually does per query rather than by C
@@ -113,44 +114,30 @@ final class ResidentIvfSq8(spark: SparkSession, rdd: RDD[IvfSq8Shard],
       val coded = Router.parallelMap(qs) { case (qid, qv) =>
         (qid, qv, encode(qv))
       }
-      val bq = spark.sparkContext.broadcast(coded)
       val rb = routerBc
       val mm = minMass
       val mp = maxNprobe
       val ef = efRoute
-      val kk = k
-      val rr = rerank
-      val local = rdd.flatMap { shard =>
+      ResidentServe.probe(rdd, coded, qs.length, k, treeMergeAt) { (shard, batch) =>
         val rt = rb.value
-        bq.value.iterator.flatMap { case (qid, qv, qc) =>
+        batch.iterator.flatMap { case (qid, qv, qc) =>
           ResidentIvfSq8.scanShard(shard, qid, qv, qc,
-            rt.byMassGraph(qv, mm, ef, mp), kk, rr)
+            rt.byMassGraph(qv, mm, ef, mp), k, rerank)
         }
       }
-      val out = ProbeMerge.topK(local, k, treeMergeAt,
-        estRows = qs.length.toLong * k * local.getNumPartitions)
-      bq.destroy() // serving loop: don't accumulate per-batch broadcasts
-      out
     }
   }
 
   private def probeRouted(
       routed: Array[(Long, Array[Float], Array[Short], Array[Int])],
       k: Int, rerank: Int,
-      treeMergeAt: Int): Array[(Long, Long, Double, Long)] = {
-    val bq = spark.sparkContext.broadcast(routed)
-    val kk = k
-    val rr = rerank
-    val local = rdd.flatMap { shard =>
-      bq.value.iterator.flatMap { case (qid, qv, qc, cids) =>
-        ResidentIvfSq8.scanShard(shard, qid, qv, qc, cids, kk, rr)
-      }
+      treeMergeAt: Int): Array[(Long, Long, Double, Long)] =
+    ResidentServe.probe(rdd, routed, routed.length, k, treeMergeAt) {
+      (shard, batch) =>
+        batch.iterator.flatMap { case (qid, qv, qc, cids) =>
+          ResidentIvfSq8.scanShard(shard, qid, qv, qc, cids, k, rerank)
+        }
     }
-    val out = ProbeMerge.topK(local, k, treeMergeAt,
-      estRows = routed.length.toLong * k * local.getNumPartitions)
-    bq.destroy() // serving loop: don't accumulate per-batch broadcasts
-    out
-  }
 
   /** [[probeBatch]] with DataFrame plumbing on both ends. */
   def probeLocal(queries: DataFrame, k: Int, nprobe: Int,
@@ -185,48 +172,32 @@ object ResidentIvfSq8 {
   /** One (query, shard) probe: integer-SQ8 scan of the routed clusters
     * into a `rerank`-bounded (coarse dist asc, id asc) buffer, exact
     * float refine of the survivors, then this shard's k best only
-    * ([[ProbeMerge.selectTopK]]). Static so the scan closure captures no
+    * ([[TopKBuffer.refine]]). Static so the scan closure captures no
     * driver-side state. */
   private[index] def scanShard(shard: IvfSq8Shard, qid: Long,
                                qv: Array[Float], qc: Array[Short],
                                cids: Array[Int], k: Int,
                                rerank: Int): Iterator[(Long, Long, Double)] = {
-    val r = rerank
-    // bounded insertion, (coarse dist asc, id asc) — integer SQ8
-    // distances kept exact in Int (d·255² fits comfortably)
-    val bd = new Array[Int](r)
-    val bId = new Array[Long](r)
-    val bVec = new Array[Array[Float]](r)
-    var filled = 0
+    // rerank-bounded (coarse dist asc, id asc) buffer; integer SQ8
+    // distances are exact in Int (d·255² fits comfortably) and in the
+    // buffer's double
+    val coarse = new TopKBuffer(rerank, carryVecs = true)
+    val d = shard.d
     var ci = 0
     while (ci < cids.length) {
       shard.clusters.get(cids(ci)) match {
         case Some((ids, codes, vecs)) =>
-          val d = shard.d
-          val n = ids.length
           var row = 0
-          while (row < n) {
+          while (row < ids.length) {
             val off = row * d
             var acc = 0
             var j = 0
-            val lim = math.min(d, qc.length)
-            while (j < lim) {
+            while (j < d) {
               val t = qc(j) - codes(off + j)
               acc += t * t
               j += 1
             }
-            val id = ids(row)
-            if (filled < r || acc < bd(filled - 1) ||
-                (acc == bd(filled - 1) && id < bId(filled - 1))) {
-              var pos = math.min(filled, r - 1)
-              while (pos > 0 && (bd(pos - 1) > acc ||
-                     (bd(pos - 1) == acc && bId(pos - 1) > id))) {
-                bd(pos) = bd(pos - 1); bId(pos) = bId(pos - 1)
-                bVec(pos) = bVec(pos - 1); pos -= 1
-              }
-              bd(pos) = acc; bId(pos) = id; bVec(pos) = vecs(row)
-              if (filled < r) filled += 1
-            }
+            coarse.offer(acc.toDouble, ids(row), vecs(row))
             row += 1
           }
         case None =>
@@ -234,23 +205,8 @@ object ResidentIvfSq8 {
       ci += 1
     }
     // exact float refine of the survivors (the reference's refine step),
-    // then emit only this shard's k best — see ProbeMerge.selectTopK for
-    // why k, not rerank, is the emission bound
-    val rd = new Array[Double](filled)
-    var i2 = 0
-    while (i2 < filled) {
-      val v = bVec(i2)
-      val d0 = math.min(qv.length, v.length)
-      var acc = 0.0
-      var x = 0
-      while (x < d0) {
-        val t = qv(x).toDouble - v(x).toDouble; acc += t * t; x += 1
-      }
-      rd(i2) = acc
-      i2 += 1
-    }
-    ProbeMerge.selectTopK(bId, rd, filled, k).iterator
-      .map { case (id, dd) => (qid, id, dd) }
+    // then emit only this shard's k best
+    coarse.refine(k)(v => ResidentServe.dist(qv, v, ip = false)).rows(qid)
   }
 
   /** Assign `base` = (id, vec) to `ivf`'s clusters, SQ8-encode with the

@@ -92,90 +92,91 @@ final class ResidentPostings(spark: SparkSession, rdd: RDD[PostingShard]) {
     // Rejecting qv <= 0 at entry makes budgeted and exact candidate
     // domains agree by construction (tf weights are >= 1, so no real
     // caller is constrained).
+    ResidentServe.validate(k, -1, Iterator.empty)
     require(qs.forall(_._3.forall(_ > 0L)),
       "ResidentPostings serves strictly positive weights (tf domain): " +
         "negative query weights would invert the impact order of a " +
         "budgeted scan, and zero weights would make the budgeted and " +
         "exact candidate sets disagree (score-0 postings are cut)")
-    val bq = spark.sparkContext.broadcast(qs)
+    if (qs.isEmpty) return Array.empty
     val bud = budget
     val rr = rerank
-    val local = rdd.flatMap { shard =>
-      if (rr > 0) require(shard.fwd != null,
-        "probeBatch(rerank > 0) needs the forward index: build the " +
-          "resident shards with ResidentPostings.load(..., forward = true)")
-      bq.value.iterator.flatMap { case (qid, qdims, qvs) =>
-        val acc = ResidentPostings.accumulate(shard, qdims, qvs, bud)
-        // keep = top-`keep` docs per (query, shard) by (score desc, id
-        // asc): k for the one-stage kernel (what the driver merge needs),
-        // `rr` candidates for the two-stage one
-        val keep = if (rr > 0) rr else k
-        val bs = new Array[Long](keep)
-        val bi = new Array[Long](keep)
-        var filled = 0
-        if (keep <= 16) {
-          // bounded best-first insertion buffer: keep is small, insertion
-          // sort beats a heap on constant factors
-          acc.foreachEntry { (id, s) =>
-            if (filled < keep || s > bs(filled - 1) ||
-                (s == bs(filled - 1) && id < bi(filled - 1))) {
-              var pos = math.min(filled, keep - 1)
-              while (pos > 0 && (bs(pos - 1) < s ||
-                     (bs(pos - 1) == s && bi(pos - 1) > id))) {
-                bs(pos) = bs(pos - 1); bi(pos) = bi(pos - 1); pos -= 1
+    ResidentServe.withBroadcast(rdd, qs) { bq =>
+      val local = rdd.flatMap { shard =>
+        if (rr > 0) require(shard.fwd != null,
+          "probeBatch(rerank > 0) needs the forward index: build the " +
+            "resident shards with ResidentPostings.load(..., forward = true)")
+        bq.value.iterator.flatMap { case (qid, qdims, qvs) =>
+          val acc = ResidentPostings.accumulate(shard, qdims, qvs, bud)
+          // keep = top-`keep` docs per (query, shard) by (score desc, id
+          // asc): k for the one-stage kernel (what the driver merge needs),
+          // `rr` candidates for the two-stage one
+          val keep = if (rr > 0) rr else k
+          val bs = new Array[Long](keep)
+          val bi = new Array[Long](keep)
+          var filled = 0
+          if (keep <= 16) {
+            // bounded best-first insertion buffer: keep is small, insertion
+            // sort beats a heap on constant factors
+            acc.foreachEntry { (id, s) =>
+              if (filled < keep || s > bs(filled - 1) ||
+                  (s == bs(filled - 1) && id < bi(filled - 1))) {
+                var pos = math.min(filled, keep - 1)
+                while (pos > 0 && (bs(pos - 1) < s ||
+                       (bs(pos - 1) == s && bi(pos - 1) > id))) {
+                  bs(pos) = bs(pos - 1); bi(pos) = bi(pos - 1); pos -= 1
+                }
+                bs(pos) = s; bi(pos) = id
+                if (filled < keep) filled += 1
               }
-              bs(pos) = s; bi(pos) = id
-              if (filled < keep) filled += 1
             }
+          } else {
+            // candidate-width keeps take a bounded binary min-heap (worst
+            // kept on top): O(|acc| log keep) vs insertion's O(|acc|·keep)
+            filled = ResidentPostings.topByScore(acc, keep, bs, bi)
           }
-        } else {
-          // candidate-width keeps take a bounded binary min-heap (worst
-          // kept on top): O(|acc| log keep) vs insertion's O(|acc|·keep)
-          filled = ResidentPostings.topByScore(acc, keep, bs, bi)
-        }
-        if (rr <= 0) {
-          (0 until filled).iterator.map(i => (qid, bi(i), bs(i)))
-        } else {
-          // stage 2: exact score per candidate from the forward index —
-          // one bounded integer dot product over the doc's surviving
-          // postings (Long adds commute exactly, so walk order is free)
-          val qmap =
-            new java.util.HashMap[String, java.lang.Long](qdims.length * 2)
-          var qi = 0
-          while (qi < qdims.length) {
-            val prev = qmap.get(qdims(qi))
-            qmap.put(qdims(qi),
-              java.lang.Long.valueOf(
-                (if (prev == null) 0L else prev.longValue) + qvs(qi)))
-            qi += 1
-          }
-          val es = new Array[Long](filled)
-          var ci = 0
-          while (ci < filled) {
-            val (ddims, dvals) = shard.fwd(bi(ci))
-            var s = 0L
-            var di = 0
-            while (di < ddims.length) {
-              val qv = qmap.get(ddims(di))
-              if (qv != null) s += qv.longValue * dvals(di)
-              di += 1
+          if (rr <= 0) {
+            (0 until filled).iterator.map(i => (qid, bi(i), bs(i)))
+          } else {
+            // stage 2: exact score per candidate from the forward index —
+            // one bounded integer dot product over the doc's surviving
+            // postings (Long adds commute exactly, so walk order is free)
+            val qmap =
+              new java.util.HashMap[String, java.lang.Long](qdims.length * 2)
+            var qi = 0
+            while (qi < qdims.length) {
+              val prev = qmap.get(qdims(qi))
+              qmap.put(qdims(qi),
+                java.lang.Long.valueOf(
+                  (if (prev == null) 0L else prev.longValue) + qvs(qi)))
+              qi += 1
             }
-            es(ci) = s
-            ci += 1
+            val es = new Array[Long](filled)
+            var ci = 0
+            while (ci < filled) {
+              val (ddims, dvals) = shard.fwd(bi(ci))
+              var s = 0L
+              var di = 0
+              while (di < ddims.length) {
+                val qv = qmap.get(ddims(di))
+                if (qv != null) s += qv.longValue * dvals(di)
+                di += 1
+              }
+              es(ci) = s
+              ci += 1
+            }
+            // top-k among the exact-scored candidates, (score desc, id asc)
+            val idx = (0 until filled).toArray
+            val sorted = idx.sortBy(i => (-es(i), bi(i)))
+            sorted.iterator.take(k).map(i => (qid, bi(i), es(i)))
           }
-          // top-k among the exact-scored candidates, (score desc, id asc)
-          val idx = (0 until filled).toArray
-          val sorted = idx.sortBy(i => (-es(i), bi(i)))
-          sorted.iterator.take(k).map(i => (qid, bi(i), es(i)))
         }
       }
+      // (score desc, id asc) merge in exact Long arithmetic: driver merge at
+      // serving shard counts, two-level tree past `treeMergeAt` (ProbeMerge)
+      ProbeMerge.topKByScore(local, k, treeMergeAt,
+        estRows = qs.length.toLong * k * local.getNumPartitions)
     }
-    // (score desc, id asc) merge in exact Long arithmetic: driver merge at
-    // serving shard counts, two-level tree past `treeMergeAt` (ProbeMerge)
-    val out = ProbeMerge.topKByScore(local, k, treeMergeAt,
-      estRows = qs.length.toLong * k * local.getNumPartitions)
-    bq.destroy() // serving loop: don't accumulate per-batch broadcasts
-    out
   }
 
   /** [[probeBatch]] with DataFrame plumbing on both ends; `queries` is the

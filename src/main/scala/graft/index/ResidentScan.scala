@@ -26,7 +26,7 @@ final case class ScanShard(ids: Array[Long], vecs: Array[Array[Float]],
   * signature prefilter does the reference's bloom-skip work
   * (bow_id_selector.swig:107-130) before any distance is computed. */
 final class ResidentScan(spark: SparkSession, rdd: RDD[ScanShard],
-                         ipMetric: Boolean) {
+                         ipMetric: Boolean, dim: Int) {
 
   /** Serving-form batch probe. `qs` rows are (qid, qvec, qtags, qsig) with
     * qsig = OR of the query tags' signatures (same bit layout as the base
@@ -36,17 +36,12 @@ final class ResidentScan(spark: SparkSession, rdd: RDD[ScanShard],
   def probeBatch(qs: Array[(Long, Array[Float], Array[Int], Long)],
                  k: Int,
                  treeMergeAt: Int = 64): Array[(Long, Long, Double, Long)] = {
-    val bq = spark.sparkContext.broadcast(qs)
+    ResidentServe.validate(k, dim, qs.iterator.map(_._2.length))
     val ip = ipMetric
-    val local = rdd.flatMap { shard =>
-      val queries = bq.value
+    ResidentServe.probe(rdd, qs, qs.length, k, treeMergeAt) { (shard, queries) =>
       val n = shard.ids.length
       queries.iterator.flatMap { case (qid, qv, qt, qsig) =>
-        // bounded worst-first insertion buffer: k is small (typically 10),
-        // so an insertion sort beats a heap on constant factors
-        val bd = new Array[Double](k)
-        val bi = new Array[Long](k)
-        var filled = 0
+        val top = new TopKBuffer(k)
         var r = 0
         while (r < n) {
           if ((qsig & ~shard.sigs(r)) == 0L) { // lossless bloom-skip
@@ -57,44 +52,14 @@ final class ResidentScan(spark: SparkSession, rdd: RDD[ScanShard],
               if (!rowTags.contains(qt(ti))) all = false
               ti += 1
             }
-            if (all) {
-              // same double accumulation as the codegen kernels
-              val v = shard.vecs(r)
-              val d0 = math.min(qv.length, v.length)
-              var acc = 0.0
-              var i = 0
-              if (ip) {
-                while (i < d0) { acc += qv(i).toDouble * v(i).toDouble; i += 1 }
-                acc = -acc
-              } else {
-                while (i < d0) {
-                  val d = qv(i).toDouble - v(i).toDouble; acc += d * d; i += 1
-                }
-              }
-              val id = shard.ids(r)
-              if (filled < k || acc < bd(filled - 1) ||
-                  (acc == bd(filled - 1) && id < bi(filled - 1))) {
-                var pos = math.min(filled, k - 1)
-                while (pos > 0 && (bd(pos - 1) > acc ||
-                       (bd(pos - 1) == acc && bi(pos - 1) > id))) {
-                  bd(pos) = bd(pos - 1); bi(pos) = bi(pos - 1); pos -= 1
-                }
-                bd(pos) = acc; bi(pos) = id
-                if (filled < k) filled += 1
-              }
-            }
+            if (all)
+              top.offer(ResidentServe.dist(qv, shard.vecs(r), ip), shard.ids(r))
           }
           r += 1
         }
-        (0 until filled).iterator.map(i => (qid, bi(i), bd(i)))
+        top.rows(qid)
       }
     }
-    // driver merge at serving partition counts, two-level tree past
-    // `treeMergeAt` shards (ProbeMerge) — identical rows either way
-    val out = ProbeMerge.topK(local, k, treeMergeAt,
-      estRows = qs.length.toLong * k * local.getNumPartitions)
-    bq.destroy() // serving loop: don't accumulate per-batch broadcasts
-    out
   }
 
   /** Exact top-k over the rows whose id falls in one of `ranges` (disjoint,
@@ -105,58 +70,29 @@ final class ResidentScan(spark: SparkSession, rdd: RDD[ScanShard],
   def probeBatchRanges(qs: Array[(Long, Array[Float])], k: Int,
                        ranges: Array[(Long, Long)],
                        treeMergeAt: Int = 64): Array[(Long, Long, Double, Long)] = {
-    val bq = spark.sparkContext.broadcast(qs)
-    val br = spark.sparkContext.broadcast(ranges)
+    ResidentServe.validate(k, dim, qs.iterator.map(_._2.length))
     val ip = ipMetric
-    val local = rdd.flatMap { shard =>
-      val mask = br.value
-      val starts = mask.map(_._1)
-      def liveId(id: Long): Boolean = {
-        var p = java.util.Arrays.binarySearch(starts, id)
-        if (p < 0) p = -p - 2 // last range starting at or before id
-        p >= 0 && id < mask(p)._2
-      }
-      val n = shard.ids.length
-      bq.value.iterator.flatMap { case (qid, qv) =>
-        val bd = new Array[Double](k)
-        val bi = new Array[Long](k)
-        var filled = 0
-        var r = 0
-        while (r < n) {
-          val id = shard.ids(r)
-          if (liveId(id)) {
-            val v = shard.vecs(r)
-            val d0 = math.min(qv.length, v.length)
-            var acc = 0.0
-            var i = 0
-            if (ip) {
-              while (i < d0) { acc += qv(i).toDouble * v(i).toDouble; i += 1 }
-              acc = -acc
-            } else {
-              while (i < d0) {
-                val d = qv(i).toDouble - v(i).toDouble; acc += d * d; i += 1
-              }
-            }
-            if (filled < k || acc < bd(filled - 1) ||
-                (acc == bd(filled - 1) && id < bi(filled - 1))) {
-              var pos = math.min(filled, k - 1)
-              while (pos > 0 && (bd(pos - 1) > acc ||
-                     (bd(pos - 1) == acc && bi(pos - 1) > id))) {
-                bd(pos) = bd(pos - 1); bi(pos) = bi(pos - 1); pos -= 1
-              }
-              bd(pos) = acc; bi(pos) = id
-              if (filled < k) filled += 1
-            }
-          }
-          r += 1
+    ResidentServe.probe(rdd, (qs, ranges), qs.length, k, treeMergeAt) {
+      (shard, batch) =>
+        val (queries, mask) = batch
+        val starts = mask.map(_._1)
+        def liveId(id: Long): Boolean = {
+          var p = java.util.Arrays.binarySearch(starts, id)
+          if (p < 0) p = -p - 2 // last range starting at or before id
+          p >= 0 && id < mask(p)._2
         }
-        (0 until filled).iterator.map(i => (qid, bi(i), bd(i)))
-      }
+        val n = shard.ids.length
+        queries.iterator.flatMap { case (qid, qv) =>
+          val top = new TopKBuffer(k)
+          var r = 0
+          while (r < n) {
+            val id = shard.ids(r)
+            if (liveId(id)) top.offer(ResidentServe.dist(qv, shard.vecs(r), ip), id)
+            r += 1
+          }
+          top.rows(qid)
+        }
     }
-    val out = ProbeMerge.topK(local, k, treeMergeAt,
-      estRows = qs.length.toLong * k * local.getNumPartitions)
-    bq.destroy(); br.destroy()
-    out
   }
 
   /** [[probeBatch]] with DataFrame plumbing on both ends; results equal
@@ -199,7 +135,7 @@ object ResidentScan {
           rows.map(_._3), rows.map(_._4)))
       }
       .persist(StorageLevel.MEMORY_AND_DISK)
-    rdd.count() // materialize the shards before the first probe
-    new ResidentScan(spark, rdd, ip)
+    new ResidentScan(spark, rdd, ip,
+      ResidentServe.materialize(rdd)(_.vecs.iterator.map(_.length)))
   }
 }

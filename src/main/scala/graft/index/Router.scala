@@ -37,19 +37,16 @@ private[graft] final class CoarseRouter(
 
   def numClusters: Int = centroids.length
 
+  /** The routed index's vector dimension; -1 without centroids. */
+  def dim: Int = centroids.headOption.fold(-1)(_._2.length)
+
   /** All centroids ranked (L2 asc, cid asc). */
   private def rank(qv: Array[Float]): Array[(Double, Int)] = {
     val out = new Array[(Double, Int)](centroids.length)
     var c = 0
     while (c < centroids.length) {
       val (cid, cvec) = centroids(c)
-      var acc = 0.0
-      var i = 0
-      val n = math.min(qv.length, cvec.length)
-      while (i < n) {
-        val t = qv(i).toDouble - cvec(i).toDouble; acc += t * t; i += 1
-      }
-      out(c) = (acc, cid)
+      out(c) = (ResidentServe.dist(qv, cvec, ip = false), cid)
       c += 1
     }
     java.util.Arrays.sort(out, Ordering[(Double, Int)])

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
 final class ResidentTagRegistry private[index] (
     spark: SparkSession,
     rdd: org.apache.spark.rdd.RDD[(String, HnswIndex)],
-    val keys: Set[String]) {
+    val keys: Set[String], dim: Int) {
 
   /** Resident (key, part) graph count = the per-job task fan of a batch
     * that hits every key ([[TagSubindexes.loadResident]] pins one graph
@@ -52,8 +52,9 @@ final class ResidentTagRegistry private[index] (
     * Each qid routes to exactly one key, so its candidates come only from
     * that key's graph partitions; rows equal [[probeGroups]]'s.
     *
-    * `slices` > 1 runs the batch as that many CONCURRENT narrow jobs, each
-    * over a round-robin stripe of every key's query group. A probe job's
+    * `slices` > 1 runs the batch as that many CONCURRENT narrow jobs
+    * ([[ProbeSlices.striped]]), each over a round-robin stripe of the
+    * batch's queries. A probe job's
     * task fan is bounded by the resident (key, part) graph count — a batch
     * over a handful of hot tags leaves most of the machine idle no matter
     * how many queries it carries (the r10 10M headline ran at cpu_frac
@@ -69,49 +70,24 @@ final class ResidentTagRegistry private[index] (
                        k: Int, efSearch: Int,
                        treeMergeAt: Int = 64,
                        slices: Int = 1): Array[(Long, Long, Double, Long)] = {
-    def one(g: Map[String, Array[(Long, Array[Float])]]): Array[(Long, Long, Double, Long)] = {
-      val bq = spark.sparkContext.broadcast(g)
-      val local = rdd.flatMap { case (key, idx) =>
-        bq.value.getOrElse(key, Array.empty[(Long, Array[Float])])
-          .iterator.flatMap { case (qid, qv) =>
-            idx.search(qv, k, efSearch).iterator
-              .map { case (id, d) => (qid, id, d) }
-          }
+    val flat = groups.toArray.flatMap { case (key, qs) =>
+      qs.map { case (qid, qv) => (key, qid, qv) }
+    }
+    ResidentServe.validate(k, dim, flat.iterator.map(_._3.length))
+    ProbeSlices.striped(flat, slices) { stripe =>
+      val g = stripe.groupBy(_._1).map { case (key, rows) =>
+        key -> rows.map(r => (r._2, r._3))
       }
-      val out = ProbeMerge.topK(local, k, treeMergeAt,
-        estRows = g.valuesIterator.map(_.length.toLong).sum * k *
-          local.getNumPartitions)
-      bq.destroy() // serving loop: don't accumulate per-batch broadcasts
-      out
-    }
-    if (slices <= 1) one(groups)
-    else {
-      val stripes = (0 until slices).map { s =>
-        groups.iterator.map { case (key, qs) =>
-          key -> qs.iterator.zipWithIndex
-            .collect { case (q, i) if i % slices == s => q }.toArray
-        }.filter(_._2.nonEmpty).toMap
-      }.filter(_.nonEmpty)
-      // an empty (or fully-empty-after-striping) batch has no stripes — a
-      // zero-thread pool would throw where the unsliced path returns empty
-      if (stripes.isEmpty) return Array.empty
-      // dedicated pool: Spark job submission blocks per stripe, and the
-      // global ExecutionContext is shared with caller code — a serving
-      // loop must not deadlock on someone else's starved pool
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(stripes.length)
-      try {
-        val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        val fs = stripes.map(st => scala.concurrent.Future(one(st))(ec))
-        val parts = fs.map(f =>
-          scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
-        // stripes partition qids — concatenate and restore (qid, rank) order
-        val all = Array.concat(parts: _*)
-        scala.util.Sorting.stableSort(all,
-          (a: (Long, Long, Double, Long), b: (Long, Long, Double, Long)) =>
-            a._1 < b._1 || (a._1 == b._1 && a._4 < b._4))
-        all
-      } finally pool.shutdown()
-    }
+      ResidentServe.probe(rdd, g, stripe.length, k, treeMergeAt) {
+        (shard, batch) =>
+          val (key, idx) = shard
+          batch.getOrElse(key, Array.empty[(Long, Array[Float])])
+            .iterator.flatMap { case (qid, qv) =>
+              idx.search(qv, k, efSearch).iterator
+                .map { case (id, d) => (qid, id, d) }
+            }
+      }
+    }(r => (r._1, r._4))
   }
 
   def unload(): Unit = rdd.unpersist()
@@ -275,7 +251,7 @@ object TagSubindexes {
     val keys = tagKeys ++ pairKeys
     if (keys.isEmpty)
       return new ResidentTagRegistry(spark,
-        spark.sparkContext.emptyRDD[(String, HnswIndex)], Set.empty)
+        spark.sparkContext.emptyRDD[(String, HnswIndex)], Set.empty, -1)
     val keyCol = if (tagKeys.nonEmpty) "tag" else "pair"
     val rows = spark.read.parquet(path)
       .select(col(keyCol).cast("string").as("key"), col("part"), col("seq"),
@@ -315,8 +291,8 @@ object TagSubindexes {
         (key, idx)
       }
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    rdd.count() // materialize the graphs before the first probe
-    new ResidentTagRegistry(spark, rdd, keys)
+    new ResidentTagRegistry(spark, rdd, keys,
+      ResidentServe.materialize(rdd)(g => Iterator(g._2.dim).filter(_ >= 0)))
   }
 
   private[index] def builtPairs(spark: SparkSession, path: String): Set[(Int, Int)] = {

@@ -1035,6 +1035,24 @@ class IndexSpec extends AnyFunSuite with SparkSuite {
         r => (r._1, r._4)).toSeq ===
         routed.probeBatchAuto(qs, 10, 64, minMass = 0.25).toSeq)
     } finally routed.unload()
+    // the tag registry stripes through the same ProbeSlices.striped: mixed
+    // key groups, so a stripe carries several keys' queries
+    val tp = java.nio.file.Files.createTempDirectory("graft-slices-tag")
+      .resolve("idx").toString
+    TagSubindexes.build(tagged, tp, minFreqBp = 500, numPartitions = 2)
+    val reg = TagSubindexes.loadResident(spark, tp)
+    try {
+      val groups = emb.where($"vec_id" < 40)
+        .select($"vec_id".cast("long"), $"embedding", $"label".cast("int"))
+        .as[(Long, Array[Float], Int)].collect()
+        .groupBy(_._3.toString)
+        .map { case (key, rows) => key -> rows.map(r => (r._1, r._2)) }
+      val want = reg.probeGroupsBatch(groups, 10, 64).toSeq
+      assert(want.nonEmpty)
+      for (s <- Seq(2, 3, 7))
+        assert(reg.probeGroupsBatch(groups, 10, 64, slices = s).toSeq === want,
+          s"tag registry slices=$s")
+    } finally reg.unload()
     // degenerate inputs: slices <= 1 and empty batches are the plain path
     assert(ProbeSlices.striped(Array.empty[(Long, Array[Float])], 4)(
       st => { assert(st.isEmpty); Array.empty[(Long, Long, Double, Long)] })(
@@ -1072,49 +1090,38 @@ class IndexSpec extends AnyFunSuite with SparkSuite {
     } finally bin.unload()
   }
 
-  test("probeBatch(fan) equals the unfanned batch row-for-row, with and " +
-       "without tombstones/delta") {
-    // r13 (VERDICT r12 item 7): the in-JOB fan (FanoutRDD — one job of
-    // parts × fan tasks, task (shard, stripe) probes round-robin stripe
-    // `i % fan` against shard `i / fan`) replaces concurrent-job striping
-    // on the flat graph rows. Every (query, shard) pair is computed once
-    // with the unchanged kernel, so results must be identical at any fan —
-    // including fan > partitions, fan > nq, and the mutated form where
-    // delta placement must stay keyed on the SHARD, not the child
-    // partition (a bug there would move delta rows between shards and
-    // change which shard ranks them).
-    val qs = emb.where($"vec_id" < 40)
-      .select($"vec_id".cast("long"), $"embedding")
+  test("resident probes validate each batch: query dimension, k, empty batch") {
+    val good = queries.select($"qid".cast("long"), $"qvec")
       .as[(Long, Array[Float])].collect()
-    val flat = HnswKnn.buildResident(base, numPartitions = 4)
+    val d = good.head._2.length
+    // an otherwise valid batch plus one query a component short, or long
+    val bads = Seq(good.head._2.take(d - 1), good.head._2 :+ 0.5f)
+      .map(v => good :+ ((999L, v)))
+    def rejects(what: String)(probe: Array[(Long, Array[Float])] => Any): Unit =
+      for (qs <- bads)
+        assert(intercept[IllegalArgumentException](probe(qs)).getMessage
+          .contains("dimension"), what)
+    val scan = ResidentScan.load(TagFilter.withTags(emb), numPartitions = 2)
+    try rejects("scan") { qs =>
+      scan.probeBatch(qs.map { case (q, v) => (q, v, Array.empty[Int], 0L) }, 10)
+    } finally scan.unload()
+    val rp = java.nio.file.Files.createTempDirectory("graft-dim-rt")
+      .resolve("idx").toString
+    HnswRouted.buildAndSave(base, rp, c = 4, kmIters = 2)
+    val routed = HnswRouted.loadResident(spark, rp)
+    try rejects("routed graph")(routed.probeBatch(_, 10, 64, nprobe = 2))
+    finally routed.unload()
+    val flat = HnswKnn.buildResident(base, numPartitions = 2)
     try {
-      val want = flat.probeBatch(qs, 10, 64).toSeq
-      for (f <- Seq(2, 3, 7, 64))
-        assert(flat.probeBatch(qs, 10, 64, fan = f).toSeq === want,
-          s"clean fan=$f")
-      // fanned batch must also equal the r12 striped batch (the row the
-      // bench published last round)
-      assert(ProbeSlices.striped(qs, 4)(
-        st => flat.probeBatch(st, 10, 64))(r => (r._1, r._4)).toSeq === want)
+      rejects("HNSW resident")(flat.probeBatch(_, 10, 64))
+      assert(intercept[IllegalArgumentException](
+        flat.probeBatch(good, 0, 64)).getMessage.contains("k must be"))
+      assert(flat.probeBatch(Array.empty[(Long, Array[Float])], 10, 64).isEmpty)
     } finally flat.unload()
-    // mutated serving shape: tombstones + delta buffer
-    val mut = HnswKnn.buildResident(
-      base.where($"id" >= 30), numPartitions = 4)
-    try {
-      val delta = base.where($"id" < 30)
-        .select($"id".cast("long"), $"vec")
-        .as[(Long, Array[Float])].collect()
-      val dead = (30L until 60L).toSet
-      val want = mut.probeBatch(qs, 10, 64, dead, delta).toSeq
-      for (f <- Seq(2, 5))
-        assert(mut.probeBatch(qs, 10, 64, dead, delta, fan = f).toSeq === want,
-          s"mutated fan=$f")
-    } finally mut.unload()
-    // degenerate: empty batch at any fan
-    val empty = HnswKnn.buildResident(base, numPartitions = 2)
-    try assert(empty.probeBatch(
-      Array.empty[(Long, Array[Float])], 10, 64, fan = 4).isEmpty)
-    finally empty.unload()
+    val cb = Pq.train(base, m = 4, ksub = 16, iters = 2)
+    val adc = ResidentAdc.load(base, cb, numPartitions = 2)
+    try rejects("ADC")(adc.probeBatch(_, 10, rerank = 20))
+    finally adc.unload()
   }
 
   test("ProbeSlices.auto adapts stripes to partitions, cores and batch size") {

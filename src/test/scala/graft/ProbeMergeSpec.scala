@@ -75,18 +75,25 @@ class ProbeMergeSpec extends AnyFunSuite with SparkSuite {
     assert(rows(tree) === rows(driver))
   }
 
-  test("selectTopK: (dist asc, id asc) over a filled prefix, ties and " +
-       "short inputs") {
-    val ids = Array(5L, 2L, 9L, 1L, 7L, 999L)
-    val ds = Array(3.0, 1.0, 1.0, 4.0, 1.0, -1.0)
-    // filled = 5 ignores the trailing slot; ties on 1.0 order by id asc
-    assert(ProbeMerge.selectTopK(ids, ds, filled = 5, k = 3).toSeq ===
-      Seq((2L, 1.0), (7L, 1.0), (9L, 1.0)))
-    assert(ProbeMerge.selectTopK(ids, ds, filled = 5, k = 4).toSeq ===
-      Seq((2L, 1.0), (7L, 1.0), (9L, 1.0), (5L, 3.0)))
-    // k > filled returns everything, fully ranked
-    assert(ProbeMerge.selectTopK(ids, ds, filled = 2, k = 10).toSeq ===
-      Seq((2L, 1.0), (5L, 3.0)))
-    assert(ProbeMerge.selectTopK(ids, ds, filled = 0, k = 3).isEmpty)
+  test("TopKBuffer: (dist asc, id asc) selection, ties, refine, short input") {
+    val ids = Array(5L, 2L, 9L, 1L, 7L)
+    val ds = Array(3.0, 1.0, 1.0, 4.0, 1.0)
+    def top(k: Int, n: Int): Seq[(Long, Double)] = {
+      val b = new TopKBuffer(k)
+      for (i <- 0 until n) b.offer(ds(i), ids(i))
+      b.rows(0L).map(r => (r._2, r._3)).toSeq
+    }
+    // ties on 1.0 order by id asc
+    assert(top(3, 5) === Seq((2L, 1.0), (7L, 1.0), (9L, 1.0)))
+    assert(top(4, 5) === Seq((2L, 1.0), (7L, 1.0), (9L, 1.0), (5L, 3.0)))
+    // k > offered returns everything, fully ranked
+    assert(top(10, 2) === Seq((2L, 1.0), (5L, 3.0)))
+    assert(top(3, 0).isEmpty)
+    // refine re-scores the carried vectors into a fresh k-bounded buffer
+    val b = new TopKBuffer(4, carryVecs = true)
+    for (i <- 0 until 5) b.offer(ds(i), ids(i), Array(ids(i).toFloat))
+    val r = b.refine(2)(v => -v(0).toDouble)
+    assert(r.rows(7L).toSeq === Seq((7L, 9L, -9.0), (7L, 7L, -7.0)))
+    assert(b.contains(5L) && !b.contains(1L))
   }
 }

@@ -159,11 +159,26 @@ class SparseSpec extends AnyFunSuite with SparkSuite {
   test("two-stage rerank without a forward index fails loudly") {
     val served = graft.index.ResidentPostings.load(tf, 16, numPartitions = 2)
     try {
+      val qs = queries(3)
+        .select($"qid".cast("long"), $"dim".cast("string"), $"qv".cast("long"))
+        .as[(Long, String, Long)].collect()
+        .groupBy(_._1).toArray.sortBy(_._1)
+        .map { case (qid, rows) => (qid, rows.map(_._2), rows.map(_._3)) }
+      def held = org.apache.spark.GraftTestBridge
+        .broadcastsOf(spark.sparkContext, qs)
+      val before = held
       val e = intercept[org.apache.spark.SparkException] {
-        served.probeLocal(queries(3), 5, budget = 64L, rerank = 32)
+        served.probeBatch(qs, 5, budget = 64L, rerank = 32)
       }
       assert(e.getMessage.contains("forward") ||
         String.valueOf(e.getCause).contains("forward"))
+      // the failed batch's broadcast is released, not leaked (destroy
+      // reaches the block manager asynchronously, hence the wait)
+      import org.scalatest.concurrent.Eventually._
+      import org.scalatest.time.SpanSugar._
+      eventually(timeout(20.seconds), interval(100.millis)) {
+        assert(held === before, "the failed batch's broadcast leaked")
+      }
     } finally served.unload()
   }
 
