@@ -1623,16 +1623,14 @@ object Bench {
     teardowns.foreach { td => try td() catch { case _: Throwable => () } }
 
     // streaming track (BASELINE row 4's unit — checkpoint recall + wall
-    // time, not QPS): replay the reference's own delete_runbook scaled
-    // into this SF's id space and grade every search checkpoint against
-    // the exact live-set kNN.
+    // time, not QPS): replay the in-repo delete_runbook fixture (the
+    // reference's shape, not its bytes) scaled into this SF's id space and
+    // grade every search checkpoint against the exact live-set kNN.
     val (streamRecall, streamSec, streamGradeSec, streamCps, streamErr) =
       if (!trackOn("streaming")) (0.0, 0.0, 0.0, "[]", "")
       else {
       try {
-        val yaml = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(
-            "/root/reference/streaming/delete_runbook.yaml")))
+        val yaml = streaming.Runbook.fixture("delete_runbook.yaml")
         // BASELINE row 4 grades the msturing-10M-clustered doc (32 ins /
         // 10 del / 33 search, max_pts 6M — scaled, so occupancy-triggered
         // consolidations fire at the same relative points)

@@ -60,6 +60,20 @@ object Runbook {
     books.result()
   }
 
+  /** The YAML text of a runbook fixture on the classpath under
+    * `graft/runbooks/` (`simple_runbook.yaml`, `delete_runbook.yaml`,
+    * `clustered_runbook.yaml`): files in the reference's format and of its
+    * documented shapes, not its bytes — each file's header says where its
+    * numbers come from. A missing file throws naming it. */
+  def fixture(name: String): String = {
+    val path = s"graft/runbooks/$name"
+    val in = Option(getClass.getClassLoader.getResourceAsStream(path))
+      .getOrElse(throw new java.io.FileNotFoundException(
+        s"runbook fixture $path is not on the classpath"))
+    try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+    finally in.close()
+  }
+
   /** The live set as DISJOINT SORTED id ranges, from a sequence-ordered
     * insert/delete op prefix: an id is live iff the latest op covering it
     * is an insert. Because ops are RANGES, the live set compresses to at

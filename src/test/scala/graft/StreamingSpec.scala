@@ -254,8 +254,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     // BASELINE row 4 at reduced scale: interleaved inserts/deletes with
     // max_pts-triggered consolidations, ranges scaled into the sf0.1 id
     // space, every checkpoint graded against the exact live-set kNN.
-    val yaml = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/streaming/delete_runbook.yaml")))
+    val yaml = Runbook.fixture("delete_runbook.yaml")
     // the BASELINE row-4 unit: msturing-10M-clustered, 32 inserts /
     // 10 deletes / 33 searches, max_pts 6M (reference reports 0.924)
     val rb0 = Runbook.parseYaml(yaml)
@@ -279,8 +278,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     // re-insert → search pattern (reference reports 0.958 at Ls=100 on
     // msturing-1M). Scaled into the sf0.1 id space and graded at every
     // checkpoint against the exact live-set kNN.
-    val yaml = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/streaming/simple_runbook.yaml")))
+    val yaml = Runbook.fixture("simple_runbook.yaml")
     val src01 = Tables.embeddings(spark, "/root/testdata/sf0.1")
       .select($"vec_id".as("id"), $"embedding".as("vec")).cache()
     val q01 = Tables.embeddings(spark, "/root/testdata/sf0.1")
@@ -302,8 +300,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     // insert→search cycles, no deletes). Delta-resident serving must
     // absorb most inserts — rebuilds only on delta overflow — while every
     // checkpoint still recalls the exact live-set kNN.
-    val yaml = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/streaming/clustered_runbook.yaml")))
+    val yaml = Runbook.fixture("clustered_runbook.yaml")
     val src01 = Tables.embeddings(spark, "/root/testdata/sf0.1")
       .select($"vec_id".as("id"), $"embedding".as("vec")).cache()
     val q01 = Tables.embeddings(spark, "/root/testdata/sf0.1")
