@@ -1,7 +1,8 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import scala.collection.mutable.ArrayBuffer
+import scala.collection.immutable.ListMap
+import scala.collection.mutable.{ArrayBuffer, LinkedHashMap}
 
 /** Benchmark main (driver contract): runs every query in SparkEntry.queries
   * against SPARK_GRAFT_SF_DIR and prints ONE JSON line.
@@ -64,23 +65,314 @@ import scala.collection.mutable.ArrayBuffer
   * corpus-relative points in their sweeps alongside the absolute ones and
   * their headlines stay at the corpus-relative operating point.
   *
+  * Table-driven: every swept family goes through ONE path,
+  * [[Registry.sweepPick]] — grade each grid point, register it as a sweep
+  * row, pick the matched-recall knob, register the headline — and every
+  * row carries its own `op`/`recall` records, so the JSON blocks are
+  * rendered from the registry and a skipped family is simply absent.
+  *
   * Sweep points (r5 lesson, tightened r7): every sweep point reports
   * MEDIAN-batch QPS plus its own max/min spread — the curve's shape comes
   * from a robust estimator and the variance is in the artifact, not
   * discarded. Sweep points are REGISTERED AS ROWS of the interleaved loop
-  * (registerSweepPoint) rather than timed eagerly in the fixture-build
-  * phase: fixture-phase timing put whole sweep families inside whichever
-  * environment band that phase landed in (2–3× apart between runs of
-  * identical binaries) while the interleaved loop reproduces to ~±6%.
-  * Per-point recalls are deterministic and still computed at build time.
+  * rather than timed eagerly in the fixture-build phase: fixture-phase
+  * timing put whole sweep families inside whichever environment band that
+  * phase landed in (2–3× apart between runs of identical binaries) while
+  * the interleaved loop reproduces to ~±6%. Per-point recalls are
+  * deterministic and still computed at build time.
   *
   * Shared fixtures (r5 item 8): the serving tracks probe ONE base/query
   * set, grade against ONE exact-L2 (and one exact-ip) truth collected to a
-  * local relation, and the ip graph is built once and shared by the ip
-  * probe row and the MaxSim rows — identical coverage, no redundant
-  * brute-force joins or index builds. */
+  * local relation — identical coverage, no redundant brute-force joins or
+  * index builds. */
 object Bench {
+  private val reps = 10
+  // minimum timed-sample window (headline rows AND sweep points): a
+  // sample of a fast row averages enough back-to-back batches to fill
+  // this window, so a transient pause perturbs the sample by its share
+  // of the window rather than of one short batch
+  private val minWindowSec = 0.8
+
+  /** Env variables that restrict what a run measures. */
+  val filterVars: Seq[String] = Seq("SPARK_GRAFT_TRACKS",
+    "SPARK_GRAFT_IVF_FAMILIES", "SPARK_GRAFT_QPS_ONLY",
+    "SPARK_GRAFT_SWEEP_CAP_PCT")
+
+  /** Where the full JSON object is written: SPARK_GRAFT_BENCH_OUT when
+    * set, else `BENCH_METRICS.json` — but only for an unfiltered run. A
+    * filtered run (any of [[filterVars]] set) without SPARK_GRAFT_BENCH_OUT
+    * is rejected, so a partial object can never replace the committed
+    * full-run artifact. */
+  def outPath(env: Map[String, String]): String =
+    env.getOrElse("SPARK_GRAFT_BENCH_OUT", {
+      val set = filterVars.filter(env.contains)
+      require(set.isEmpty, s"${set.mkString(", ")} filters the run: set " +
+        "SPARK_GRAFT_BENCH_OUT to the output file (BENCH_METRICS.json is " +
+        "written only by an unfiltered run)")
+      "BENCH_METRICS.json"
+    })
+
+  /** Matched-recall operating point: the smallest swept knob clearing the
+    * 0.9 grading recall (BASELINE.md's rows are @0.9); if no point clears
+    * it, the best-recall point (smallest knob on a tie) — the headline is
+    * then honestly sub-0.9 and its recall says so in the artifact. */
+  def pickKnob(points: Seq[(Int, Double)], floor: Double = 0.9): Int = {
+    val sorted = points.sortBy(_._1)
+    sorted.find(_._2 >= floor).map(_._1)
+      .getOrElse(sorted.maxBy(_._2)._1)
+  }
+
+  // a row's stall-audit stats, as published when it took no sample
+  private val noStats: ListMap[String, Any] = ListMap("spread" -> 0.0,
+    "gc_worst_ms" -> 0L, "cpu_frac_worst" -> 0.0, "cpu_frac_med" -> 0.0)
+
+  private def obj(kv: Iterable[(String, Any)]): String =
+    kv.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+  private def str(s: String): String = "\"" + s + "\""
+
+  /** One interleaved row: its batch, its effective query count (qps =
+    * norm / median batch seconds), the `op`/`recall` records published
+    * for it, and what the timed loop measures for it. */
+  private final class Row(val name: String, val norm: Double,
+                          val headline: Boolean, val run: () => Unit) {
+    val op = ArrayBuffer.empty[(String, Any)]
+    val recall = ArrayBuffer.empty[(String, Any)]
+    def withOp(kv: (String, Any)*): Row = { op ++= kv; this }
+    def withRecall(kv: (String, Any)*): Row = { recall ++= kv; this }
+    var failed = false
+    var calib = 1.0
+    var gcRetakes = 0
+    var cpuRetakes = 0
+    // cpu-frac history, seeded by calibration
+    val cf = ArrayBuffer.empty[Double]
+    // per sample: (sec per batch, GC ms inside the sample's timed region,
+    // process-CPU share of the sample's wall window)
+    val samples = ArrayBuffer.empty[(Double, Long, Double)]
+    def cfMedian: Double =
+      if (cf.length < 2) 0.0 else cf.sorted.apply(cf.length / 2)
+    def iters: Int = math.max(1, math.min(25,
+      math.ceil(minWindowSec / math.max(calib, 1e-3)).toInt))
+    def nReps: Int = if (calib > 5.0) math.min(3, reps) else reps
+    // median rate + max/min spread over the interleaved samples
+    lazy val qps: Double =
+      if (failed || samples.isEmpty) 0.0
+      else norm / samples.map(_._1).sorted.apply(samples.length / 2)
+    // GC time and process-CPU share inside the WORST sample (the stall
+    // audit: cpu share ~1.0 = the JVM computed the whole window, << 1 =
+    // the host withheld cycles), and the MEDIAN sample's share as the
+    // row's own baseline — serving batches legitimately run ~0.1 of 32
+    // cores, so the outlier signal is worst-vs-median collapse
+    lazy val stats: ListMap[String, Any] =
+      if (samples.isEmpty) noStats
+      else {
+        val ts = samples.sortBy(_._1)
+        val worst = samples.maxBy(_._1)
+        def share(s: (Double, Long, Double)) = math.rint(s._3 * 1000) / 1000
+        ListMap(
+          "spread" -> (if (failed) 0.0 else ts.last._1 / math.max(ts.head._1, 1e-9)),
+          "gc_worst_ms" -> worst._2, "cpu_frac_worst" -> share(worst),
+          "cpu_frac_med" -> share(ts(ts.length / 2)))
+      }
+  }
+
+  private final case class Pick(row: Row, knob: Int, recall: Double)
+
+  /** The interleaved rows in registration (= round-robin) order and the
+    * sweep families built from them. */
+  private final class Registry {
+    val rows = ArrayBuffer.empty[Row]
+    private val sweeps =
+      LinkedHashMap.empty[String, (String, ArrayBuffer[(Int, Double, Row)])]
+
+    def register(name: String, norm: Double, headline: Boolean = true)(
+        runOnce: => Unit): Row = {
+      val r = new Row(name, norm, headline, () => runOnce)
+      rows += r
+      r
+    }
+
+    /** Grades every grid point with `recallOf` (deterministic, at build
+      * time) and registers it as row `sweep:<family>:<knob>`. */
+    def sweep(family: String, knob: String)(grid: Seq[Int], nQ: Int,
+        recallOf: Int => Double)(batch: Int => Unit): Seq[(Int, Double)] = {
+      val pts = sweeps.getOrElseUpdate(family, (knob, ArrayBuffer.empty))._2
+      grid.map { k =>
+        // duplicate knobs would merge two rows into one sweep point
+        require(!pts.exists(_._1 == k), s"duplicate sweep point $family:$k")
+        val rc = recallOf(k)
+        pts += ((k, rc, register(s"sweep:$family:$k", nQ, headline = false)(
+          batch(k))))
+        k -> rc
+      }
+    }
+
+    /** The sweep → pick → register path: sweeps `grid`, registers the
+      * headline `row` at the matched-recall knob, and records the knob as
+      * op `<row>_<knob>` and its recall under `recallKey`. */
+    def sweepPick(row: String, knob: String)(grid: Seq[Int], nQ: Int,
+        recallOf: Int => Double, family: String = row,
+        recallKey: String = row)(batch: Int => Unit): Pick = {
+      val pts = sweep(family, knob)(grid, nQ, recallOf)(batch)
+      val k = pickKnob(pts)
+      val rc = pts.toMap.apply(k)
+      Pick(register(row, nQ)(batch(k)).withOp(s"${row}_$knob" -> k)
+        .withRecall(recallKey -> rc), k, rc)
+    }
+
+    /** The registry's part of the `qps` object: per-headline medians and
+      * stall audit, op/recall records of the rows that ran, sweeps. */
+    def json: Seq[(String, Any)] = {
+      val heads = rows.filter(_.headline).toSeq
+      heads.map(r => r.name -> r.qps) ++
+        noStats.keys.map(s => s -> obj(heads.map(r => r.name -> r.stats(s)))) ++
+        Seq(
+          "op" -> obj(rows.flatMap(_.op).distinct),
+          "reps_capped" ->
+            obj(rows.collect { case r if r.nReps < reps => r.name -> r.nReps }),
+          "recall" -> obj(rows.flatMap(_.recall)),
+          "sweep" -> obj(sweeps.map { case (family, (knob, pts)) =>
+            family -> pts.sortBy(_._1).map { case (k, rc, r) =>
+              obj(Seq(knob -> k, "qps" -> r.qps, "recall" -> rc) ++ r.stats)
+            }.mkString("[", ",", "]")
+          }))
+    }
+  }
+
+  // collect accumulated old-gen debt at pass boundaries: fixture builds
+  // and recall grading leave garbage whose eventual full collection
+  // otherwise lands as one multi-second pause on a random row's batch
+  private def settle(): Unit = { System.gc(); Thread.sleep(100) }
+
+  // hypervisor steal meter: this box steals CPU from the guest in
+  // minutes-scale bands (observed ~1.7% mean, concentrated), which is
+  // what inflates spread run-to-run on identical binaries — medians
+  // stay put (interleaving), but worst-case samples track the band.
+  // Publishing the timed loop's steal share puts the evidence in the
+  // artifact next to the spreads it explains.
+  private def cpuStat(): (Long, Long) = try {
+    val src = scala.io.Source.fromFile("/proc/stat")
+    try {
+      val f = src.getLines().next().trim.split("\\s+").drop(1).map(_.toLong)
+      // first 8 fields (user..steal) only: guest/guest_nice are already
+      // folded into user/nice, so summing them double-counts the total
+      (f.take(8).sum, if (f.length > 7) f(7) else 0L)
+    } finally src.close()
+  } catch { case _: Throwable => (0L, 0L) }
+
+  /** The interleaved timed loop (see the scaladoc): per row, one untimed
+    * warmup then TWO timed batches whose MIN is the calibration time — a
+    * transient pause on a single calibration batch can no longer
+    * misclassify a fast row as slow (it=1) and revert it to unwindowed
+    * samples. Then `reps` round-robin passes over every row. Returns the
+    * loop's hypervisor steal share in percent. */
+  private def timeRows(rows: Seq[Row]): Double = {
+    val gcBeans = java.lang.management.ManagementFactory
+      .getGarbageCollectorMXBeans()
+    def gcMsNow(): Long = {
+      var acc = 0L
+      gcBeans.forEach { b =>
+        val t = b.getCollectionTime; if (t > 0) acc += t
+      }
+      acc
+    }
+    // process-CPU share of a sample's wall window: ~1.0 when the JVM's
+    // threads actually ran the whole window, collapsing when the HOST
+    // stalled the process (descheduling, cpu-band contention) — the
+    // attribution for spread outliers whose gc_worst_ms reads 0 (r8:
+    // whole adjacent row-stretches at spread 3-9 with zero GC and steal
+    // < 0.1%; medians reproduce, worst samples track the band)
+    val osBean = java.lang.management.ManagementFactory
+      .getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+    val nProcs = Runtime.getRuntime.availableProcessors()
+    def share(c0: Long, wallNs: Long): Double =
+      (osBean.getProcessCpuTime - c0).toDouble / (wallNs.toDouble * nProcs)
+    rows.foreach { r =>
+      try {
+        r.run()
+        def timed(): Double = {
+          val c0 = osBean.getProcessCpuTime
+          val t0 = System.nanoTime()
+          r.run()
+          val w = System.nanoTime() - t0
+          r.cf += share(c0, w)
+          w / 1e9
+        }
+        r.calib = math.min(timed(), timed())
+      } catch { case _: Throwable => r.failed = true }
+    }
+    // min-window sample batching (r7; GC-audited r8): a ~45 ms batch turns
+    // ANY transient pause (a late JIT pass, old-gen collection of a heavy
+    // neighbor row's debt) into a 5–10× max sample, so fast rows read
+    // spread > 5 while flat in isolation. Each timed SAMPLE of a fast row
+    // runs enough back-to-back batches to fill ~0.8 s and records the
+    // MEDIAN batch time of the window (r8: a collection inside a ≥3-batch
+    // window no longer perturbs the sample at all, where the r7 mean
+    // diluted-but-kept it). Slow rows (single batch ≥ the window) get a
+    // settle() BEFORE each sample, and if a major collection still lands
+    // inside the timed batch (> 200 ms of GC AND > 20% of the batch) the
+    // sample is RETAKEN once. Nothing is silently discarded: the retake
+    // count and each row's GC time during its WORST sample are published
+    // in the artifact, so a surviving spread outlier carries its stall
+    // attribution (gc_worst_ms ≈ 0 ⇒ the stall was not the collector).
+    // Rows whose calibration batch exceeds 5 s keep only 3 round-robin
+    // samples (published per row in reps_capped) — bounding the wall cost
+    // of the slowest sweep points at large SF.
+    def sample(r: Row, it: Int): (Double, Long, Double) = {
+      val g0 = gcMsNow()
+      val c0 = osBean.getProcessCpuTime
+      val t0w = System.nanoTime()
+      val bt = Array.fill(it) {
+        val t0 = System.nanoTime()
+        r.run()
+        (System.nanoTime() - t0) / 1e9
+      }
+      val cf = share(c0, System.nanoTime() - t0w)
+      java.util.Arrays.sort(bt)
+      (bt(it / 2), gcMsNow() - g0, cf)
+    }
+    // cpu-frac retake (r9): r8's audit showed 13 headline rows at spread
+    // 2–9.5 with gc_worst_ms 0, steal < 0.1%, and the worst sample's
+    // cpu_frac BELOW the row median — host CPU starvation the GC retake
+    // can't see. Mirror it: a sample whose process-CPU share collapses
+    // below 60% of the row's own MEDIAN share (serving batches run ~0.1
+    // of 32 cores and swing ~2× sample-to-sample; the row's best-ever
+    // share re-took ~half of all samples) is retaken ONCE (retake kept
+    // regardless), at most 3 retakes per row so a genuinely-degraded
+    // environment can't double a run's wall. Count published next to
+    // gc_retakes — nothing is silently discarded.
+    def cpuRetake(r: Row, cf: Double): Boolean = {
+      val ref = r.cfMedian
+      val hit = ref > 0 && cf < 0.6 * ref && r.cpuRetakes < 3
+      if (hit) r.cpuRetakes += 1
+      hit
+    }
+    val (statTot0, statSteal0) = cpuStat()
+    for (pass <- 1 to reps; r <- rows if !r.failed && pass <= r.nReps) {
+      try {
+        val it = r.iters
+        if (it == 1) settle()
+        var s = sample(r, it)
+        if (it == 1 && s._2 > 200 && s._2 > 0.2 * s._1 * 1000.0) {
+          r.gcRetakes += 1
+          s = sample(r, it)
+        }
+        // a host stall spanning a whole window defeats the in-window
+        // median — the same collapse test applies to windowed rows
+        if (cpuRetake(r, s._3)) s = sample(r, it)
+        r.cf += s._3
+        r.samples += s
+      } catch { case _: Throwable => r.failed = true }
+    }
+    val (statTot1, statSteal1) = cpuStat()
+    if (statTot1 > statTot0)
+      100.0 * (statSteal1 - statSteal0) / (statTot1 - statTot0)
+    else 0.0
+  }
+
   def main(args: Array[String]): Unit = {
+    // fail before any Spark work when a filtered run names no output file
+    val outFile = outPath(sys.env)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
@@ -111,6 +403,11 @@ object Bench {
       // queries are independent; drop their persisted intermediates so the
       // queries' caches don't accumulate into GC pressure that skews timings
       spark.sqlContext.clearCache()
+    }
+    def timedRun(name: String)(body: => Unit): (String, Double) = {
+      val t0 = System.nanoTime()
+      try body catch { case _: Throwable => () }
+      name -> (System.nanoTime() - t0) / 1e9
     }
     // SPARK_GRAFT_QPS_ONLY=1 skips the per-query map — for scale-ratchet
     // runs on benchmark-shape data (embeddings + documents only) where the
@@ -153,11 +450,7 @@ object Bench {
       }
     val results =
       if (qpsOnly) Map.empty[String, Double]
-      else SparkEntry.queries.map { case (name, _) =>
-        val t0 = System.nanoTime()
-        try run(name) catch { case _: Throwable => () }
-        name -> (System.nanoTime() - t0) / 1e9
-      }
+      else SparkEntry.queries.map { case (name, _) => timedRun(name)(run(name)) }
     // scale-ratchet runs also time a representative PIPELINE/batch slice
     // (documents-table-only queries, the same run() semantics as the
     // per-query map) so the dedup/text/mixture side's 10× scaling is in
@@ -186,10 +479,7 @@ object Bench {
           "text_lm_familiarity", "pipeline_quality_deciles",
           "pipeline_sequences", "pipeline_mixture_take", "text_redact_pii")
           .map { name =>
-            val t0 = System.nanoTime()
-            try scaleAware.getOrElse(name, () => run(name)).apply()
-            catch { case _: Throwable => () }
-            name -> (System.nanoTime() - t0) / 1e9
+            timedRun(name)(scaleAware.getOrElse(name, () => run(name)).apply())
           }.toMap
       }
 
@@ -197,7 +487,6 @@ object Bench {
     val emb = Tables.embeddings(spark, sfDir)
     val n = emb.count()
     val nq = math.min(500L, n / 2).toInt
-    val reps = 10
     // Resident serving forms shard CORPUS-RELATIVE, floor 8, cap = session
     // cores: shards are the scale-out axis (one per executor core on a
     // cluster) and a probe batch is ONE job whose task count = shard
@@ -211,11 +500,8 @@ object Bench {
     // artifacts. The floor is the INVARIANT (small-SF rows stay
     // shard-identical to r8 even under the driver's default 4-cpu run —
     // min(cpus, max(8, …)) silently yielded 4 shards there); the cap
-    // applies only above it. SPARK_GRAFT_SHARDS overrides for fleet-shape
-    // experiments.
-    val serveShards = math.max(1, sys.env.get("SPARK_GRAFT_SHARDS")
-      .map(_.toInt)
-      .getOrElse(math.max(8, math.min(cpus.toInt, (n / 16384L).toInt))))
+    // applies only above it.
+    val serveShards = math.max(8, math.min(cpus.toInt, (n / 16384L).toInt))
     // corpus-relative budget-knob scale (see methodology note): 1 at the
     // sf0.1 reference corpus, 10 at 10× rows, etc.
     val knobScale = math.max(1L, n / 2000L).toInt
@@ -235,79 +521,18 @@ object Bench {
     // Rows are IDENTICAL to the unsliced batch (stripes partition qids;
     // asserted in IndexSpec/SparseSpec) — the reference's own serving
     // harness stripes queries over a thread pool for the same reason
-    // (filter/faiss/faiss.py:420-426). SPARK_GRAFT_PROBE_SLICES overrides
-    // for fleet-shape experiments.
-    // ADVICE r12: validate the override up front (a malformed value must
-    // fail the run at startup with a clear message, not throw
-    // NumberFormatException mid-bench) and clamp it per row to auto()'s
-    // minPerSlice floor — an oversized override is one thread + one
-    // concurrent Spark job per query, which times scheduling, not the
-    // operator (the r8 tiny-task lesson).
-    val slicesOverride = sys.env.get("SPARK_GRAFT_PROBE_SLICES").map { s =>
-      val v = scala.util.Try(s.toInt).getOrElse(
-        sys.error(s"SPARK_GRAFT_PROBE_SLICES must be an int, got '$s'"))
-      require(v >= 1, s"SPARK_GRAFT_PROBE_SLICES must be >= 1, got $v")
-      v
-    }
-    def slicesFor(parts: Int, nQ: Int): Int =
-      slicesOverride
-        .map(v => math.max(1, math.min(v, nQ / 16)))
-        .getOrElse(index.ProbeSlices.auto(parts, cpus.toInt, nQ))
-    // float-query families all return (qid, id, dist, rank)
-    def stripedF(qs: Array[(Long, Array[Float])], parts: Int)(
-        one: Array[(Long, Array[Float])] => Array[(Long, Long, Double, Long)])
-        : Array[(Long, Long, Double, Long)] =
-      index.ProbeSlices.striped(qs, slicesFor(parts, qs.length))(one)(
-        r => (r._1, r._4))
-    // collect accumulated old-gen debt at pass boundaries: fixture builds
-    // and recall grading leave garbage whose eventual full collection
-    // otherwise lands as one multi-second pause on a random row's batch
-    def settle(): Unit = { System.gc(); Thread.sleep(100) }
-    // minimum timed-sample window (headline rows AND sweep points): a
-    // sample of a fast row averages enough back-to-back batches to fill
-    // this window, so a transient pause perturbs the sample by its share
-    // of the window rather than of one short batch
-    val minWindowSec = 0.8
+    // (filter/faiss/faiss.py:420-426).
+    def slices(parts: Int, nQ: Int): Int =
+      index.ProbeSlices.auto(parts, cpus.toInt, nQ)
+    // one timed batch of a striped resident probe, checked non-empty
+    def probe[Q: scala.reflect.ClassTag, D](qs: Array[Q], parts: Int)(
+        one: Array[Q] => Array[(Long, Long, D, Long)]): Unit =
+      require(index.ProbeSlices.striped(qs, slices(parts, qs.length))(one)(
+        r => (r._1, r._4)).nonEmpty)
 
-    // -- interleaved headline registry (see the scaladoc) -------------------
-    // each row: (name, one timed batch — must do its own result-nonempty
-    // check, norm = the row's effective query count for qps = norm/median)
-    val headline = ArrayBuffer.empty[(String, () => Unit, Double)]
+    val reg = new Registry
     val teardowns = ArrayBuffer.empty[() => Unit]
-    def register(name: String, norm: Double)(runOnce: => Unit): Unit =
-      headline += ((name, () => runOnce, norm))
     def deferUnload(f: => Unit): Unit = teardowns += (() => f)
-
-    // sweep points are TIMED IN THE INTERLEAVED LOOP alongside the
-    // headline rows (r7): measuring them eagerly in the fixture-build
-    // phase put every point inside whichever environment band that phase
-    // happened to land in — whole sweep families read 2–3× apart between
-    // runs of identical binaries while the interleaved loop reproduced to
-    // ~±6%. Registration records the knob and the point's (deterministic)
-    // recall; qps/spread come out of the same round-robin median/spread
-    // machinery as every other row after the loop.
-    val sweepReg = scala.collection.mutable.LinkedHashMap
-      .empty[String, ArrayBuffer[(Int, String, Double)]]
-    def registerSweepPoint(family: String, knob: Int, norm: Double,
-                           recall: Double)(runOnce: => Unit): Unit = {
-      val pts = sweepReg.getOrElseUpdate(family, ArrayBuffer.empty)
-      // duplicate knobs would share one samples buffer through the
-      // name-keyed maps below and silently merge 2×reps samples
-      require(!pts.exists(_._1 == knob), s"duplicate sweep point $family:$knob")
-      val nm = s"sweep:$family:$knob"
-      register(nm, norm)(runOnce)
-      pts += ((knob, nm, recall))
-    }
-
-    // matched-recall operating point: the smallest swept knob clearing the
-    // 0.9 grading recall (BASELINE.md's rows are @0.9); if no point clears
-    // it, the best-recall point — the headline is then honestly sub-0.9
-    // and its recall says so in the artifact
-    def pickKnob(points: Seq[(Int, Double)], floor: Double = 0.9): Int = {
-      val sorted = points.sortBy(_._1)
-      sorted.find(_._2 >= floor).map(_._1)
-        .getOrElse(sorted.maxBy(_._2)._1)
-    }
 
     // shared serving fixtures
     val base = emb.select(col("vec_id").as("id"), col("embedding").as("vec"))
@@ -315,6 +540,12 @@ object Bench {
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
     val qsFloat = queries.select(col("qid").cast("long"), col("qvec"))
       .as[(Long, Array[Float])].collect()
+    def probeF(parts: Int)(one: Array[(Long, Array[Float])] =>
+        Array[(Long, Long, Double, Long)]): Unit = probe(qsFloat, parts)(one)
+    def frame(rows: Array[(Long, Long, Double, Long)]): DataFrame =
+      spark.createDataFrame(rows.toSeq).toDF("qid", "id", "dist", "rank")
+    def rec(got: DataFrame, truth: DataFrame): Double =
+      operators.Recall.mean(got, truth, 10)
     // exact truths, collected to LOCAL relations: per-track clearCache
     // can't drop them and no track recomputes the brute-force join
     def localTruth(df: DataFrame): DataFrame =
@@ -322,27 +553,17 @@ object Bench {
         df.select(col("qid").cast("long"), col("id").cast("long"),
           col("rank").cast("long")).as[(Long, Long, Long)].collect().toSeq)
         .toDF("qid", "id", "rank")
+    def exactTruth(metric: String): DataFrame = {
+      val t = localTruth(operators.Knn.knnJoin(queries, base, 10, metric))
+      spark.sqlContext.clearCache(); t
+    }
     // lazy: a tracks-filtered run only pays for the truths its families
     // grade against (each is a full brute-force join over the corpus)
-    lazy val truthL2 = {
-      val t = localTruth(
-        operators.Knn.knnJoin(queries, base, 10, operators.Metric.L2))
-      spark.sqlContext.clearCache(); t
-    }
-    lazy val truthIp = {
-      val t = localTruth(
-        operators.Knn.knnJoin(queries, base, 10, operators.Metric.Ip))
-      spark.sqlContext.clearCache(); t
-    }
-    lazy val truthCos = {
-      val t = localTruth(
-        operators.Knn.knnJoin(queries, base, 10, operators.Metric.Cosine))
-      spark.sqlContext.clearCache(); t
-    }
+    lazy val truthL2 = exactTruth(operators.Metric.L2)
+    lazy val truthIp = exactTruth(operators.Metric.Ip)
+    lazy val truthCos = exactTruth(operators.Metric.Cosine)
 
-    val (subindexEf, subindexRecall, plannerRecall,
-         subSlices, plannerScanN, plannerGraphN) =
-      if (!trackOn("filter")) (0, 0.0, 0.0, 1, 0, 0) else {
+    if (trackOn("filter")) {
     // filter track: exact conjunctive 2-tag filtered kNN, k=10, served from
     // EXECUTOR-RESIDENT signature-scan shards (build+pin excluded from the
     // timed loop — the reference's QPS excludes its index build too, and
@@ -366,9 +587,9 @@ object Bench {
     // saturates the box on its own (cpu_frac 0.87, r11), so striping buys
     // nothing there either. The graph/code families below stripe: their
     // probes are compute-bound walks over small working sets.
-    register("filtered_knn", nq) {
+    reg.register("filtered_knn", nq) {
       require(filterServed.probeBatch(filterQs, k = 10).nonEmpty)
-    }
+    }.withRecall("filtered_knn" -> 1.0)
 
     // filter track, per-tag SUBINDEX registry (X8, the reference's hot-tag
     // strategy): every label and mod-7 tag clears minFreqBp = 500, so each
@@ -405,6 +626,8 @@ object Bench {
       .as[(Long, Array[Float], Int)].collect()
       .groupBy(_._3.toString)
       .map { case (key, qs) => key -> qs.map { case (qid, qv, _) => (qid, qv) } }
+    def subBatch(ef: Int, s: Int) =
+      tagRegistry.probeGroupsBatch(subGroups, k = 10, efSearch = ef, slices = s)
     // per-tag graphs hold ~n/10 nodes each, so the beam is an absolute
     // grid like the flat graphs'; truth is the exact filtered scan,
     // collected once. Headline = matched-recall pick; the planner row
@@ -419,25 +642,11 @@ object Bench {
     // algorithm, exactly the r8 sf10/2M failure mode.
     val subindexEfs = Seq(16, 24, 32, 48) ++
       (if (n >= 1000000L) Seq(96, 192, 384) else Seq.empty)
-    val subindexRecalls = subindexEfs.map { ef =>
-      val got = spark.createDataFrame(
-        tagRegistry.probeGroupsBatch(subGroups, 10, ef,
-          slices = subSlices).toSeq)
-        .toDF("qid", "id", "dist", "rank")
-      ef -> operators.Recall.mean(got, subTruth, 10)
+    val sub = reg.sweepPick("filtered_knn_subindex", "efSearch")(subindexEfs,
+      nq, ef => rec(frame(subBatch(ef, subSlices)), subTruth)) { ef =>
+      require(subBatch(ef, subSlices).nonEmpty)
     }
-    subindexRecalls.foreach { case (ef, r) =>
-      registerSweepPoint("filtered_knn_subindex", ef, nq, r) {
-        require(tagRegistry.probeGroupsBatch(subGroups, k = 10,
-          efSearch = ef, slices = subSlices).nonEmpty)
-      }
-    }
-    val subindexEf = pickKnob(subindexRecalls)
-    val subindexRecall = subindexRecalls.toMap.apply(subindexEf)
-    register("filtered_knn_subindex", nq) {
-      require(tagRegistry.probeGroupsBatch(subGroups, k = 10,
-        efSearch = subindexEf, slices = subSlices).nonEmpty)
-    }
+    sub.row.withOp("filtered_knn_subindex_slices" -> subSlices)
     // slices SATURATION sweep (large decades only): identical probe work at
     // the matched-recall beam — every qid still searched once against its
     // own key's graphs, rows identical — with only the stripe count varying,
@@ -447,13 +656,8 @@ object Bench {
     // construction). Small corpora skip it: their batches are milliseconds
     // and the sweep would time stripe overhead, not the operator.
     if (n >= 1000000L)
-      Seq(2, 4, 8, 16).foreach { s =>
-        registerSweepPoint("filtered_knn_subindex_slices", s, nq,
-          subindexRecall) {
-          require(tagRegistry.probeGroupsBatch(subGroups, k = 10,
-            efSearch = subindexEf, slices = s).nonEmpty)
-        }
-      }
+      reg.sweep("filtered_knn_subindex_slices", "slices")(Seq(2, 4, 8, 16),
+        nq, _ => sub.recall)(s => require(subBatch(sub.knob, s).nonEmpty))
 
     // filter track, PLANNER serving form (the reference's flagship,
     // faiss.py:361-426): a mixed batch routes per query on tag-frequency
@@ -503,24 +707,22 @@ object Bench {
         }(ec)
         val fb = scala.concurrent.Future {
           tagRegistry.probeGroupsBatch(plannerGroups, k = 10,
-            efSearch = subindexEf, slices = subSlices)
+            efSearch = sub.knob, slices = subSlices)
         }(ec)
         import scala.concurrent.duration.Duration
         (scala.concurrent.Await.result(fa, Duration.Inf),
           scala.concurrent.Await.result(fb, Duration.Inf))
       } finally pool.shutdown()
     }
-    register("filtered_knn_planner", nq) {
+    reg.register("filtered_knn_planner", nq) {
       val (a, b) = plannerBatch()
       require(a.nonEmpty && b.nonEmpty)
-    }
-    val plannerRecall = {
-      val (a, b) = plannerBatch()
-      val got = spark.createDataFrame((a ++ b).toSeq)
-        .toDF("qid", "id", "dist", "rank")
-      val truth = operators.TagFilter.filteredKnn(plannerQ, tagged, 10)
-      operators.Recall.mean(got, truth, 10)
-    }
+    }.withOp("filtered_knn_planner_scan_queries" -> plannerScanQs.length,
+      "filtered_knn_planner_graph_queries" -> plannerGraphQs.length)
+      .withRecall("filtered_knn_planner" -> {
+        val (a, b) = plannerBatch()
+        rec(frame(a ++ b), operators.TagFilter.filteredKnn(plannerQ, tagged, 10))
+      })
 
     // filter track, BUCKETED layout (J8 dataflow form): tag-partitioned
     // parquet + static partition pruning — each query batch reads ONLY its
@@ -531,13 +733,11 @@ object Bench {
       .createTempDirectory("graft-bench-buckets").resolve("emb").toString
     operators.TagBuckets.writeBucketed(tagged, bucketPath)
     val bucketQ = operators.TagFilter.tagQueries(emb, nq)
-    register("filtered_knn_bucketed", nq) {
+    reg.register("filtered_knn_bucketed", nq) {
       noop(operators.TagBuckets.bucketedFilteredKnn(spark, bucketPath,
         bucketQ, k = 10))
       spark.sqlContext.clearCache()
-    }
-    (subindexEf, subindexRecall, plannerRecall,
-      subSlices, plannerScanQs.length, plannerGraphQs.length)
+    }.withRecall("filtered_knn_bucketed" -> 1.0)
     }
 
     // sparse track: budgeted MIPS over term-frequency vectors. The budget
@@ -551,9 +751,10 @@ object Bench {
     // comparable to it. The synthetic tf corpus is tie-heavy, so small
     // budgets trade recall much more steeply here than SPLADE weights
     // would — the curve makes that explicit.
-    val (sparseM, sparseRecall) = if (!trackOn("sparse")) (0, 0.0) else {
+    if (trackOn("sparse")) {
     val tf = operators.Sparse.fromTermFreq(Tables.documents(spark, sfDir))
-    val sparseNq = math.min(200L, Tables.documents(spark, sfDir).count() / 2).toInt
+    val nDocs = Tables.documents(spark, sfDir).count()
+    val sparseNq = math.min(200L, nDocs / 2).toInt
     val sparseQueries = tf.where(col("id") < sparseNq)
       .select(col("id").as("qid"), col("dim"), col("v").as("qv"))
     val sqs = tf.where(col("id") < sparseNq)
@@ -571,104 +772,82 @@ object Bench {
     // only existed at m = |docs| and QPS scaled linearly down; the
     // impact-ordered budget spends the scan on the large qv·v products
     // first, which is what lets a partial scan hold 0.9.
-    val (sparseM, sparseRecall) = locally {
-      val mFull = Tables.documents(spark, sfDir).count().toInt
-      // shard count floors at the core count, NOT the corpus-relative
-      // serveShards: postings scan work is per-shard-local and queries
-      // broadcast to every shard anyway, so more shards = more parallelism
-      // at equal total postings — the r10 200k-doc row ran cpu_frac 0.35
-      // on serveShards = 12 of a 32-core box for no volume reason
-      // forward = true: the serving kernel is the r13 two-stage form
-      // (budgeted candidate walk + exact rerank from the per-shard forward
-      // index — see probeBatch's scaladoc); the truth probe below still
-      // runs the one-stage exact walk (budget = MaxValue, rerank = 0),
-      // bit-equal to Sparse.mips as before
-      val sparseServed = index.ResidentPostings.load(tf, m = mFull,
-        numPartitions = math.max(serveShards, cpus.toInt), forward = true)
-      deferUnload(sparseServed.unload())
-      // truth = the resident probe at full budget: bit-equal to the exact
-      // dataflow join `Sparse.mips` (SparseSpec row-parity + the
-      // CORRECTNESS oracle on sparse_impact_budget_exact) at none of its
-      // cost — the dataflow form explodes queries × matched postings
-      // through a shuffle, which at 5M Zipf docs spilled >60 GB and killed
-      // the r11 first run; the resident walk is posting-bounded per shard
-      // and shuffles nothing
-      val truth = localTruth(sparseServed.probeLocal(sparseQueries, 10))
-      // ADVICE r11: the recall truth is the system's own full-budget
-      // resident probe (bit-equal to the Sparse.mips dataflow by SparseSpec
-      // + the oracle gate, at none of its shuffle cost) — anchor it here
-      // against the INDEPENDENT dataflow join on a 2-query sample so a
-      // scale- or shard-layout-dependent bug in the exact walk cannot
-      // self-grade as recall 1.0. Sampled, so the check never re-creates
-      // the >60 GB shuffle that motivated the swap.
-      locally {
-        val sampleQ = sparseQueries.where(col("qid") < 2)
-        val want = operators.Sparse.mips(sampleQ, tf, 10)
-          .select(col("qid").cast("long"), col("id").cast("long"),
-            col("rank").cast("long"))
-          .as[(Long, Long, Long)].collect().sortBy(r => (r._1, r._3)).toSeq
-        val got = truth.where(col("qid") < 2)
-          .select(col("qid").cast("long"), col("id").cast("long"),
-            col("rank").cast("long"))
-          .as[(Long, Long, Long)].collect().sortBy(r => (r._1, r._3)).toSeq
-        require(got == want,
-          s"resident sparse truth diverges from Sparse.mips on the sample: " +
-            s"got ${got.take(5)}... want ${want.take(5)}...")
-        spark.sqlContext.clearCache()
-      }
-      // top anchor = the largest shard's whole posting mass: exact on
-      // every shard by construction (accumulate's fast path), so the
-      // sweep always contains a recall-1.0 point and the headline's
-      // matched-recall pick always exists. The grid is dense between
-      // full/4 and full — that is where the matched-recall point lives on
-      // this tie-heavy corpus, and a 4× gap there forced the r10 pick to
-      // degenerate to the full anchor.
-      val full = sparseServed.maxShardPostings()
-      // the sweep knob (and the headline's op record) is an Int; a shard
-      // holding > 2^31 postings must fail loudly here, not collapse
-      // distinct budgets into one knob key
-      require(full <= Int.MaxValue.toLong,
-        s"per-shard posting count $full exceeds the Int sweep-knob domain; " +
-          "raise numPartitions so shards stay below 2^31 postings")
-      // r13 (VERDICT r12 item 4): every SERVED sweep point runs the
-      // two-stage kernel — budgeted impact walk nominates the top
-      // `sparseRerank` candidates per (query, shard), the forward index
-      // scores them exactly. The r12 one-stage pick sat at 57% of the
-      // shard's postings because tie-heavy PARTIAL sums misrank inside the
-      // candidate set, not because the top docs' postings run that deep —
-      // exact rerank removes the misranking, so the matched-recall budget
-      // falls and the grid extends correspondingly far down. The top
-      // anchor (budget = full) is exact-by-construction in BOTH kernels
-      // (at full budget partial scores are already exact), so the sweep
-      // still always contains a recall-1.0 point.
-      val sparseRerank = sparseRerankC // 32·k per (query, shard), absolute
-      val budgets = Seq(full / 4096, full / 1024, full / 256, full / 64,
-        full / 16, full / 8, full / 4, full * 3 / 8, full / 2,
-        full * 3 / 4, full)
-        .map(b => math.max(b, 64L)).distinct.sorted
-      val recalls = budgets.map { b =>
-        val r = operators.Recall.mean(
-          sparseServed.probeLocal(sparseQueries, 10, budget = b,
-            rerank = sparseRerank), truth, 10)
-        registerSweepPoint("sparse_budget_served", b.toInt, sparseNq, r) {
-          require(index.ProbeSlices.striped(sqs,
-            slicesFor(sparseServed.numShards, sqs.length))(
-            st => sparseServed.probeBatch(st, k = 10, budget = b,
-              rerank = sparseRerank))(
-            r => (r._1, r._4)).nonEmpty)
-        }
-        b.toInt -> r
-      }
-      val pick = pickKnob(recalls)
-      register("sparse_budget_served", sparseNq) {
-        require(index.ProbeSlices.striped(sqs,
-          slicesFor(sparseServed.numShards, sqs.length))(
-          st => sparseServed.probeBatch(st, k = 10, budget = pick.toLong,
-            rerank = sparseRerank))(
-          r => (r._1, r._4)).nonEmpty)
-      }
-      (pick, recalls.toMap.apply(pick))
+    // shard count floors at the core count, NOT the corpus-relative
+    // serveShards: postings scan work is per-shard-local and queries
+    // broadcast to every shard anyway, so more shards = more parallelism
+    // at equal total postings — the r10 200k-doc row ran cpu_frac 0.35
+    // on serveShards = 12 of a 32-core box for no volume reason
+    // forward = true: the serving kernel is the r13 two-stage form
+    // (budgeted candidate walk + exact rerank from the per-shard forward
+    // index — see probeBatch's scaladoc); the truth probe below still
+    // runs the one-stage exact walk (budget = MaxValue, rerank = 0),
+    // bit-equal to Sparse.mips as before
+    val sparseServed = index.ResidentPostings.load(tf, m = nDocs.toInt,
+      numPartitions = math.max(serveShards, cpus.toInt), forward = true)
+    deferUnload(sparseServed.unload())
+    // truth = the resident probe at full budget: bit-equal to the exact
+    // dataflow join `Sparse.mips` (SparseSpec row-parity + the
+    // CORRECTNESS oracle on sparse_impact_budget_exact) at none of its
+    // cost — the dataflow form explodes queries × matched postings
+    // through a shuffle, which at 5M Zipf docs spilled >60 GB and killed
+    // the r11 first run; the resident walk is posting-bounded per shard
+    // and shuffles nothing
+    val truth = localTruth(sparseServed.probeLocal(sparseQueries, 10))
+    // the recall truth is the system's own full-budget
+    // resident probe (bit-equal to the Sparse.mips dataflow by SparseSpec
+    // + the oracle gate, at none of its shuffle cost) — anchor it here
+    // against the INDEPENDENT dataflow join on a 2-query sample so a
+    // scale- or shard-layout-dependent bug in the exact walk cannot
+    // self-grade as recall 1.0. Sampled, so the check never re-creates
+    // the >60 GB shuffle that motivated the swap.
+    locally {
+      def ranked(df: DataFrame) = df.where(col("qid") < 2)
+        .select(col("qid").cast("long"), col("id").cast("long"),
+          col("rank").cast("long"))
+        .as[(Long, Long, Long)].collect().sortBy(r => (r._1, r._3)).toSeq
+      val want = ranked(operators.Sparse.mips(
+        sparseQueries.where(col("qid") < 2), tf, 10))
+      val got = ranked(truth)
+      require(got == want,
+        s"resident sparse truth diverges from Sparse.mips on the sample: " +
+          s"got ${got.take(5)}... want ${want.take(5)}...")
+      spark.sqlContext.clearCache()
     }
+    // top anchor = the largest shard's whole posting mass: exact on
+    // every shard by construction (accumulate's fast path), so the
+    // sweep always contains a recall-1.0 point and the headline's
+    // matched-recall pick always exists. The grid is dense between
+    // full/4 and full — that is where the matched-recall point lives on
+    // this tie-heavy corpus, and a 4× gap there forced the r10 pick to
+    // degenerate to the full anchor.
+    val full = sparseServed.maxShardPostings()
+    // the sweep knob (and the headline's op record) is an Int; a shard
+    // holding > 2^31 postings must fail loudly here, not collapse
+    // distinct budgets into one knob key
+    require(full <= Int.MaxValue.toLong,
+      s"per-shard posting count $full exceeds the Int sweep-knob domain; " +
+        "raise numPartitions so shards stay below 2^31 postings")
+    // every SERVED sweep point runs the
+    // two-stage kernel — budgeted impact walk nominates the top
+    // `sparseRerankC` candidates per (query, shard), the forward index
+    // scores them exactly. The r12 one-stage pick sat at 57% of the
+    // shard's postings because tie-heavy PARTIAL sums misrank inside the
+    // candidate set, not because the top docs' postings run that deep —
+    // exact rerank removes the misranking, so the matched-recall budget
+    // falls and the grid extends correspondingly far down. The top
+    // anchor (budget = full) is exact-by-construction in BOTH kernels
+    // (at full budget partial scores are already exact), so the sweep
+    // still always contains a recall-1.0 point.
+    val budgets = Seq(full / 4096, full / 1024, full / 256, full / 64,
+      full / 16, full / 8, full / 4, full * 3 / 8, full / 2,
+      full * 3 / 4, full)
+      .map(b => math.max(b, 64L)).distinct.sorted.map(_.toInt)
+    reg.sweepPick("sparse_budget_served", "budget")(budgets, sparseNq,
+      b => rec(sparseServed.probeLocal(sparseQueries, 10, budget = b,
+        rerank = sparseRerankC), truth)) { b =>
+      probe(sqs, sparseServed.numShards)(st => sparseServed.probeBatch(st,
+        k = 10, budget = b, rerank = sparseRerankC))
+    }.row.withOp("sparse_budget_served_rerank" -> sparseRerankC)
     // DATAFLOW row: the full Spark-plan form of the build-time-truncation
     // operator (SparseSpec asserts row-parity with the resident form at
     // equal m). It is a PLAN-OVERHEAD diagnostic, not the
@@ -682,15 +861,12 @@ object Bench {
     // tens of GB per batch at 5M Zipf docs with the corpus-relative m),
     // re-measuring plan overhead the small SFs already price; the served
     // row above is the baseline-comparable one at every decade
-    if (Tables.documents(spark, sfDir).count() <= 1000000L)
-      register("sparse_budget", sparseNq) {
-        noop(operators.Sparse.budgetedMips(
-          tf.where(col("id") < sparseNq)
-            .select(col("id").as("qid"), col("dim"), col("v").as("qv")),
-          tf, k = 10, m = 16 * knobScale))
+    if (nDocs <= 1000000L)
+      reg.register("sparse_budget", sparseNq) {
+        noop(operators.Sparse.budgetedMips(sparseQueries, tf, k = 10,
+          m = 16 * knobScale))
         spark.sqlContext.clearCache()
       }
-    (sparseM, sparseRecall)
     }
 
     // ood/ann track: EXECUTOR-RESIDENT HNSW probe — build once (untimed),
@@ -725,44 +901,20 @@ object Bench {
     // per-job submit. Dropping the per-batch tombstone/delta broadcasts
     // (2 creations + 2 blocking destroys per stripe) cut the striped batch
     // from 65.8 to 48.7 ms at ef32; a batch now ships one broadcast.
-    def graphFamily(family: String, resident: index.HnswResident,
-                    truth: DataFrame): (Int, Double) = {
-      val recalls = graphSweepEfs.map { ef =>
-        ef -> operators.Recall.mean(
-          resident.probeLocal(queries, 10, ef), truth, 10)
-      }
-      recalls.foreach { case (ef, r) =>
-        registerSweepPoint(family, ef, nq, r) {
-          require(stripedF(qsFloat, serveShards)(
-            st => resident.probeBatch(st, k = 10, efSearch = ef)).nonEmpty)
-        }
-      }
-      val ef = pickKnob(recalls)
-      register(family, nq) {
-        require(stripedF(qsFloat, serveShards)(
-          st => resident.probeBatch(st, k = 10, efSearch = ef)).nonEmpty)
-      }
-      (ef, recalls.toMap.apply(ef))
+    def graphFamily(family: String, metric: String, truth: => DataFrame): Int = {
+      val resident = index.HnswKnn.buildResident(base,
+        numPartitions = serveShards, metric = metric)
+      deferUnload(resident.unload())
+      reg.sweepPick(family, "efSearch")(graphSweepEfs, nq,
+        ef => rec(resident.probeLocal(queries, 10, ef), truth)) { ef =>
+        probeF(serveShards)(st => resident.probeBatch(st, k = 10, efSearch = ef))
+      }.knob
     }
-    val (efL2, annRecall) = if (!trackOn("graph")) (0, 0.0) else {
-      val l2Resident = index.HnswKnn.buildResident(base, numPartitions = serveShards,
-        metric = "l2")
-      deferUnload(l2Resident.unload())
-      graphFamily("ann_hnsw_probe", l2Resident, truthL2)
-    }
-    // the flat ip graph for the ip probe family (r13: the MaxSim rows no
-    // longer probe it — they route a token-IVF, below)
-    val ipResident: index.HnswResident =
-      if (trackOn("graph")) {
-        val r = index.HnswKnn.buildResident(base, numPartitions = serveShards,
-          metric = "ip")
-        deferUnload(r.unload()); r
-      } else null
-    val (efIp, annIpRecall) =
-      if (!trackOn("graph")) (0, 0.0)
-      else graphFamily("ann_hnsw_probe_ip", ipResident, truthIp)
+    val efL2 =
+      if (trackOn("graph")) graphFamily("ann_hnsw_probe", "l2", truthL2) else 0
+    if (trackOn("graph")) graphFamily("ann_hnsw_probe_ip", "ip", truthIp)
 
-    // late-interaction (MaxSim) serving: one resident ip-graph probe batch
+    // late-interaction (MaxSim) serving: one routed token-graph probe batch
     // + the MaxSimServe reduce per query-bag batch — no corpus re-score
     // (the ColBERT serving shortcut; past MaxSimServe's volume/partition
     // bounds the reduce is fully distributed — the corpus-relative c knob
@@ -770,10 +922,8 @@ object Bench {
     // driver-side reduce can absorb, which is exactly when the distributed
     // regime pays). Scores are lower bounds, so recall vs the exact maxsim
     // ranking is reported alongside. 4-vector docs, 2-vector queries over
-    // the SAME flat corpus the ip row probes — the graph is reused, not
-    // rebuilt.
-    val (maxsimC, maxsimRecall, maxsimNp, maxsimCells) =
-      if (!trackOn("maxsim")) (0, 0.0, 0, 0) else {
+    // the SAME flat corpus the ip row probes.
+    if (trackOn("maxsim")) {
     val nqB = math.min(250L, n / 4).toInt
     val qbags = operators.MultiVec
       .bagged(base.where(col("id") < 2L * nqB), 2, "qid")
@@ -805,17 +955,9 @@ object Bench {
     def maxsimNprobe(c: Int): Int =
       math.min(tokCells,
         math.max(2, math.ceil(4.0 * c * tokCells / n).toInt))
-    // group-keyed striping (guide §2.6, same shape as the other families):
-    // a MaxSim batch's composite query vectors (qid·qmax + pos) must stay
-    // together — the per-query score sums over all positions — so stripes
-    // split on the DOC-query id, not the array index; rows identical
-    // (per-query results are independent, asserted in KnnSpec)
-    def maxsimStriped(c: Int): Array[(Long, Long, Double, Long)] =
-      index.ProbeSlices.stripedBy(maxsimQs,
-        slicesFor(tokCells, maxsimQs.length))(_._1 / 2)(
-        st => index.MaxSimServe.probeBatchRouted(
-          tokRouted, st, qmax = 2, bmax = 4, k = 10, c = c,
-          efSearch = c, nprobe = maxsimNprobe(c)))(r => (r._1, r._4))
+    def maxsimBatch(qs: Array[(Long, Array[Float])], c: Int) =
+      index.MaxSimServe.probeBatchRouted(tokRouted, qs, qmax = 2, bmax = 4,
+        k = 10, c = c, efSearch = c, nprobe = maxsimNprobe(c))
     // hit-count sweep: c (merged hits per query vector) stays the
     // shortcut's recall knob — more hits = fewer missing (qvec, doc)
     // pairs — but the grid is now ABSOLUTE: the routed backend holds the
@@ -826,39 +968,32 @@ object Bench {
     // degenerate sweep ends. The HEADLINE runs the matched-recall pick
     // (BASELINE rows are @≥0.9 recall). Exact maxsim truth collected ONCE
     // to a local relation; every recall eval reuses it.
-    val (maxsimC, maxsimRecall) = locally {
-      val truth = localTruth(operators.MultiVec.maxSimJoin(
-        qbags, operators.MultiVec.bagged(base, 4, "doc_id"), 10)
-        .withColumnRenamed("doc_id", "id"))
-      val recalls = Seq(32, 64, 128, 256, 512).map { c =>
-        val srv = index.MaxSimServe.probeBatchRouted(
-          tokRouted, maxsimQs, qmax = 2, bmax = 4, k = 10, c = c,
-          efSearch = c, nprobe = maxsimNprobe(c))
-        val rc = operators.Recall.mean(
-          spark.createDataFrame(srv.toSeq).toDF("qid", "id", "dist", "rank"),
-          truth, 10)
-        registerSweepPoint("maxsim_served", c, nqB, rc) {
-          require(maxsimStriped(c).nonEmpty)
-        }
-        c -> rc
-      }
-      val c = pickKnob(recalls)
-      (c, recalls.toMap.apply(c))
+    val truth = localTruth(operators.MultiVec.maxSimJoin(
+      qbags, operators.MultiVec.bagged(base, 4, "doc_id"), 10)
+      .withColumnRenamed("doc_id", "id"))
+    // group-keyed striping (guide §2.6, same shape as the other families):
+    // a MaxSim batch's composite query vectors (qid·qmax + pos) must stay
+    // together — the per-query score sums over all positions — so stripes
+    // split on the DOC-query id, not the array index; rows identical
+    // (per-query results are independent, asserted in KnnSpec)
+    val ms = reg.sweepPick("maxsim_served", "c")(Seq(32, 64, 128, 256, 512),
+      nqB, c => rec(frame(maxsimBatch(maxsimQs, c)), truth)) { c =>
+      require(index.ProbeSlices.stripedBy(maxsimQs,
+        slices(tokCells, maxsimQs.length))(_._1 / 2)(
+        maxsimBatch(_, c))(r => (r._1, r._4)).nonEmpty)
     }
-    register("maxsim_served", nqB) {
-      require(maxsimStriped(maxsimC).nonEmpty)
-    }
+    ms.row.withOp("maxsim_served_nprobe" -> maxsimNprobe(ms.knob),
+      "maxsim_C" -> tokCells)
     // the exact token-join anchor, TIMED alongside the served row: every
     // (qtoken, doctoken) pair scored — the verify-stage dataflow whose QPS
     // the served shortcut must beat for the shortcut to exist at all. The
     // served-vs-exact ratio is then an in-artifact fact instead of a
     // cross-file comparison (r10 verdict item 8's grading shape).
-    register("maxsim_exact_join", nqB) {
+    reg.register("maxsim_exact_join", nqB) {
       noop(operators.MultiVec.maxSimJoin(
         qbags, operators.MultiVec.bagged(base, 4, "doc_id"), 10))
       spark.sqlContext.clearCache()
     }
-    (maxsimC, maxsimRecall, maxsimNprobe(maxsimC), tokCells)
     }
 
     // quantized serving form: PQ codes pinned resident (m·2 bytes/row — the
@@ -867,14 +1002,7 @@ object Bench {
     // row below — identical parameters), so recall is reported alongside.
     val benchC = index.IvfIndex.autoC(n)
     val routeC = 65536
-    val (adcRerank, adcRecall,
-         ivfAdcMass, ivfAdcRecall, ivfAdcRerank,
-         ivfAdcResMass, ivfAdcResRecall, ivfAdcResRerank,
-         ivfSq8Mass, ivfSq8Recall, ivfSq8Rerank,
-         ivfSq8GrEf, ivfSq8GrRecall, routeAgree) =
-      if (!trackOn("ivf"))
-        (0, 0.0, 0, 0.0, 0, 0, 0.0, 0, 0, 0.0, 0, 0, 0.0, 0.0)
-      else {
+    if (trackOn("ivf")) {
     // SPARK_GRAFT_IVF_FAMILIES=adc,ivfadc,residual,sq8,route restricts the
     // ivf track to the named sub-families (unset = all). Same rationale as
     // SPARK_GRAFT_TRACKS, one level down: at the 10M decade a single flat-
@@ -897,8 +1025,7 @@ object Bench {
     // dominates flat ADC at every decade ≥ 2M, so the un-routed full-corpus
     // code scan stops being a headline row there and its bench wall goes to
     // the scale runs instead (r10 verdict item 6).
-    val (adcRerank, adcRecall) =
-      if (!famOn("adc") || n > 2000000L) (0, 0.0) else {
+    if (famOn("adc") && n <= 2000000L) {
     val adcServed = index.ResidentAdc.load(base, pqCb, numPartitions = serveShards)
     deferUnload(adcServed.unload())
     // refine-budget sweep: rerank is the ADC knob (faiss's k_factor·k).
@@ -912,36 +1039,24 @@ object Bench {
     // error floor more refine buys nothing and the family's scaladoc regime
     // bound applies). Refine cost is rerank·d flops/query — even 20k is
     // small next to the full-corpus code scan, so escalation trades nothing.
-    val adcRecalls = {
-      val buf = ArrayBuffer(Seq(20, 40, 80, 160, 320, 640).map { r =>
-        r -> operators.Recall.mean(
-          adcServed.probeLocal(queries, 10, rerank = r), truthL2, 10)
-      }: _*)
-      var guard = 0
-      var go = buf.last._2 < 0.9
-      while (go && guard < 5) {
-        val r2 = buf.last._1 * 2
-        val prev = buf.last._2
-        val rc = operators.Recall.mean(
-          adcServed.probeLocal(queries, 10, rerank = r2), truthL2, 10)
-        buf += ((r2, rc))
-        go = rc < 0.9 && rc >= prev + 0.005
-        guard += 1
-      }
-      buf.toSeq
+    def adcRecall(r: Int) =
+      rec(adcServed.probeLocal(queries, 10, rerank = r), truthL2)
+    val adcGrid = ArrayBuffer(Seq(20, 40, 80, 160, 320, 640).map { r =>
+      r -> adcRecall(r)
+    }: _*)
+    var guard = 0
+    var go = adcGrid.last._2 < 0.9
+    while (go && guard < 5) {
+      val (r, prev) = adcGrid.last
+      val rc = adcRecall(r * 2)
+      adcGrid += ((r * 2, rc))
+      go = rc < 0.9 && rc >= prev + 0.005
+      guard += 1
     }
-    adcRecalls.foreach { case (r, rc) =>
-      registerSweepPoint("ann_adc_served", r, nq, rc) {
-        require(stripedF(qsFloat, serveShards)(
-          st => adcServed.probeBatch(st, k = 10, rerank = r)).nonEmpty)
-      }
+    reg.sweepPick("ann_adc_served", "rerank")(adcGrid.map(_._1).toSeq, nq,
+      adcGrid.toMap) { r =>
+      probeF(serveShards)(st => adcServed.probeBatch(st, k = 10, rerank = r))
     }
-    val adcRerank = pickKnob(adcRecalls)
-    register("ann_adc_served", nq) {
-      require(stripedF(qsFloat, serveShards)(
-        st => adcServed.probeBatch(st, k = 10, rerank = adcRerank)).nonEmpty)
-    }
-    (adcRerank, adcRecalls.toMap.apply(adcRerank))
     }
     // the baseline's routed composition (IVF route × resident codes × float
     // refine): coarse quantizer at the corpus-relative auto-C (≈4√n, the
@@ -959,12 +1074,12 @@ object Bench {
     // fractions stay well-defined at small C)
     val ivfMassPcts = Seq(1, 2, 3, 5, 8, 15, 25, 35, 50, 75, 100)
       .filter(_ <= sweepCapPct)
-    def ivfMassFamily(family: String, rerank: Int,
+    // returns the headline pick and the final refine budget
+    def ivfMassFamily(family: String, rerankKey: String, rerank: Int,
                       local: (Double, Int) => DataFrame,
-                      batch: (Double, Int) => Unit): (Int, Double, Int) = {
-      def grid(r: Int) = ivfMassPcts.map { p =>
-        p -> operators.Recall.mean(local(p / 100.0, r), truthL2, 10)
-      }
+                      batch: (Double, Int) => Unit): (Pick, Int) = {
+      def grid(r: Int) =
+        ivfMassPcts.map(p => p -> rec(local(p / 100.0, r), truthL2))
       // the refine budget is what binds at large n: the code scan's false
       // positives grow with the SCANNED POPULATION (mass·n), so a fixed
       // rerank floods as either knob grows — r8 measured raw-ADC recall
@@ -987,8 +1102,7 @@ object Bench {
         var guard = 0
         var go = true
         while (go && guard < 6 && best < 0.9) {
-          val next = operators.Recall.mean(
-            local(topPct / 100.0, rr * 2), truthL2, 10)
+          val next = rec(local(topPct / 100.0, rr * 2), truthL2)
           if (next >= best + 0.005 || next >= 0.9) { rr *= 2; best = next }
           else go = false
           guard += 1
@@ -996,12 +1110,10 @@ object Bench {
         if (rr != rerank) recalls = grid(rr)
       }
       val rrF = rr
-      recalls.foreach { case (p, r) =>
-        registerSweepPoint(family, p, nq, r) { batch(p / 100.0, rrF) }
-      }
-      val pct = pickKnob(recalls)
-      register(family, nq) { batch(pct / 100.0, rrF) }
-      (pct, recalls.toMap.apply(pct), rr)
+      val p = reg.sweepPick(family, "minMassPct")(ivfMassPcts, nq,
+        recalls.toMap)(pct => batch(pct / 100.0, rrF))
+      p.row.withOp(rerankKey -> rrF, "ivf_C" -> benchC)
+      (p, rrF)
     }
     // buildAtScale: sampled Lloyd training (graph-assigned past C=2048)
     // + an EXACT full assignment pass — at C < 2048 and benched corpus
@@ -1012,15 +1124,13 @@ object Bench {
     // 3x matched-recall mass on every IVF family — see the scaladoc)
     lazy val benchIvf =
       index.IvfIndex.buildAtScale(base, c = benchC, iters = 3, n)
-    val (ivfAdcMass, ivfAdcRecall, ivfAdcRerank) =
-      if (!famOn("ivfadc")) (0, 0.0, 0) else {
-    val ivfAdcServed = index.ResidentIvfAdc.load(base, benchIvf, pqCb,
-      numPartitions = serveShards)
-    deferUnload(ivfAdcServed.unload())
-    ivfMassFamily("ann_ivfadc_served", 160,
-      (mm, r) => ivfAdcServed.probeLocalMass(queries, 10, mm, r),
-      (mm, r) => require(stripedF(qsFloat, serveShards)(
-        st => ivfAdcServed.probeBatchMass(st, 10, mm, r)).nonEmpty))
+    if (famOn("ivfadc")) {
+      val served = index.ResidentIvfAdc.load(base, benchIvf, pqCb,
+        numPartitions = serveShards)
+      deferUnload(served.unload())
+      ivfMassFamily("ann_ivfadc_served", "ivf_rerank_adc", 160,
+        (mm, r) => served.probeLocalMass(queries, 10, mm, r),
+        (mm, r) => probeF(serveShards)(st => served.probeBatchMass(st, 10, mm, r)))
     }
     // residual variant of the same composition — faiss's TRUE IVFPQ (codes
     // quantize x − centroid; probes assemble per-(query, cluster) LUTs
@@ -1028,17 +1138,15 @@ object Bench {
     // raw-coded row above so the two are directly comparable (the residual
     // codes buy recall at the same (m, ksub) byte budget); ONE k-means
     // training serves all three IVF rows (buildResidualWith).
-    val (ivfAdcResMass, ivfAdcResRecall, ivfAdcResRerank) =
-      if (!famOn("residual")) (0, 0.0, 0) else {
-    val ivfPqRes = index.IvfPq.buildResidualWith(benchIvf, base, m = 8,
-      ksub = 32, iters = 3)
-    val ivfAdcResServed = index.ResidentIvfAdc.loadResidual(base, ivfPqRes,
-      numPartitions = serveShards)
-    deferUnload(ivfAdcResServed.unload())
-    ivfMassFamily("ann_ivfadc_residual_served", 160,
-        (mm, r) => ivfAdcResServed.probeLocalMass(queries, 10, mm, r),
-        (mm, r) => require(stripedF(qsFloat, serveShards)(
-          st => ivfAdcResServed.probeBatchMass(st, 10, mm, r)).nonEmpty))
+    if (famOn("residual")) {
+      val ivfPqRes = index.IvfPq.buildResidualWith(benchIvf, base, m = 8,
+        ksub = 32, iters = 3)
+      val served = index.ResidentIvfAdc.loadResidual(base, ivfPqRes,
+        numPartitions = serveShards)
+      deferUnload(served.unload())
+      ivfMassFamily("ann_ivfadc_residual_served", "ivf_rerank_adc_residual",
+        160, (mm, r) => served.probeLocalMass(queries, 10, mm, r),
+        (mm, r) => probeF(serveShards)(st => served.probeBatchMass(st, 10, mm, r)))
     }
     // the reference baseline's LITERAL composition (`IVF16384,SQ8`,
     // filter/faiss/config.yaml:50-53) served resident: IVF routing ×
@@ -1047,17 +1155,16 @@ object Bench {
     // as the ADC rows; the scan reads 1 byte/component (the compression
     // that fits the reference's 10M×192 corpus in RAM); the near-lossless
     // SQ8 codes need only rerank=80 where PQ needs 160.
-    val (ivfSq8Mass, ivfSq8Recall, ivfSq8Rerank, ivfSq8GrEf, ivfSq8GrRecall) =
-      if (!famOn("sq8")) (0, 0.0, 0, 0, 0.0) else {
+    if (famOn("sq8")) {
     val (sq8Mins, sq8Spans) = index.Sq8.train(base)
     val ivfSq8Served = index.ResidentIvfSq8.load(base, benchIvf, sq8Mins,
       sq8Spans, numPartitions = serveShards)
     deferUnload(ivfSq8Served.unload())
-    val (ivfSq8Mass, ivfSq8Recall, ivfSq8Rerank) =
-      ivfMassFamily("ann_ivfsq8_served", 80,
+    val (sq8, sq8Rerank) = ivfMassFamily("ann_ivfsq8_served",
+      "ivf_rerank_sq8", 80,
       (mm, r) => ivfSq8Served.probeLocalMass(queries, 10, mm, r),
-      (mm, r) => require(stripedF(qsFloat, serveShards)(
-        st => ivfSq8Served.probeBatchMass(st, 10, mm, r)).nonEmpty))
+      (mm, r) => probeF(serveShards)(st =>
+        ivfSq8Served.probeBatchMass(st, 10, mm, r)))
     // GRAPH-routed coarse quantizer on the same served form (HNSW over the
     // centroids — faiss's IVF_HNSW shape): replaces the O(C·d) linear rank
     // with an O(efRoute·log C) beam. At benched C (autoC: 179–1,789) the
@@ -1075,28 +1182,13 @@ object Bench {
     // the r8 grid exactly (filter < benchC), so sf0.1 rows are unchanged.
     val graphEfs = Seq(8, 16, 32, 64, 128, 256, 512, 1024, 2048)
       .filter(_ < benchC)
-    val (ivfSq8GrEf, ivfSq8GrRecall) = {
-      val recalls = graphEfs.map { ef =>
-        ef -> operators.Recall.mean(
-          ivfSq8Served.probeLocalMass(queries, 10, ivfSq8Mass / 100.0,
-            ivfSq8Rerank, efRoute = ef), truthL2, 10)
-      }
-      recalls.foreach { case (ef, r) =>
-        registerSweepPoint("ann_ivfsq8_graphroute_served", ef, nq, r) {
-          require(stripedF(qsFloat, serveShards)(
-            st => ivfSq8Served.probeBatchMass(st, 10,
-              ivfSq8Mass / 100.0, ivfSq8Rerank, efRoute = ef)).nonEmpty)
-        }
-      }
-      val ef = pickKnob(recalls)
-      register("ann_ivfsq8_graphroute_served", nq) {
-        require(stripedF(qsFloat, serveShards)(
-          st => ivfSq8Served.probeBatchMass(st, 10,
-            ivfSq8Mass / 100.0, ivfSq8Rerank, efRoute = ef)).nonEmpty)
-      }
-      (ef, recalls.toMap.apply(ef))
+    val mass = sq8.knob / 100.0
+    reg.sweepPick("ann_ivfsq8_graphroute_served", "efRoute")(graphEfs, nq,
+      ef => rec(ivfSq8Served.probeLocalMass(queries, 10, mass, sq8Rerank,
+        efRoute = ef), truthL2)) { ef =>
+      probeF(serveShards)(st => ivfSq8Served.probeBatchMass(st, 10, mass,
+        sq8Rerank, efRoute = ef))
     }
-    (ivfSq8Mass, ivfSq8Recall, ivfSq8Rerank, ivfSq8GrEf, ivfSq8GrRecall)
     }
     // router scaling microbench: routing-only batches against a synthetic
     // C = 2^16 coarse quantizer (the regime autoC implies at ~2.7e8 rows;
@@ -1106,64 +1198,48 @@ object Bench {
     // graph beam O(efRoute·log C) on the same centroids, same queries,
     // both on client threads. The graph row's top-16 agreement vs the
     // linear rank is published as its recall.
-    val routeAgree = if (!famOn("route")) 0.0 else {
+    if (famOn("route")) {
     val routeCents = Array.tabulate(routeC) { c =>
       val rnd = new scala.util.Random(0xC0FFEE ^ c)
       (c, Array.fill(qsFloat.head._2.length)(rnd.nextGaussian().toFloat))
     }
     val microRouter = new index.CoarseRouter(routeCents,
       routeCents.map { case (c, _) => c -> 1L }.toMap)
-    val routeAgree = {
-      val lin = index.Router.parallelMap(qsFloat)(q =>
-        microRouter.byNprobe(q._2, 16))
-      val gr = index.Router.parallelMap(qsFloat)(q =>
-        microRouter.byNprobeGraph(q._2, 16, 64))
-      lin.zip(gr).map { case (a, b) =>
-        a.intersect(b).length / 16.0 }.sum / qsFloat.length
+    def linear() = index.Router.parallelMap(qsFloat)(q =>
+      microRouter.byNprobe(q._2, 16))
+    def graph() = index.Router.parallelMap(qsFloat)(q =>
+      microRouter.byNprobeGraph(q._2, 16, 64))
+    val routeAgree = linear().zip(graph()).map { case (a, b) =>
+      a.intersect(b).length / 16.0 }.sum / qsFloat.length
+    reg.register("route_linear_c65536", nq)(require(linear().nonEmpty))
+    reg.register("route_graph_c65536", nq)(require(graph().nonEmpty))
+      .withOp("route_micro_C" -> routeC)
+      .withRecall("route_graph_agreement" -> routeAgree)
     }
-    register("route_linear_c65536", nq) {
-      require(index.Router.parallelMap(qsFloat)(q =>
-        microRouter.byNprobe(q._2, 16)).nonEmpty)
-    }
-    register("route_graph_c65536", nq) {
-      require(index.Router.parallelMap(qsFloat)(q =>
-        microRouter.byNprobeGraph(q._2, 16, 64)).nonEmpty)
-    }
-    routeAgree
-    }
-    (adcRerank, adcRecall, ivfAdcMass, ivfAdcRecall, ivfAdcRerank,
-     ivfAdcResMass, ivfAdcResRecall, ivfAdcResRerank,
-     ivfSq8Mass, ivfSq8Recall, ivfSq8Rerank,
-     ivfSq8GrEf, ivfSq8GrRecall, routeAgree)
     }
 
     // binary sign-hash tier: ONE resident load (floats pinned) serves both
     // the codes-only exact Hamming scan row and the two-tier re-rank rows.
-    val (hamFidelity, hamFidelityCos, ham2C, ham2Fidelity) =
-      if (!trackOn("hamming")) (0.0, 0.0, 0, 0.0) else {
+    if (trackOn("hamming")) {
     val binServed = index.ResidentBinary.load(base, numPartitions = serveShards,
       pinFloats = true)
     deferUnload(binServed.unload())
     // codes-only exact Hamming scan — QPS plus binarization fidelity
     // (recall of Hamming top-10 vs float truth; the Hamming ranking itself
-    // is exact, see knn_hamming's gate)
+    // is exact, see knn_hamming's gate). Sign codes are angle-only (norms
+    // are gone), so fidelity against the COSINE truth is the tier's
+    // natural grade; L2 fidelity is reported too as the honest
+    // cross-metric number
     val hamQs = {
       import graft.functions.vectors._
       queries.select(col("qid").cast("long"),
         vecSignPack(col("qvec")).as("qcode")).as[(Long, Array[Long])].collect()
     }
-    register("hamming_served", nq) {
-      require(index.ProbeSlices.striped(hamQs,
-        slicesFor(serveShards, hamQs.length))(
-        st => binServed.probeBatch(st, k = 10))(r => (r._1, r._4)).nonEmpty)
-    }
-    val hamFidelity = operators.Recall.mean(
-      binServed.probeLocal(queries, 10), truthL2, 10)
-    // sign codes are angle-only (norms are gone), so fidelity against the
-    // COSINE truth is the tier's natural grade; L2 fidelity is reported
-    // too as the honest cross-metric number
-    val hamFidelityCos = operators.Recall.mean(
-      binServed.probeLocal(queries, 10), truthCos, 10)
+    reg.register("hamming_served", nq) {
+      probe(hamQs, serveShards)(st => binServed.probeBatch(st, k = 10))
+    }.withRecall(
+      "hamming_served_l2_fidelity" -> rec(binServed.probeLocal(queries, 10), truthL2),
+      "hamming_served_cos_fidelity" -> rec(binServed.probeLocal(queries, 10), truthCos))
     // two-tier resident: binary top-c first pass + in-shard float re-rank —
     // fidelity is vs exact float L2 (matched-recall picked c); the
     // ip-refine sweep grades the SAME two-tier probe against exact-MIPS
@@ -1178,46 +1254,20 @@ object Bench {
     // candidate set must cover a corpus-sized answer set, so
     // corpus-relative points ride alongside the absolute ones and the
     // HEADLINE runs the matched-recall pick (vs exact float L2)
-    val (ham2C, ham2Fidelity) = locally {
-      val recalls = (Seq(25, 50, 100) ++
-        Seq(25 * knobScale, 50 * knobScale, 100 * knobScale))
-        .distinct.sorted.map { c =>
-        val rc = operators.Recall.mean(
-          binServed.probeLocalRerank(queries, 10, c = c), truthL2, 10)
-        registerSweepPoint("hamming_rerank_served", c, nq, rc) {
-          require(index.ProbeSlices.striped(ham2Qs,
-            slicesFor(serveShards, ham2Qs.length))(
-            st => binServed.probeBatchRerank(st, k = 10, c = c))(
-            r => (r._1, r._4)).nonEmpty)
-        }
-        c -> rc
-      }
-      val c = pickKnob(recalls)
-      (c, recalls.toMap.apply(c))
+    val cGrid = (Seq(25, 50, 100) ++
+      Seq(25 * knobScale, 50 * knobScale, 100 * knobScale)).distinct.sorted
+    reg.sweepPick("hamming_rerank_served", "c")(cGrid, nq,
+      c => rec(binServed.probeLocalRerank(queries, 10, c = c), truthL2),
+      recallKey = "hamming_rerank_served_l2_fidelity") { c =>
+      probe(ham2Qs, serveShards)(st => binServed.probeBatchRerank(st, k = 10, c = c))
     }
-    register("hamming_rerank_served", nq) {
-      require(index.ProbeSlices.striped(ham2Qs,
-        slicesFor(serveShards, ham2Qs.length))(
-        st => binServed.probeBatchRerank(st, k = 10, c = ham2C))(
-        r => (r._1, r._4)).nonEmpty)
+    val ip = operators.Metric.Ip
+    reg.sweep("hamming_rerank_served_ip", "c")(cGrid, nq,
+      c => rec(binServed.probeLocalRerank(queries, 10, c = c, metric = ip),
+        truthIp)) { c =>
+      probe(ham2Qs, serveShards)(st => binServed.probeBatchRerank(st, k = 10,
+        c = c, metric = ip))
     }
-    locally {
-      val ipMetric = operators.Metric.Ip
-      (Seq(25, 50, 100) ++
-        Seq(25 * knobScale, 50 * knobScale, 100 * knobScale))
-        .distinct.sorted.foreach { c =>
-        val rc = operators.Recall.mean(
-          binServed.probeLocalRerank(queries, 10, c = c, metric = ipMetric),
-          truthIp, 10)
-        registerSweepPoint("hamming_rerank_served_ip", c, nq, rc) {
-          require(index.ProbeSlices.striped(ham2Qs,
-            slicesFor(serveShards, ham2Qs.length))(
-            st => binServed.probeBatchRerank(st, k = 10, c = c,
-              metric = ipMetric))(r => (r._1, r._4)).nonEmpty)
-        }
-      }
-    }
-    (hamFidelity, hamFidelityCos, ham2C, ham2Fidelity)
     }
 
     // centroid-ROUTED resident graphs (IVF-of-HNSW): each query probes only
@@ -1232,8 +1282,7 @@ object Bench {
     // matched-recall picks — knob, cost, and recall all explicit.
     val routedC = math.max(8L, n / 500L).toInt
     val routedEf = 64
-    val (routedNp, rtRecall, routedAutoPct, rtaRecall) =
-      if (!trackOn("routed")) (0, 0.0, 0, 0.0) else {
+    if (trackOn("routed")) {
     val routedPath = java.nio.file.Files.createTempDirectory("graft-bench-rt")
       .resolve("idx").toString
     index.HnswRouted.buildAndSave(base, routedPath, c = routedC, kmIters = 3,
@@ -1246,70 +1295,29 @@ object Bench {
     // already over-delivering recall 0.997 — the matched-recall fraction
     // keeps FALLING with n, so the grid must reach below wherever the
     // last decade's pick landed for the next decade's pick to exist.
-    // SPARK_GRAFT_ROUTED_FLOOR_DIV extends the floor for the follow-up
-    // routed-only runs the floor-bind keeps asking for (2M: the C/64
-    // floor STILL over-delivered 0.993) without re-running every track
-    val routedFloorDiv = sys.env.get("SPARK_GRAFT_ROUTED_FLOOR_DIV")
-      .map(_.toInt).getOrElse(64)
-    require(routedFloorDiv >= 8,
-      s"SPARK_GRAFT_ROUTED_FLOOR_DIV must be >= 8, got $routedFloorDiv")
-    // union with the legacy divisors: a non-power-of-two env value (e.g.
-    // 100 → 100,50,25,12) must still produce every legacy grid point, and
-    // the halving walk alone would silently drop them
-    val routedFloorDivs =
-      (Iterator.iterate(routedFloorDiv)(_ / 2).takeWhile(_ >= 8) ++
-        Iterator(64, 32, 16, 8)).toSeq.distinct
     val routedNps =
-      (routedFloorDivs.map(routedC / _) ++
+      (Seq(64, 32, 16, 8).map(routedC / _) ++
         Seq(1, 2, 3, 4).map(i => routedC * i / 4))
         .map(math.max(1, _)).distinct.sorted
         .filter(np => np * 100L <= sweepCapPct.toLong * routedC || np <= 1)
-    val routedNpRecalls = routedNps.map { np =>
-      np -> operators.Recall.mean(
-        routed.probeLocal(queries, 10, routedEf, nprobe = np), truthL2, 10)
-    }
-    routedNpRecalls.foreach { case (np, r) =>
-      registerSweepPoint("ann_hnsw_probe_routed", np, nq, r) {
-        require(stripedF(qsFloat, routedC)(
-          st => routed.probeBatch(st, k = 10, efSearch = routedEf,
-            nprobe = np)).nonEmpty)
-      }
-    }
-    val routedNp = pickKnob(routedNpRecalls)
-    val rtRecall = routedNpRecalls.toMap.apply(routedNp)
-    register("ann_hnsw_probe_routed", nq) {
-      require(stripedF(qsFloat, routedC)(
-        st => routed.probeBatch(st, k = 10, efSearch = routedEf,
-          nprobe = routedNp)).nonEmpty)
-    }
+    reg.sweepPick("ann_hnsw_probe_routed", "nprobe")(routedNps, nq,
+      np => rec(routed.probeLocal(queries, 10, routedEf, nprobe = np),
+        truthL2)) { np =>
+      probeF(routedC)(st => routed.probeBatch(st, k = 10, efSearch = routedEf,
+        nprobe = np))
+    }.row.withOp("routed_C" -> routedC, "routed_efSearch" -> routedEf)
     // mass-adaptive routing on the same index: the knob is a corpus
     // fraction, so per-query probe counts adapt to cluster skew instead
     // of over/under-probing at a fixed nprobe. Swept over minMass (per
     // cent, to keep the sweep schema integer-knobbed like the others).
-    val routedAutoPcts =
-      ((if (routedFloorDiv > 64) Seq(1, 2) else Seq.empty) ++
-        Seq(3, 5, 10, 15, 25, 50, 75, 90))
+    val routedAutoPcts = Seq(3, 5, 10, 15, 25, 50, 75, 90)
       .filter(_ <= sweepCapPct)
-    val routedAutoRecalls = routedAutoPcts.map { pct =>
-      pct -> operators.Recall.mean(
-        routed.probeLocalAuto(queries, 10, routedEf, minMass = pct / 100.0),
-        truthL2, 10)
+    reg.sweepPick("ann_hnsw_probe_routed_auto", "minMassPct")(routedAutoPcts,
+      nq, pct => rec(routed.probeLocalAuto(queries, 10, routedEf,
+        minMass = pct / 100.0), truthL2)) { pct =>
+      probeF(routedC)(st => routed.probeBatchAuto(st, k = 10,
+        efSearch = routedEf, minMass = pct / 100.0))
     }
-    routedAutoRecalls.foreach { case (pct, r) =>
-      registerSweepPoint("ann_hnsw_probe_routed_auto", pct, nq, r) {
-        require(stripedF(qsFloat, routedC)(
-          st => routed.probeBatchAuto(st, k = 10, efSearch = routedEf,
-            minMass = pct / 100.0)).nonEmpty)
-      }
-    }
-    val routedAutoPct = pickKnob(routedAutoRecalls)
-    val rtaRecall = routedAutoRecalls.toMap.apply(routedAutoPct)
-    register("ann_hnsw_probe_routed_auto", nq) {
-      require(stripedF(qsFloat, routedC)(
-        st => routed.probeBatchAuto(st, k = 10, efSearch = routedEf,
-          minMass = routedAutoPct / 100.0)).nonEmpty)
-    }
-    (routedNp, rtRecall, routedAutoPct, rtaRecall)
     }
 
     // COARSE-routed resident graphs — the OOD serving form (r12 item 1):
@@ -1325,8 +1333,7 @@ object Bench {
     // work independent of shard count. Two knobs, swept separately:
     // nprobe (the routing width — how many cells' graphs a query pays) at
     // an anchor beam, then efSearch at the matched nprobe.
-    val (coarseCOut, coarseNp, coarseEf, coarseRecallV) =
-      if (!trackOn("coarse")) (0, 0, 0, 0.0) else {
+    if (trackOn("coarse")) {
     val coarseC = sys.env.get("SPARK_GRAFT_COARSE_C").map(_.toInt)
       .getOrElse(math.max(8, math.min(64, (n / 150000L).toInt)))
     val coarsePath = java.nio.file.Files
@@ -1335,48 +1342,26 @@ object Bench {
       atScale = true, n = n)
     val coarse = index.HnswRouted.loadResident(spark, coarsePath)
     deferUnload(coarse.unload())
+    def coarseRecall(ef: Int, np: Int) =
+      rec(coarse.probeLocal(queries, 10, ef, nprobe = np), truthL2)
+    def coarseBatch(ef: Int, np: Int): Unit = probeF(coarseC)(st =>
+      coarse.probeBatch(st, k = 10, efSearch = ef, nprobe = np))
     // anchor beam: the flat family's matched-recall decade point — per-cell
     // graphs hold ~n/C nodes, same absolute-grid physics as the flat grid
-    val coarseEfBase = if (n >= 1000000L) 256 else 64
-    val coarseNps = Seq(1, 2, 3, 4, 6, 8).filter(_ <= coarseC)
-    val npRecalls = coarseNps.map { np =>
-      np -> operators.Recall.mean(
-        coarse.probeLocal(queries, 10, coarseEfBase, nprobe = np), truthL2, 10)
-    }
-    npRecalls.foreach { case (np, r) =>
-      registerSweepPoint("ann_hnsw_probe_coarse", np, nq, r) {
-        require(stripedF(qsFloat, coarseC)(
-          st => coarse.probeBatch(st, k = 10, efSearch = coarseEfBase,
-            nprobe = np)).nonEmpty)
-      }
-    }
-    val coarseNp = pickKnob(npRecalls)
+    val efBase = if (n >= 1000000L) 256 else 64
+    val npRecalls = reg.sweep("ann_hnsw_probe_coarse", "nprobe")(
+      Seq(1, 2, 3, 4, 6, 8).filter(_ <= coarseC), nq,
+      coarseRecall(efBase, _))(coarseBatch(efBase, _))
+    val np = pickKnob(npRecalls)
     // beam re-sweep at the picked routing width: once routing stops being
     // the recall ceiling the matched beam may sit below the anchor — the
     // efSearch curve is where the QPS headroom lives
-    val coarseEfGrid = (Seq(48, 96, 128, 192, coarseEfBase) ++
+    val efGrid = (Seq(48, 96, 128, 192, efBase) ++
       (if (n >= 1000000L) Seq(384, 512) else Seq.empty)).distinct.sorted
-    val efRecalls = coarseEfGrid.map { ef =>
-      ef -> (if (ef == coarseEfBase) npRecalls.toMap.apply(coarseNp)
-             else operators.Recall.mean(
-               coarse.probeLocal(queries, 10, ef, nprobe = coarseNp),
-               truthL2, 10))
-    }
-    efRecalls.foreach { case (ef, r) =>
-      registerSweepPoint("ann_hnsw_probe_coarse_ef", ef, nq, r) {
-        require(stripedF(qsFloat, coarseC)(
-          st => coarse.probeBatch(st, k = 10, efSearch = ef,
-            nprobe = coarseNp)).nonEmpty)
-      }
-    }
-    val coarseEf = pickKnob(efRecalls)
-    val coarseRecallV = efRecalls.toMap.apply(coarseEf)
-    register("ann_hnsw_probe_coarse", nq) {
-      require(stripedF(qsFloat, coarseC)(
-        st => coarse.probeBatch(st, k = 10, efSearch = coarseEf,
-          nprobe = coarseNp)).nonEmpty)
-    }
-    (coarseC, coarseNp, coarseEf, coarseRecallV)
+    reg.sweepPick("ann_hnsw_probe_coarse", "efSearch")(efGrid, nq,
+      ef => if (ef == efBase) npRecalls.toMap.apply(np) else coarseRecall(ef, np),
+      family = "ann_hnsw_probe_coarse_ef")(coarseBatch(_, np))
+      .row.withOp("ann_hnsw_probe_coarse_nprobe" -> np, "coarse_C" -> coarseC)
     }
 
     // serving UNDER MUTATION — the steady state of the streaming track
@@ -1384,7 +1369,7 @@ object Bench {
     // tombstone set (deletes since build, honored in-traversal) AND a
     // delta buffer (inserts since build, exact-scanned and merged). The
     // row shows what mutation costs relative to the clean probe.
-    val mutRecall = if (!trackOn("graph")) 0.0 else {
+    if (trackOn("graph")) {
     val mutCut = math.max(n / 20, 1L) // 5% of the corpus arrives post-build
     val mutTombHi = 2 * mutCut // and 5% of the built graph is deleted
     val mutResident = index.HnswKnn.buildResident(
@@ -1394,241 +1379,25 @@ object Bench {
       .select(col("id").cast("long"), col("vec"))
       .as[(Long, Array[Float])].collect()
     val mutDead = (mutCut until mutTombHi).toSet
-    register("ann_hnsw_probe_mutated", nq) {
-      require(stripedF(qsFloat, serveShards)(
-        st => mutResident.probeBatch(st, k = 10,
-          efSearch = efL2, mutDead, mutDelta)).nonEmpty)
-    }
-    locally {
+    reg.register("ann_hnsw_probe_mutated", nq) {
+      probeF(serveShards)(st => mutResident.probeBatch(st, k = 10,
+        efSearch = efL2, mutDead, mutDelta))
+    }.withRecall("ann_hnsw_probe_mutated" -> {
       val live = base.where(col("id") < mutCut || col("id") >= mutTombHi)
-      val truth = operators.Knn.knnJoin(queries, live, 10, operators.Metric.L2)
-      val got = spark.createDataFrame(
-        mutResident.probeBatch(qsFloat, 10, efL2, mutDead, mutDelta).toSeq)
-        .toDF("qid", "id", "dist", "rank")
-      operators.Recall.mean(got, truth, 10)
-    }
+      rec(frame(mutResident.probeBatch(qsFloat, 10, efL2, mutDead, mutDelta)),
+        operators.Knn.knnJoin(queries, live, 10, operators.Metric.L2))
+    })
     }
 
-    // hypervisor steal meter: this box steals CPU from the guest in
-    // minutes-scale bands (observed ~1.7% mean, concentrated), which is
-    // what inflates spread run-to-run on identical binaries — medians
-    // stay put (interleaving), but worst-case samples track the band.
-    // Publishing the timed loop's steal share puts the evidence in the
-    // artifact next to the spreads it explains.
-    def cpuStat(): (Long, Long) = try {
-      val src = scala.io.Source.fromFile("/proc/stat")
-      try {
-        val f = src.getLines().next().trim.split("\\s+").drop(1).map(_.toLong)
-        // first 8 fields (user..steal) only: guest/guest_nice are already
-        // folded into user/nice, so summing them double-counts the total
-        (f.take(8).sum, if (f.length > 7) f(7) else 0L)
-      } finally src.close()
-    } catch { case _: Throwable => (0L, 0L) }
-
-    // -- the interleaved timed loop (see scaladoc): per row, one untimed
-    // warmup then TWO timed batches whose MIN is the calibration time — a
-    // transient pause on a single calibration batch can no longer
-    // misclassify a fast row as slow (it=1) and revert it to unwindowed
-    // samples. Then `reps` round-robin passes over every row.
-    val failed = scala.collection.mutable.Set.empty[String]
-    val gcBeans = java.lang.management.ManagementFactory
-      .getGarbageCollectorMXBeans()
-    def gcMsNow(): Long = {
-      var acc = 0L
-      gcBeans.forEach { b =>
-        val t = b.getCollectionTime; if (t > 0) acc += t
-      }
-      acc
-    }
-    // process-CPU share of a sample's wall window: ~1.0 when the JVM's
-    // threads actually ran the whole window, collapsing when the HOST
-    // stalled the process (descheduling, cpu-band contention) — the
-    // attribution for spread outliers whose gc_worst_ms reads 0 (r8:
-    // whole adjacent row-stretches at spread 3-9 with zero GC and steal
-    // < 0.1%; medians reproduce, worst samples track the band)
-    val osBean = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean
-      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-    def procCpuNs(): Long = osBean.getProcessCpuTime
-    val nProcs = Runtime.getRuntime.availableProcessors()
-    // per-row cpu-frac history, seeded by calibration: the cpu-frac retake
-    // below compares a sample against the MEDIAN share the row itself has
-    // shown (serving batches legitimately run ~0.1 of 32 cores, and a
-    // row's share naturally swings ~2× sample-to-sample — referencing the
-    // row's best-ever share re-took ~half of all samples in the shakedown
-    // run; the median is the robust "typical" the judge's worst-vs-median
-    // collapse signal is defined against)
-    val cfHist = scala.collection.mutable.HashMap
-      .empty[String, ArrayBuffer[Double]]
-    def cfMedian(name: String): Double = {
-      val h = cfHist.getOrElse(name, ArrayBuffer.empty[Double])
-      if (h.length < 2) 0.0
-      else { val s = h.sorted; s(s.length / 2) }
-    }
-    def cfRecord(name: String, cf: Double): Unit =
-      cfHist.getOrElseUpdate(name, ArrayBuffer.empty) += cf
-    val calib = headline.map { case (name, runOnce, _) =>
-      name -> {
-        try {
-          runOnce()
-          val c0 = procCpuNs()
-          val t0 = System.nanoTime()
-          runOnce()
-          val w0 = System.nanoTime() - t0
-          cfRecord(name, (procCpuNs() - c0).toDouble / (w0.toDouble * nProcs))
-          val c1 = procCpuNs()
-          val t1 = System.nanoTime()
-          runOnce()
-          val w1 = System.nanoTime() - t1
-          cfRecord(name, (procCpuNs() - c1).toDouble / (w1.toDouble * nProcs))
-          math.min(w0 / 1e9, w1 / 1e9)
-        } catch { case _: Throwable => failed += name; 1.0 }
-      }
-    }.toMap
-    // min-window sample batching (r7; GC-audited r8): a ~45 ms batch turns
-    // ANY transient pause (a late JIT pass, old-gen collection of a heavy
-    // neighbor row's debt) into a 5–10× max sample, so fast rows read
-    // spread > 5 while flat in isolation. Each timed SAMPLE of a fast row
-    // runs enough back-to-back batches to fill ~0.8 s and records the
-    // MEDIAN batch time of the window (r8: a collection inside a ≥3-batch
-    // window no longer perturbs the sample at all, where the r7 mean
-    // diluted-but-kept it). Slow rows (single batch ≥ the window) get a
-    // settle() BEFORE each sample, and if a major collection still lands
-    // inside the timed batch (> 200 ms of GC AND > 20% of the batch) the
-    // sample is RETAKEN once. Nothing is silently discarded: the retake
-    // count and each row's GC time during its WORST sample are published
-    // in the artifact, so a surviving spread outlier carries its stall
-    // attribution (gc_worst_ms ≈ 0 ⇒ the stall was not the collector).
-    // Rows whose calibration batch exceeds 5 s keep only 3 round-robin
-    // samples (published per row in reps_capped) — bounding the wall cost
-    // of the slowest sweep points at large SF.
-    val sampleIters = headline.map { case (name, _, _) =>
-      name -> math.max(1, math.min(25,
-        math.ceil(minWindowSec / math.max(calib(name), 1e-3)).toInt))
-    }.toMap
-    val rowReps = headline.map { case (name, _, _) =>
-      name -> (if (calib(name) > 5.0) math.min(3, reps) else reps)
-    }.toMap
-    // per sample: (sec per batch, GC ms inside the sample's timed region,
-    // process-CPU share of the sample's wall window)
-    val samples = headline.map { case (name, _, _) =>
-      name -> ArrayBuffer.empty[(Double, Long, Double)] }.toMap
-    var gcRetakes = 0
-    // cpu-frac retake (r9): r8's audit showed 13 headline rows at spread
-    // 2–9.5 with gc_worst_ms 0, steal < 0.1%, and the worst sample's
-    // cpu_frac BELOW the row median — host CPU starvation the GC retake
-    // can't see. Mirror it: a sample whose process-CPU share collapses
-    // below 60% of the row's own median share is retaken ONCE (retake kept
-    // regardless), at most 3 retakes per row so a genuinely-degraded
-    // environment can't double a run's wall. Count published next to
-    // gc_retakes — nothing is silently discarded.
-    var cpuRetakes = 0
-    val cpuRetakesByRow = scala.collection.mutable.HashMap
-      .empty[String, Int].withDefaultValue(0)
-    val cfCollapse = 0.6
-    def cpuRetakeOk(name: String, cf: Double): Boolean = {
-      val ref = cfMedian(name)
-      val hit = ref > 0 && cf < cfCollapse * ref && cpuRetakesByRow(name) < 3
-      if (hit) { cpuRetakes += 1; cpuRetakesByRow(name) += 1 }
-      hit
-    }
-    val (statTot0, statSteal0) = cpuStat()
-    for (pass <- 1 to reps) {
-      headline.foreach { case (name, runOnce, _) =>
-        if (!failed(name) && pass <= rowReps(name)) {
-          try {
-            val it = sampleIters(name)
-            if (it == 1) {
-              settle()
-              def one(): (Double, Long, Double) = {
-                val g0 = gcMsNow()
-                val c0 = procCpuNs()
-                val t0 = System.nanoTime()
-                runOnce()
-                val wall = System.nanoTime() - t0
-                val cf = (procCpuNs() - c0).toDouble / (wall.toDouble * nProcs)
-                (wall / 1e9, gcMsNow() - g0, cf)
-              }
-              var s = one()
-              if (s._2 > 200 && s._2 > 0.2 * s._1 * 1000.0) {
-                gcRetakes += 1
-                s = one()
-              }
-              if (cpuRetakeOk(name, s._3)) s = one()
-              cfRecord(name, s._3)
-              samples(name) += s
-            } else {
-              def window(): (Double, Long, Double) = {
-                val g0 = gcMsNow()
-                val c0 = procCpuNs()
-                val t0w = System.nanoTime()
-                val bt = new Array[Double](it)
-                var i = 0
-                while (i < it) {
-                  val t0 = System.nanoTime()
-                  runOnce()
-                  bt(i) = (System.nanoTime() - t0) / 1e9
-                  i += 1
-                }
-                val wallW = System.nanoTime() - t0w
-                val cf = (procCpuNs() - c0).toDouble / (wallW.toDouble * nProcs)
-                java.util.Arrays.sort(bt)
-                (bt(it / 2), gcMsNow() - g0, cf)
-              }
-              var s = window()
-              // a host stall spanning the whole window defeats the
-              // in-window median — the same collapse test applies
-              if (cpuRetakeOk(name, s._3)) s = window()
-              cfRecord(name, s._3)
-              samples(name) += s
-            }
-          } catch { case _: Throwable => failed += name }
-        }
-      }
-    }
-    val (statTot1, statSteal1) = cpuStat()
-    val stealPct =
-      if (statTot1 > statTot0)
-        100.0 * (statSteal1 - statSteal0) / (statTot1 - statTot0)
-      else 0.0
-    // per-row median rate + max/min spread over its interleaved samples,
-    // plus the GC time inside the row's WORST sample (the stall audit)
-    val qpsOf = headline.map { case (name, _, norm) =>
-      val ts = samples(name).map(_._1).sorted
-      if (failed(name) || ts.isEmpty) name -> (0.0, 0.0)
-      else name -> (norm / ts(ts.length / 2),
-        ts.last / math.max(ts.head, 1e-9))
-    }.toMap
-    val gcWorstOf = headline.map { case (name, _, _) =>
-      val ss = samples(name)
-      name -> (if (ss.isEmpty) 0L else ss.maxBy(_._1)._2)
-    }.toMap
-    // process-CPU share inside the row's worst sample, rounded for the
-    // artifact: ~1.0 = the JVM computed the whole window (slowness was
-    // real work or in-JVM), << 1 = the host withheld cycles
-    val cpuFracOf = headline.map { case (name, _, _) =>
-      val ss = samples(name)
-      name -> (if (ss.isEmpty) 0.0
-               else math.rint(ss.maxBy(_._1)._3 * 1000) / 1000)
-    }.toMap
-    // ...and the MEDIAN sample's share as the row's own baseline: serving
-    // batches legitimately run ~0.1 of 32 cores (shard fan-out, short
-    // batches), so the outlier signal is worst-vs-median collapse, not
-    // the absolute value
-    val cpuFracMedOf = headline.map { case (name, _, _) =>
-      val ss = samples(name).sortBy(_._1)
-      name -> (if (ss.isEmpty) 0.0
-               else math.rint(ss(ss.length / 2)._3 * 1000) / 1000)
-    }.toMap
+    val stealPct = timeRows(reg.rows.toSeq)
     teardowns.foreach { td => try td() catch { case _: Throwable => () } }
 
     // streaming track (BASELINE row 4's unit — checkpoint recall + wall
     // time, not QPS): replay the in-repo delete_runbook fixture (the
     // reference's shape, not its bytes) scaled into this SF's id space and
     // grade every search checkpoint against the exact live-set kNN.
-    val (streamRecall, streamSec, streamGradeSec, streamCps, streamErr) =
-      if (!trackOn("streaming")) (0.0, 0.0, 0.0, "[]", "")
-      else {
+    // (mean recall, serve sec, grading sec, (checkpoint, recall bp), err)
+    val stream = if (!trackOn("streaming")) None else Some(
       try {
         val yaml = streaming.Runbook.fixture("delete_runbook.yaml")
         // BASELINE row 4 grades the msturing-10M-clustered doc (32 ins /
@@ -1638,7 +1407,6 @@ object Bench {
           streaming.Runbook.parseYaml(yaml)
             .find(_.dataset == "msturing-10M-clustered")
             .getOrElse(streaming.Runbook.parseYaml(yaml).head), n)
-        val src = base
         val sq = emb.where(col("vec_id") < 5)
           .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
         // scale-aware serving policy: the tombstone-count consolidation
@@ -1652,10 +1420,8 @@ object Bench {
         // and the delta broadcast (≤ n/8 rows), both bounded fractions of
         // a corpus the queries already broadcast against. Build shards =
         // serveShards (rebuild parallelism is the wall's dominant term).
-        val streamEf = sys.env.get("SPARK_GRAFT_STREAM_EF").map(_.toInt)
-          .getOrElse(if (n >= 1000000L) 256 else 128)
         val (graded, serveSec, gradeSec) = streaming.RunbookReplay.gradedTimed(
-          src, sq, rb, k = 10, efSearch = streamEf,
+          base, sq, rb, k = 10, efSearch = if (n >= 1000000L) 256 else 128,
           consolidateAt = math.max(1000L, n / 8),
           deltaCap = math.max(512L, n / 8),
           numPartitions = serveShards)
@@ -1666,182 +1432,48 @@ object Bench {
         val cps = graded.select(col("checkpoint").cast("long"),
             col("recall_bp").cast("long"))
           .as[(Long, Long)].collect().sortBy(_._1)
-        val cpJson = cps.map { case (cp, bp) =>
-          s"""{"checkpoint":$cp,"recall":${bp / 10000.0}}"""
-        }.mkString("[", ",", "]")
         val r =
           if (cps.isEmpty) 0.0 else cps.map(_._2).sum.toDouble / cps.length / 10000.0
-        (r, serveSec, gradeSec, cpJson, "")
+        (r, serveSec, gradeSec, cps, "")
       } catch { case e: Throwable =>
         // a broken replay must not publish mean_recall 0.0 as if measured
         // (r11 defect): the artifact carries the error, the zeros read as
         // "failed", and the rest of the run's rows still land
         val msg = (s"${e.getClass.getName}: ${String.valueOf(e.getMessage)}")
           .replace("\\", "\\\\").replace("\"", "'").replace("\n", " ").take(300)
-        (0.0, 0.0, 0.0, "[]", msg)
+        (0.0, 0.0, 0.0, Array.empty[(Long, Long)], msg)
       }
-      finally spark.sqlContext.clearCache()
+      finally spark.sqlContext.clearCache())
+    // the full object carries every checkpoint, the compact line their
+    // count and minimum
+    def streamField(full: Boolean): Seq[(String, Any)] = stream.toSeq.map {
+      case (r, sec, gradeSec, cps, err) =>
+        val recalls = cps.map(_._2 / 10000.0)
+        "streaming_replay" -> obj(
+          Seq("mean_recall" -> r, "sec" -> sec, "grading_sec" -> gradeSec) ++
+          (if (full) Seq("checkpoints" -> cps.zip(recalls).map {
+             case ((cp, _), rc) => obj(Seq("checkpoint" -> cp, "recall" -> rc))
+           }.mkString("[", ",", "]"))
+           else Seq("n_checkpoints" -> cps.length,
+             "min_recall" -> (if (cps.isEmpty) 0.0 else recalls.min))) ++
+          (if (err.isEmpty) Nil else Seq("err" -> str(err))))
     }
 
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val batchJson = batchResults.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
-    def q1(name: String): Double = qpsOf.getOrElse(name, (0.0, 0.0))._1
-    def q2(name: String): Double = qpsOf.getOrElse(name, (0.0, 0.0))._2
-    // sweep families assemble from the interleaved-loop medians/spreads
-    // recorded under their registered point rows (see registerSweepPoint)
-    val sweepKnobName = Map(
-      "ann_hnsw_probe" -> "efSearch", "ann_hnsw_probe_ip" -> "efSearch",
-      "filtered_knn_subindex" -> "efSearch",
-      "filtered_knn_subindex_slices" -> "slices",
-      "sparse_budget_served" -> "budget", "ann_hnsw_probe_routed" -> "nprobe",
-      "ann_hnsw_probe_routed_auto" -> "minMassPct",
-      "ann_hnsw_probe_coarse" -> "nprobe",
-      "ann_hnsw_probe_coarse_ef" -> "efSearch",
-      "ann_adc_served" -> "rerank", "ann_ivfadc_served" -> "minMassPct",
-      "ann_ivfadc_residual_served" -> "minMassPct",
-      "ann_ivfsq8_served" -> "minMassPct",
-      "ann_ivfsq8_graphroute_served" -> "efRoute",
-      "hamming_rerank_served" -> "c",
-      "hamming_rerank_served_ip" -> "c", "maxsim_served" -> "c")
-    val sweep = sweepReg.map { case (family, pts) =>
-      val knob = sweepKnobName.getOrElse(family, "knob")
-      val body = pts.sortBy(_._1).map { case (v, nm, r) =>
-        s"""{"$knob":$v,"qps":${q1(nm)},"spread":${q2(nm)},"recall":$r,"gc_worst_ms":${gcWorstOf.getOrElse(nm, 0L)},"cpu_frac_worst":${cpuFracOf.getOrElse(nm, 0.0)},"cpu_frac_med":${cpuFracMedOf.getOrElse(nm, 0.0)}}"""
-      }.mkString("[", ",", "]")
-      s""""$family":$body"""
-    }.mkString("{", ",", "}")
-    // a tracks/families-filtered run registers only the rows it measured;
-    // everything below keys off that registry, so SKIPPED families are
-    // ABSENT from the artifact rather than published as 0.0 (a 0.0 row
-    // reads as "measured at zero" in any downstream diff — r9 verdict
-    // item 9)
-    val ranRows = headline.map(_._1).toSet
-    val qpsNames = Seq("filtered_knn", "filtered_knn_planner",
-      "filtered_knn_subindex", "filtered_knn_bucketed", "sparse_budget",
-      "sparse_budget_served", "ann_hnsw_probe", "ann_hnsw_probe_ip",
-      "ann_hnsw_probe_routed", "ann_hnsw_probe_routed_auto",
-      "ann_hnsw_probe_coarse",
-      "ann_hnsw_probe_mutated", "ann_adc_served", "ann_ivfadc_served",
-      "ann_ivfadc_residual_served", "ann_ivfsq8_served",
-      "ann_ivfsq8_graphroute_served", "route_linear_c65536",
-      "route_graph_c65536", "maxsim_served", "maxsim_exact_join",
-      "hamming_served", "hamming_rerank_served").filter(ranRows)
-    val qpsPairs = qpsNames.map(nm => s"\"$nm\":${q1(nm)}").mkString(",")
-    // splice fragment: "" when no headline rows ran (a pure batch/
-    // streaming run) so the enclosing object stays valid JSON
-    val qpsPairsFrag = if (qpsNames.isEmpty) "" else qpsPairs + ","
-    val spreadPairs = qpsNames.map(nm => s"\"$nm\":${q2(nm)}").mkString(",")
-    val gcPairs =
-      qpsNames.map(nm => s"\"$nm\":${gcWorstOf.getOrElse(nm, 0L)}").mkString(",")
-    val cpuPairs =
-      qpsNames.map(nm => s"\"$nm\":${cpuFracOf.getOrElse(nm, 0.0)}").mkString(",")
-    val cpuMedPairs =
-      qpsNames.map(nm => s"\"$nm\":${cpuFracMedOf.getOrElse(nm, 0.0)}").mkString(",")
-    // the auto-picked matched-recall operating knob per headline row (plus
-    // the corpus-relative structure sizes) — emitted only for rows that
-    // ran, so the artifact states exactly what it measured and nothing else
-    val opJson = Seq(
-      ("ann_hnsw_probe_efSearch", efL2.toString, "ann_hnsw_probe"),
-      ("ann_hnsw_probe_ip_efSearch", efIp.toString, "ann_hnsw_probe_ip"),
-      ("filtered_knn_subindex_efSearch", subindexEf.toString,
-        "filtered_knn_subindex"),
-      ("filtered_knn_subindex_slices", subSlices.toString,
-        "filtered_knn_subindex"),
-      ("filtered_knn_planner_scan_queries", plannerScanN.toString,
-        "filtered_knn_planner"),
-      ("filtered_knn_planner_graph_queries", plannerGraphN.toString,
-        "filtered_knn_planner"),
-      ("ann_adc_served_rerank", adcRerank.toString, "ann_adc_served"),
-      ("ann_ivfadc_served_minMassPct", ivfAdcMass.toString,
-        "ann_ivfadc_served"),
-      ("ann_ivfadc_residual_served_minMassPct", ivfAdcResMass.toString,
-        "ann_ivfadc_residual_served"),
-      ("ann_ivfsq8_served_minMassPct", ivfSq8Mass.toString,
-        "ann_ivfsq8_served"),
-      ("ann_hnsw_probe_routed_nprobe", routedNp.toString,
-        "ann_hnsw_probe_routed"),
-      ("ann_hnsw_probe_coarse_nprobe", coarseNp.toString,
-        "ann_hnsw_probe_coarse"),
-      ("ann_hnsw_probe_coarse_efSearch", coarseEf.toString,
-        "ann_hnsw_probe_coarse"),
-      ("coarse_C", coarseCOut.toString, "ann_hnsw_probe_coarse"),
-      ("ann_hnsw_probe_routed_auto_minMassPct", routedAutoPct.toString,
-        "ann_hnsw_probe_routed_auto"),
-      ("ann_ivfsq8_graphroute_served_efRoute", ivfSq8GrEf.toString,
-        "ann_ivfsq8_graphroute_served"),
-      ("sparse_budget_served_budget", sparseM.toString, "sparse_budget_served"),
-      ("sparse_budget_served_rerank", sparseRerankC.toString,
-        "sparse_budget_served"),
-      ("maxsim_served_c", maxsimC.toString, "maxsim_served"),
-      ("maxsim_served_nprobe", maxsimNp.toString, "maxsim_served"),
-      ("maxsim_C", maxsimCells.toString, "maxsim_served"),
-      ("hamming_rerank_served_c", ham2C.toString, "hamming_rerank_served"),
-      ("ivf_C", benchC.toString, "ann_ivfsq8_served"),
-      ("ivf_C", benchC.toString, "ann_ivfadc_served"),
-      ("ivf_C", benchC.toString, "ann_ivfadc_residual_served"),
-      ("routed_C", routedC.toString, "ann_hnsw_probe_routed"),
-      ("routed_efSearch", routedEf.toString, "ann_hnsw_probe_routed"),
-      ("route_micro_C", routeC.toString, "route_graph_c65536"),
-      ("ivf_rerank_adc", ivfAdcRerank.toString, "ann_ivfadc_served"),
-      ("ivf_rerank_adc_residual", ivfAdcResRerank.toString,
-        "ann_ivfadc_residual_served"),
-      ("ivf_rerank_sq8", ivfSq8Rerank.toString, "ann_ivfsq8_served"))
-      .collect { case (key, v, row) if ranRows(row) => (key, v) }
-      .distinct
-      .map { case (key, v) => s"\"$key\":$v" }
-      .mkString("{", ",", "}")
-    val recallJson = Seq(
-      ("filtered_knn", "1.0", "filtered_knn"),
-      ("filtered_knn_planner", plannerRecall.toString, "filtered_knn_planner"),
-      ("filtered_knn_subindex", subindexRecall.toString,
-        "filtered_knn_subindex"),
-      ("filtered_knn_bucketed", "1.0", "filtered_knn_bucketed"),
-      ("sparse_budget_served", sparseRecall.toString, "sparse_budget_served"),
-      ("ann_hnsw_probe", annRecall.toString, "ann_hnsw_probe"),
-      ("ann_hnsw_probe_ip", annIpRecall.toString, "ann_hnsw_probe_ip"),
-      ("ann_hnsw_probe_routed", rtRecall.toString, "ann_hnsw_probe_routed"),
-      ("ann_hnsw_probe_routed_auto", rtaRecall.toString,
-        "ann_hnsw_probe_routed_auto"),
-      ("ann_hnsw_probe_coarse", coarseRecallV.toString,
-        "ann_hnsw_probe_coarse"),
-      ("ann_hnsw_probe_mutated", mutRecall.toString, "ann_hnsw_probe_mutated"),
-      ("ann_adc_served", adcRecall.toString, "ann_adc_served"),
-      ("ann_ivfadc_served", ivfAdcRecall.toString, "ann_ivfadc_served"),
-      ("ann_ivfadc_residual_served", ivfAdcResRecall.toString,
-        "ann_ivfadc_residual_served"),
-      ("ann_ivfsq8_served", ivfSq8Recall.toString, "ann_ivfsq8_served"),
-      ("ann_ivfsq8_graphroute_served", ivfSq8GrRecall.toString,
-        "ann_ivfsq8_graphroute_served"),
-      ("route_graph_agreement", routeAgree.toString, "route_graph_c65536"),
-      ("maxsim_served", maxsimRecall.toString, "maxsim_served"),
-      ("hamming_served_l2_fidelity", hamFidelity.toString, "hamming_served"),
-      ("hamming_served_cos_fidelity", hamFidelityCos.toString,
-        "hamming_served"),
-      ("hamming_rerank_served_l2_fidelity", ham2Fidelity.toString,
-        "hamming_rerank_served"))
-      .collect { case (key, v, row) if ranRows(row) => s"\"$key\":$v" }
-      .mkString("{", ",", "}")
-    val streamFrag =
-      if (!trackOn("streaming")) ""
-      else {
-        val errFrag = if (streamErr.isEmpty) "" else s""","err":"$streamErr""""
-        s""","streaming_replay":{"mean_recall":$streamRecall,"sec":$streamSec,"grading_sec":$streamGradeSec,"checkpoints":$streamCps$errFrag}"""
-      }
-    val repsCapped = headline.collect {
-      case (nm, _, _) if rowReps(nm) < reps => s"\"$nm\":${rowReps(nm)}"
-    }.mkString("{", ",", "}")
-    val qpsJson =
-      s"""{$qpsPairsFrag"nq":$nq,"reps":$reps,"interleaved":true,"spread":{$spreadPairs},"gc_worst_ms":{$gcPairs},"cpu_frac_worst":{$cpuPairs},"cpu_frac_med":{$cpuMedPairs},"op":$opJson,"reps_capped":$repsCapped,"recall":$recallJson,"sweep":$sweep,"env":{"steal_pct":$stealPct,"gc_retakes":$gcRetakes,"cpu_retakes":$cpuRetakes,"probe_slices":${slicesFor(serveShards, nq)},"tracks":"$tracksLabel","ivf_families":"$ivfFamsLabel"}$streamFrag}"""
-    val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"batch_sec":$batchJson,"qps":$qpsJson,"sf":"$sfDir"}"""
+    val total = results.values.sum
+    def env(fmt: Double => String): String = obj(Seq(
+      "steal_pct" -> fmt(stealPct),
+      "gc_retakes" -> reg.rows.map(_.gcRetakes).sum,
+      "cpu_retakes" -> reg.rows.map(_.cpuRetakes).sum,
+      "probe_slices" -> slices(serveShards, nq),
+      "tracks" -> str(tracksLabel), "ivf_families" -> str(ivfFamsLabel)))
+    val qpsJson = obj(reg.json ++ Seq("nq" -> nq, "reps" -> reps,
+      "interleaved" -> true, "env" -> env(_.toString)) ++ streamField(true))
+    val line = obj(Seq("metric" -> str("total"), "value" -> total,
+      "unit" -> str("sec"), "queries" -> obj(results),
+      "batch_sec" -> obj(batchResults), "qps" -> qpsJson, "sf" -> str(sfDir)))
     // the whole object lands in a file the driver (or anyone) can read
     // intact, before anything is printed
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      "BENCH_METRICS.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
+    try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
       (line + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => () }
     println(line)
@@ -1863,25 +1495,17 @@ object Bench {
     // left only in the full file. The qps values are rounded to 0.1 and the
     // streaming checkpoints array (~1 KB at sf0.1 — what pushed the r12
     // compact line past 2 KB) is summarized to count/min; full-precision
-    // values and the checkpoint list stay in the first line + $outPath.
+    // values and the checkpoint list stay in the first line + the file.
     val tailBudget = 1900
     def r1(v: Double): String = "%.1f".formatLocal(java.util.Locale.ROOT, v)
-    val qpsPairsCompact =
-      if (qpsNames.isEmpty) ""
-      else qpsNames.map(nm => s"\"$nm\":${r1(q1(nm))}").mkString(",") + ","
-    val streamCompact =
-      if (!trackOn("streaming")) ""
-      else {
-        val errFrag = if (streamErr.isEmpty) "" else s""","err":"$streamErr""""
-        val (nCp, minCp) = {
-          val rs = "\"recall\":([0-9.]+)".r
-            .findAllMatchIn(streamCps).map(_.group(1).toDouble).toSeq
-          (rs.length, if (rs.isEmpty) 0.0 else rs.min)
-        }
-        s""","streaming_replay":{"mean_recall":$streamRecall,"sec":$streamSec,"grading_sec":$streamGradeSec,"n_checkpoints":$nCp,"min_recall":$minCp$errFrag}"""
-      }
+    val compactQps = obj(
+      reg.rows.filter(_.headline).map(r => r.name -> r1(r.qps)) ++
+        Seq("nq" -> nq, "env" -> env(r1)) ++ streamField(false))
     def compactLine(queriesFrag: String, elided: Int): String =
-      s"""{"metric":"total","value":${r1(total)},"unit":"sec","queries":{$queriesFrag},"queries_elided":$elided,"sf":"$sfDir","qps":{$qpsPairsCompact"nq":$nq,"env":{"steal_pct":${r1(stealPct)},"gc_retakes":$gcRetakes,"cpu_retakes":$cpuRetakes,"probe_slices":${slicesFor(serveShards, nq)},"tracks":"$tracksLabel","ivf_families":"$ivfFamsLabel"}$streamCompact},"full":"$outPath"}"""
+      obj(Seq("metric" -> str("total"), "value" -> r1(total),
+        "unit" -> str("sec"), "queries" -> s"{$queriesFrag}",
+        "queries_elided" -> elided, "sf" -> str(sfDir), "qps" -> compactQps,
+        "full" -> str(outFile)))
     val slowestFirst = results.toSeq.sortBy(-_._2)
       .map { case (k, v) =>
         s"\"$k\":${"%.2f".formatLocal(java.util.Locale.ROOT, v)}"
@@ -1897,9 +1521,8 @@ object Bench {
       }
       n0
     }
-    val compact = compactLine(slowestFirst.take(keep).mkString(","),
-      slowestFirst.length - keep)
-    println(compact)
+    println(compactLine(slowestFirst.take(keep).mkString(","),
+      slowestFirst.length - keep))
     spark.stop()
   }
 }

@@ -15,13 +15,13 @@ import org.apache.spark.sql.functions._
   * output all C seeds land in one region. Hash-uniform seeds land ∝ the
   * data distribution wherever the ids came from.
   *
-  * Why not k-means++? Measured (SeedDiag, 200k-row σ=0.20 clustered
+  * Why not k-means++? Measured (seeding study, 200k-row σ=0.20 clustered
   * control, C = 1,789, iters = 3, queries from the MIDDLE of the id range
   * so no seeding sees its own eval queries): lowest-id, hash-uniform, and
   * the dyadic k-means‖-style ++ draw ([[KMeans.seedPlusPlus]], kept as an
   * opt-in) are statistically indistinguishable — routing-limited recall
   * within ±0.01 at every scanned-mass point (3% mass: 0.893 / 0.887 /
-  * 0.882), inertia within 0.1%. The same diag run on LOW-id queries had
+  * 0.882), inertia within 0.1%. The same study on LOW-id queries had
   * read lowest-id 0.03 "ahead" at every point — pure leakage (the C
   * lowest-id seeds contain the lowest-id queries), which also means
   * earlier rounds' IVF recall sweeps were mildly flattered. ++'s D²

@@ -1,0 +1,48 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Spark-free gates for the two pure rules `graft.Bench` runs on: the
+  * matched-recall knob pick every sweep family's headline uses, and the
+  * rule that keeps a filtered run from replacing the committed full-run
+  * artifact. */
+class BenchSpec extends AnyFunSuite {
+
+  test("pickKnob: smallest knob clearing 0.9, from unsorted points") {
+    val pts = Seq(64 -> 0.97, 16 -> 0.82, 48 -> 0.95, 24 -> 0.91, 32 -> 0.93)
+    assert(Bench.pickKnob(pts) === 24)
+    // exactly at the floor clears it
+    assert(Bench.pickKnob(Seq(8 -> 0.5, 4 -> 0.9)) === 4)
+  }
+
+  test("pickKnob: no point clears 0.9 -> best recall, smallest knob on a tie") {
+    assert(Bench.pickKnob(Seq(80 -> 0.6, 20 -> 0.4, 40 -> 0.7)) === 40)
+    assert(Bench.pickKnob(Seq(640 -> 0.85, 160 -> 0.85, 320 -> 0.8)) === 160)
+  }
+
+  test("pickKnob: a single point is the pick whatever its recall") {
+    assert(Bench.pickKnob(Seq(128 -> 0.3)) === 128)
+    assert(Bench.pickKnob(Seq(7 -> 1.0)) === 7)
+  }
+
+  test("outPath: unfiltered run defaults to BENCH_METRICS.json") {
+    assert(Bench.outPath(Map.empty) === "BENCH_METRICS.json")
+    assert(Bench.outPath(Map("SPARK_GRAFT_SF_DIR" -> "/data/sf1",
+      "SPARK_GRAFT_COARSE_C" -> "16")) === "BENCH_METRICS.json")
+    assert(Bench.outPath(Map("SPARK_GRAFT_BENCH_OUT" -> "/tmp/b.json")) ===
+      "/tmp/b.json")
+  }
+
+  test("outPath: a filtered run writes SPARK_GRAFT_BENCH_OUT or is rejected") {
+    for (v <- Bench.filterVars) {
+      assert(Bench.outPath(Map(v -> "1",
+        "SPARK_GRAFT_BENCH_OUT" -> "/tmp/f.json")) === "/tmp/f.json")
+      val e = intercept[IllegalArgumentException](Bench.outPath(Map(v -> "1")))
+      assert(e.getMessage.contains("SPARK_GRAFT_BENCH_OUT"), e.getMessage)
+      assert(e.getMessage.contains(v), e.getMessage)
+    }
+    assert(Bench.filterVars.toSet === Set("SPARK_GRAFT_TRACKS",
+      "SPARK_GRAFT_IVF_FAMILIES", "SPARK_GRAFT_QPS_ONLY",
+      "SPARK_GRAFT_SWEEP_CAP_PCT"))
+  }
+}
