@@ -87,6 +87,11 @@ import scala.collection.mutable.{ArrayBuffer, LinkedHashMap}
   * index builds. */
 object Bench {
   private val reps = 10
+  // round-robin passes of a sweep point and of a row whose calibration
+  // batch exceeds 5 s. The pick reads only a sweep point's recall, so its
+  // q/s is report data: 3 samples (published per row in reps_capped)
+  // still give it a median and a spread
+  private val cappedReps = 3
   // minimum timed-sample window (headline rows AND sweep points): a
   // sample of a fast row averages enough back-to-back batches to fill
   // this window, so a transient pause perturbs the sample by its share
@@ -152,7 +157,8 @@ object Bench {
       if (cf.length < 2) 0.0 else cf.sorted.apply(cf.length / 2)
     def iters: Int = math.max(1, math.min(25,
       math.ceil(minWindowSec / math.max(calib, 1e-3)).toInt))
-    def nReps: Int = if (calib > 5.0) math.min(3, reps) else reps
+    def nReps: Int =
+      if (!headline || calib > 5.0) math.min(cappedReps, reps) else reps
     // median rate + max/min spread over the interleaved samples
     lazy val qps: Double =
       if (failed || samples.isEmpty) 0.0
@@ -315,9 +321,10 @@ object Bench {
     // count and each row's GC time during its WORST sample are published
     // in the artifact, so a surviving spread outlier carries its stall
     // attribution (gc_worst_ms ≈ 0 ⇒ the stall was not the collector).
-    // Rows whose calibration batch exceeds 5 s keep only 3 round-robin
-    // samples (published per row in reps_capped) — bounding the wall cost
-    // of the slowest sweep points at large SF.
+    // Sweep points, and rows whose calibration batch exceeds 5 s, keep
+    // only `cappedReps` round-robin samples (published per row in
+    // reps_capped) — 108 of sf0.1's 131 rows are sweep points, and their
+    // 10 passes made the loop alone at least 17 min on a 4-core host.
     def sample(r: Row, it: Int): (Double, Long, Double) = {
       val g0 = gcMsNow()
       val c0 = osBean.getProcessCpuTime

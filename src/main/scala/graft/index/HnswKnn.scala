@@ -93,11 +93,12 @@ final class HnswResident(spark: SparkSession,
                  tombstones: Set[Long] = Set.empty,
                  delta: Array[(Long, Array[Float])] = Array.empty,
                  treeMergeAt: Int = 64): Array[(Long, Long, Double, Long)] = {
-    ResidentServe.validate(k, dim, qs.iterator.map(_._2.length))
+    ResidentServe.validate(k, dim, qs.iterator.map(_._2))
     val nParts = math.max(rdd.getNumPartitions, 1)
     // per-query merge with id-dedup (an id can arrive from both the graph
     // and the delta with bit-identical distance): driver merge at serving
-    // partition counts, two-level treeAggregate past `treeMergeAt` shards
+    // partition counts, two-level treeAggregate past `treeMergeAt` shards.
+    // Every partition gets a task: the delta is striped by partition id
     ResidentServe.probe(rdd, (qs, tombstones, delta), qs.length, k,
         treeMergeAt) { (shard, batch) =>
       val (idx, _) = shard
@@ -152,7 +153,7 @@ final class HnswResident(spark: SparkSession,
   private[index] def withCandidateArrays[T](qs: Array[(Long, Array[Float])],
                                             k: Int, efSearch: Int)(
       f: org.apache.spark.rdd.RDD[(Long, Array[(Long, Double)])] => T): T = {
-    ResidentServe.validate(k, dim, qs.iterator.map(_._2.length))
+    ResidentServe.validate(k, dim, qs.iterator.map(_._2))
     ResidentServe.withBroadcast(rdd, qs) { bq =>
       f(rdd.flatMap { case (idx, _) =>
         bq.value.iterator.map { case (qid, qv) =>

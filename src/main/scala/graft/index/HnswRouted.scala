@@ -26,6 +26,7 @@ final class HnswRouted(spark: SparkSession,
                        rdd: RDD[(Int, HnswIndex)],
                        val centroids: Array[(Int, Array[Float])],
                        ipMetric: Boolean,
+                       shardsOf: Map[Int, Array[Int]],
                        val clusterSizes: Map[Int, Long] = Map.empty) {
 
   /** Rank every centroid by the index metric (L2, or negated dot under ip —
@@ -93,8 +94,10 @@ final class HnswRouted(spark: SparkSession,
   }
 
   /** Serving-form batch probe: query array in, (qid, id, dist, rank) out,
-    * sorted by (qid, rank). One broadcast + one narrow job per batch; a
-    * graph only evaluates the queries routed to it. */
+    * sorted by (qid, rank). One broadcast + one narrow job per batch, whose
+    * tasks launch only on the partitions holding a routed cluster's graph
+    * (`shardsOf`, recorded at load); a graph only evaluates the queries
+    * routed to it. */
   def probeBatch(qs: Array[(Long, Array[Float])], k: Int, efSearch: Int = 64,
                  nprobe: Int = 2,
                  efRoute: Int = Int.MaxValue): Array[(Long, Long, Double, Long)] =
@@ -113,7 +116,7 @@ final class HnswRouted(spark: SparkSession,
   private def probeRouted(qs: Array[(Long, Array[Float])],
                           routeFn: Array[Float] => Array[Int], k: Int,
                           efSearch: Int): Array[(Long, Long, Double, Long)] = {
-    ResidentServe.validate(k, dim, qs.iterator.map(_._2.length))
+    ResidentServe.validate(k, dim, qs.iterator.map(_._2))
     val byPart = scala.collection.mutable.HashMap.empty[Int, scala.collection.mutable.ArrayBuffer[Int]]
     qs.iterator.zipWithIndex.foreach { case ((_, qv), qi) =>
       routeFn(qv).foreach { cid =>
@@ -132,8 +135,10 @@ final class HnswRouted(spark: SparkSession,
     // index whose node parquet reads in fewer than treeAt splits would
     // otherwise take the raw collect with the same oversized fan-in.
     val fanIn = routesByPart.valuesIterator.map(_.length.toLong).sum * k
+    val parts = routesByPart.keysIterator
+      .flatMap(shardsOf.getOrElse(_, Array.empty[Int])).toSeq.distinct.sorted
     ResidentServe.probe(rdd, (qs, routesByPart), qs.length, k,
-        estRows = fanIn) { (shard, batch) =>
+        estRows = fanIn, parts = Some(parts)) { (shard, batch) =>
       val (part, idx) = shard
       val (queries, routes) = batch
       routes.get(part) match {
@@ -256,7 +261,10 @@ object HnswRouted {
         (part, idx)
       }
       .persist(StorageLevel.MEMORY_AND_DISK)
-    rdd.count() // materialize the graphs before the first probe
+    // materialize the graphs before the first probe, recording which
+    // partition holds each cluster's graph
+    val (_, shardsOf) = ResidentServe.materializeKeyed(rdd)(_._1)(
+      _ => Iterator.empty)
     val centroids = spark.read.parquet(path + ".centroids")
       .select(col("cid").cast("int"), col("cvec"))
       .as[(Int, Array[Float])].collect().sortBy(_._1)
@@ -264,6 +272,6 @@ object HnswRouted {
     // partition column — parquet answers it from footer row counts
     val sizes = spark.read.parquet(path).groupBy(col("part"))
       .count().as[(Int, Long)].collect().toMap
-    new HnswRouted(spark, rdd, centroids, metric == "ip", sizes)
+    new HnswRouted(spark, rdd, centroids, metric == "ip", shardsOf, sizes)
   }
 }

@@ -9,9 +9,10 @@ import scala.collection.mutable
   * to one ranked top-k per query.
   *
   * Two regimes:
-  *  - small P: collect the candidates and merge on the driver — one narrow
-  *    stage, no exchange, k·nq·P rows are driver-sized (this is the serving
-  *    fast path, same as the reference collecting per-thread heaps);
+  *  - small P: one job on the candidate partitions, each task's candidates
+  *    merged on the driver ([[Collected]]) — one narrow stage, no exchange,
+  *    k·nq·P rows are driver-sized (this is the serving fast path, same as
+  *    the reference collecting per-thread heaps);
   *  - large P (a thousand-shard cluster): the driver merge becomes the
   *    serving ceiling, so a `treeAggregate` combines per-executor FIRST and
   *    the driver only merges O(√P) pre-reduced maps (two-level merge).
@@ -59,12 +60,9 @@ private[index] object ProbeMerge {
     out.toArray
   }
 
-  private def sortCands(cand: Array[(Long, Double)]): Array[(Long, Double)] =
-    cand.sortBy(c => (c._2, c._1))
-
-  private def finish(m: mutable.LongMap[Array[(Long, Double)]],
-                     k: Int): Array[(Long, Long, Double, Long)] = {
-    val out = Array.newBuilder[(Long, Long, Double, Long)]
+  private def finish[D](m: mutable.LongMap[Array[(Long, D)]],
+                        k: Int): Array[(Long, Long, D, Long)] = {
+    val out = Array.newBuilder[(Long, Long, D, Long)]
     m.toSeq.sortBy(_._1).foreach { case (qid, cand) =>
       var r = 0
       while (r < cand.length && r < k) {
@@ -75,21 +73,66 @@ private[index] object ProbeMerge {
     out.result()
   }
 
+  /** The collect regime's driver merge: per-shard candidate arrays are
+    * [[add]]ed as their tasks finish, in any order; [[result]] ranks each
+    * query's candidates by (`ord` on the key, id asc), drops repeated ids
+    * and keeps the first k. */
+  private final class Collected[D](k: Int)(ord: Ordering[D]) {
+    private val byQuery = mutable.LongMap.empty[mutable.ArrayBuffer[(Long, D)]]
+
+    def add(cands: Array[(Long, Long, D)]): Unit = cands.foreach {
+      case (qid, id, d) =>
+        byQuery.getOrElseUpdate(qid, mutable.ArrayBuffer.empty) += ((id, d))
+    }
+
+    def result(): Array[(Long, Long, D, Long)] = {
+      val rank = Ordering.Tuple2(ord, Ordering.Long)
+      val m = mutable.LongMap.empty[Array[(Long, D)]]
+      byQuery.foreach { case (qid, cand) =>
+        val seen = mutable.HashSet.empty[Long]
+        m(qid) = cand.sortBy(c => (c._2, c._1))(rank).iterator
+          .filter(c => seen.add(c._1)).take(k).toArray
+      }
+      finish(m, k)
+    }
+  }
+
   /** [[topK]] for integer-score candidates ranked (score DESC, id asc) —
     * the sparse postings serving domain, kept in exact Long arithmetic
     * (scores are sums of tf products; a double round-trip could lose
-    * precision past 2^53). Implemented by order reversal: merge on
-    * negated scores, emit the originals. */
+    * precision past 2^53). */
   def topKByScore(candidates: RDD[(Long, Long, Long)], k: Int,
                   treeAt: Int = 64,
-                  estRows: Long = -1L): Array[(Long, Long, Long, Long)] = {
+                  estRows: Long = -1L): Array[(Long, Long, Long, Long)] =
+    merge(candidates, 0 until candidates.getNumPartitions, k, treeAt,
+      estRows)(rows => rows)(Ordering.Long.reverse, treeTopKByScore(_, k))
+
+  /** The merge of the candidates `perShard` makes of each partition of
+    * `rdd`. Collect regime: ONE job on partitions `parts` (the others
+    * must yield nothing), each task's candidates fed to [[Collected]] as
+    * it finishes, ranked by (`ord`, id asc). Otherwise `tree` merges
+    * them from every partition. */
+  def merge[S, D](rdd: RDD[S], parts: Seq[Int], k: Int, treeAt: Int,
+                  estRows: Long)(perShard: Iterator[S] => Iterator[(Long, Long, D)])(
+      ord: Ordering[D],
+      tree: RDD[(Long, Long, D)] => Array[(Long, Long, D, Long)]): Array[(Long, Long, D, Long)] =
+    if (collectRegime(rdd.getNumPartitions, treeAt, estRows)) {
+      val merged = new Collected[D](k)(ord)
+      ShardJob.run(rdd, parts)(perShard)(merged.add)
+      merged.result()
+    } else tree(rdd.mapPartitions(perShard))
+
+  /** The tree regime of [[topKByScore]], by order reversal: merge on
+    * negated scores, emit the originals. */
+  def treeTopKByScore(candidates: RDD[(Long, Long, Long)],
+                      k: Int): Array[(Long, Long, Long, Long)] = {
     // Long.MinValue can't negate; scores here are non-negative sums, but
     // guard the domain explicitly rather than silently corrupting ranks
     val asDist = candidates.map { case (qid, id, s) =>
       require(s != Long.MinValue, "score domain")
       (qid, id, -s)
     }
-    topKLong(asDist, k, treeAt, estRows).map { case (qid, id, negS, r) =>
+    treeTopKLong(asDist, k).map { case (qid, id, negS, r) =>
       (qid, id, -negS, r)
     }
   }
@@ -101,11 +144,10 @@ private[index] object ProbeMerge {
   private def collectRegime(parts: Int, treeAt: Int, estRows: Long): Boolean =
     parts < treeAt && (estRows < 0L || estRows <= maxCollectRows)
 
-  /** Exact-Long variant of [[topK]]: same two regimes, (dist asc, id asc)
-    * over Long distances. */
-  private def topKLong(candidates: RDD[(Long, Long, Long)], k: Int,
-                       treeAt: Int,
-                       estRows: Long = -1L): Array[(Long, Long, Long, Long)] = {
+  /** Exact-Long variant of [[treeTopK]]: (dist asc, id asc) over Long
+    * distances. */
+  private def treeTopKLong(candidates: RDD[(Long, Long, Long)],
+                           k: Int): Array[(Long, Long, Long, Long)] = {
     def mergeTwoL(a: Array[(Long, Long)], b: Array[(Long, Long)],
                   k: Int): Array[(Long, Long)] = {
       // no empty-side early return — see mergeTwo: dedup must always run
@@ -122,42 +164,20 @@ private[index] object ProbeMerge {
       }
       out.toArray
     }
-    def finishL(m: mutable.LongMap[Array[(Long, Long)]]): Array[(Long, Long, Long, Long)] = {
-      val out = Array.newBuilder[(Long, Long, Long, Long)]
-      m.toSeq.sortBy(_._1).foreach { case (qid, cand) =>
-        var r = 0
-        while (r < cand.length && r < k) {
-          out += ((qid, cand(r)._1, cand(r)._2, (r + 1).toLong))
-          r += 1
+    finish(candidates.treeAggregate(
+      mutable.LongMap.empty[Array[(Long, Long)]])(
+      seqOp = { (m, c) =>
+        m(c._1) = mergeTwoL(m.getOrElse(c._1, Array.empty),
+          Array((c._2, c._3)), k)
+        m
+      },
+      combOp = { (m1, m2) =>
+        m2.foreach { case (qid, cand) =>
+          m1(qid) = mergeTwoL(m1.getOrElse(qid, Array.empty), cand, k)
         }
-      }
-      out.result()
-    }
-    if (collectRegime(candidates.getNumPartitions, treeAt, estRows)) {
-      val local = candidates.collect()
-      val m = mutable.LongMap.empty[Array[(Long, Long)]]
-      local.groupBy(_._1).foreach { case (qid, cand) =>
-        m(qid) = mergeTwoL(
-          cand.map(c => (c._2, c._3)).sortBy(c => (c._2, c._1)),
-          Array.empty, k)
-      }
-      finishL(m)
-    } else {
-      finishL(candidates.treeAggregate(
-        mutable.LongMap.empty[Array[(Long, Long)]])(
-        seqOp = { (m, c) =>
-          m(c._1) = mergeTwoL(m.getOrElse(c._1, Array.empty),
-            Array((c._2, c._3)), k)
-          m
-        },
-        combOp = { (m1, m2) =>
-          m2.foreach { case (qid, cand) =>
-            m1(qid) = mergeTwoL(m1.getOrElse(qid, Array.empty), cand, k)
-          }
-          m1
-        },
-        depth = 2))
-    }
+        m1
+      },
+      depth = 2), k)
   }
 
   /** Merge `(qid, id, dist)` candidate rows to ranked per-query top-k.
@@ -165,34 +185,28 @@ private[index] object ProbeMerge {
     * `estRows` volume bound; two-level treeAggregate otherwise. */
   def topK(candidates: RDD[(Long, Long, Double)], k: Int,
            treeAt: Int = 64,
-           estRows: Long = -1L): Array[(Long, Long, Double, Long)] = {
-    if (collectRegime(candidates.getNumPartitions, treeAt, estRows)) {
-      val local = candidates.collect()
-      val m = mutable.LongMap.empty[Array[(Long, Double)]]
-      local.groupBy(_._1).foreach { case (qid, cand) =>
-        m(qid) = mergeTwo(
-          sortCands(cand.map(c => (c._2, c._3))), Array.empty, k)
-      }
-      finish(m, k)
-    } else {
-      // seqOp folds one partition's candidates into a partition-local map
-      // (each partition contributes ≤ k per qid, so maps stay nq·k-bounded);
-      // combOp merges maps pairwise up a depth-2 tree before the driver
-      val merged = candidates.treeAggregate(
-        mutable.LongMap.empty[Array[(Long, Double)]])(
-        seqOp = { (m, c) =>
-          m(c._1) = mergeTwo(m.getOrElse(c._1, Array.empty),
-            Array((c._2, c._3)), k)
-          m
-        },
-        combOp = { (m1, m2) =>
-          m2.foreach { case (qid, cand) =>
-            m1(qid) = mergeTwo(m1.getOrElse(qid, Array.empty), cand, k)
-          }
-          m1
-        },
-        depth = 2)
-      finish(merged, k)
-    }
-  }
+           estRows: Long = -1L): Array[(Long, Long, Double, Long)] =
+    merge(candidates, 0 until candidates.getNumPartitions, k, treeAt,
+      estRows)(rows => rows)(Ordering[Double], treeTopK(_, k))
+
+  /** The tree regime of [[topK]]: seqOp folds one partition's candidates
+    * into a partition-local map (each partition contributes ≤ k per qid,
+    * so maps stay nq·k-bounded); combOp merges maps pairwise up a depth-2
+    * tree before the driver. */
+  def treeTopK(candidates: RDD[(Long, Long, Double)],
+               k: Int): Array[(Long, Long, Double, Long)] =
+    finish(candidates.treeAggregate(
+      mutable.LongMap.empty[Array[(Long, Double)]])(
+      seqOp = { (m, c) =>
+        m(c._1) = mergeTwo(m.getOrElse(c._1, Array.empty),
+          Array((c._2, c._3)), k)
+        m
+      },
+      combOp = { (m1, m2) =>
+        m2.foreach { case (qid, cand) =>
+          m1(qid) = mergeTwo(m1.getOrElse(qid, Array.empty), cand, k)
+        }
+        m1
+      },
+      depth = 2), k)
 }

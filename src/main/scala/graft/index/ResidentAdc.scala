@@ -57,7 +57,7 @@ final class ResidentAdc(spark: SparkSession, rdd: RDD[AdcShard],
   def probeBatch(qs: Array[(Long, Array[Float])], k: Int, rerank: Int,
                  treeMergeAt: Int = 64): Array[(Long, Long, Double, Long)] = {
     require(rerank >= k, s"rerank $rerank must be >= k $k")
-    ResidentServe.validate(k, dim, qs.iterator.map(_._2.length))
+    ResidentServe.validate(k, dim, qs.iterator.map(_._2))
     val stride = cb.stride
     val ip = metric == Metric.Ip
     // per-query LUTs prepared once per batch, client-side (the reference

@@ -36,7 +36,7 @@ final class ResidentBinary(spark: SparkSession, rdd: RDD[BinaryShard],
     * Hamming distance carried as double (≤ dim, exact). */
   def probeBatch(qs: Array[(Long, Array[Long])], k: Int,
                  treeMergeAt: Int = 64): Array[(Long, Long, Double, Long)] = {
-    ResidentServe.validate(k, words, qs.iterator.map(_._2.length))
+    ResidentServe.validateLens(k, words, qs.iterator.map(_._2.length))
     ResidentServe.probe(rdd, qs, qs.length, k, treeMergeAt) { (shard, queries) =>
       queries.iterator.flatMap { case (qid, qc) =>
         val top = new TopKBuffer(k)
@@ -67,8 +67,8 @@ final class ResidentBinary(spark: SparkSession, rdd: RDD[BinaryShard],
                        c: Int, treeMergeAt: Int = 64,
                        metric: String = graft.operators.Metric.L2): Array[(Long, Long, Double, Long)] = {
     require(c >= k, s"rerank budget c=$c must be >= k=$k")
-    ResidentServe.validate(k, words, qs.iterator.map(_._2.length))
-    ResidentServe.validate(k, dim, qs.iterator.map(_._3.length))
+    ResidentServe.validateLens(k, words, qs.iterator.map(_._2.length))
+    ResidentServe.validate(k, dim, qs.iterator.map(_._3))
     // tier 2's float kernel: L2 or negated inner product (the OOD track's
     // metric — text2image-style corpora rerank by ip, and the binary tier
     // is metric-blind so only this refine step changes)

@@ -132,7 +132,7 @@ final class ResidentIvfAdc(spark: SparkSession, rdd: RDD[IvfAdcShard],
                            rerank: Int,
                            treeMergeAt: Int): Array[(Long, Long, Double, Long)] = {
     require(rerank >= k, s"rerank $rerank must be >= k $k")
-    ResidentServe.validate(k, router.dim, qs.iterator.map(_._2.length))
+    ResidentServe.validate(k, router.dim, qs.iterator.map(_._2))
     val stride = cb.stride
     val dsub = cb.dsub
     val ip = metric == Metric.Ip

@@ -72,7 +72,7 @@ final class ResidentIvfSq8(spark: SparkSession, rdd: RDD[IvfSq8Shard],
                  treeMergeAt: Int = 64,
                  efRoute: Int = Int.MaxValue): Array[(Long, Long, Double, Long)] = {
     require(rerank >= k, s"rerank $rerank must be >= k $k")
-    ResidentServe.validate(k, router.dim, qs.iterator.map(_._2.length))
+    ResidentServe.validate(k, router.dim, qs.iterator.map(_._2))
     val rt = router
     val routed = Router.parallelMap(qs) { case (qid, qv) =>
       (qid, qv, encode(qv), rt.byNprobeGraph(qv, nprobe, efRoute))
@@ -94,7 +94,7 @@ final class ResidentIvfSq8(spark: SparkSession, rdd: RDD[IvfSq8Shard],
                      shardRoute: Option[Boolean] = None,
                      efRoute: Int = Int.MaxValue): Array[(Long, Long, Double, Long)] = {
     require(rerank >= k, s"rerank $rerank must be >= k $k")
-    ResidentServe.validate(k, router.dim, qs.iterator.map(_._2.length))
+    ResidentServe.validate(k, router.dim, qs.iterator.map(_._2))
     // graph routing drops the per-query routing term from O(C·d) to
     // O(efRoute·log C), so the shard-route bound scales by the work the
     // graph actually does per query rather than by C

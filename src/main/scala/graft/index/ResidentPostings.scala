@@ -92,21 +92,22 @@ final class ResidentPostings(spark: SparkSession, rdd: RDD[PostingShard]) {
     // Rejecting qv <= 0 at entry makes budgeted and exact candidate
     // domains agree by construction (tf weights are >= 1, so no real
     // caller is constrained).
-    ResidentServe.validate(k, -1, Iterator.empty)
+    ResidentServe.validateLens(k, -1, Iterator.empty)
     require(qs.forall(_._3.forall(_ > 0L)),
       "ResidentPostings serves strictly positive weights (tf domain): " +
         "negative query weights would invert the impact order of a " +
         "budgeted scan, and zero weights would make the budgeted and " +
         "exact candidate sets disagree (score-0 postings are cut)")
-    if (qs.isEmpty) return Array.empty
     val bud = budget
     val rr = rerank
-    ResidentServe.withBroadcast(rdd, qs) { bq =>
-      val local = rdd.flatMap { shard =>
+    // (score desc, id asc) merge in exact Long arithmetic: driver merge at
+    // serving shard counts, two-level tree past `treeMergeAt` (ProbeMerge)
+    ResidentServe.serve(rdd, qs, qs.length, k, treeMergeAt, -1L, None) {
+      (shard, batch) =>
         if (rr > 0) require(shard.fwd != null,
           "probeBatch(rerank > 0) needs the forward index: build the " +
             "resident shards with ResidentPostings.load(..., forward = true)")
-        bq.value.iterator.flatMap { case (qid, qdims, qvs) =>
+        batch.iterator.flatMap { case (qid, qdims, qvs) =>
           val acc = ResidentPostings.accumulate(shard, qdims, qvs, bud)
           // keep = top-`keep` docs per (query, shard) by (score desc, id
           // asc): k for the one-stage kernel (what the driver merge needs),
@@ -171,12 +172,7 @@ final class ResidentPostings(spark: SparkSession, rdd: RDD[PostingShard]) {
             sorted.iterator.take(k).map(i => (qid, bi(i), es(i)))
           }
         }
-      }
-      // (score desc, id asc) merge in exact Long arithmetic: driver merge at
-      // serving shard counts, two-level tree past `treeMergeAt` (ProbeMerge)
-      ProbeMerge.topKByScore(local, k, treeMergeAt,
-        estRows = qs.length.toLong * k * local.getNumPartitions)
-    }
+    }(Ordering.Long.reverse, ProbeMerge.treeTopKByScore(_, k))
   }
 
   /** [[probeBatch]] with DataFrame plumbing on both ends; `queries` is the

@@ -36,7 +36,7 @@ final class ResidentScan(spark: SparkSession, rdd: RDD[ScanShard],
   def probeBatch(qs: Array[(Long, Array[Float], Array[Int], Long)],
                  k: Int,
                  treeMergeAt: Int = 64): Array[(Long, Long, Double, Long)] = {
-    ResidentServe.validate(k, dim, qs.iterator.map(_._2.length))
+    ResidentServe.validate(k, dim, qs.iterator.map(_._2))
     val ip = ipMetric
     ResidentServe.probe(rdd, qs, qs.length, k, treeMergeAt) { (shard, queries) =>
       val n = shard.ids.length
@@ -70,7 +70,7 @@ final class ResidentScan(spark: SparkSession, rdd: RDD[ScanShard],
   def probeBatchRanges(qs: Array[(Long, Array[Float])], k: Int,
                        ranges: Array[(Long, Long)],
                        treeMergeAt: Int = 64): Array[(Long, Long, Double, Long)] = {
-    ResidentServe.validate(k, dim, qs.iterator.map(_._2.length))
+    ResidentServe.validate(k, dim, qs.iterator.map(_._2))
     val ip = ipMetric
     ResidentServe.probe(rdd, (qs, ranges), qs.length, k, treeMergeAt) {
       (shard, batch) =>

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
 final class ResidentTagRegistry private[index] (
     spark: SparkSession,
     rdd: org.apache.spark.rdd.RDD[(String, HnswIndex)],
-    val keys: Set[String], dim: Int) {
+    val keys: Set[String], dim: Int, shardsOf: Map[String, Array[Int]]) {
 
   /** Resident (key, part) graph count = the per-job task fan of a batch
     * that hits every key ([[TagSubindexes.loadResident]] pins one graph
@@ -73,12 +73,16 @@ final class ResidentTagRegistry private[index] (
     val flat = groups.toArray.flatMap { case (key, qs) =>
       qs.map { case (qid, qv) => (key, qid, qv) }
     }
-    ResidentServe.validate(k, dim, flat.iterator.map(_._3.length))
+    ResidentServe.validate(k, dim, flat.iterator.map(_._3))
     ProbeSlices.striped(flat, slices) { stripe =>
       val g = stripe.groupBy(_._1).map { case (key, rows) =>
         key -> rows.map(r => (r._2, r._3))
       }
-      ResidentServe.probe(rdd, g, stripe.length, k, treeMergeAt) {
+      // tasks launch only on the (key, part) graphs of the stripe's keys
+      val parts = g.keysIterator
+        .flatMap(shardsOf.getOrElse(_, Array.empty[Int])).toSeq.distinct.sorted
+      ResidentServe.probe(rdd, g, stripe.length, k, treeMergeAt,
+          parts = Some(parts)) {
         (shard, batch) =>
           val (key, idx) = shard
           batch.getOrElse(key, Array.empty[(Long, Array[Float])])
@@ -251,7 +255,8 @@ object TagSubindexes {
     val keys = tagKeys ++ pairKeys
     if (keys.isEmpty)
       return new ResidentTagRegistry(spark,
-        spark.sparkContext.emptyRDD[(String, HnswIndex)], Set.empty, -1)
+        spark.sparkContext.emptyRDD[(String, HnswIndex)], Set.empty, -1,
+        Map.empty)
     val keyCol = if (tagKeys.nonEmpty) "tag" else "pair"
     val rows = spark.read.parquet(path)
       .select(col(keyCol).cast("string").as("key"), col("part"), col("seq"),
@@ -291,8 +296,9 @@ object TagSubindexes {
         (key, idx)
       }
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    new ResidentTagRegistry(spark, rdd, keys,
-      ResidentServe.materialize(rdd)(g => Iterator(g._2.dim).filter(_ >= 0)))
+    val (dim, shardsOf) = ResidentServe.materializeKeyed(rdd)(_._1)(
+      g => Iterator(g._2.dim).filter(_ >= 0))
+    new ResidentTagRegistry(spark, rdd, keys, dim, shardsOf)
   }
 
   private[index] def builtPairs(spark: SparkSession, path: String): Set[(Int, Int)] = {

@@ -466,7 +466,7 @@ class IndexSpec extends AnyFunSuite with SparkSuite {
     val sizes = Map(0 -> 900L, 1 -> 50L, 2 -> 30L, 3 -> 20L)
     val routed = new HnswRouted(spark,
       spark.sparkContext.emptyRDD[(Int, HnswIndex)], centroids,
-      ipMetric = false, clusterSizes = sizes)
+      ipMetric = false, shardsOf = Map.empty, clusterSizes = sizes)
     // near the giant: its 90% mass clears the target in one probe
     val nBlob = routed.routeByMass(Array.fill(4)(0f), 0.4, Int.MaxValue).length
     // deep in the tail: 20 + 30 + 50 of 1000 never reach 40% — the walk
@@ -1097,10 +1097,17 @@ class IndexSpec extends AnyFunSuite with SparkSuite {
     // an otherwise valid batch plus one query a component short, or long
     val bads = Seq(good.head._2.take(d - 1), good.head._2 :+ 0.5f)
       .map(v => good :+ ((999L, v)))
-    def rejects(what: String)(probe: Array[(Long, Array[Float])] => Any): Unit =
+    // an otherwise valid batch plus one query with a NaN or infinite value
+    val nonFinite = Seq(Float.NaN, Float.PositiveInfinity, Float.NegativeInfinity)
+      .map(x => good :+ ((998L, good.head._2.updated(d / 2, x))))
+    def rejects(what: String)(probe: Array[(Long, Array[Float])] => Any): Unit = {
       for (qs <- bads)
         assert(intercept[IllegalArgumentException](probe(qs)).getMessage
           .contains("dimension"), what)
+      for (qs <- nonFinite)
+        assert(intercept[IllegalArgumentException](probe(qs)).getMessage
+          .contains("finite"), what)
+    }
     val scan = ResidentScan.load(TagFilter.withTags(emb), numPartitions = 2)
     try rejects("scan") { qs =>
       scan.probeBatch(qs.map { case (q, v) => (q, v, Array.empty[Int], 0L) }, 10)

@@ -2,8 +2,9 @@ package org.apache.spark
 
 import org.apache.spark.storage.BroadcastBlockId
 
-/** Test-side access to the one driver internal the tests read: the
-  * broadcast blocks the driver's block manager still holds. */
+/** Test-side access to the driver internals the tests read: the
+  * broadcast blocks the driver's block manager still holds, and the
+  * listener bus. */
 object GraftTestBridge {
 
   /** Driver broadcast blocks whose value is `value` itself. The driver
@@ -23,4 +24,7 @@ object GraftTestBridge {
       }
     }
   }
+
+  /** Wait until every listener has seen every event posted so far. */
+  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }
