@@ -127,6 +127,20 @@ object Bench {
       .getOrElse(sorted.maxBy(_._2)._1)
   }
 
+  /** Seconds `body` took, less the fixture builds that `fixtureSeconds`
+    * (build seconds by key) gained meanwhile — a fixture is reported on
+    * its own, not charged to whichever query built it first — or, when
+    * `body` throws, the exception as [[errText]]. */
+  def timed(fixtureSeconds: => Map[String, Double])(body: => Unit): Either[String, Double] = {
+    val before = fixtureSeconds.keySet
+    val t0 = System.nanoTime()
+    try {
+      body
+      val sec = (System.nanoTime() - t0) / 1e9
+      Right(sec - (fixtureSeconds -- before).values.sum)
+    } catch { case e: Throwable => Left(errText(e)) }
+  }
+
   // a row's stall-audit stats, as published when it took no sample
   private val noStats: ListMap[String, Any] = ListMap("spread" -> 0.0,
     "gc_worst_ms" -> 0L, "cpu_frac_worst" -> 0.0, "cpu_frac_med" -> 0.0)
@@ -134,6 +148,11 @@ object Bench {
   private def obj(kv: Iterable[(String, Any)]): String =
     kv.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
   private def str(s: String): String = "\"" + s + "\""
+  /** An exception's class and message, cut to 300 chars, as one line of
+    * JSON-safe text. */
+  private def errText(e: Throwable): String =
+    s"${e.getClass.getName}: ${String.valueOf(e.getMessage)}".take(300)
+      .replace("\\", "\\\\").replace("\"", "'").map(c => if (c < ' ') ' ' else c)
 
   /** One interleaved row: its batch, its effective query count (qps =
     * norm / median batch seconds), the `op`/`recall` records published
@@ -411,11 +430,14 @@ object Bench {
       // queries' caches don't accumulate into GC pressure that skews timings
       spark.sqlContext.clearCache()
     }
-    def timedRun(name: String)(body: => Unit): (String, Double) = {
-      val t0 = System.nanoTime()
-      try body catch { case _: Throwable => () }
-      name -> (System.nanoTime() - t0) / 1e9
-    }
+    // a query that throws is reported under queries_failed and left out of
+    // the per-query map and the total
+    val failed = LinkedHashMap.empty[String, String]
+    def timedRun(name: String)(body: => Unit): Option[(String, Double)] =
+      timed(SparkEntry.fixtureSeconds)(body) match {
+        case Right(sec) => Some(name -> sec)
+        case Left(err) => failed(name) = err; None
+      }
     // SPARK_GRAFT_QPS_ONLY=1 skips the per-query map — for scale-ratchet
     // runs on benchmark-shape data (embeddings + documents only) where the
     // full TPC-H star schema isn't present and the serving qps block is
@@ -446,18 +468,13 @@ object Bench {
     // The artifact's sweep block states whatever grid actually ran.
     val sweepCapPct = sys.env.get("SPARK_GRAFT_SWEEP_CAP_PCT")
       .map(_.toInt).getOrElse(100)
-    // untimed warmups: q1_agg pays the session's first-job costs (codegen,
-    // parquet footer reads); knn_maxsim_ann builds the session-memoized
-    // flat-ip graph fixture so the one-time build doesn't land on whichever
-    // maxsim gate the map happens to time first (index builds are untimed
-    // everywhere else in this file — the serving rows' contract)
+    // untimed warmup: q1_agg pays the session's first-job costs (codegen,
+    // parquet footer reads)
     if (!qpsOnly)
-      Seq("q1_agg", "knn_maxsim_ann").foreach { w =>
-        try run(w) catch { case _: Throwable => () }
-      }
+      try run("q1_agg") catch { case _: Throwable => () }
     val results =
       if (qpsOnly) Map.empty[String, Double]
-      else SparkEntry.queries.map { case (name, _) => timedRun(name)(run(name)) }
+      else SparkEntry.queries.flatMap { case (name, _) => timedRun(name)(run(name)) }
     // scale-ratchet runs also time a representative PIPELINE/batch slice
     // (documents-table-only queries, the same run() semantics as the
     // per-query map) so the dedup/text/mixture side's 10× scaling is in
@@ -485,7 +502,7 @@ object Bench {
           "dedup_spans_trim", "dedup_embed_nn", "text_quality",
           "text_lm_familiarity", "pipeline_quality_deciles",
           "pipeline_sequences", "pipeline_mixture_take", "text_redact_pii")
-          .map { name =>
+          .flatMap { name =>
             timedRun(name)(scaleAware.getOrElse(name, () => run(name)).apply())
           }.toMap
       }
@@ -1446,9 +1463,7 @@ object Bench {
         // a broken replay must not publish mean_recall 0.0 as if measured
         // (r11 defect): the artifact carries the error, the zeros read as
         // "failed", and the rest of the run's rows still land
-        val msg = (s"${e.getClass.getName}: ${String.valueOf(e.getMessage)}")
-          .replace("\\", "\\\\").replace("\"", "'").replace("\n", " ").take(300)
-        (0.0, 0.0, 0.0, Array.empty[(Long, Long)], msg)
+        (0.0, 0.0, 0.0, Array.empty[(Long, Long)], errText(e))
       }
       finally spark.sqlContext.clearCache())
     // the full object carries every checkpoint, the compact line their
@@ -1475,14 +1490,20 @@ object Bench {
       "tracks" -> str(tracksLabel), "ivf_families" -> str(ivfFamsLabel)))
     val qpsJson = obj(reg.json ++ Seq("nq" -> nq, "reps" -> reps,
       "interleaved" -> true, "env" -> env(_.toString)) ++ streamField(true))
+    val failedField: Seq[(String, Any)] =
+      if (failed.isEmpty) Nil
+      else Seq("queries_failed" -> obj(failed.map { case (k, v) => k -> str(v) }))
     val line = obj(Seq("metric" -> str("total"), "value" -> total,
-      "unit" -> str("sec"), "queries" -> obj(results),
+      "unit" -> str("sec"), "queries" -> obj(results)) ++ failedField ++ Seq(
+      "fixtures" -> obj(SparkEntry.fixtureSeconds),
       "batch_sec" -> obj(batchResults), "qps" -> qpsJson, "sf" -> str(sfDir)))
     // the whole object lands in a file the driver (or anyone) can read
     // intact, before anything is printed
     try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
       (line + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () }
+    catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(s"[bench] could not write $outFile: $e")
+    }
     println(line)
     // the per-round runner keeps only a ~2000-char stdout TAIL: the full
     // line above is ~10 KB, so the tail always cut it mid-object and every
@@ -1510,8 +1531,10 @@ object Bench {
         Seq("nq" -> nq, "env" -> env(r1)) ++ streamField(false))
     def compactLine(queriesFrag: String, elided: Int): String =
       obj(Seq("metric" -> str("total"), "value" -> r1(total),
-        "unit" -> str("sec"), "queries" -> s"{$queriesFrag}",
-        "queries_elided" -> elided, "sf" -> str(sfDir), "qps" -> compactQps,
+        "unit" -> str("sec"), "queries" -> s"{$queriesFrag}") ++
+        (if (failed.isEmpty) Nil
+         else Seq("queries_failed" -> failed.keys.map(str).mkString("[", ",", "]"))) ++
+        Seq("queries_elided" -> elided, "sf" -> str(sfDir), "qps" -> compactQps,
         "full" -> str(outFile)))
     val slowestFirst = results.toSeq.sortBy(-_._2)
       .map { case (k, v) =>

@@ -1,17 +1,36 @@
 package graft
 
-import graft.functions.vectors._
-import graft.operators._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** How the driver checks one [[Entry]]'s rows. */
+sealed trait Gate
+object Gate {
+  /** DuckDB SQL whose rows the entry's rows must hash-match. */
+  final case class Oracle(sql: String) extends Gate
+  /** An exact path hash-checked with another entry's oracle SQL. */
+  final case class SameOracleAs(entry: String) extends Gate
+  /** An approximate path: the driver records its rows only, and the named
+    * exact twin runs the same operator at its exact-degenerate point under
+    * an oracle. */
+  final case class GradedBy(exactTwin: String) extends Gate
+}
+
+/** One driver-contract query: its name, its plan over a data dir, and the
+  * gate its rows answer to. */
+final case class Entry(name: String, run: (SparkSession, String) => DataFrame,
+                       gate: Gate)
+
+/** Driver contract — see SURVEY.md §7.
   *
-  * Every entry in [[queries]] must return columns whose NAMES match the
-  * corresponding [[oracleSql]] aliases exactly (the driver sorts columns by
-  * name before hashing). kNN-style queries return integer ids/ranks only —
-  * float distances never leave the plan, so float rounding can't break the
-  * hash compare.
+  * [[table]] holds every entry; [[queries]] and [[oracleSql]] are its
+  * projections. Every query must return columns whose NAMES match its
+  * oracle's aliases exactly (the driver sorts columns by name before
+  * hashing). kNN-style queries return integer ids/ranks only — float
+  * distances never leave the plan, so float rounding can't break the hash
+  * compare. The entries live in per-track files under `entries/`; the
+  * helpers they share live here.
   */
 object SparkEntry {
 
@@ -21,19 +40,51 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("filtered_knn")(spark, "/root/testdata/sf0.001")
 
+  /** Every entry, one per name (EntryTableSpec checks the names are
+    * unique: a Seq keeps a duplicate, where a Map literal drops it). */
+  lazy val table: Seq[Entry] =
+    entries.TrainingTrack.table ++ entries.OodTrack.table ++
+      entries.FilterTrack.table ++ entries.SparseTrack.table ++
+      entries.StreamingTrack.table
+
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    table.map(e => e.name -> e.run).toMap
+
+  lazy val oracleSql: Map[String, String] =
+    table.flatMap(e => oracleOf(e.gate).map(e.name -> _)).toMap
+
+  private lazy val byName: Map[String, Entry] = table.map(e => e.name -> e).toMap
+
+  /** The SQL a gate hashes against: its own, or the one it shares. */
+  private def oracleOf(g: Gate, seen: Set[String] = Set.empty): Option[String] = g match {
+    case Gate.Oracle(sql) => Some(sql)
+    case Gate.SameOracleAs(other) =>
+      require(!seen(other), s"SameOracleAs cycle through $other")
+      oracleOf(byName(other).gate, seen + other)
+    case Gate.GradedBy(_) => None
+  }
+
   // -- query-side helpers ---------------------------------------------------
 
-  private def embQueries(spark: SparkSession, dir: String, nq: Int): DataFrame =
+  private[graft] def embQueries(spark: SparkSession, dir: String, nq: Int): DataFrame =
     Tables.embeddings(spark, dir)
       .where(col("vec_id") < nq)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"), col("label").as("qlabel"))
 
-  private def embBase(spark: SparkSession, dir: String): DataFrame =
+  private[graft] def embBase(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir)
       .select(col("vec_id").as("id"), col("embedding").as("vec"), col("label"))
 
-  private def knnResult(df: DataFrame): DataFrame =
+  private[graft] def knnResult(df: DataFrame): DataFrame =
     df.select(col("qid"), col("id").as("neighbor_id"), col("rank"))
+
+  /** A query over the documents table alone. */
+  private[graft] def overDocs(f: DataFrame => DataFrame): (SparkSession, String) => DataFrame =
+    (s, dir) => f(Tables.documents(s, dir))
+
+  /** A temp path for a gate's persisted artifact. */
+  private[graft] def tempPath(prefix: String, leaf: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).resolve(leaf).toString
 
   /** Session-lifetime memo for expensive DETERMINISTIC builds (lossless
     * codebooks, OPQ rotations, residual IVFPQ indexes) shared by several
@@ -41,101 +92,38 @@ object SparkEntry {
     * build parameter, so a hit is the identical computation; each gate
     * stays independently runnable — the cache only removes repeat trains
     * of the same artifact within one session (r5 item 8: bench wall
-    * clock). */
+    * clock). Each build's seconds are recorded under its key, so Bench can
+    * report fixture time apart from the query that happened to build it. */
   private val buildMemo =
     new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+  private val buildSecs =
+    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Double]()
   // cached values are SparkSession-bound (DataFrames, resident RDD indexes,
   // broadcast-holding objects): the session's identity joins every key so a
   // second session in the same JVM (suites, sequential runMains) never
   // receives a handle bound to a stopped session — stale entries die with
   // their key
-  private def memo[T <: AnyRef](s: SparkSession, key: String)(f: => T): T =
+  private[graft] def memo[T <: AnyRef](s: SparkSession, key: String)(f: => T): T =
     buildMemo.computeIfAbsent(
       Integer.toHexString(System.identityHashCode(s)) + ":" + key,
-      _ => f).asInstanceOf[T]
+      _ => {
+        val t0 = System.nanoTime()
+        val built = f
+        buildSecs.put(key, (System.nanoTime() - t0) / 1e9)
+        built
+      }).asInstanceOf[T]
 
-  private def pqLossless(s: SparkSession, dir: String, m: Int): graft.index.Pq.Codebook =
-    memo(s, s"pqLossless:$dir:$m") {
-      graft.index.Pq.trainLossless(embBase(s, dir), m)
-    }
+  /** Seconds of every memoized build so far, by memo key (a key built by
+    * several sessions keeps its latest build). */
+  def fixtureSeconds: Map[String, Double] =
+    buildSecs.asScala.map { case (k, v) => k -> v.doubleValue }.toMap
 
-  private def opqLossless(s: SparkSession, dir: String,
-                          m: Int): (graft.index.Opq.Rotation, graft.index.Pq.Codebook) =
-    memo(s, s"opqLossless:$dir:$m") {
-      graft.index.Opq.trainRotatedLossless(embBase(s, dir), m)
-    }
-
-  private def ivfPqResidualLossless(s: SparkSession, dir: String, c: Int,
-                                    iters: Int, m: Int): graft.index.IvfPq.IvfPqIndex =
-    memo(s, s"ivfPqResLossless:$dir:$c:$iters:$m") {
-      graft.index.IvfPq.buildResidual(embBase(s, dir), c = c, iters = iters,
-        m = m, ksub = 0, lossless = true)
-    }
-
-  private def ivf8(s: SparkSession, dir: String): graft.index.IvfIndex =
-    memo(s, s"ivf8:$dir") {
-      graft.index.IvfIndex.build(embBase(s, dir), c = 8, iters = 3)
-    }
-
-  /** SQ8 per-dimension train (mins, spans) — shared by the SQ8 recall gates
-    * and the IVF×SQ8 rows; one two-pass agg per dir instead of one per
-    * gate. */
-  private def sq8Train(s: SparkSession, dir: String): (Array[Double], Array[Double]) =
-    memo(s, s"sq8Train:$dir") {
-      graft.index.Sq8.train(embBase(s, dir))
-    }
-
-  /** Exact kNN ground truth for the recall_* gates, collected ONCE per
-    * (dir, metric) into a local relation — ~10 gates grade against the
-    * identical brute-force ranking, so each re-run of the join was pure
-    * repeat work. Rows (qid, id, rank) are all Recall.perQuery reads. */
-  private def exactKnnTruth(s: SparkSession, dir: String,
-                            metric: String): DataFrame =
-    memo(s, s"knnTruth:$dir:$metric") {
-      import s.implicits._
-      s.createDataFrame(
-        Knn.knnJoin(embQueries(s, dir, 10), embBase(s, dir), 10, metric)
-          .select(col("qid").cast("long"), col("id").cast("long"),
-            col("rank").cast("long"))
-          .as[(Long, Long, Long)].collect().toSeq)
-        .toDF("qid", "id", "rank")
-    }
-
-  /** One shared persisted HNSW artifact per dir (builds are deterministic,
-    * so every gate probing `numPartitions = 8, l2` sees the identical
-    * graph the build-per-gate form produced). */
-  private def hnswSavedPath(s: SparkSession, dir: String): String =
-    memo(s, s"hnswSaved:$dir") {
-      val p = java.nio.file.Files.createTempDirectory("graft-hnsw-shared")
-        .resolve("idx").toString
-      graft.index.HnswKnn.buildAndSave(embBase(s, dir), p, numPartitions = 8)
-      p
-    }
-
-  /** Shared resident ip graph over the flat embedding ids (the composite
-    * bag encoding doc_id·4 + pos IS the raw id), reused by the three
-    * MaxSim gates; session-lifetime, gate corpora are tiny. */
-  private def maxsimIpResident(s: SparkSession, dir: String): graft.index.HnswResident =
-    memo(s, s"maxsimIp:$dir") {
-      graft.index.HnswKnn.buildResident(
-        embBase(s, dir).select(col("id"), col("vec")),
-        numPartitions = 4, metric = "ip")
-    }
-
-  /** One shared persisted routed-graph artifact per dir (same argument). */
-  private def routedSavedPath(s: SparkSession, dir: String): String =
-    memo(s, s"routedSaved:$dir") {
-      val p = java.nio.file.Files.createTempDirectory("graft-routed-shared")
-        .resolve("idx").toString
-      graft.index.HnswRouted.buildAndSave(embBase(s, dir), p, c = 8,
-        kmIters = 3)
-      p
-    }
+  // -- oracle-side helpers --------------------------------------------------
 
   /** Shared DuckDB oracle scaffolding for exact kNN: squared-L2 / dot in
     * DOUBLE via zipped unnest (bit-compatible with our codegen kernels). */
-  private def knnOracle(nq: Int, k: Int, scoreSql: String, order: String,
-                        filterSql: String = "TRUE"): String =
+  private[graft] def knnOracle(nq: Int, k: Int, scoreSql: String, order: String,
+                               filterSql: String = "TRUE"): String =
     s"""WITH q AS (SELECT vec_id AS qid, embedding AS qv, label AS qlabel
        |           FROM embeddings WHERE vec_id < $nq),
        |pairs AS (SELECT q.qid, e.vec_id AS nid,
@@ -149,2210 +137,19 @@ object SparkEntry {
        |SELECT qid, neighbor_id, rank FROM ranked WHERE rank <= $k
        |""".stripMargin
 
-  private val l2Sql = "sum((CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE)))"
-  private val dotSql = "sum(CAST(x AS DOUBLE) * CAST(y AS DOUBLE))"
-  // Hamming over sign bits: count of coordinates whose signs disagree —
-  // pure integer on both engines, no float accumulation at all
-  private val hammingSql = "sum(CASE WHEN (x > 0) <> (y > 0) THEN 1 ELSE 0 END)"
-  // MIH candidate rule: the pair shares at least one of the 4 disjoint
-  // 16-bit sign substrings (the same boolean-slice equality the Spark side
-  // joins on) — deterministic, so the approximate path gets a FULL hash gate
-  private val mihChunksSql = (0 until 4).map { c =>
-    val lo = c * 16 + 1
-    val hi = c * 16 + 16
-    s"list_transform(e.embedding[$lo:$hi], v -> v > 0) = " +
-      s"list_transform(q.qv[$lo:$hi], v -> v > 0)"
-  }.mkString("(", " OR ", ")")
+  private[graft] val l2Sql = "sum((CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE)))"
 
-  // -- the operator surface -------------------------------------------------
+  /** Integer L2 over floor(x*10) components, exact integer sums — the
+    * oracle side of [[u8Expr]]. */
+  private[graft] val u8L2Sql =
+    """sum((CAST(floor(CAST(x AS DOUBLE) * 10) AS BIGINT) - CAST(floor(CAST(y AS DOUBLE) * 10) AS BIGINT))
+      |  * (CAST(floor(CAST(x AS DOUBLE) * 10) AS BIGINT) - CAST(floor(CAST(y AS DOUBLE) * 10) AS BIGINT)))""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // A1-style relational aggregation smoke (TPC-H Q1 shape).
-    "q1_agg" -> ((s, dir) => {
-      Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          round(sum(col("l_quantity")), 2).as("sum_qty"),
-          round(sum(col("l_extendedprice")), 2).as("sum_base_price"),
-          round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2).as("sum_disc_price"),
-          count(lit(1)).as("count_order"))
-    }),
-
-    // J1+J5: exact brute-force L2 top-k join (ood/filter exact path).
-    "knn_l2" -> ((s, dir) =>
-      knnResult(Knn.knnJoin(embQueries(s, dir, 10), embBase(s, dir), 10, Metric.L2))),
-    // exact range search (faiss range_search shape): data-dependent answer
-    // size, filter evaluated on the scored join, no top-k state. The
-    // boundary compare is safe cross-engine because both engines compute
-    // the identical double sum (the rank gates already prove bit-equality).
-    "knn_range" -> ((s, dir) =>
-      knnResult(Knn.rangeJoin(embQueries(s, dir, 10), embBase(s, dir),
-        radius = 1.5, Metric.L2))),
-    // binary sign-hash track (faiss IndexBinaryFlat semantics over sign
-    // codes): pack once, XOR+popcount per pair — pure integer, oracle-exact
-    "knn_hamming" -> ((s, dir) =>
-      knnResult(Knn.knnHamming(embQueries(s, dir, 10), embBase(s, dir), 10))),
-    // multi-index hashing (Norouzi CVPR'12): candidates = equi-join on any
-    // of the 4 disjoint 16-bit substrings (pigeonhole-complete for Hamming
-    // radius ≤ 3), exact popcount re-rank. Deterministic candidate rule, so
-    // the oracle replicates it and the gate is a full hash gate.
-    "knn_hamming_mih" -> ((s, dir) =>
-      knnResult(Knn.knnHammingMih(embQueries(s, dir, 10), embBase(s, dir), 10))),
-    // two-tier binary→float retrieval: Hamming top-50 candidates, exact L2
-    // re-rank — the deterministic selection rule makes the FULL composition
-    // a hash gate (oracle replicates both tiers)
-    "knn_hamming_rerank" -> ((s, dir) =>
-      knnResult(Knn.knnHammingRerank(embQueries(s, dir, 10), embBase(s, dir),
-        k = 10, c = 50))),
-    // exact Hamming range search through the MIH bucket join (complete by
-    // pigeonhole for radius < #chunks). Queries are sign-perturbed copies
-    // (3 flips spanning 3 chunks) so the radius set is non-trivial; the
-    // ORACLE is the plain all-pairs range answer with NO candidate rule —
-    // green means the bucket join provably missed nothing.
-    "knn_hamming_range" -> ((s, dir) => {
-      val q = Tables.embeddings(s, dir).where(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"),
-          transform(col("embedding"), (v, i) =>
-            when(i === 0 || i === 21 || i === 43, -v).otherwise(v)).as("qvec"))
-      knnResult(Knn.hammingRange(q, embBase(s, dir), radius = 3))
-    }),
-    // the binary tier's resident serving form — same rows as knn_hamming
-    "knn_hamming_served" -> ((s, dir) => {
-      val served = graft.index.ResidentBinary.load(embBase(s, dir),
-        numPartitions = 4)
-      try knnResult(served.probeLocal(embQueries(s, dir, 10), 10))
-      finally served.unload()
-    }),
-    // binary kind through the unified registry: build → save → load →
-    // probe with the rerank budget covering the corpus = exact float kNN
-    "ann_binary_persisted_exact" -> ((s, dir) => {
-      val b = embBase(s, dir)
-      val n = b.count().toInt // rerank = |base| → every row re-ranks, exact
-      val idx = graft.index.VectorIndex.binary(b, rerank = n)
-      val path = java.nio.file.Files.createTempDirectory("graft-bin")
-        .resolve("idx").toString
-      idx.save(path)
-      knnResult(graft.index.VectorIndex.load(s, path, rerank = n)
-        .probe(embQueries(s, dir, 10), 10))
-    }),
-    // binary IVF (faiss IndexBinaryIVF shape): Hamming-majority centroids
-    // route queries; at nprobe = C every cluster scans → exact brute
-    // Hamming, whatever the clustering did (knn_hamming's oracle)
-    "ann_hamming_ivf_exact" -> ((s, dir) => {
-      val model = graft.index.BinaryIvf.build(embBase(s, dir), c = 8, iters = 3)
-      knnResult(graft.index.BinaryIvf.probe(model, embQueries(s, dir, 10),
-        10, nprobe = 8))
-    }),
-    // the two-tier resident form at its degenerate point: the per-shard
-    // rerank budget covers every row → exact float kNN (knn_l2's oracle)
-    "knn_hamming_rerank_served_exact" -> ((s, dir) => {
-      val served = graft.index.ResidentBinary.load(embBase(s, dir),
-        numPartitions = 4, pinFloats = true)
-      try knnResult(served.probeLocalRerank(embQueries(s, dir, 10), 10,
-        c = Int.MaxValue))
-      finally served.unload()
-    }),
-    // late-interaction (ColBERT maxsim) retrieval over synthetic bags:
-    // 4-vector docs, 2-vector queries (two query vectors keep the final
-    // float sum order-independent → hash-safe cross-engine).
-    "knn_maxsim" -> ((s, dir) => {
-      val b = MultiVec.bagged(embBase(s, dir), bag = 4, "doc_id")
-      val q = MultiVec.bagged(
-        embBase(s, dir).where(col("id") < 8), bag = 2, "qid")
-        .select(col("qid"), col("pos"), col("vec").as("qvec"))
-      MultiVec.maxSimJoin(q, b, k = 10)
-        .select(col("qid"), col("doc_id"), col("rank"))
-    }),
-    // the PLAID-style serving path at its degenerate point: candidate
-    // generation through the ip graph with c = every vector + exhaustive
-    // beam makes every doc a candidate, so the ANN composition reproduces
-    // the exact maxsim ranking — same oracle as knn_maxsim.
-    "knn_maxsim_ann_exact" -> ((s, dir) => {
-      val b = MultiVec.bagged(embBase(s, dir), bag = 4, "doc_id")
-      val q = MultiVec.bagged(
-        embBase(s, dir).where(col("id") < 8), bag = 2, "qid")
-        .select(col("qid"), col("pos"), col("vec").as("qvec"))
-      val n = embBase(s, dir).count().toInt
-      MultiVec.maxSimAnn(q, b, k = 10, c = n, efSearch = 1 << 20,
-        prebuilt = Some(maxsimIpResident(s, dir)), bagDims = Some((2, 4)))
-        .select(col("qid"), col("doc_id"), col("rank"))
-    }),
-    // the hits-only SERVING reduce (MaxSimServe) at its degenerate point,
-    // routed through the DISTRIBUTED regime (treeAt = 1): with c = every
-    // vector and an exhaustive beam each query vector's hit set covers the
-    // whole corpus, so the two-stage RDD reduce (global top-c per vector →
-    // per-(query,doc) max → qpos-ordered sum → bounded top-k) reproduces
-    // exact maxsim — the distributed serving dataflow itself gets the full
-    // DuckDB hash gate, not just the regime-parity spec.
-    "knn_maxsim_served_exact" -> ((s, dir) => {
-      import s.implicits._
-      val flat = embBase(s, dir).select(col("id"), col("vec"))
-      val n = flat.count().toInt
-      val resident = maxsimIpResident(s, dir) // session-shared, not unloaded
-      val qs = flat.where(col("id") < 8)
-        .select(col("id").cast("long"), col("vec"))
-        .as[(Long, Array[Float])].collect()
-      val rows = graft.index.MaxSimServe.probeBatch(resident, qs,
-        qmax = 2, bmax = 4, k = 10, c = n, efSearch = 1 << 20, treeAt = 1)
-      s.createDataFrame(rows.toSeq).toDF("qid", "doc_id", "dist", "rank")
-        .select(col("qid"), col("doc_id"), col("rank"))
-    }),
-    // the same composition at a real operating point (c = 32 vector hits
-    // per query vector, beam 64) — approximate → rows-only driver check;
-    // recall vs exact maxsim is KnnSpec-gated ≥ 0.9.
-    "knn_maxsim_ann" -> ((s, dir) => {
-      val b = MultiVec.bagged(embBase(s, dir), bag = 4, "doc_id")
-      val q = MultiVec.bagged(
-        embBase(s, dir).where(col("id") < 8), bag = 2, "qid")
-        .select(col("qid"), col("pos"), col("vec").as("qvec"))
-      MultiVec.maxSimAnn(q, b, k = 10, c = 32, efSearch = 64,
-        prebuilt = Some(maxsimIpResident(s, dir)), bagDims = Some((2, 4)))
-        .select(col("qid"), col("doc_id"), col("rank"))
-    }),
-
-    // J6-style dense MIPS top-k.
-    "knn_ip" -> ((s, dir) =>
-      knnResult(Knn.knnJoin(embQueries(s, dir, 10), embBase(s, dir), 10, Metric.Ip))),
-
-    // F6: cosine top-k (normalize-then-ip semantics of the reference's float
-    // path; we compute cosine directly — bindings.cpp:1114-1121).
-    "knn_cos" -> ((s, dir) =>
-      knnResult(Knn.knnJoin(embQueries(s, dir, 10), embBase(s, dir), 10, Metric.Cosine))),
-
-    // F1: uint8-style integer L2 — vectors quantized to ARRAY<SHORT>, pure
-    // integer distance accumulation (long), zero float rounding anywhere.
-    "knn_l2_u8" -> ((s, dir) => {
-      val q = embQueries(s, dir, 10).withColumn("qvec8",
-        expr("transform(qvec, x -> CAST(floor(CAST(x AS DOUBLE) * 10) AS SHORT))"))
-      val b = embBase(s, dir).withColumn("vec8",
-        expr("transform(vec, x -> CAST(floor(CAST(x AS DOUBLE) * 10) AS SHORT))"))
-      val scored = b.crossJoin(broadcast(q))
-        .withColumn("dist", vecL2SqInt(col("qvec8"), col("vec8")).cast("double"))
-      knnResult(TopK.aggTopK(scored, "qid", "id", "dist", 10))
-    }),
-
-    // S6-u8/F1 end-to-end: embeddings quantized to uint8, exported as the
-    // reference's .u8bin layout (yfcc-10M's native dtype), re-ingested by
-    // the range-split binary reader, then pure-integer L2 kNN — proves the
-    // reference's flagship dataset format round-trips without conversion.
-    // S5/S6 float path: embeddings exported as .fbin (the reference's
-    // float32 dense layout), re-ingested by the range-split reader, exact
-    // L2 kNN — float32 round-trips bit-exactly, so the knn_l2 oracle gates
-    // the format end-to-end.
-    "knn_l2_fbin" -> ((s, dir) => {
-      val path = java.nio.file.Files.createTempDirectory("graft-f32")
-        .resolve("base.fbin").toString
-      graft.sources.BinaryFormats.writeDenseF32(embBase(s, dir), "id", "vec", path)
-      val base = graft.sources.BinaryFormats.readDenseF32(s, path, numPartitions = 8)
-      knnResult(Knn.knnJoin(embQueries(s, dir, 10), base, 10, Metric.L2))
-    }),
-    "knn_l2_u8bin" -> ((s, dir) => {
-      val u8 = "CAST(least(greatest(floor(CAST(x AS DOUBLE) * 10) + 128, 0), 255) AS SHORT)"
-      val b8 = embBase(s, dir)
-        .withColumn("vec8", expr(s"transform(vec, x -> $u8)"))
-        .select("id", "vec8")
-      val path = java.nio.file.Files.createTempDirectory("graft-u8")
-        .resolve("base.u8bin").toString
-      graft.sources.BinaryFormats.writeDenseU8(b8, "id", "vec8", path)
-      val base = graft.sources.BinaryFormats.readDenseU8(s, path, numPartitions = 8)
-      val q = embQueries(s, dir, 10)
-        .withColumn("qvec8", expr(s"transform(qvec, x -> $u8)"))
-      val scored = base.crossJoin(broadcast(q))
-        .withColumn("dist", vecL2SqInt(col("qvec8"), col("vec")).cast("double"))
-      knnResult(TopK.aggTopK(scored, "qid", "id", "dist", 10))
-    }),
-
-    // P1+J1: flagship filtered kNN (filter track, label = conjunctive tag).
-    "filtered_knn" -> ((s, dir) =>
-      knnResult(Knn.filteredKnn(embQueries(s, dir, 20), embBase(s, dir), 10, Metric.L2))),
-
-    // F5: ‖x‖²−2x·q monotone-L2 rewrite — must return exactly knn_l2's ids.
-    "knn_norm_trick" -> ((s, dir) => {
-      val q = embQueries(s, dir, 10)
-      val b = embBase(s, dir).withColumn("norm2", vecNorm2(col("vec")))
-      val scored = b.crossJoin(broadcast(q))
-        .withColumn("dist", col("norm2") - lit(2.0) * vecDot(col("vec"), col("qvec")))
-      knnResult(TopK.aggTopK(scored, "qid", "id", "dist", 10))
-    }),
-
-    // -- text-analysis pipeline (training-data ops) --------------------------
-    "text_termfreq" -> ((s, dir) => Text.termFreq(Tables.documents(s, dir))),
-    "text_stats" -> ((s, dir) => Text.tokenStats(Tables.documents(s, dir))),
-    "text_quality" -> ((s, dir) => Text.qualityScore(Tables.documents(s, dir))
-      .select("doc_id", "n_tokens", "stop_bp", "uniq_bp", "quality_flag")),
-    "text_langid" -> ((s, dir) => Text.langId(Tables.documents(s, dir))),
-    // repetitiousness filter: share of a doc's bigram occurrences taken by
-    // its single most repeated bigram, in basis points.
-    "text_repetition" -> ((s, dir) =>
-      Text.repetition(Tables.documents(s, dir), n = 2)),
-    "text_fingerprint" -> ((s, dir) => Text.fingerprint(Tables.documents(s, dir))),
-    // corpus-trained bigram-LM familiarity (the CCNet-style quality signal,
-    // count-mean surrogate → ratio-of-integers, oracle-exact)
-    "text_lm_familiarity" -> ((s, dir) =>
-      Text.lmFamiliarity(Tables.documents(s, dir))),
-    // whole-corpus budgeting stats (exact; the HLL scale path is
-    // spec-bounded against this answer)
-    "text_corpus_stats" -> ((s, dir) =>
-      Text.corpusStats(Tables.documents(s, dir))),
-    // PII scrub pass over the corpus with deterministic PII injected from
-    // each row's own doc_id (the synthetic text carries none, so the gate
-    // would otherwise only cover the no-op path): one email, one IPv4, one
-    // phone per doc, then the redaction kernels + audit counts — hash gate
-    // covers the cleaned bytes AND the counts, cross-engine.
-    "text_redact_pii" -> ((s, dir) => {
-      val injected = Tables.documents(s, dir).select(col("doc_id"),
-        concat(col("text"),
-          lit(" contact user"), col("doc_id").cast("string"),
-          lit("@example.com from 10."),
-          (col("doc_id") % 256).cast("string"), lit(".0.1 call 555-"),
-          lpad((col("doc_id") % 1000).cast("string"), 3, "0"), lit("-"),
-          lpad((col("doc_id") % 10000).cast("string"), 4, "0")).as("text"))
-      Text.redactPii(injected)
-    }),
-    // quality deciles over the LM-familiarity order: exact global ranking
-    // via the distributed two-pass prefix sum (NO single-task window), then
-    // engine-portable integer N-tile — the curriculum/mixture selection
-    // pass ("train on the top deciles first").
-    "pipeline_quality_deciles" -> ((s, dir) => {
-      val fam = Text.lmFamiliarity(Tables.documents(s, dir))
-        .select(col("doc_id"), col("centi_fam"))
-      Pipeline.ntileExact(fam, Seq(col("centi_fam").desc, col("doc_id")), 10)
-        .select(col("doc_id"), col("centi_fam"), col("grank"),
-          col("bucket").as("decile"))
-    }),
-    // exact per-stratum sampling: the 30 docs of every language with the
-    // smallest salted-md5 keys, via the bounded-heap top-k aggregator —
-    // deterministic eval-set construction with no per-stratum sort.
-    "pipeline_stratified" -> ((s, dir) =>
-      Pipeline.stratifiedTake(Tables.documents(s, dir), "lang", "doc_id", 30)
-        .select(col("doc_id").cast("long"), col("lang"),
-          col("samp_rank").cast("long"))),
-    // materialized packed sequences: per shard, texts concatenated in
-    // doc_id order (hash gate covers the sequence bytes via md5)
-    "pipeline_sequences" -> ((s, dir) =>
-      Pipeline.buildSequences(Tables.documents(s, dir), budget = 2000L)),
-    // temperature-balanced (α=0.5) mixture allocation over sources:
-    // sqrt-smoothed weights + integer largest-remainder apportionment of a
-    // 100k-doc budget — Σ alloc = budget exactly
-    "pipeline_mixture_alloc" -> ((s, dir) =>
-      Pipeline.temperatureAllocate(Tables.documents(s, dir), "source",
-        col("n_chars"), budget = 100000L)),
-    // the materialized mixture: α-smoothed per-source budgets (200 docs
-    // total here, so allocations are non-trivial at this SF) + exact
-    // deterministic per-source selection
-    "pipeline_mixture_take" -> ((s, dir) =>
-      Pipeline.materializeMixture(Tables.documents(s, dir), "source",
-        "doc_id", col("n_chars"), budget = 200L)
-        .select(col("source"), col("doc_id").cast("long"),
-          col("samp_rank").cast("long"))),
-    "text_tokens_bpe" -> ((s, dir) => Text.bpeishCounts(Tables.documents(s, dir))),
-
-    // -- dedup family (training-data pipeline ops) ---------------------------
-    "dedup_exact" -> ((s, dir) => Dedup.exactDedup(Tables.documents(s, dir))),
-    "dedup_jaccard" -> ((s, dir) =>
-      Dedup.jaccardPairs(Tables.documents(s, dir), n = 3, minBp = 5000)),
-    // the 100 TB form of the all-pairs join: shingles in more than maxDf
-    // docs are dropped BEFORE the self-join (a d-doc shingle contributes d²
-    // join rows; stopword-frequency n-grams carry no dedup signal). The
-    // oracle replicates the df cap exactly, so this stays hash-checked.
-    "dedup_jaccard_capped" -> ((s, dir) =>
-      Dedup.jaccardPairs(Tables.documents(s, dir), n = 3, minBp = 5000,
-        maxDf = 20)),
-    "dedup_minhash_lsh" -> ((s, dir) =>
-      Dedup.minhashLsh(Tables.documents(s, dir), n = 3, numSeeds = 16,
-        rowsPerBand = 4, minBp = 5000)),
-    // benchmark decontamination: every 20th doc plays the eval set, the
-    // rest are the training corpus; flag corpus docs sharing any 3-gram
-    // with the eval side (broadcast probe — the corpus never self-joins).
-    "dedup_decontam" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Dedup.decontaminate(
-        docs.where(col("doc_id") % 20 =!= 0),
-        docs.where(col("doc_id") % 20 === 0), n = 3)
-    }),
-    // ExactSubstr-style repeated-span signal: per-doc budget of length-5
-    // token windows whose text recurs in another document (position
-    // semantics, min≠max per-gram cross-doc flag — no self-join)
-    "dedup_spans" -> ((s, dir) =>
-      Dedup.repeatedSpans(Tables.documents(s, dir), n = 5)),
-    // the trimming ACTION on those spans: drop covered tokens, re-join
-    // survivors in order — cleaned text + kept-token accounting per doc
-    "dedup_spans_trim" -> ((s, dir) =>
-      Dedup.trimSharedSpans(Tables.documents(s, dir), n = 5)),
-    "dedup_simhash" -> ((s, dir) => Dedup.simhash(Tables.documents(s, dir))),
-    "dedup_simhash_pairs" -> ((s, dir) =>
-      Dedup.simhashPairs(Tables.documents(s, dir), maxHamming = 2)),
-    // connected components over the MinHash-LSH near-dup pairs → canonical
-    // cluster per doc (the dedup pipeline's final step); oracle = the same
-    // pair construction + a recursive reachability CTE.
-    "dedup_clusters" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Dedup.dupClusters(docs,
-        Dedup.minhashLsh(docs, n = 3, numSeeds = 16, rowsPerBand = 4, minBp = 5000))
-    }),
-    // dedup resolution: keep the longest member of each near-dup cluster
-    "dedup_canonical" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Dedup.canonical(docs, Dedup.dupClusters(docs,
-        Dedup.minhashLsh(docs, n = 3, numSeeds = 16, rowsPerBand = 4, minBp = 5000)))
-    }),
-    // LSH-bucketed (the 100 TB path): integer hyperplane signatures →
-    // 4×8-bit band candidates → exact cosine re-rank. The oracle replicates
-    // the identical banding in SQL (integer signs are engine-exact), so this
-    // stays hash-checked despite being an approximate-NN construction.
-    "dedup_embed_nn" -> ((s, dir) =>
-      knnResult(Dedup.embeddingLshNearestNeighbor(Tables.embeddings(s, dir),
-        dim = 64, k = 1))),
-
-    // -- dataset assembly (training-data pipeline tail) ----------------------
-    "pipeline_split" -> ((s, dir) =>
-      Pipeline.deterministicSplit(Tables.documents(s, dir), "doc_id",
-        trainPct = 80, valPct = 10).select("doc_id", "bucket", "split")),
-    "pipeline_shards" -> ((s, dir) =>
-      Pipeline.packShards(Tables.documents(s, dir), budget = 2000)),
-    // mixture sampling: per-source keep rates derived from the source's
-    // numeric suffix (2000 + 500·(n mod 9) bp) so the oracle can compute
-    // the identical weight table in SQL; keep is a pure function of
-    // (doc_id, source) — deterministic across engines and reruns.
-    "pipeline_sample" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val weights = docs.select("source").distinct().collect()
-        .map(_.getString(0))
-        .map(src => src -> (2000L + 500L * (src.stripPrefix("src").toLong % 9)))
-        .toMap
-      Pipeline.sampleBySource(docs, "doc_id", "source", weights)
-        .select("doc_id", "source", "sample_bucket", "weight_bp", "keep")
-    }),
-
-    // the full cleaning funnel as one plan: quality × exact-dedup ×
-    // decontamination × mixture sampling, per-doc stage flags + final kept.
-    "pipeline_funnel" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val weights = docs.select("source").distinct().collect()
-        .map(_.getString(0))
-        .map(src => src -> (2000L + 500L * (src.stripPrefix("src").toLong % 9)))
-        .toMap
-      Pipeline.cleanFunnel(
-        docs.where(col("doc_id") % 20 =!= 0),
-        docs.where(col("doc_id") % 20 === 0), weights, n = 3)
-    }),
-
-    // -- sparse track: MIPS over long-form (id, dim, v) ----------------------
-    "sparse_mips" -> ((s, dir) => {
-      val tf = Sparse.fromTermFreq(Tables.documents(s, dir))
-      Sparse.mips(sparseQueries(tf, 10), tf, k = 10)
-    }),
-    "sparse_sparsify" -> ((s, dir) =>
-      Sparse.sparsify(Sparse.fromTermFreq(Tables.documents(s, dir)), 8, 10)),
-    // S1/S2 end-to-end: integer-quantized embeddings written as the
-    // reference's CSR .spmat layout (sparse/spmat/spmat.py), re-ingested by
-    // the range-split spmat reader, then pure-integer sparse MIPS — the
-    // sparse-track flagship format round-trips without conversion, gated by
-    // an exact quantization-replicating oracle (same idiom as knn_l2_u8bin).
-    "sparse_mips_spmat" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val rows = emb.select(col("vec_id").cast("long").as("id"),
-        expr("transform(embedding, (x, i) -> i)").as("indices"),
-        expr("transform(embedding, x -> cast(int(floor(cast(x as double) * 10)) + 128 as float))")
-          .as("values"))
-      val path = java.nio.file.Files.createTempDirectory("graft-spmat")
-        .resolve("m.spmat").toString
-      graft.sources.BinaryFormats.writeSpmat(rows, path, ncol = 64)
-      val back = graft.sources.BinaryFormats.readSpmat(s, path)
-      val tf = back
-        .select(col("id"), explode(arrays_zip(col("indices"), col("values"))).as("z"))
-        .select(col("id"), col("z.indices").as("dim"), col("z.values").cast("long").as("v"))
-      Sparse.mips(
-        tf.where(col("id") < 10)
-          .select(col("id").as("qid"), col("dim"), col("v").as("qv")),
-        tf, k = 10)
-    }),
-    "sparse_budget" -> ((s, dir) => {
-      val tf = Sparse.fromTermFreq(Tables.documents(s, dir))
-      Sparse.budgetedMips(sparseQueries(tf, 10), tf, k = 10, m = 16)
-    }),
-    // J7 serving form, driver-hash-gated: the resident inverted index is
-    // exact vs the budgeted dataflow, so it shares sparse_budget's oracle.
-    "sparse_budget_served" -> ((s, dir) => {
-      val tf = Sparse.fromTermFreq(Tables.documents(s, dir))
-      val served = graft.index.ResidentPostings.load(tf, m = 16, numPartitions = 4)
-      try served.probeLocal(sparseQueries(tf, 10), 10)
-      finally served.unload()
-    }),
-    // J7 impact-ordered query-time budget (linscan's budget semantics,
-    // sparse/linscan/linscan.py:19-56): full inverted file (m = |docs|,
-    // nothing truncated at build), partial scan in qv·v-descending order.
-    // At budget = MaxValue the walk covers every posting, so the result
-    // equals the exact MIPS join — THIS twin carries the oracle.
-    "sparse_impact_budget_exact" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val tf = Sparse.fromTermFreq(docs)
-      val served = graft.index.ResidentPostings.load(tf,
-        m = docs.count().toInt, numPartitions = 4)
-      try served.probeLocal(sparseQueries(tf, 10), 10)
-      finally served.unload()
-    }),
-    // finite impact budget — genuinely approximate (per-shard partial
-    // scan), so no SQL oracle; the driver records rows-only and the exact
-    // twin above hash-gates the machinery. Budget = 64 accumulations per
-    // (query, shard) against the gate corpus's ~hundreds per shard.
-    "sparse_impact_budget" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val tf = Sparse.fromTermFreq(docs)
-      val served = graft.index.ResidentPostings.load(tf,
-        m = docs.count().toInt, numPartitions = 4)
-      try served.probeLocal(sparseQueries(tf, 10), 10, budget = 64L)
-      finally served.unload()
-    }),
-
-    // -- filter track: conjunctive tags, postings, signatures, routing -------
-    "tag_postings" -> ((s, dir) =>
-      TagFilter.postings(TagFilter.withTags(Tables.embeddings(s, dir)))),
-    "tag_stats" -> ((s, dir) =>
-      TagFilter.tagStats(TagFilter.withTags(Tables.embeddings(s, dir)))),
-    "filtered_knn2" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      knnResult(TagFilter.filteredKnn(
-        TagFilter.tagQueries(emb, 20), TagFilter.withTags(emb), k = 10))
-    }),
-    "filtered_knn_sig" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      knnResult(TagFilter.filteredKnnSig(
-        TagFilter.tagQueries(emb, 20), TagFilter.withTags(emb), k = 10))
-    }),
-    // Filter-track serving form, driver-hash-gated: the resident signature
-    // scan is exact (lossless bloom-skip + exact conjunctive gate + the
-    // same double kernels), so it shares filtered_knn2's oracle.
-    "filtered_knn_served" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val served = graft.index.ResidentScan.load(
-        TagFilter.withTags(emb), numPartitions = 4)
-      try {
-        val qs = TagFilter
-          .withSignature(TagFilter.tagQueries(emb, 20), "qtags")
-          .select(col("qid"), col("qvec"), col("qtags"), col("sig").as("qsig"))
-        knnResult(served.probeLocal(qs, 10))
-      } finally served.unload()
-    }),
-    "filtered_knn_routed" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      // 1200 bp sits between the label tags (~1000 bp) and the mod-7 tags
-      // (~1428 bp): routing keys off the rarest tag, stats-driven (O(1)/query)
-      knnResult(TagFilter.routedFilteredKnn(
-        TagFilter.tagQueries(emb, 20), TagFilter.withTags(emb), k = 10,
-        thresholdBp = 1200))
-    }),
-
-    // the COMPLETE planner with the graph branch live (faiss.py:361-426):
-    // a mixed batch — 2-tag queries (rarest ≈ 1000 bp → exact brute-force
-    // branch) and single-mod7-tag queries (1428 bp → one-stage graph
-    // branch) — recall-graded against the exact filtered scan, rows-only.
-    "filtered_knn_planner" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val twoTag = TagFilter.tagQueries(emb, 10)
-      val oneTag = emb.where(col("vec_id") >= 10 && col("vec_id") < 20)
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"),
-          array((lit(10) + pmod(col("vec_id") * 3 + 1, lit(7))).cast("int")).as("qtags"))
-      val q = twoTag.unionByName(oneTag)
-      val b = TagFilter.withTags(emb)
-      val got = graft.index.RoutedGraphKnn.knn(q, b, k = 10,
-        thresholdBp = 1200, efSearch = 64, numPartitions = 8)
-      val truth = TagFilter.filteredKnn(q, b, 10)
-      Recall.perQuery(got, truth, 10)
-    }),
-
-    // the SAME planner composition at its exact-degenerate point: identical
-    // routing (thresholdBp = 1200 keeps BOTH branches live on the mixed
-    // batch), but the graph branch runs at the exhaustive beam, where the
-    // one-stage search IS the exact conjunctive scan — so the two-branch
-    // union is hash-checkable end to end, the *_exact twin every other
-    // approximate family carries.
-    "filtered_knn_planner_exact" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val twoTag = TagFilter.tagQueries(emb, 10)
-      val oneTag = emb.where(col("vec_id") >= 10 && col("vec_id") < 20)
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"),
-          array((lit(10) + pmod(col("vec_id") * 3 + 1, lit(7))).cast("int")).as("qtags"))
-      val q = twoTag.unionByName(oneTag)
-      knnResult(graft.index.RoutedGraphKnn.knn(q, TagFilter.withTags(emb),
-        k = 10, thresholdBp = 1200, efSearch = 1 << 20, numPartitions = 8))
-    }),
-
-    // the reference's yfcc semantics end-to-end: conjunctive 2-tag filter
-    // AND uint8-quantized vectors with pure-integer L2 (faiss.py:361-426 +
-    // space_l2.h:376-413 in one query)
-    "filtered_knn_u8" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val q8 = TagFilter.tagQueries(emb, 20).withColumn("qvec8",
-        expr("transform(qvec, x -> CAST(floor(CAST(x AS DOUBLE) * 10) AS SHORT))"))
-      val b8 = TagFilter.withTags(emb).withColumn("vec8",
-        expr("transform(vec, x -> CAST(floor(CAST(x AS DOUBLE) * 10) AS SHORT))"))
-      val scored = b8.crossJoin(broadcast(q8))
-        .where(forall(col("qtags"), t => array_contains(col("tags"), t)))
-        .withColumn("dist", vecL2SqInt(col("qvec8"), col("vec8")).cast("double"))
-      knnResult(TopK.aggTopK(scored, "qid", "id", "dist", 10))
-    }),
-    "filtered_knn_bucketed" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val path = java.nio.file.Files.createTempDirectory("graft-buckets")
-        .resolve("emb").toString
-      TagBuckets.writeBucketed(TagFilter.withTags(emb), path)
-      knnResult(TagBuckets.bucketedFilteredKnn(
-        s, path, TagFilter.tagQueries(emb, 20), k = 10))
-    }),
-
-    // P4 sorted union: disjunctive (match-ANY-tag) candidates via
-    // array_union over presorted posting arrays (bow_id_selector.swig:163-192).
-    "tag_union" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      TagFilter.unionCandidates(
-        TagFilter.tagQueries(emb, 10), TagFilter.withTags(emb))
-    }),
-
-    // -- index layer ---------------------------------------------------------
-    // A5 cluster histogram: per-cluster counts + contiguous-layout offsets.
-    // iters=0 + seedLowId pins centroids to the 8 lowest-id rows, so the
-    // assignment is SQL-expressible and the histogram stays exactly
-    // oracle-checkable (the production default is deterministic k-means++,
-    // whose exponential-race seeds a SQL oracle can't reproduce).
-    "ann_ivf_hist" -> ((s, dir) => {
-      val b = embBase(s, dir)
-      val cents = graft.index.KMeans.fit(b, c = 8, iters = 0, seedLowId = true)
-      graft.index.ClusterHistogram.histogram(graft.index.KMeans.assign(b, cents))
-    }),
-    // IVF probed exhaustively (nprobe = C) is exact → hash-checked oracle.
-    "ann_ivf" -> ((s, dir) => {
-      val b = embBase(s, dir)
-      val idx = ivf8(s, dir)
-      knnResult(idx.probe(embQueries(s, dir, 10), b, k = 10, nprobe = 8))
-    }),
-    // IVF under max-inner-product (the OOD composition): centroid routing
-    // and cluster scan both rank by negated dot; nprobe = C is exhaustive,
-    // so this is hash-checked against the exact MIPS oracle.
-    "ann_ivf_ip" -> ((s, dir) => {
-      val b = embBase(s, dir)
-      val idx = ivf8(s, dir)
-      knnResult(idx.probe(embQueries(s, dir, 10), b, k = 10, nprobe = 8,
-        metric = Metric.Ip))
-    }),
-    // save → load → exhaustive probe: persistence must not change results,
-    // so this stays hash-checked against the exact oracle (S7/X4 analog).
-    "ann_ivf_persisted" -> ((s, dir) => {
-      val b = embBase(s, dir)
-      val idx = ivf8(s, dir)
-      val path = java.nio.file.Files.createTempDirectory("graft-ivf")
-        .resolve("idx").toString
-      graft.index.IvfIndex.save(idx, path)
-      val loaded = graft.index.IvfIndex.load(s, path)
-      knnResult(loaded.probe(embQueries(s, dir, 10), b, k = 10, nprobe = 8))
-    }),
-    // recall@10 of the approximate paths vs exact brute force, per query —
-    // deterministic (both paths are), but not SQL-expressible → rows-only
-    // driver check; thresholds asserted in IndexSpec.
-    "recall_ivf_partial" -> ((s, dir) => {
-      val b = embBase(s, dir)
-      val q = embQueries(s, dir, 10)
-      val idx = ivf8(s, dir)
-      val got = idx.probe(q, b, k = 10, nprobe = 2)
-      val truth = exactKnnTruth(s, dir, Metric.L2)
-      Recall.perQuery(got, truth, 10)
-    }),
-    "recall_sq8" -> ((s, dir) => {
-      val b = embBase(s, dir)
-      val q = embQueries(s, dir, 10)
-      val (mins, spans) = sq8Train(s, dir)
-      val got = graft.index.Sq8.knnSq8(q, b, k = 10, rerank = 40, mins, spans)
-      val truth = exactKnnTruth(s, dir, Metric.L2)
-      Recall.perQuery(got, truth, 10)
-    }),
-    // the reference baseline's composition (IVF coarse route × SQ8 integer
-    // scan × exact rerank, config.yaml:50-53) — recall-graded, rows-only.
-    // Both trains come from the session fixture cache (ivf8 + sq8Train):
-    // identical parameters to the per-gate build, one train per dir.
-    "recall_ivf_sq8" -> ((s, dir) => {
-      val b = embBase(s, dir)
-      val q = embQueries(s, dir, 10)
-      val (mins, spans) = sq8Train(s, dir)
-      val got = graft.index.IvfSq8.knnWith(ivf8(s, dir), q, b, k = 10,
-        nprobe = 4, rerank = 40, mins, spans)
-      val truth = exactKnnTruth(s, dir, Metric.L2)
-      Recall.perQuery(got, truth, 10)
-    }),
-    // X8 per-tag subindexes at the exact-degenerate beam: every tag is hot
-    // (minFreqBp below every tag's frequency), each query routes to its
-    // label's dedicated graph, and ef ≥ partition size makes the probe an
-    // exhaustive scan of that tag's rows — hash-checked against the
-    // single-tag filtered oracle. Gates the hot-tag route end to end:
-    // stats → build-per-tag → registry listing → routed probe.
-    "filtered_knn_subindex_exact" -> ((s, dir) => {
-      val base = TagFilter.withTags(Tables.embeddings(s, dir))
-      val path = java.nio.file.Files.createTempDirectory("graft-subidx")
-        .resolve("reg").toString
-      graft.index.TagSubindexes.build(base, path, minFreqBp = 500,
-        numPartitions = 2)
-      val q = Tables.embeddings(s, dir).where(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"),
-          col("label").as("qtag"))
-      knnResult(graft.index.TagSubindexes.probe(s, path, q, k = 10,
-        efSearch = 1 << 20))
-    }),
-    // PQ-ADC at its exact-degenerate point (lossless codebook: every
-    // distinct subvector a centroid → zero quantization error, ADC = exact
-    // squared L2) — hash-checked against the brute-force oracle, gating the
-    // encode → LUT → gather-scan → exact-re-rank dataflow end to end. Same
-    // technique as nprobe = C and ef ≥ partition size.
-    "ann_pq_exact" -> ((s, dir) => {
-      val b = embBase(s, dir)
-      val cb = pqLossless(s, dir, 4)
-      knnResult(graft.index.Pq.adcKnn(
-        embQueries(s, dir, 10), b, cb, k = 10, rerank = 20))
-    }),
-    // OPQ-style rotated PQ (Ge et al. CVPR'13 eigenvalue allocation) at its
-    // exact-degenerate point: the ADC scan runs in PCA-rotated space, the
-    // re-rank recomputes original-space distances, and the lossless rotated
-    // codebook makes the rotated scan exact — so the top-k hash-matches the
-    // same brute-force oracle as knn_l2. Gates the covariance pass, the
-    // driver-local eigendecomposition, the allocator, and the rotated
-    // encode/LUT plumbing end to end; the recall BENEFIT of rotation on a
-    // correlated corpus is OpqSpec's job (this synthetic corpus is
-    // near-uniform, where rotation is a no-op by design).
-    "ann_opq_exact" -> ((s, dir) => {
-      val b = embBase(s, dir)
-      val (rot, cb) = opqLossless(s, dir, 4)
-      knnResult(graft.index.Opq.adcKnnRotated(
-        embQueries(s, dir, 10), b, rot, cb, k = 10, rerank = 20))
-    }),
-    // the same construction under max-inner-product: an orthonormal
-    // rotation preserves dot products, so the rotated ip LUT + lossless
-    // codebook reproduces exact MIPS (same oracle as knn_ip).
-    "ann_opq_ip_exact" -> ((s, dir) => {
-      val b = embBase(s, dir)
-      val (rot, cb) = opqLossless(s, dir, 4)
-      knnResult(graft.index.Opq.adcKnnRotated(
-        embQueries(s, dir, 10), b, rot, cb, k = 10, rerank = 20,
-        metric = Metric.Ip))
-    }),
-    // X8's second half — hot tag-PAIR subindexes (faiss.py:268-337 builds
-    // pair indexes too): every co-occurring pair gets a graph over docs
-    // holding BOTH tags; 2-tag queries route to their pair's graph and at
-    // the exhaustive beam the probe is exact conjunctive kNN — same oracle
-    // family as filtered_ann_hnsw_exact.
-    "filtered_knn_pair_subindex_exact" -> ((s, dir) => {
-      val base = TagFilter.withTags(Tables.embeddings(s, dir))
-      val path = java.nio.file.Files.createTempDirectory("graft-pairidx")
-        .resolve("reg").toString
-      graft.index.TagSubindexes.buildPairs(base, path, minPairCount = 1,
-        numPartitions = 2)
-      val q = TagFilter.tagQueries(Tables.embeddings(s, dir), 10)
-        .select(col("qid"), col("qvec"),
-          col("qtags").getItem(0).as("qtag1"), col("qtags").getItem(1).as("qtag2"))
-      knnResult(graft.index.TagSubindexes.probePairs(s, path, q, k = 10,
-        efSearch = 1 << 20))
-    }),
-    // the resident-ADC serving form at its exact-degenerate point: lossless
-    // codebook ⇒ the pinned-code gather-scan is exact squared-L2 and the
-    // served batch hash-matches brute force — the serving twin of
-    // ann_pq_exact (codes in memory, floats touched only by the re-rank).
-    "ann_pq_served_exact" -> ((s, dir) => {
-      val b = embBase(s, dir)
-      val cb = pqLossless(s, dir, 4)
-      val served = graft.index.ResidentAdc.load(b, cb, numPartitions = 4)
-      try knnResult(served.probeLocal(embQueries(s, dir, 10), 10, rerank = 20))
-      finally served.unload()
-    }),
-    // the OPQ rotation served resident: shards hold rotated codes + the
-    // ORIGINAL floats, probes build rotated LUTs and re-rank original-space
-    // — lossless rotated codebook ⇒ hash-matches brute force (the same
-    // degenerate-point contract as ann_pq_served_exact, with the rotation
-    // plumbing in the loop).
-    "ann_opq_served_exact" -> ((s, dir) => {
-      val b = embBase(s, dir)
-      val (rot, cb) = opqLossless(s, dir, 4)
-      val served = graft.index.ResidentAdc.loadRotated(b, rot, cb,
-        numPartitions = 4)
-      try knnResult(served.probeLocal(embQueries(s, dir, 10), 10, rerank = 20))
-      finally served.unload()
-    }),
-    // the reference BASELINE's full composition (IVF coarse route × in-RAM
-    // codes × float refine, config.yaml:50-53) served resident, at its
-    // exact-degenerate point: nprobe = C scans every cluster, the lossless
-    // codebook makes ADC exact — hash-matches brute force end to end.
-    "ann_ivfadc_served_exact" -> ((s, dir) => {
-      val b = embBase(s, dir)
-      val ivf = ivf8(s, dir)
-      val cb = pqLossless(s, dir, 4)
-      val served = graft.index.ResidentIvfAdc.load(b, ivf, cb, numPartitions = 4)
-      try knnResult(served.probeLocal(embQueries(s, dir, 10), 10,
-        nprobe = served.numClusters, rerank = 20))
-      finally served.unload()
-    }),
-    // faiss's true IVFPQ (codes quantize the residual against the routed
-    // centroid) served resident, at ITS exact-degenerate point: lossless
-    // residual codebook + nprobe = C + per-(query, cluster) LUTs → the
-    // served batch hash-matches brute force. Gates the residual LUT
-    // plumbing of the resident form end to end; reuses the built index's
-    // codes (loading is a join, not a re-encode).
-    "ann_ivfadc_residual_served_exact" -> ((s, dir) => {
-      val b = embBase(s, dir)
-      val idx = ivfPqResidualLossless(s, dir, c = 8, iters = 3, m = 4)
-      val served = graft.index.ResidentIvfAdc.loadResidual(b, idx,
-        numPartitions = 4)
-      try knnResult(served.probeLocal(embQueries(s, dir, 10), 10,
-        nprobe = served.numClusters, rerank = 20))
-      finally served.unload()
-    }),
-    // the reference baseline's LITERAL composition (`IVF16384,SQ8`,
-    // config.yaml:50-53) served resident, at its exact-degenerate point:
-    // nprobe = C scans every cluster and rerank = n pushes every row
-    // through the exact float re-rank, so scalar-quantization error cannot
-    // perturb the result — hash-matches brute force end to end. Gates the
-    // client-side encode parity (encode() ≡ Sq8.encodeCol), the routed
-    // integer scan, and the refine dataflow of the resident form.
-    "ann_ivfsq8_served_exact" -> ((s, dir) => {
-      val b = embBase(s, dir)
-      val ivf = ivf8(s, dir)
-      val (mins, spans) = sq8Train(s, dir)
-      val n = b.count().toInt
-      val served = graft.index.ResidentIvfSq8.load(b, ivf, mins, spans,
-        numPartitions = 4)
-      try knnResult(served.probeLocal(embQueries(s, dir, 10), 10,
-        nprobe = served.numClusters, rerank = n))
-      finally served.unload()
-    }),
-    // mass-adaptive routing (the corpus-fraction knob that replaces a
-    // fixed nprobe at scale — CoarseRouter.byMass) at ITS exact-degenerate
-    // point: minMass = 1.0 walks every cluster and rerank = n floats every
-    // row through the exact refine → hash-matches brute force. Routing is
-    // forced SHARD-SIDE, so the large-C serving path (each shard routes
-    // the broadcast queries itself) is what the oracle hashes;
-    // client-side parity is IndexSpec-asserted.
-    "ann_ivfsq8_mass_exact" -> ((s, dir) => {
-      import s.implicits._
-      val b = embBase(s, dir)
-      val ivf = ivf8(s, dir)
-      val (mins, spans) = sq8Train(s, dir)
-      val n = b.count().toInt
-      val served = graft.index.ResidentIvfSq8.load(b, ivf, mins, spans,
-        numPartitions = 4)
-      try {
-        val qs = embQueries(s, dir, 10)
-          .select(col("qid").cast("long"), col("qvec"))
-          .as[(Long, Array[Float])].collect()
-        val rows = served.probeBatchMass(qs, 10, minMass = 1.0, rerank = n,
-          shardRoute = Some(true))
-        knnResult(
-          s.createDataFrame(rows.toSeq).toDF("qid", "id", "dist", "rank"))
-      } finally served.unload()
-    }),
-    // graph-routed coarse quantizer (HNSW over the centroids — faiss's
-    // IVF_HNSW shape, the O(log C) router the 100 TB regime needs once
-    // autoC ~ 4*sqrt(n) reaches the hundreds of thousands) at ITS
-    // exact-degenerate point: efRoute = C serves the ranking by the exact
-    // linear rank (HnswIndex answers ef >= size with a true exact scan),
-    // so minMass = 1.0 + rerank = n still hash-matches brute force through
-    // the efRoute-threaded shard-side path. Pruned-beam behavior (the
-    // genuinely approximate regime) is IndexSpec-gated: shard/client row
-    // identity and recall within eps of the linear rank.
-    "ann_ivfsq8_graphroute_exact" -> ((s, dir) => {
-      import s.implicits._
-      val b = embBase(s, dir)
-      val ivf = graft.index.IvfIndex.build(b, c = 64, iters = 2)
-      val (mins, spans) = sq8Train(s, dir)
-      val n = b.count().toInt
-      val served = graft.index.ResidentIvfSq8.load(b, ivf, mins, spans,
-        numPartitions = 4)
-      try {
-        val qs = embQueries(s, dir, 10)
-          .select(col("qid").cast("long"), col("qvec"))
-          .as[(Long, Array[Float])].collect()
-        val rows = served.probeBatchMass(qs, 10, minMass = 1.0, rerank = n,
-          shardRoute = Some(true), efRoute = served.numClusters)
-        knnResult(
-          s.createDataFrame(rows.toSeq).toDF("qid", "id", "dist", "rank"))
-      } finally served.unload()
-    }),
-    // save → load → probe through the VectorIndex registry with the
-    // lossless codebook: persistence must not change the exact result
-    // (S7/X4 parity, same contract as ann_ivf_persisted).
-    "ann_pq_persisted_exact" -> ((s, dir) => {
-      val b = embBase(s, dir)
-      val cb = pqLossless(s, dir, 4)
-      val idx = new graft.index.PqVectorIndex(s, cb,
-        graft.index.Pq.encode(b, cb).select("id", "codes"), b, rerank = 20)
-      val path = java.nio.file.Files.createTempDirectory("graft-pq")
-        .resolve("idx").toString
-      idx.save(path)
-      knnResult(graft.index.VectorIndex.load(s, path, rerank = 20)
-        .probe(embQueries(s, dir, 10), 10))
-    }),
-    // the OPQ family through the registry: rotation + codebook + rotated
-    // codes saved, reloaded by kind dispatch, probed — persistence must not
-    // change the exact result (S7/X4 parity, same contract as the pq row).
-    "ann_opq_persisted_exact" -> ((s, dir) => {
-      val b = embBase(s, dir)
-      val (rot, cb) = opqLossless(s, dir, 4)
-      val rotated = b.select(col("id"),
-        graft.index.Opq.rotateCol(rot, col("vec")).as("vec"))
-      val idx = new graft.index.OpqVectorIndex(s, rot, cb,
-        graft.index.Pq.encode(rotated, cb).select("id", "codes"), b,
-        rerank = 20)
-      val path = java.nio.file.Files.createTempDirectory("graft-opq")
-        .resolve("idx").toString
-      idx.save(path)
-      knnResult(graft.index.VectorIndex.load(s, path, rerank = 20)
-        .probe(embQueries(s, dir, 10), 10))
-    }),
-    // PQ at a real operating point (m=8 × ksub=32 codebooks, 3 Lloyd
-    // iters, exact re-rank of 100) — recall-graded rows-only; the threshold
-    // is asserted in PqSpec. These near-uniform synthetic embeddings are
-    // PQ's worst case (no cluster structure to quantize onto), so the
-    // re-rank pool carries more of the recall than it would on a real
-    // embedding corpus — same caveat as the routed-graph bench row.
-    "recall_pq" -> ((s, dir) => {
-      val b = embBase(s, dir)
-      val q = embQueries(s, dir, 10)
-      val cb = graft.index.Pq.train(b, m = 8, ksub = 32, iters = 3)
-      val got = graft.index.Pq.adcKnn(q, b, cb, k = 10, rerank = 100)
-      Recall.perQuery(got, exactKnnTruth(s, dir, Metric.L2), 10)
-    }),
-    // trained OPQ at the same (m, ksub, rerank) budget as recall_pq — the
-    // two reports side by side show what the rotation buys on THIS corpus
-    // (near-uniform synthetic: little; OpqSpec's correlated corpus: a lot)
-    "recall_opq" -> ((s, dir) => {
-      val b = embBase(s, dir)
-      val q = embQueries(s, dir, 10)
-      val (rot, cb) = graft.index.Opq.trainRotated(b, m = 8, ksub = 32, iters = 3)
-      val got = graft.index.Opq.adcKnnRotated(q, b, rot, cb, k = 10, rerank = 100)
-      Recall.perQuery(got, exactKnnTruth(s, dir, Metric.L2), 10)
-    }),
-    // residual-encoded IVF-PQ (faiss's true IVFPQ: codes quantize the
-    // residual against the routed centroid) probed exhaustively with a
-    // lossless residual codebook — ‖(q−c)−(x−c)‖ = ‖q−x‖, so this is
-    // hash-checked against the exact L2 oracle; gates the per-route LUT /
-    // cid-joined scan dataflow end to end.
-    "ann_ivfpq_residual_exact" -> ((s, dir) => {
-      val b = embBase(s, dir)
-      val n = b.count().toInt
-      knnResult(graft.index.IvfPq.knnResidual(embQueries(s, dir, 10), b,
-        k = 10, c = 8, iters = 2, nprobe = 8, m = 4, ksub = 0, rerank = n,
-        lossless = true))
-    }),
-    // faiss's full OPQ...IVFPQ chain (OPQ pre-transform, then IVF + residual
-    // codes IN THE ROTATED SPACE) at its degenerate point: the rotated
-    // residual probe supplies candidates, the final re-rank recomputes
-    // ORIGINAL-space distances, and with a lossless residual codebook +
-    // nprobe = C the top-k hash-matches the brute-force oracle. Gates the
-    // three-stage composition (rotate → route → residual-code) end to end.
-    "ann_opq_ivfpq_exact" -> ((s, dir) => {
-      val b = embBase(s, dir)
-      val q = embQueries(s, dir, 10)
-      val rot = graft.index.Opq.trainRotation(b, m = 4)
-      val rbase = b.select(col("id"), graft.index.Opq.rotateCol(rot, col("vec")).as("vec"))
-      val rq = q.select(col("qid"), graft.index.Opq.rotateCol(rot, col("qvec")).as("qvec"))
-      val idx = graft.index.IvfPq.buildResidual(rbase, c = 8, iters = 2,
-        m = 4, ksub = 0, lossless = true)
-      val cand = idx.probe(rq, rbase, k = 20, nprobe = 8, rerank = 20)
-        .select("qid", "id")
-      val exact = cand
-        .join(b.select(col("id"), col("vec")), "id")
-        .join(broadcast(q.select(col("qid"), col("qvec"))), "qid")
-        .withColumn("dist", Metric.distColumn(Metric.L2, col("qvec"), col("vec")))
-      knnResult(TopK.aggTopK(exact, "qid", "id", "dist", 10))
-    }),
-    // the residual composition persisted and reloaded through the registry
-    // (S7 parity for IVFPQ): persistence must not change the exact result.
-    "ann_ivfpq_persisted_exact" -> ((s, dir) => {
-      val b = embBase(s, dir)
-      val n = b.count().toInt
-      val idx = graft.index.IvfPq.buildResidual(b, c = 8, iters = 2, m = 4,
-        ksub = 0, lossless = true)
-      val path = java.nio.file.Files.createTempDirectory("graft-ivfpq")
-        .resolve("idx").toString
-      new graft.index.IvfPqVectorIndex(idx, b, nprobe = 8, rerank = n).save(path)
-      knnResult(graft.index.VectorIndex.load(s, path, nprobe = 8, rerank = n)
-        .probe(embQueries(s, dir, 10), 10))
-    }),
-    // residual IVF-PQ at a real operating point — recall-graded rows-only.
-    "recall_ivfpq_residual" -> ((s, dir) => {
-      val b = embBase(s, dir)
-      val q = embQueries(s, dir, 10)
-      val got = graft.index.IvfPq.knnResidual(q, b, k = 10, c = 8,
-        iters = 3, nprobe = 6, m = 8, ksub = 32, rerank = 100)
-      Recall.perQuery(got, exactKnnTruth(s, dir, Metric.L2), 10)
-    }),
-    // faiss's IVFx,PQy composition: coarse route bounds scan volume, PQ
-    // codes bound scan width, exact re-rank restores recall from both.
-    "recall_ivfpq" -> ((s, dir) => {
-      val b = embBase(s, dir)
-      val q = embQueries(s, dir, 10)
-      val got = graft.index.IvfPq.knn(q, b, k = 10, c = 8, iters = 3,
-        nprobe = 6, m = 8, ksub = 32, rerank = 100)
-      Recall.perQuery(got, exactKnnTruth(s, dir, Metric.L2), 10)
-    }),
-    "recall_hnsw" -> ((s, dir) => {
-      val b = embBase(s, dir)
-      val q = embQueries(s, dir, 10)
-      val got = graft.index.HnswKnn.knn(q, b, k = 10, efSearch = 128, numPartitions = 8)
-      val truth = exactKnnTruth(s, dir, Metric.L2)
-      Recall.perQuery(got, truth, 10)
-    }),
-    // SQ8-coded graph + exact re-rank (the reference's uint8-arena memory
-    // model, hnswalg.h:132-136): integer traversal distances over a 4×
-    // smaller resident graph; recall-graded rows-only.
-    "recall_hnsw_sq8" -> ((s, dir) => {
-      val b = embBase(s, dir)
-      val q = embQueries(s, dir, 10)
-      val (mins, spans) = sq8Train(s, dir)
-      val got = graft.index.HnswKnn.knnSq8(q, b, k = 10, rerank = 40,
-        mins, spans, efSearch = 128, numPartitions = 8)
-      val truth = exactKnnTruth(s, dir, Metric.L2)
-      Recall.perQuery(got, truth, 10)
-    }),
-    // ip-metric graph ANN — the OOD track's flagship max-inner-product
-    // search (text2image semantics, /root/reference/ood/base.py:3,
-    // ood/diskann/diskann-in-mem.py:48-56) on the graph path; recall
-    // graded against exact brute-force MIPS.
-    "recall_hnsw_ip" -> ((s, dir) => {
-      val b = embBase(s, dir)
-      val q = embQueries(s, dir, 10)
-      val got = graft.index.HnswKnn.knn(q, b, k = 10, efSearch = 128,
-        numPartitions = 8, metric = Metric.Ip)
-      val truth = exactKnnTruth(s, dir, Metric.Ip)
-      Recall.perQuery(got, truth, 10)
-    }),
-    // HNSW is approximate → rows-only driver check; recall graded in tests.
-    "ann_hnsw" -> ((s, dir) =>
-      knnResult(graft.index.HnswKnn.knn(
-        embQueries(s, dir, 10), embBase(s, dir), k = 10,
-        efSearch = 128, numPartitions = 8))),
-    // ef ≥ partition size degenerates the beam search to an exhaustive
-    // scan of each partition graph, so the graph PATH gets a hash-checked
-    // gate against the exact L2 oracle — the same degenerate-point
-    // technique as IVF probed at nprobe = C.
-    "ann_hnsw_exact" -> ((s, dir) =>
-      knnResult(graft.index.HnswKnn.knn(
-        embQueries(s, dir, 10), embBase(s, dir), k = 10,
-        efSearch = 1 << 20, numPartitions = 8))),
-    // cosine ANN = ip graph over unit-normalized vectors + exact cosine
-    // re-rank on the originals; at the exhaustive beam this hash-matches
-    // the brute-force cosine oracle (same oracle as knn_cos) — the graph
-    // family now serves all three metrics (l2 / ip / cosine).
-    "ann_hnsw_cos_exact" -> ((s, dir) =>
-      knnResult(graft.index.HnswKnn.knnCosine(
-        embQueries(s, dir, 10), embBase(s, dir), k = 10,
-        efSearch = 1 << 20, numPartitions = 8))),
-    // S7/X4: build → save → load → probe. Deterministic builds (id-sorted
-    // partitions) make the persisted probe equal the in-memory path exactly
-    // (asserted in IndexSpec); rows-only driver check (approximate path).
-    "ann_hnsw_persisted" -> ((s, dir) => {
-      val path = hnswSavedPath(s, dir)
-      knnResult(graft.index.HnswKnn.probeSaved(
-        s, path, embQueries(s, dir, 10), k = 10, efSearch = 128))
-    }),
-    // persisted graph probed at the exact-degenerate beam: save/load must
-    // not change the exhaustive result → hash-checked vs the L2 oracle.
-    "ann_hnsw_persisted_exact" -> ((s, dir) => {
-      val path = hnswSavedPath(s, dir)
-      knnResult(graft.index.HnswKnn.probeSaved(
-        s, path, embQueries(s, dir, 10), k = 10, efSearch = 1 << 20))
-    }),
-    // tombstone-aware probe at the exact beam: ids [0,5) deleted IN-
-    // TRAVERSAL; the oracle simply excludes them — the lazy-delete
-    // semantics (DELETE_MARK) get a hash gate, not just a spec.
-    "ann_hnsw_tombstone_exact" -> ((s, dir) => {
-      val path = hnswSavedPath(s, dir)
-      knnResult(graft.index.HnswKnn.probeSaved(
-        s, path, embQueries(s, dir, 10), k = 10, efSearch = 1 << 20,
-        tombstones = (0L until 5L).toSet))
-    }),
-    // centroid-routed graphs (IVF-of-HNSW): build → save → load → probe the
-    // nprobe nearest clusters only. Approximate → rows-only driver check;
-    // the recall/nprobe trade is asserted in IndexSpec.
-    "ann_hnsw_routed" -> ((s, dir) => {
-      val path = routedSavedPath(s, dir)
-      val routed = graft.index.HnswRouted.loadResident(s, path)
-      // probeLocal returns a LocalRelation (driver-side rows), so the
-      // resident graphs can unload before the result is consumed
-      val out = knnResult(routed.probeLocal(embQueries(s, dir, 10), k = 10,
-        efSearch = 64, nprobe = 2))
-      routed.unload()
-      out
-    }),
-    // routed probe at the exact-degenerate point (nprobe = C, exhaustive
-    // beam): full fan-out of exact scans = brute force → hash-checked
-    // against the same L2 oracle as knn_l2.
-    "ann_hnsw_routed_exact" -> ((s, dir) => {
-      val path = routedSavedPath(s, dir)
-      val routed = graft.index.HnswRouted.loadResident(s, path)
-      val out = knnResult(routed.probeLocal(embQueries(s, dir, 10), k = 10,
-        efSearch = 1 << 20, nprobe = 8))
-      routed.unload()
-      out
-    }),
-    // mass-adaptive routing at the degenerate point: minMass = 1 walks the
-    // centroid ranking until the routed clusters hold the whole corpus =
-    // full fan-out, and the exhaustive beam makes each cluster scan exact →
-    // hash-checked against the same L2 oracle as knn_l2.
-    "ann_hnsw_routed_auto_exact" -> ((s, dir) => {
-      val path = routedSavedPath(s, dir)
-      val routed = graft.index.HnswRouted.loadResident(s, path)
-      val out = knnResult(routed.probeLocalAuto(embQueries(s, dir, 10),
-        k = 10, efSearch = 1 << 20, minMass = 1.0))
-      routed.unload()
-      out
-    }),
-    // mass-adaptive routing at a real operating point: each query probes
-    // nearest clusters until they hold ≥ 3/4 of the corpus — the
-    // population-denominated form of the nprobe knob (per-query probe count
-    // adapts to cluster skew). Approximate → rows-only driver check; the
-    // mass target, recall monotonicity, and skew adaptivity are asserted in
-    // IndexSpec.
-    "ann_hnsw_routed_auto" -> ((s, dir) => {
-      val path = routedSavedPath(s, dir)
-      val routed = graft.index.HnswRouted.loadResident(s, path)
-      val out = knnResult(routed.probeLocalAuto(embQueries(s, dir, 10),
-        k = 10, efSearch = 64, minMass = 0.75))
-      routed.unload()
-      out
-    }),
-    // J3 one-stage conjunctive-tag graph search, recall-graded against the
-    // exact filtered kNN (the reference's filter-track operating point:
-    // 2 tags, ~1/70 selectivity — expand-until-k keeps recall high where a
-    // fixed-beam post-filter would return < k).
-    "filtered_ann_hnsw" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val q = TagFilter.tagQueries(emb, 10)
-      val b = TagFilter.withTags(emb)
-      val got = graft.index.HnswKnn.filteredKnnTags(q, b, k = 10,
-        efSearch = 64, numPartitions = 8)
-      val truth = TagFilter.filteredKnn(q, b, 10)
-      Recall.perQuery(got, truth, 10)
-    }),
-    // one-stage filtered graph search at the exhaustive beam: the widened
-    // search admits every allowed candidate (or falls back to the exact
-    // partition scan when the filter starves it below k) → equals the
-    // exact conjunctive kNN, hash-checked by the same oracle.
-    "filtered_ann_hnsw_exact" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      knnResult(graft.index.HnswKnn.filteredKnnTags(
-        TagFilter.tagQueries(emb, 20), TagFilter.withTags(emb), k = 10,
-        efSearch = 1 << 20, numPartitions = 8))
-    }),
-
-    // -- streaming track -----------------------------------------------------
-    // Runbook op-log: insert [0,300) → delete [0,100) (triggers tombstone
-    // consolidation) → insert [300,400) → RE-insert [50,100) (the
-    // simple_runbook.yaml delete-then-reinsert pattern) → search. Final
-    // checkpoint must see exactly the live set [50,400).
-    "runbook_final" -> ((s, dir) => {
-      val exec = new graft.streaming.RunbookExecutor(
-        embBase(s, dir).select("id", "vec"),
-        embQueries(s, dir, 10).select("qid", "qvec"),
-        k = 10, consolidateAt = 50)
-      val steps = Seq(
-        graft.streaming.RunbookStep("insert", 0, 300),
-        graft.streaming.RunbookStep("search"),
-        graft.streaming.RunbookStep("delete", 0, 100),
-        graft.streaming.RunbookStep("insert", 300, 400),
-        graft.streaming.RunbookStep("insert", 50, 100),
-        graft.streaming.RunbookStep("search"))
-      knnResult(exec.run(steps)(5))
-    }),
-    // the SAME op log served in GRAPH mode at the exhaustive beam: the
-    // final checkpoint is answered by generation #1 (built over [0,300))
-    // with tombstones [0,50) honored in-traversal, re-inserted ids
-    // [50,100) unmarked, and [300,400) ∪ [50,100) served delta-resident —
-    // zero rebuilds after the first. Exhaustive ef makes every component
-    // exact, so the composed serving form hash-checks against the same
-    // live-set oracle as runbook_final.
-    "runbook_graph_final" -> ((s, dir) => {
-      val gp = java.nio.file.Files.createTempDirectory("graft-rbq")
-        .resolve("idx").toString
-      val exec = new graft.streaming.RunbookExecutor(
-        embBase(s, dir).select("id", "vec"),
-        embQueries(s, dir, 10).select("qid", "qvec"),
-        k = 10, consolidateAt = 1000000, graphPath = Some(gp),
-        efSearch = 1 << 20)
-      val steps = Seq(
-        graft.streaming.RunbookStep("insert", 0, 300),
-        graft.streaming.RunbookStep("search"),
-        graft.streaming.RunbookStep("delete", 0, 100),
-        graft.streaming.RunbookStep("insert", 300, 400),
-        graft.streaming.RunbookStep("insert", 50, 100),
-        graft.streaming.RunbookStep("search"))
-      val out = exec.run(steps)(5)
-      require(exec.graphBuilds == 1,
-        s"delta serving must not rebuild (built ${exec.graphBuilds}x)")
-      knnResult(out)
-    }),
-    "events_sessions" -> ((s, dir) =>
-      graft.streaming.Sessionize.sessions(Tables.events(s, dir), gapMinutes = 30)),
-    "events_tumbling" -> ((s, dir) =>
-      graft.streaming.StreamingOps.eventsTumbling(Tables.events(s, dir))),
-    "events_sliding" -> ((s, dir) =>
-      graft.streaming.StreamingOps.eventsSliding(Tables.events(s, dir),
-        "2 hours", "1 hour")),
-    // ordered view → click → purchase conversion funnel, earliest-chain
-    // semantics; one reached_<step> flag per user per step.
-    "events_funnel" -> ((s, dir) =>
-      graft.streaming.StreamingOps.funnel(Tables.events(s, dir),
-        Seq("view", "click", "purchase"))),
-
-    // -- multimodal binary columns (stubbed decode, real plumbing) -----------
-    "mm_assets" -> ((s, dir) =>
-      Multimodal.assets(Tables.documents(s, dir))
-        .select(col("asset_id"), col("kind"),
-          length(col("payload")).cast("long").as("n_bytes"),
-          col("width"), col("height"), col("n_frames"))),
-    "mm_resize" -> ((s, dir) =>
-      Multimodal.resize(Multimodal.assets(Tables.documents(s, dir)), maxSide = 48)
-        .select("asset_id", "width", "height", "out_width", "out_height")),
-    "mm_frames" -> ((s, dir) =>
-      Multimodal.frameSample(Multimodal.assets(Tables.documents(s, dir)), stride = 2)),
-    "mm_features" -> ((s, dir) =>
-      Multimodal.decodeFeatures(Multimodal.assets(Tables.documents(s, dir)), dim = 32)
-        .toDF().select(col("asset_id"), col("kind"), col("n_bytes"),
-          size(col("features")).cast("long").as("feat_dim"))),
-    // REAL codec path: genuine PNG payloads (JDK encoder) decoded back by
-    // ImageIO inside mapPartitions; dimensions and exact channel sums come
-    // from the DECODED pixels, and the oracle recomputes them from the
-    // closed-form pattern without any codec — the gate can only pass if
-    // the container bytes truly decode (PNG is lossless).
-    "mm_decode" -> ((s, dir) =>
-      Multimodal.imageStats(
-        Multimodal.syntheticImages(Tables.documents(s, dir))).toDF()),
-    // real pixel RESIZE: decode → nearest-neighbor downscale → re-encode →
-    // re-decode; output dims and channel sums oracle-checked against the
-    // closed-form source pattern mapped through the integer scaler
-    "mm_resize_px" -> ((s, dir) =>
-      Multimodal.resizeImages(
-        Multimodal.syntheticImages(Tables.documents(s, dir)), maxSide = 6)
-        .toDF()),
-
-    // -- relational analytics (joins, windows, JSON) -------------------------
-    "q3_revenue" -> ((s, dir) =>
-      Relational.q3Revenue(Tables.customer(s, dir), Tables.orders(s, dir),
-        Tables.lineitem(s, dir), "BUILDING", "1998-01-01")),
-    "q5_region" -> ((s, dir) =>
-      Relational.q5RegionRevenue(Tables.region(s, dir), Tables.nation(s, dir),
-        Tables.customer(s, dir), Tables.orders(s, dir), Tables.lineitem(s, dir),
-        "ASIA")),
-    "events_first_per_user" -> ((s, dir) =>
-      Relational.firstEventsPerUser(Tables.events(s, dir), 3)),
-    "part_top_brand" -> ((s, dir) =>
-      Relational.topPartsPerBrand(Tables.part(s, dir), 3)),
-    "events_json" -> ((s, dir) =>
-      Relational.eventJsonStats(Tables.events(s, dir))),
-  )
-
-  private def sparseQueries(tf: DataFrame, nq: Int): DataFrame =
-    tf.where(col("id") < nq)
-      .select(col("id").as("qid"), col("dim"), col("v").as("qv"))
+  /** Spark-side floor(x*10) quantization of a vector column to ARRAY<SHORT>. */
+  private[graft] def u8Expr(c: String): org.apache.spark.sql.Column =
+    expr(s"transform($c, x -> CAST(floor(CAST(x AS DOUBLE) * 10) AS SHORT))")
 
   /** DuckDB-side tokenizer CTE shared by the text oracles. */
-  private val tokensCte =
+  private[graft] val tokensCte =
     "tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents)"
-
-  /** DuckDB-side long-form sparse vectors (mirrors Sparse.fromTermFreq). */
-  private val sparseTfCte =
-    """tf AS (SELECT doc_id AS id, term AS dim, CAST(count(*) AS BIGINT) AS v
-      |       FROM tok GROUP BY 1, 2)""".stripMargin
-
-  /** DuckDB-side distinct word-3-gram shingles (mirrors Dedup.shingles n=3). */
-  private val shinglesCte =
-    """sh AS (SELECT DISTINCT doc_id,
-      |              unnest(list_transform(range(1, len(l) - 1),
-      |                     i -> array_to_string(l[i:i+2], ' '))) AS shingle
-      |       FROM (SELECT doc_id, string_split(text, ' ') AS l FROM documents))""".stripMargin
-
-  /** Full MinHash-LSH → Jaccard-verified edges → min-label connected
-    * components, ending in `cl(doc_id, cluster_id)` — the shared prefix of
-    * the cluster and canonical-selection oracles. */
-  private lazy val dupClustersCtes: String =
-    s"""WITH RECURSIVE $shinglesCte,
-       |mh AS (SELECT doc_id, g.seed AS seed,
-       |              min(xor(('0x' || substr(md5(shingle), 1, 15))::BIGINT,
-       |                      ('0x' || substr(md5('seed:' || CAST(g.seed AS VARCHAR)), 1, 15))::BIGINT)) AS mh
-       |       FROM sh CROSS JOIN generate_series(0, 15) g(seed) GROUP BY 1, 2),
-       |bands AS (SELECT doc_id, seed // 4 AS band,
-       |                 string_agg(mh::VARCHAR, '-' ORDER BY seed) AS bkey
-       |          FROM mh GROUP BY 1, 2),
-       |cand AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-       |         FROM bands a JOIN bands b
-       |           ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
-       |sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS nsh FROM sh GROUP BY doc_id),
-       |inter AS (SELECT c.a_id, c.b_id, CAST(count(*) AS BIGINT) AS i
-       |          FROM cand c
-       |          JOIN sh a ON a.doc_id = c.a_id
-       |          JOIN sh b ON b.doc_id = c.b_id AND b.shingle = a.shingle
-       |          GROUP BY 1, 2),
-       |pairs AS (SELECT a_id, b_id
-       |          FROM inter JOIN sz sa ON sa.doc_id = a_id JOIN sz sb ON sb.doc_id = b_id
-       |          WHERE (10000 * i) // (sa.nsh + sb.nsh - i) >= 5000),
-       |edges AS (SELECT a_id AS src, b_id AS dst FROM pairs
-       |          UNION ALL SELECT b_id AS src, a_id AS dst FROM pairs),
-       |reach(id, r) AS (
-       |  SELECT doc_id, doc_id FROM documents
-       |  UNION
-       |  SELECT reach.id, e.dst FROM reach JOIN edges e ON e.src = reach.r),
-       |cl AS (SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id)
-       |""".stripMargin
-
-  /** DuckDB-side 32-bit SimHash signature CTE (mirrors Dedup.simhash). */
-  private val simhashSql =
-    """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-      |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
-      |b AS (SELECT doc_id, g.i AS i,
-      |             sum(CASE WHEN (('0x' || substr(md5(term), 1, 8))::BIGINT >> g.i) & 1 = 1
-      |                 THEN tf ELSE -tf END) AS s
-      |      FROM tf CROSS JOIN generate_series(0, 31) g(i) GROUP BY 1, 2),
-      |sig AS (SELECT doc_id,
-      |               CAST(sum(CASE WHEN s > 0 THEN CAST(pow(2.0, i) AS BIGINT) ELSE 0 END) AS BIGINT) AS simhash
-      |        FROM b GROUP BY 1)
-      |""".stripMargin
-
-  def oracleSql: Map[String, String] = Map(
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       round(sum(l_quantity), 2) AS sum_qty,
-        |       round(sum(l_extendedprice), 2) AS sum_base_price,
-        |       round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-        |       count(*) AS count_order
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus
-        |""".stripMargin,
-    "knn_l2" -> knnOracle(10, 10, l2Sql, "ASC"),
-    "knn_hamming" -> knnOracle(10, 10, hammingSql, "ASC"),
-    "knn_hamming_mih" -> knnOracle(10, 10, hammingSql, "ASC",
-      filterSql = mihChunksSql),
-    "knn_hamming_served" -> knnOracle(10, 10, hammingSql, "ASC"),
-    // exact-degenerate two-tier serving = plain exact L2
-    "knn_hamming_rerank_served_exact" -> knnOracle(10, 10, l2Sql, "ASC"),
-    // full fan-out binary IVF = plain exact Hamming
-    "ann_hamming_ivf_exact" -> knnOracle(10, 10, hammingSql, "ASC"),
-    // registry round-trip at the all-rows rerank budget = exact L2
-    "ann_binary_persisted_exact" -> knnOracle(10, 10, l2Sql, "ASC"),
-    // both tiers replicated: Hamming top-50 (hd asc, nid asc), then L2
-    // re-rank of exactly those candidates
-    "knn_hamming_rerank" ->
-      s"""WITH q AS (SELECT vec_id AS qid, embedding AS qv
-         |           FROM embeddings WHERE vec_id < 10),
-         |pairs AS (SELECT q.qid, e.vec_id AS nid,
-         |                 unnest(e.embedding) AS x, unnest(q.qv) AS y
-         |          FROM embeddings e CROSS JOIN q),
-         |scored AS (SELECT qid, nid, $hammingSql AS hd, $l2Sql AS fd
-         |           FROM pairs GROUP BY qid, nid),
-         |cand AS (SELECT qid, nid, fd,
-         |                row_number() OVER (PARTITION BY qid ORDER BY hd ASC, nid) AS hr
-         |         FROM scored),
-         |ranked AS (SELECT qid, nid,
-         |                  row_number() OVER (PARTITION BY qid ORDER BY fd ASC, nid) AS rank
-         |           FROM cand WHERE hr <= 50)
-         |SELECT qid, nid AS neighbor_id, rank FROM ranked WHERE rank <= 10
-         |""".stripMargin,
-    // all-pairs range truth — deliberately NOT the MIH candidate rule, so
-    // this gate also proves pigeonhole completeness of the bucket join
-    "knn_hamming_range" ->
-      s"""WITH q AS (SELECT vec_id AS qid,
-         |             [-embedding[1]] || embedding[2:21] || [-embedding[22]]
-         |               || embedding[23:43] || [-embedding[44]]
-         |               || embedding[45:64] AS qv
-         |           FROM embeddings WHERE vec_id < 10),
-         |pairs AS (SELECT q.qid, e.vec_id AS nid,
-         |                 unnest(e.embedding) AS x, unnest(q.qv) AS y
-         |          FROM embeddings e CROSS JOIN q),
-         |scored AS (SELECT qid, nid, $hammingSql AS d FROM pairs GROUP BY qid, nid)
-         |SELECT qid, nid AS neighbor_id,
-         |       row_number() OVER (PARTITION BY qid ORDER BY d ASC, nid) AS rank
-         |FROM scored WHERE d <= 3
-         |""".stripMargin,
-    // late-interaction maxsim: per-(qvec, dvec) dot → max per doc → sum of
-    // the two query-vector maxima → rank desc
-    "knn_maxsim" ->
-      """WITH q AS (SELECT vec_id // 2 AS qid, vec_id AS qvid, embedding AS qv
-        |           FROM embeddings WHERE vec_id < 8),
-        |b AS (SELECT vec_id // 4 AS doc_id, vec_id AS bvid, embedding AS bv
-        |      FROM embeddings),
-        |pairs AS (SELECT q.qid, q.qvid, b.doc_id, b.bvid,
-        |                 unnest(b.bv) AS x, unnest(q.qv) AS y
-        |          FROM b CROSS JOIN q),
-        |dots AS (SELECT qid, qvid, doc_id, bvid,
-        |                sum(CAST(x AS DOUBLE) * CAST(y AS DOUBLE)) AS dot
-        |         FROM pairs GROUP BY 1, 2, 3, 4),
-        |best AS (SELECT qid, qvid, doc_id, max(dot) AS m FROM dots GROUP BY 1, 2, 3),
-        |score AS (SELECT qid, doc_id, sum(m) AS s FROM best GROUP BY 1, 2),
-        |ranked AS (SELECT qid, doc_id,
-        |                  row_number() OVER (PARTITION BY qid ORDER BY s DESC, doc_id) AS rank
-        |           FROM score)
-        |SELECT qid, doc_id, rank FROM ranked WHERE rank <= 10
-        |""".stripMargin,
-    // hits-only serving reduce at the degenerate point (every vector a
-    // hit), distributed regime: exact → identical oracle to knn_maxsim
-    "knn_maxsim_served_exact" ->
-      """WITH q AS (SELECT vec_id // 2 AS qid, vec_id AS qvid, embedding AS qv
-        |           FROM embeddings WHERE vec_id < 8),
-        |b AS (SELECT vec_id // 4 AS doc_id, vec_id AS bvid, embedding AS bv
-        |      FROM embeddings),
-        |pairs AS (SELECT q.qid, q.qvid, b.doc_id, b.bvid,
-        |                 unnest(b.bv) AS x, unnest(q.qv) AS y
-        |          FROM b CROSS JOIN q),
-        |dots AS (SELECT qid, qvid, doc_id, bvid,
-        |                sum(CAST(x AS DOUBLE) * CAST(y AS DOUBLE)) AS dot
-        |         FROM pairs GROUP BY 1, 2, 3, 4),
-        |best AS (SELECT qid, qvid, doc_id, max(dot) AS m FROM dots GROUP BY 1, 2, 3),
-        |score AS (SELECT qid, doc_id, sum(m) AS s FROM best GROUP BY 1, 2),
-        |ranked AS (SELECT qid, doc_id,
-        |                  row_number() OVER (PARTITION BY qid ORDER BY s DESC, doc_id) AS rank
-        |           FROM score)
-        |SELECT qid, doc_id, rank FROM ranked WHERE rank <= 10
-        |""".stripMargin,
-    // ANN maxsim at the degenerate point (every doc a candidate): exact →
-    // identical oracle to knn_maxsim
-    "knn_maxsim_ann_exact" ->
-      """WITH q AS (SELECT vec_id // 2 AS qid, vec_id AS qvid, embedding AS qv
-        |           FROM embeddings WHERE vec_id < 8),
-        |b AS (SELECT vec_id // 4 AS doc_id, vec_id AS bvid, embedding AS bv
-        |      FROM embeddings),
-        |pairs AS (SELECT q.qid, q.qvid, b.doc_id, b.bvid,
-        |                 unnest(b.bv) AS x, unnest(q.qv) AS y
-        |          FROM b CROSS JOIN q),
-        |dots AS (SELECT qid, qvid, doc_id, bvid,
-        |                sum(CAST(x AS DOUBLE) * CAST(y AS DOUBLE)) AS dot
-        |         FROM pairs GROUP BY 1, 2, 3, 4),
-        |best AS (SELECT qid, qvid, doc_id, max(dot) AS m FROM dots GROUP BY 1, 2, 3),
-        |score AS (SELECT qid, doc_id, sum(m) AS s FROM best GROUP BY 1, 2),
-        |ranked AS (SELECT qid, doc_id,
-        |                  row_number() OVER (PARTITION BY qid ORDER BY s DESC, doc_id) AS rank
-        |           FROM score)
-        |SELECT qid, doc_id, rank FROM ranked WHERE rank <= 10
-        |""".stripMargin,
-    // range search: all rows within squared-L2 1.5, ranked per query
-    "knn_range" ->
-      s"""WITH q AS (SELECT vec_id AS qid, embedding AS qv
-         |           FROM embeddings WHERE vec_id < 10),
-         |pairs AS (SELECT q.qid, e.vec_id AS nid,
-         |                 unnest(e.embedding) AS x, unnest(q.qv) AS y
-         |          FROM embeddings e CROSS JOIN q),
-         |scored AS (SELECT qid, nid, $l2Sql AS d FROM pairs GROUP BY qid, nid)
-         |SELECT qid, nid AS neighbor_id,
-         |       row_number() OVER (PARTITION BY qid ORDER BY d ASC, nid) AS rank
-         |FROM scored WHERE d <= 1.5
-         |""".stripMargin,
-    // .fbin round-trip is bit-exact: same oracle as knn_l2
-    "knn_l2_fbin" -> knnOracle(10, 10, l2Sql, "ASC"),
-    // graph path at the exact-degenerate point: same oracle as knn_l2
-    "ann_hnsw_exact" -> knnOracle(10, 10, l2Sql, "ASC"),
-    "ann_hnsw_persisted_exact" -> knnOracle(10, 10, l2Sql, "ASC"),
-    // cosine graph at the exhaustive beam + exact re-rank: the knn_cos oracle
-    "ann_hnsw_cos_exact" -> knnOracle(10, 10,
-      """sum(CAST(x AS DOUBLE) * CAST(y AS DOUBLE))
-        | / sqrt(sum(CAST(x AS DOUBLE) * CAST(x AS DOUBLE))
-        |      * sum(CAST(y AS DOUBLE) * CAST(y AS DOUBLE)))""".stripMargin, "DESC"),
-    // tombstoned ids simply vanish from the corpus in the oracle
-    "ann_hnsw_tombstone_exact" ->
-      knnOracle(10, 10, l2Sql, "ASC", "e.vec_id >= 5"),
-    "filtered_ann_hnsw_exact" -> conjKnnOracle,
-    // hot-tag subindex probed exhaustively: exact kNN among the tag's docs
-    "filtered_knn_subindex_exact" ->
-      knnOracle(10, 10, l2Sql, "ASC", filterSql = "e.label = q.qlabel"),
-    // pair subindex probed exhaustively: exact conjunctive 2-tag kNN
-    "filtered_knn_pair_subindex_exact" ->
-      knnOracle(10, 10, l2Sql, "ASC",
-        filterSql = "e.label = q.qlabel AND e.vec_id % 7 = (q.qid * 3 + 1) % 7"),
-    // routed graphs at nprobe = C + exhaustive beam: exact brute force
-    "ann_hnsw_routed_exact" -> knnOracle(10, 10, l2Sql, "ASC"),
-    // mass-adaptive routing at minMass = 1 + exhaustive beam: exact
-    "ann_hnsw_routed_auto_exact" -> knnOracle(10, 10, l2Sql, "ASC"),
-    // PQ-ADC with a lossless codebook: exact → same oracle as knn_l2
-    "ann_pq_exact" -> knnOracle(10, 10, l2Sql, "ASC"),
-    // rotated (OPQ) ADC, lossless rotated codebook + original-space
-    // re-rank: exact → same oracle as knn_l2
-    "ann_opq_exact" -> knnOracle(10, 10, l2Sql, "ASC"),
-    // rotated ADC under max-inner-product: exact → same oracle as knn_ip
-    "ann_opq_ip_exact" -> knnOracle(10, 10, dotSql, "DESC"),
-    "ann_pq_persisted_exact" -> knnOracle(10, 10, l2Sql, "ASC"),
-    // resident-ADC serving with the lossless codebook: exact, same oracle
-    "ann_pq_served_exact" -> knnOracle(10, 10, l2Sql, "ASC"),
-    // routed resident ADC at nprobe = C + lossless codes: exact
-    "ann_ivfadc_served_exact" -> knnOracle(10, 10, l2Sql, "ASC"),
-    // residual-coded resident ADC at its degenerate point: exact
-    "ann_ivfadc_residual_served_exact" -> knnOracle(10, 10, l2Sql, "ASC"),
-    // the baseline's literal IVF×SQ8 composition served resident, at
-    // nprobe = C and rerank = n: exact
-    "ann_ivfsq8_served_exact" -> knnOracle(10, 10, l2Sql, "ASC"),
-    // mass-adaptive routing at minMass = 1.0 + rerank = n, shard-side
-    // routing forced: exact
-    "ann_ivfsq8_mass_exact" -> knnOracle(10, 10, l2Sql, "ASC"),
-    // graph-routed coarse quantizer at efRoute = C (exact linear rank),
-    // minMass = 1.0 + rerank = n, shard-side: exact
-    "ann_ivfsq8_graphroute_exact" -> knnOracle(10, 10, l2Sql, "ASC"),
-    "ann_ivfpq_residual_exact" -> knnOracle(10, 10, l2Sql, "ASC"),
-    "ann_ivfpq_persisted_exact" -> knnOracle(10, 10, l2Sql, "ASC"),
-    // OPQ rotation in front of the residual IVFPQ chain, original-space
-    // re-rank at the degenerate point: exact
-    "ann_opq_ivfpq_exact" -> knnOracle(10, 10, l2Sql, "ASC"),
-    // rotated codes served resident, original-space re-rank: exact
-    "ann_opq_served_exact" -> knnOracle(10, 10, l2Sql, "ASC"),
-    // OPQ through the registry (save → kind dispatch → probe): exact
-    "ann_opq_persisted_exact" -> knnOracle(10, 10, l2Sql, "ASC"),
-    "knn_ip" -> knnOracle(10, 10, dotSql, "DESC"),
-    // IVF probed exhaustively under ip: same oracle as knn_ip
-    "ann_ivf_ip" -> knnOracle(10, 10, dotSql, "DESC"),
-    // spmat round-trip: quantization replicated exactly, integer dot
-    "sparse_mips_spmat" ->
-      """WITH q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 10),
-        |pairs AS (SELECT q.qid, e.vec_id AS id,
-        |                 CAST(floor(CAST(unnest(e.embedding) AS DOUBLE) * 10) AS BIGINT) + 128 AS x,
-        |                 CAST(floor(CAST(unnest(q.qv) AS DOUBLE) * 10) AS BIGINT) + 128 AS y
-        |          FROM embeddings e CROSS JOIN q),
-        |scored AS (SELECT qid, id, CAST(sum(x * y) AS BIGINT) AS score
-        |           FROM pairs GROUP BY qid, id),
-        |ranked AS (SELECT qid, id, score,
-        |                  row_number() OVER (PARTITION BY qid ORDER BY score DESC, id) AS rank
-        |           FROM scored)
-        |SELECT qid, id, score, rank FROM ranked WHERE rank <= 10
-        |""".stripMargin,
-    "filtered_knn" -> knnOracle(20, 10, l2Sql, "ASC", filterSql = "e.label = q.qlabel"),
-    "knn_cos" -> knnOracle(10, 10,
-      """sum(CAST(x AS DOUBLE) * CAST(y AS DOUBLE))
-        | / sqrt(sum(CAST(x AS DOUBLE) * CAST(x AS DOUBLE))
-        |      * sum(CAST(y AS DOUBLE) * CAST(y AS DOUBLE)))""".stripMargin, "DESC"),
-    // integer quantized L2: floor(x*10) per component, exact integer sums
-    "knn_l2_u8" -> knnOracle(10, 10,
-      """sum((CAST(floor(CAST(x AS DOUBLE) * 10) AS BIGINT) - CAST(floor(CAST(y AS DOUBLE) * 10) AS BIGINT))
-        |  * (CAST(floor(CAST(x AS DOUBLE) * 10) AS BIGINT) - CAST(floor(CAST(y AS DOUBLE) * 10) AS BIGINT)))""".stripMargin,
-      "ASC"),
-    // norm trick is a pure rewrite: same oracle as knn_l2 (note the tie-break
-    // caveat: ‖x‖²−2x·q ranks identically to L2 for distinct distances).
-    "knn_norm_trick" -> knnOracle(10, 10, l2Sql, "ASC"),
-    // u8bin round-trip: clamp(floor(x*10)+128, 0, 255) per component, exact
-    // integer L2 — quantization identical on both sides, zero float hazard
-    "knn_l2_u8bin" -> knnOracle(10, 10,
-      """sum((CAST(least(greatest(floor(CAST(x AS DOUBLE) * 10) + 128, 0), 255) AS BIGINT)
-        |    - CAST(least(greatest(floor(CAST(y AS DOUBLE) * 10) + 128, 0), 255) AS BIGINT))
-        |  * (CAST(least(greatest(floor(CAST(x AS DOUBLE) * 10) + 128, 0), 255) AS BIGINT)
-        |    - CAST(least(greatest(floor(CAST(y AS DOUBLE) * 10) + 128, 0), 255) AS BIGINT)))""".stripMargin,
-      "ASC"),
-
-    "text_termfreq" ->
-      s"""WITH $tokensCte
-         |SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-         |FROM tok GROUP BY doc_id, term
-         |""".stripMargin,
-    "text_stats" ->
-      s"""WITH $tokensCte,
-         |agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-         |               CAST(count(DISTINCT term) AS BIGINT) AS n_unique,
-         |               CAST(sum(length(term)) AS BIGINT) AS char_sum
-         |        FROM tok GROUP BY doc_id)
-         |SELECT doc_id, n_tokens, n_unique, char_sum,
-         |       CAST((100 * char_sum) // n_tokens AS BIGINT) AS centi_avg_len
-         |FROM agg
-         |""".stripMargin,
-    "text_quality" ->
-      s"""WITH $tokensCte,
-         |agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-         |               CAST(count(DISTINCT term) AS BIGINT) AS n_unique,
-         |               CAST(sum(CASE WHEN term IN ('the', 'a') THEN 1 ELSE 0 END) AS BIGINT) AS stop_hits
-         |        FROM tok GROUP BY doc_id)
-         |SELECT doc_id, n_tokens,
-         |       CAST((10000 * stop_hits) // n_tokens AS BIGINT) AS stop_bp,
-         |       CAST((10000 * n_unique) // n_tokens AS BIGINT) AS uniq_bp,
-         |       CAST(CASE WHEN n_tokens BETWEEN 20 AND 90
-         |                  AND (10000 * stop_hits) // n_tokens < 2500
-         |            THEN 1 ELSE 0 END AS INT) AS quality_flag
-         |FROM agg
-         |""".stripMargin,
-    "text_langid" ->
-      s"""WITH $tokensCte,
-         |hits AS (SELECT doc_id,
-         |  CAST(sum(CASE WHEN term IN ('the','a') THEN 1 ELSE 0 END) AS BIGINT) AS hits_en,
-         |  CAST(sum(CASE WHEN term IN ('el','la','de','los','que') THEN 1 ELSE 0 END) AS BIGINT) AS hits_es,
-         |  CAST(sum(CASE WHEN term IN ('der','die','das','und') THEN 1 ELSE 0 END) AS BIGINT) AS hits_de,
-         |  CAST(sum(CASE WHEN term IN ('le','la','les','et') THEN 1 ELSE 0 END) AS BIGINT) AS hits_fr
-         |  FROM tok GROUP BY doc_id),
-         |mx AS (SELECT *, greatest(hits_en, hits_es, hits_de, hits_fr) AS max_hits FROM hits)
-         |SELECT doc_id,
-         |       CASE WHEN hits_en = max_hits AND max_hits > 0 THEN 'en'
-         |            WHEN hits_es = max_hits AND max_hits > 0 THEN 'es'
-         |            WHEN hits_de = max_hits AND max_hits > 0 THEN 'de'
-         |            WHEN hits_fr = max_hits AND max_hits > 0 THEN 'fr'
-         |            ELSE 'und' END AS pred_lang,
-         |       max_hits
-         |FROM mx
-         |""".stripMargin,
-    "text_lm_familiarity" ->
-      """WITH g AS (SELECT doc_id,
-        |           unnest(list_transform(range(1, len(l)),
-        |                  i -> array_to_string(l[i:i+1], ' '))) AS gram
-        |    FROM (SELECT doc_id, string_split(text, ' ') AS l FROM documents)),
-        |model AS (SELECT gram, CAST(count(*) AS BIGINT) AS c FROM g GROUP BY 1),
-        |dg AS (SELECT doc_id, gram, CAST(count(*) AS BIGINT) AS tf
-        |       FROM g GROUP BY 1, 2)
-        |SELECT dg.doc_id,
-        |       CAST(sum(dg.tf) AS BIGINT) AS n_bigrams,
-        |       CAST(sum(dg.tf * model.c) AS BIGINT) AS fam_sum,
-        |       CAST((100 * sum(dg.tf * model.c)) // sum(dg.tf) AS BIGINT) AS centi_fam
-        |FROM dg JOIN model USING (gram) GROUP BY dg.doc_id
-        |""".stripMargin,
-    "text_corpus_stats" ->
-      s"""WITH $tokensCte
-         |SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-         |       CAST(count(*) AS BIGINT) AS n_tokens,
-         |       CAST(count(DISTINCT term) AS BIGINT) AS n_vocab
-         |FROM tok
-         |""".stripMargin,
-    // PII scrub: identical injection expression, identical portable
-    // patterns (see Text.EmailPattern — no backslash constructs, so RE2
-    // and Java regex agree byte-for-byte); DuckDB regexp_replace needs the
-    // explicit 'g' flag to match Spark's replace-all semantics
-    "text_redact_pii" ->
-      s"""WITH injected AS (
-         |  SELECT doc_id,
-         |         text || ' contact user' || CAST(doc_id AS VARCHAR)
-         |              || '@example.com from 10.'
-         |              || CAST(doc_id % 256 AS VARCHAR) || '.0.1 call 555-'
-         |              || lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0') || '-'
-         |              || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') AS t
-         |  FROM documents)
-         |SELECT doc_id,
-         |       CAST(len(regexp_extract_all(t, '${Text.EmailPattern}')) AS BIGINT) AS n_emails,
-         |       CAST(len(regexp_extract_all(t, '${Text.Ipv4Pattern}')) AS BIGINT) AS n_ips,
-         |       CAST(len(regexp_extract_all(t, '${Text.PhonePattern}')) AS BIGINT) AS n_phones,
-         |       regexp_replace(regexp_replace(regexp_replace(t,
-         |         '${Text.EmailPattern}', '<EMAIL>', 'g'),
-         |         '${Text.Ipv4Pattern}', '<IP>', 'g'),
-         |         '${Text.PhonePattern}', '<PHONE>', 'g') AS text_clean
-         |FROM injected
-         |""".stripMargin,
-    "pipeline_quality_deciles" ->
-      """WITH g AS (SELECT doc_id,
-        |           unnest(list_transform(range(1, len(l)),
-        |                  i -> array_to_string(l[i:i+1], ' '))) AS gram
-        |    FROM (SELECT doc_id, string_split(text, ' ') AS l FROM documents)),
-        |model AS (SELECT gram, CAST(count(*) AS BIGINT) AS c FROM g GROUP BY 1),
-        |dg AS (SELECT doc_id, gram, CAST(count(*) AS BIGINT) AS tf
-        |       FROM g GROUP BY 1, 2),
-        |f AS (SELECT dg.doc_id,
-        |             CAST((100 * sum(dg.tf * model.c)) // sum(dg.tf) AS BIGINT) AS centi_fam
-        |      FROM dg JOIN model USING (gram) GROUP BY dg.doc_id),
-        |r AS (SELECT doc_id, centi_fam,
-        |             row_number() OVER (ORDER BY centi_fam DESC, doc_id) AS grank,
-        |             count(*) OVER () AS total
-        |      FROM f)
-        |SELECT doc_id, centi_fam, CAST(grank AS BIGINT) AS grank,
-        |       CAST(((grank - 1) * 10) // total AS BIGINT) AS decile
-        |FROM r
-        |""".stripMargin,
-    // the sort key mirrors Spark's: first 60 md5 bits as an integer, and
-    // the compare happens in DOUBLE on both sides (the heap aggregator
-    // compares doubles) so rounding ties break identically
-    "pipeline_stratified" ->
-      """SELECT doc_id, lang, samp_rank FROM (
-        |  SELECT doc_id, lang,
-        |         row_number() OVER (PARTITION BY lang
-        |           ORDER BY CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':strata'), 1, 15))::BIGINT AS DOUBLE),
-        |                    doc_id)
-        |           AS samp_rank
-        |  FROM documents) WHERE samp_rank <= 30
-        |""".stripMargin,
-    "pipeline_mixture_alloc" ->
-      """WITH t AS (SELECT source, CAST(sum(n_chars) AS BIGINT) AS tot
-        |           FROM documents GROUP BY 1),
-        |w AS (SELECT source, tot,
-        |             CAST(floor(sqrt(CAST(tot AS DOUBLE)) * 1000.0) AS BIGINT) AS weight
-        |      FROM t),
-        |s AS (SELECT CAST(sum(weight) AS BIGINT) AS wsum FROM w),
-        |b AS (SELECT source, tot, weight,
-        |             CAST((100000 * weight) // wsum AS BIGINT) AS base,
-        |             CAST((100000 * weight) % wsum AS BIGINT) AS rem
-        |      FROM w, s),
-        |k AS (SELECT CAST(100000 - sum(base) AS BIGINT) AS extra FROM b),
-        |r AS (SELECT *, row_number() OVER (ORDER BY rem DESC, source) AS rr
-        |      FROM b)
-        |SELECT source, tot, weight,
-        |       CAST(base + CASE WHEN rr <= (SELECT extra FROM k)
-        |                        THEN 1 ELSE 0 END AS BIGINT) AS alloc
-        |FROM r
-        |""".stripMargin,
-    "pipeline_sequences" ->
-      s"""WITH $tokensCte,
-         |n AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens FROM tok GROUP BY doc_id),
-         |w AS (SELECT doc_id,
-         |             sum(n_tokens) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) - n_tokens AS cum_before
-         |      FROM n),
-         |sh AS (SELECT doc_id, CAST(cum_before // 2000 AS BIGINT) AS shard FROM w)
-         |SELECT sh.shard, CAST(count(*) AS BIGINT) AS n_docs,
-         |       md5(string_agg(d.text, chr(30) ORDER BY d.doc_id)) AS seq_md5
-         |FROM sh JOIN documents d ON d.doc_id = sh.doc_id
-         |GROUP BY sh.shard
-         |""".stripMargin,
-    "pipeline_mixture_take" ->
-      """WITH t AS (SELECT source, CAST(sum(n_chars) AS BIGINT) AS tot
-        |           FROM documents GROUP BY 1),
-        |w AS (SELECT source, tot,
-        |             CAST(floor(sqrt(CAST(tot AS DOUBLE)) * 1000.0) AS BIGINT) AS weight
-        |      FROM t),
-        |s AS (SELECT CAST(sum(weight) AS BIGINT) AS wsum FROM w),
-        |b AS (SELECT source, weight,
-        |             CAST((200 * weight) // wsum AS BIGINT) AS base,
-        |             CAST((200 * weight) % wsum AS BIGINT) AS rem
-        |      FROM w, s),
-        |k AS (SELECT CAST(200 - sum(base) AS BIGINT) AS extra FROM b),
-        |a AS (SELECT source,
-        |             base + CASE WHEN row_number() OVER (ORDER BY rem DESC, source)
-        |                         <= (SELECT extra FROM k) THEN 1 ELSE 0 END AS alloc
-        |      FROM b),
-        |ranked AS (SELECT source, doc_id,
-        |             row_number() OVER (PARTITION BY source
-        |               ORDER BY CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':mix'), 1, 15))::BIGINT AS DOUBLE),
-        |                        doc_id) AS samp_rank
-        |           FROM documents)
-        |SELECT r.source, r.doc_id, r.samp_rank
-        |FROM ranked r JOIN a ON r.source = a.source
-        |WHERE r.samp_rank <= a.alloc
-        |""".stripMargin,
-    "text_repetition" ->
-      """WITH g AS (SELECT doc_id,
-        |           unnest(list_transform(range(1, len(l)),
-        |                  i -> array_to_string(l[i:i+1], ' '))) AS gram
-        |    FROM (SELECT doc_id, string_split(text, ' ') AS l FROM documents)),
-        |c AS (SELECT doc_id, gram, CAST(count(*) AS BIGINT) AS tf
-        |      FROM g GROUP BY 1, 2)
-        |SELECT doc_id,
-        |       CAST(sum(tf) AS BIGINT) AS n_grams,
-        |       CAST(max(tf) AS BIGINT) AS top_tf,
-        |       CAST((10000 * max(tf)) // sum(tf) AS BIGINT) AS rep_bp
-        |FROM c GROUP BY doc_id
-        |""".stripMargin,
-    "text_fingerprint" ->
-      """SELECT doc_id, md5(text) AS fp, CAST(length(text) AS BIGINT) AS text_len
-        |FROM documents
-        |""".stripMargin,
-    "text_tokens_bpe" ->
-      """WITH p AS (SELECT doc_id,
-        |                  unnest(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 ]')) AS piece
-        |           FROM documents)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_pieces,
-        |       CAST(count(DISTINCT piece) AS BIGINT) AS n_unique_pieces
-        |FROM p GROUP BY doc_id
-        |""".stripMargin,
-
-    "dedup_exact" ->
-      """WITH fp AS (SELECT doc_id, md5(text) AS f FROM documents),
-        |c AS (SELECT f, min(doc_id) AS canonical_id FROM fp GROUP BY f)
-        |SELECT fp.doc_id, c.canonical_id,
-        |       CAST(fp.doc_id != c.canonical_id AS INT) AS is_dup
-        |FROM fp JOIN c USING (f)
-        |""".stripMargin,
-    "dedup_jaccard" ->
-      s"""WITH $shinglesCte,
-         |sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS nsh FROM sh GROUP BY doc_id),
-         |inter AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, CAST(count(*) AS BIGINT) AS i
-         |          FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         |          GROUP BY 1, 2)
-         |SELECT a_id, b_id, CAST((10000 * i) // (sa.nsh + sb.nsh - i) AS BIGINT) AS jaccard_bp
-         |FROM inter JOIN sz sa ON sa.doc_id = a_id JOIN sz sb ON sb.doc_id = b_id
-         |WHERE (10000 * i) // (sa.nsh + sb.nsh - i) >= 5000
-         |""".stripMargin,
-    "dedup_jaccard_capped" ->
-      s"""WITH $shinglesCte,
-         |capped AS (SELECT doc_id, shingle FROM sh
-         |           WHERE shingle NOT IN (SELECT shingle FROM sh
-         |                                 GROUP BY shingle HAVING count(*) > 20)),
-         |sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS nsh FROM capped GROUP BY doc_id),
-         |inter AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, CAST(count(*) AS BIGINT) AS i
-         |          FROM capped a JOIN capped b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         |          GROUP BY 1, 2)
-         |SELECT a_id, b_id, CAST((10000 * i) // (sa.nsh + sb.nsh - i) AS BIGINT) AS jaccard_bp
-         |FROM inter JOIN sz sa ON sa.doc_id = a_id JOIN sz sb ON sb.doc_id = b_id
-         |WHERE (10000 * i) // (sa.nsh + sb.nsh - i) >= 5000
-         |""".stripMargin,
-    // repeated spans: positional length-5 windows; a gram is shared iff
-    // its min and max doc differ (≥ 2 distinct docs). Window positions come
-    // from unnest(generate_series(1, len(t) - 4)) — bounded by each doc's
-    // OWN token count, not a literal that would silently truncate long docs
-    // (generate_series's endpoint must be constant in DuckDB, so the
-    // per-row list+unnest form is the portable way to a derived bound).
-    "dedup_spans" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |wins AS (SELECT doc_id, array_to_string(list_slice(t, i, i + 4), ' ') AS gram
-        |         FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 4)) AS i FROM toks)),
-        |gdf AS (SELECT gram, (min(doc_id) <> max(doc_id)) AS shared
-        |        FROM wins GROUP BY gram)
-        |SELECT w.doc_id,
-        |       CAST(count(*) AS BIGINT) AS n_windows,
-        |       CAST(sum(CASE WHEN g.shared THEN 1 ELSE 0 END) AS BIGINT) AS n_shared,
-        |       CAST((10000 * sum(CASE WHEN g.shared THEN 1 ELSE 0 END)) // count(*) AS BIGINT) AS shared_bp
-        |FROM wins w JOIN gdf g USING (gram) GROUP BY 1
-        |""".stripMargin,
-    // trim: anti-join tokens against the expanded coverage of shared
-    // windows, string_agg the survivors in position order
-    "dedup_spans_trim" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |tok AS (SELECT doc_id, i - 1 AS ti, t[i] AS tok
-        |        FROM (SELECT doc_id, t, unnest(generate_series(1, len(t))) AS i FROM toks)),
-        |wins AS (SELECT doc_id, i - 1 AS wi, array_to_string(list_slice(t, i, i + 4), ' ') AS gram
-        |         FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 4)) AS i FROM toks)),
-        |gdf AS (SELECT gram FROM wins GROUP BY gram HAVING min(doc_id) <> max(doc_id)),
-        |cov AS (SELECT DISTINCT w.doc_id, w.wi + o.o AS ti
-        |        FROM wins w JOIN gdf USING (gram), generate_series(0, 4) o(o)),
-        |kept AS (SELECT t.doc_id, t.ti, t.tok FROM tok t
-        |         ANTI JOIN cov c ON t.doc_id = c.doc_id AND t.ti = c.ti),
-        |agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
-        |               string_agg(tok, ' ' ORDER BY ti) AS txt
-        |        FROM kept GROUP BY doc_id)
-        |SELECT d.doc_id,
-        |       CAST(len(string_split(d.text, ' ')) AS BIGINT) AS n_tokens,
-        |       CAST(coalesce(a.n_kept, 0) AS BIGINT) AS n_kept,
-        |       coalesce(a.txt, '') AS text_clean
-        |FROM documents d LEFT JOIN agg a USING (doc_id)
-        |""".stripMargin,
-    "dedup_decontam" ->
-      s"""WITH $shinglesCte,
-         |bg AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 20 = 0),
-         |hits AS (SELECT sh.doc_id, CAST(count(*) AS BIGINT) AS n_hits
-         |         FROM sh JOIN bg USING (shingle)
-         |         WHERE sh.doc_id % 20 <> 0
-         |         GROUP BY sh.doc_id)
-         |SELECT d.doc_id,
-         |       CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
-         |       CAST(CASE WHEN coalesce(h.n_hits, 0) > 0 THEN 1 ELSE 0 END AS INT) AS contaminated
-         |FROM documents d LEFT JOIN hits h ON h.doc_id = d.doc_id
-         |WHERE d.doc_id % 20 <> 0
-         |""".stripMargin,
-    "dedup_minhash_lsh" ->
-      s"""WITH $shinglesCte,
-         |mh AS (SELECT doc_id, g.seed AS seed,
-         |              min(xor(('0x' || substr(md5(shingle), 1, 15))::BIGINT,
-         |                      ('0x' || substr(md5('seed:' || CAST(g.seed AS VARCHAR)), 1, 15))::BIGINT)) AS mh
-         |       FROM sh CROSS JOIN generate_series(0, 15) g(seed) GROUP BY 1, 2),
-         |bands AS (SELECT doc_id, seed // 4 AS band,
-         |                 string_agg(mh::VARCHAR, '-' ORDER BY seed) AS bkey
-         |          FROM mh GROUP BY 1, 2),
-         |cand AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-         |         FROM bands a JOIN bands b
-         |           ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
-         |sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS nsh FROM sh GROUP BY doc_id),
-         |inter AS (SELECT c.a_id, c.b_id, CAST(count(*) AS BIGINT) AS i
-         |          FROM cand c
-         |          JOIN sh a ON a.doc_id = c.a_id
-         |          JOIN sh b ON b.doc_id = c.b_id AND b.shingle = a.shingle
-         |          GROUP BY 1, 2)
-         |SELECT a_id, b_id, CAST((10000 * i) // (sa.nsh + sb.nsh - i) AS BIGINT) AS jaccard_bp
-         |FROM inter JOIN sz sa ON sa.doc_id = a_id JOIN sz sb ON sb.doc_id = b_id
-         |WHERE (10000 * i) // (sa.nsh + sb.nsh - i) >= 5000
-         |""".stripMargin,
-    // same LSH pair construction as dedup_minhash_lsh, then component
-    // labels via recursive reachability (min reachable doc_id)
-    "dedup_clusters" -> (dupClustersCtes +
-      "SELECT doc_id, cluster_id FROM cl\n"),
-    // the dedup RESOLUTION step: one kept representative per near-dup
-    // cluster — (n_chars desc, doc_id asc), the keep-the-longest rule
-    "dedup_canonical" -> (dupClustersCtes +
-      """SELECT cluster_id, doc_id AS keep_id FROM (
-        |  SELECT cl.cluster_id, cl.doc_id,
-        |         row_number() OVER (PARTITION BY cl.cluster_id
-        |           ORDER BY d.n_chars DESC, cl.doc_id) AS rn
-        |  FROM cl JOIN documents d ON d.doc_id = cl.doc_id)
-        |WHERE rn = 1
-        |""".stripMargin),
-    "dedup_simhash" -> (simhashSql + "SELECT doc_id, simhash FROM sig\n"),
-    "dedup_simhash_pairs" -> (simhashSql +
-      """SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |       CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-        |FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.simhash, b.simhash)) <= 2
-        |""".stripMargin),
-    // replicates embedLshSig exactly: integer-quantized vector × md5-derived
-    // integer hyperplanes → 32 sign bits → 4×8-bit bands → candidate pairs →
-    // exact cosine top-1 among candidates
-    "dedup_embed_nn" ->
-      s"""WITH dims AS (SELECT vec_id, g.i AS i,
-         |                     CAST(floor(CAST(embedding[g.i + 1] AS DOUBLE) * 100) AS BIGINT) AS qx
-         |              FROM embeddings CROSS JOIN generate_series(0, 63) g(i)),
-         |hp AS (SELECT gj.j AS j, gi.i AS i,
-         |              (('0x' || substr(md5('hp:' || gj.j || ':' || gi.i), 1, 8))::BIGINT % 2001) - 1000 AS h
-         |       FROM generate_series(0, 31) gj(j) CROSS JOIN generate_series(0, 63) gi(i)),
-         |s AS (SELECT vec_id, j, sum(qx * h) AS s FROM dims JOIN hp USING (i) GROUP BY 1, 2),
-         |sig AS (SELECT vec_id,
-         |               CAST(sum(CASE WHEN s > 0 THEN CAST(pow(2.0, j) AS BIGINT) ELSE 0 END) AS BIGINT) AS sig
-         |        FROM s GROUP BY 1),
-         |bands AS (SELECT vec_id, gb.b AS band, (sig >> (8 * gb.b)) & 255 AS bval
-         |          FROM sig CROSS JOIN generate_series(0, 3) gb(b)),
-         |cand AS (SELECT DISTINCT a.vec_id AS qid, c.vec_id AS nid
-         |         FROM bands a JOIN bands c
-         |           ON a.band = c.band AND a.bval = c.bval AND a.vec_id != c.vec_id),
-         |pairs AS (SELECT cand.qid, cand.nid,
-         |                 unnest(e.embedding) AS x, unnest(q.embedding) AS y
-         |          FROM cand JOIN embeddings e ON e.vec_id = cand.nid
-         |                    JOIN embeddings q ON q.vec_id = cand.qid),
-         |scored AS (SELECT qid, nid,
-         |                  sum(CAST(x AS DOUBLE) * CAST(y AS DOUBLE))
-         |                  / sqrt(sum(CAST(x AS DOUBLE) * CAST(x AS DOUBLE))
-         |                       * sum(CAST(y AS DOUBLE) * CAST(y AS DOUBLE))) AS c
-         |           FROM pairs GROUP BY qid, nid),
-         |ranked AS (SELECT qid, nid AS neighbor_id,
-         |                  row_number() OVER (PARTITION BY qid ORDER BY c DESC, nid) AS rank
-         |           FROM scored)
-         |SELECT qid, neighbor_id, rank FROM ranked WHERE rank <= 1
-         |""".stripMargin,
-
-    "pipeline_split" ->
-      """WITH b AS (SELECT doc_id,
-        |                  ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % 100 AS bucket
-        |           FROM documents)
-        |SELECT doc_id, bucket,
-        |       CASE WHEN bucket < 80 THEN 'train'
-        |            WHEN bucket < 90 THEN 'val'
-        |            ELSE 'test' END AS split
-        |FROM b
-        |""".stripMargin,
-    "pipeline_sample" ->
-      """WITH w AS (SELECT doc_id, source,
-        |           ('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':sample'), 1, 15))::BIGINT % 10000 AS sample_bucket,
-        |           CAST(2000 + 500 * (CAST(substr(source, 4) AS BIGINT) % 9) AS BIGINT) AS weight_bp
-        |    FROM documents)
-        |SELECT doc_id, source, sample_bucket, weight_bp,
-        |       CAST(CASE WHEN sample_bucket < weight_bp THEN 1 ELSE 0 END AS INT) AS keep
-        |FROM w
-        |""".stripMargin,
-    "pipeline_funnel" ->
-      s"""WITH corpus AS (SELECT * FROM documents WHERE doc_id % 20 <> 0),
-         |ctok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM corpus),
-         |q AS (SELECT doc_id,
-         |      CAST(CASE WHEN count(*) BETWEEN 20 AND 90
-         |            AND (10000 * sum(CASE WHEN term IN ('the', 'a') THEN 1 ELSE 0 END)) // count(*) < 2500
-         |           THEN 1 ELSE 0 END AS INT) AS quality_flag
-         |      FROM ctok GROUP BY doc_id),
-         |fp AS (SELECT doc_id, md5(text) AS fp FROM corpus),
-         |dd AS (SELECT f.doc_id, CAST(f.doc_id != m.min_id AS INT) AS is_dup
-         |       FROM fp f JOIN (SELECT fp, min(doc_id) AS min_id FROM fp GROUP BY fp) m
-         |         ON f.fp = m.fp),
-         |$shinglesCte,
-         |bg AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 20 = 0),
-         |hits AS (SELECT sh.doc_id, count(*) AS n_hits
-         |         FROM sh JOIN bg USING (shingle)
-         |         WHERE sh.doc_id % 20 <> 0 GROUP BY sh.doc_id),
-         |smp AS (SELECT doc_id,
-         |        CAST(CASE WHEN ('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':sample'), 1, 15))::BIGINT % 10000
-         |              < 2000 + 500 * (CAST(substr(source, 4) AS BIGINT) % 9)
-         |             THEN 1 ELSE 0 END AS INT) AS sample_keep
-         |        FROM corpus)
-         |SELECT c.doc_id, q.quality_flag, dd.is_dup,
-         |       CAST(CASE WHEN coalesce(h.n_hits, 0) > 0 THEN 1 ELSE 0 END AS INT) AS contaminated,
-         |       smp.sample_keep,
-         |       CAST(CASE WHEN q.quality_flag = 1 AND dd.is_dup = 0
-         |                  AND coalesce(h.n_hits, 0) = 0 AND smp.sample_keep = 1
-         |            THEN 1 ELSE 0 END AS INT) AS kept
-         |FROM corpus c
-         |JOIN q USING (doc_id) JOIN dd USING (doc_id)
-         |LEFT JOIN hits h ON h.doc_id = c.doc_id
-         |JOIN smp USING (doc_id)
-         |""".stripMargin,
-    "pipeline_shards" ->
-      s"""WITH $tokensCte,
-         |n AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens FROM tok GROUP BY doc_id),
-         |w AS (SELECT doc_id, n_tokens,
-         |             sum(n_tokens) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) - n_tokens AS cum_before
-         |      FROM n)
-         |SELECT doc_id, n_tokens, CAST(cum_before // 2000 AS BIGINT) AS shard FROM w
-         |""".stripMargin,
-    "sparse_mips" ->
-      s"""WITH $tokensCte, $sparseTfCte,
-         |q AS (SELECT id AS qid, dim, v AS qv FROM tf WHERE id < 10),
-         |s AS (SELECT qid, tf.id AS id, CAST(sum(qv * v) AS BIGINT) AS score
-         |      FROM tf JOIN q USING (dim) GROUP BY 1, 2),
-         |r AS (SELECT qid, id, score,
-         |             row_number() OVER (PARTITION BY qid ORDER BY score DESC, id) AS rank
-         |      FROM s)
-         |SELECT qid, id, score, CAST(rank AS BIGINT) AS rank FROM r WHERE rank <= 10
-         |""".stripMargin,
-    "sparse_sparsify" ->
-      s"""WITH $tokensCte, $sparseTfCte,
-         |w AS (SELECT id, dim, v,
-         |             sum(v) OVER (PARTITION BY id ORDER BY v DESC, dim
-         |                          ROWS UNBOUNDED PRECEDING) - v AS cum_before,
-         |             sum(v) OVER (PARTITION BY id) AS total
-         |      FROM tf)
-         |SELECT id, dim, v FROM w WHERE cum_before * 10 < total * 8
-         |""".stripMargin,
-    "sparse_budget" -> sparseBudgetOracle,
-    // resident posting serving is exact vs the budgeted dataflow: same oracle
-    "sparse_budget_served" -> sparseBudgetOracle,
-    // impact-ordered serving at FULL budget over the untruncated inverted
-    // file covers every posting, so it equals the plain exact MIPS join
-    "sparse_impact_budget_exact" ->
-      s"""WITH $tokensCte, $sparseTfCte,
-         |q AS (SELECT id AS qid, dim, v AS qv FROM tf WHERE id < 10),
-         |s AS (SELECT qid, tf.id AS id, CAST(sum(qv * v) AS BIGINT) AS score
-         |      FROM tf JOIN q USING (dim) GROUP BY 1, 2),
-         |r AS (SELECT qid, id, score,
-         |             row_number() OVER (PARTITION BY qid ORDER BY score DESC, id) AS rank
-         |      FROM s)
-         |SELECT qid, id, score, CAST(rank AS BIGINT) AS rank FROM r WHERE rank <= 10
-         |""".stripMargin,
-
-    "tag_postings" ->
-      """SELECT CAST(label AS INT) AS tag, vec_id AS id FROM embeddings
-        |UNION ALL
-        |SELECT CAST(10 + vec_id % 7 AS INT) AS tag, vec_id AS id FROM embeddings
-        |""".stripMargin,
-    "tag_stats" ->
-      """WITH p AS (SELECT CAST(label AS INT) AS tag, vec_id AS id FROM embeddings
-        |           UNION ALL
-        |           SELECT CAST(10 + vec_id % 7 AS INT) AS tag, vec_id AS id FROM embeddings)
-        |SELECT tag, CAST(count(*) AS BIGINT) AS df,
-        |       CAST((10000 * count(*)) // (SELECT count(*) FROM embeddings) AS BIGINT) AS freq_bp
-        |FROM p GROUP BY tag
-        |""".stripMargin,
-    "tag_union" ->
-      """WITH p AS (SELECT CAST(label AS INT) AS tag, vec_id AS id FROM embeddings
-        |           UNION ALL
-        |           SELECT CAST(10 + vec_id % 7 AS INT) AS tag, vec_id AS id FROM embeddings),
-        |q AS (SELECT vec_id AS qid, CAST(label AS INT) AS t1,
-        |             CAST(10 + (vec_id * 3 + 1) % 7 AS INT) AS t2
-        |      FROM embeddings WHERE vec_id < 10),
-        |qt AS (SELECT qid, t1 AS tag FROM q UNION ALL SELECT qid, t2 AS tag FROM q)
-        |SELECT DISTINCT qid, id FROM qt JOIN p USING (tag)
-        |""".stripMargin,
-    "ann_ivf_hist" ->
-      """WITH c AS (SELECT vec_id AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 8),
-        |pairs AS (SELECT e.vec_id AS id, c.cid,
-        |                 unnest(e.embedding) AS x, unnest(c.cvec) AS y
-        |          FROM embeddings e CROSS JOIN c),
-        |d AS (SELECT id, cid,
-        |             sum((CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))) AS dd
-        |      FROM pairs GROUP BY 1, 2),
-        |best AS (SELECT id, cid
-        |         FROM (SELECT id, cid, row_number() OVER (PARTITION BY id ORDER BY dd, cid) AS rn FROM d)
-        |         WHERE rn = 1),
-        |cnts AS (SELECT cid, CAST(count(*) AS BIGINT) AS cnt FROM best GROUP BY cid)
-        |SELECT cid, cnt,
-        |       CAST(sum(cnt) OVER (ORDER BY cid ROWS UNBOUNDED PRECEDING) - cnt AS BIGINT) AS offset
-        |FROM cnts
-        |""".stripMargin,
-    "filtered_knn2" -> conjKnnOracle,
-    // signature prefilter and selectivity routing are lossless plan rewrites:
-    // identical results to the exact conjunctive-filter kNN
-    "filtered_knn_sig" -> conjKnnOracle,
-    // resident signature-scan serving is exact: same oracle
-    "filtered_knn_served" -> conjKnnOracle,
-    "filtered_knn_routed" -> conjKnnOracle,
-    // the complete planner at the exhaustive beam: qid < 10 are 2-tag
-    // queries (label AND mod-7), qid in [10, 20) single-mod-7-tag (the
-    // graph branch) — both branches exact, one mixed-filter oracle
-    "filtered_knn_planner_exact" -> knnOracle(20, 10, l2Sql, "ASC",
-      filterSql = "(q.qid >= 10 OR e.label = q.qlabel) " +
-        "AND e.vec_id % 7 = (q.qid * 3 + 1) % 7"),
-    // bucketed layout is a physical rewrite; same logical result
-    "filtered_knn_bucketed" -> conjKnnOracle,
-    // conjunctive tags + integer quantized L2 (exact integer arithmetic)
-    "filtered_knn_u8" -> knnOracle(20, 10,
-      """sum((CAST(floor(CAST(x AS DOUBLE) * 10) AS BIGINT) - CAST(floor(CAST(y AS DOUBLE) * 10) AS BIGINT))
-        |  * (CAST(floor(CAST(x AS DOUBLE) * 10) AS BIGINT) - CAST(floor(CAST(y AS DOUBLE) * 10) AS BIGINT)))""".stripMargin,
-      "ASC",
-      filterSql = "e.label = q.qlabel AND e.vec_id % 7 = (q.qid * 3 + 1) % 7"),
-    // exhaustive IVF (nprobe = C) is exact brute force
-    "ann_ivf" -> knnOracle(10, 10, l2Sql, "ASC"),
-    "ann_ivf_persisted" -> knnOracle(10, 10, l2Sql, "ASC"),
-    // recall_ivf_partial / recall_hnsw: no oracle (approximate paths;
-    // recall thresholds asserted in IndexSpec)
-    // ann_hnsw: intentionally no oracle (approximate; recall-graded in tests)
-
-    // net effect of the demo runbook (incl. re-insert of [50,100)):
-    // live ids are exactly [50, 400)
-    "runbook_final" -> knnOracle(10, 10, l2Sql, "ASC",
-      filterSql = "e.vec_id >= 50 AND e.vec_id < 400"),
-    // same net live set, served by the graph+tombstone+delta composition
-    // at the exhaustive beam (exact)
-    "runbook_graph_final" -> knnOracle(10, 10, l2Sql, "ASC",
-      filterSql = "e.vec_id >= 50 AND e.vec_id < 400"),
-    "events_sessions" ->
-      """WITH e AS (SELECT user_id, event_id, ts FROM events),
-        |flags AS (SELECT user_id, event_id, ts,
-        |                 CASE WHEN lag(ts) OVER w IS NULL
-        |                        OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 30 * 60 * 1000000
-        |                      THEN 1 ELSE 0 END AS new_session
-        |          FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |ids AS (SELECT user_id, ts,
-        |               CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-        |        FROM flags)
-        |SELECT user_id, session_id, min(ts) AS session_start, max(ts) AS session_end,
-        |       CAST(count(*) AS BIGINT) AS n_events
-        |FROM ids GROUP BY user_id, session_id
-        |""".stripMargin,
-    "events_funnel" ->
-      """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS t FROM events),
-        |u AS (SELECT DISTINCT user_id FROM e),
-        |s0 AS (SELECT user_id, min(t) AS t0 FROM e WHERE event_type = 'view' GROUP BY user_id),
-        |s1 AS (SELECT e.user_id, min(e.t) AS t1 FROM e JOIN s0 ON e.user_id = s0.user_id
-        |       WHERE e.event_type = 'click' AND e.t >= s0.t0 GROUP BY e.user_id),
-        |s2 AS (SELECT e.user_id, min(e.t) AS t2 FROM e JOIN s1 ON e.user_id = s1.user_id
-        |       WHERE e.event_type = 'purchase' AND e.t >= s1.t1 GROUP BY e.user_id)
-        |SELECT u.user_id,
-        |       CAST(CASE WHEN s0.user_id IS NULL THEN 0 ELSE 1 END AS INT) AS reached_view,
-        |       CAST(CASE WHEN s1.user_id IS NULL THEN 0 ELSE 1 END AS INT) AS reached_click,
-        |       CAST(CASE WHEN s2.user_id IS NULL THEN 0 ELSE 1 END AS INT) AS reached_purchase
-        |FROM u
-        |LEFT JOIN s0 ON u.user_id = s0.user_id
-        |LEFT JOIN s1 ON u.user_id = s1.user_id
-        |LEFT JOIN s2 ON u.user_id = s2.user_id
-        |""".stripMargin,
-    // floor() in the oracle mirrors Spark's truncating double→long cast
-    "events_tumbling" ->
-      """SELECT time_bucket(INTERVAL '1 hour', ts) AS ws,
-        |       time_bucket(INTERVAL '1 hour', ts) + INTERVAL '1 hour' AS we,
-        |       event_type, CAST(count(*) AS BIGINT) AS n_events,
-        |       CAST(sum(CAST(floor(value * 100) AS BIGINT)) AS BIGINT) AS value_cents
-        |FROM events GROUP BY 1, 2, 3
-        |""".stripMargin,
-    "events_sliding" ->
-      """WITH w AS (
-        |  SELECT time_bucket(INTERVAL '1 hour', ts) AS ws, event_type, value FROM events
-        |  UNION ALL
-        |  SELECT time_bucket(INTERVAL '1 hour', ts) - INTERVAL '1 hour' AS ws, event_type, value FROM events)
-        |SELECT ws, ws + INTERVAL '2 hours' AS we, event_type,
-        |       CAST(count(*) AS BIGINT) AS n_events,
-        |       CAST(sum(CAST(floor(value * 100) AS BIGINT)) AS BIGINT) AS value_cents
-        |FROM w GROUP BY 1, 2, 3
-        |""".stripMargin,
-
-    "mm_assets" ->
-      s"""WITH $mmAssetsCte
-         |SELECT asset_id, kind, n_bytes, width, height, n_frames FROM assets
-         |""".stripMargin,
-    "mm_resize" ->
-      s"""WITH $mmAssetsCte
-         |SELECT asset_id, width, height,
-         |       CAST(floor(width * least(1.0, 48.0 / greatest(width, height))) AS INT) AS out_width,
-         |       CAST(floor(height * least(1.0, 48.0 / greatest(width, height))) AS INT) AS out_height
-         |FROM assets
-         |""".stripMargin,
-    "mm_frames" ->
-      s"""WITH $mmAssetsCte
-         |SELECT asset_id, n_frames, CAST(unnest(range(0, n_frames, 2)) AS INT) AS frame_idx
-         |FROM assets WHERE kind = 'video'
-         |""".stripMargin,
-    "mm_features" ->
-      s"""WITH $mmAssetsCte
-         |SELECT asset_id, kind, n_bytes, CAST(32 AS INT) AS feat_dim FROM assets
-         |""".stripMargin,
-    // the synthetic-PNG pattern recomputed in SQL (no codec): sizes are
-    // bounded by 12 so a fixed series + filter replaces the lateral
-    // generate_series DuckDB doesn't support
-    "mm_decode" ->
-      """WITH ids AS (SELECT doc_id, 8 + doc_id % 5 AS w, 8 + (doc_id*3) % 5 AS h
-        |             FROM documents),
-        |px AS (SELECT i.doc_id, i.w, i.h, xs.x, ys.y
-        |       FROM ids i, generate_series(0, 11) xs(x), generate_series(0, 11) ys(y)
-        |       WHERE xs.x < i.w AND ys.y < i.h)
-        |SELECT doc_id AS asset_id,
-        |       CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-        |       CAST(sum((doc_id*7 + x*3 + y*11) % 256) AS BIGINT) AS sum_r,
-        |       CAST(sum((doc_id*13 + x*5 + y*2) % 256) AS BIGINT) AS sum_g,
-        |       CAST(sum((doc_id*3 + x + y*7) % 256) AS BIGINT) AS sum_b
-        |FROM px GROUP BY 1, 2, 3
-        |""".stripMargin,
-    // the source pattern mapped through the nearest-neighbor integer
-    // scaler (sx = x*w/ow, sy = y*h/oh, floor division) — no codec needed
-    "mm_resize_px" ->
-      """WITH ids AS (SELECT doc_id, 8 + doc_id % 5 AS w, 8 + (doc_id*3) % 5 AS h
-        |             FROM documents),
-        |dims AS (SELECT doc_id, w, h, GREATEST(w, h) AS den,
-        |                LEAST(6, GREATEST(w, h)) AS num FROM ids),
-        |od AS (SELECT doc_id, w, h,
-        |              GREATEST(1, w * num // den) AS ow,
-        |              GREATEST(1, h * num // den) AS oh FROM dims),
-        |px AS (SELECT o.doc_id, o.w, o.h, o.ow, o.oh, xs.x, ys.y
-        |       FROM od o, generate_series(0, 11) xs(x), generate_series(0, 11) ys(y)
-        |       WHERE xs.x < o.ow AND ys.y < o.oh),
-        |src AS (SELECT doc_id, ow, oh,
-        |               (x * w // ow) AS sx, (y * h // oh) AS sy FROM px)
-        |SELECT doc_id AS asset_id,
-        |       CAST(ow AS INTEGER) AS width, CAST(oh AS INTEGER) AS height,
-        |       CAST(sum((doc_id*7 + sx*3 + sy*11) % 256) AS BIGINT) AS sum_r,
-        |       CAST(sum((doc_id*13 + sx*5 + sy*2) % 256) AS BIGINT) AS sum_g,
-        |       CAST(sum((doc_id*3 + sx + sy*7) % 256) AS BIGINT) AS sum_b
-        |FROM src GROUP BY 1, 2, 3
-        |""".stripMargin,
-
-    "q3_revenue" ->
-      """SELECT l_orderkey, o_orderdate,
-        |       CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)) AS BIGINT) AS revenue_cents
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01'
-        |  AND l_shipdate > TIMESTAMP '1998-01-01'
-        |GROUP BY 1, 2
-        |""".stripMargin,
-    "q5_region" ->
-      """SELECT n_name,
-        |       CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)) AS BIGINT) AS revenue_cents,
-        |       CAST(count(*) AS BIGINT) AS n_items
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA'
-        |GROUP BY 1
-        |""".stripMargin,
-    "events_first_per_user" ->
-      """SELECT user_id, event_id, event_type,
-        |       CAST(rn AS BIGINT) AS rn
-        |FROM (SELECT user_id, event_id, event_type,
-        |             row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-        |      FROM events)
-        |WHERE rn <= 3
-        |""".stripMargin,
-    "part_top_brand" ->
-      """SELECT p_brand, p_partkey, CAST(rn AS BIGINT) AS rn
-        |FROM (SELECT p_brand, p_partkey,
-        |             row_number() OVER (PARTITION BY p_brand ORDER BY p_retailprice DESC, p_partkey) AS rn
-        |      FROM part)
-        |WHERE rn <= 3
-        |""".stripMargin,
-    "events_json" ->
-      """SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
-        |       CAST(sum(CAST(props->>'$.k' AS BIGINT)) AS BIGINT) AS sum_k,
-        |       CAST(max(CAST(props->>'$.k' AS BIGINT)) AS BIGINT) AS max_k
-        |FROM events GROUP BY 1
-        |""".stripMargin,
-  )
-
-  /** DuckDB-side derived asset table (mirrors Multimodal.assets). */
-  private val mmAssetsCte =
-    """assets AS (SELECT doc_id AS asset_id,
-      |       (['image','audio','video'])[(doc_id % 3) + 1] AS kind,
-      |       CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-      |       CAST(32 + (doc_id % 4) * 16 AS INT) AS width,
-      |       CAST(32 + ((doc_id * 7) % 4) * 16 AS INT) AS height,
-      |       CAST(1 + (doc_id % 8) AS INT) AS n_frames
-      |FROM documents)""".stripMargin
-
-  /** Exact 2-tag conjunctive filtered kNN oracle: both derived query tags
-    * must be in the base row's derived tag set. */
-  private def conjKnnOracle: String =
-    knnOracle(20, 10, l2Sql, "ASC",
-      filterSql = "e.label = q.qlabel AND e.vec_id % 7 = (q.qid * 3 + 1) % 7")
-
-  /** Budgeted sparse MIPS oracle — shared by the dataflow query and its
-    * (exact, row-for-row equal) resident-postings serving form. */
-  private def sparseBudgetOracle: String =
-    s"""WITH $tokensCte, $sparseTfCte,
-       |p AS (SELECT id, dim, v,
-       |             row_number() OVER (PARTITION BY dim ORDER BY v DESC, id) AS rn
-       |      FROM tf),
-       |tp AS (SELECT id, dim, v FROM p WHERE rn <= 16),
-       |q AS (SELECT id AS qid, dim, v AS qv FROM tf WHERE id < 10),
-       |s AS (SELECT qid, tp.id AS id, CAST(sum(qv * v) AS BIGINT) AS score
-       |      FROM tp JOIN q USING (dim) GROUP BY 1, 2),
-       |r AS (SELECT qid, id, score,
-       |             row_number() OVER (PARTITION BY qid ORDER BY score DESC, id) AS rank
-       |      FROM s)
-       |SELECT qid, id, score, CAST(rank AS BIGINT) AS rank FROM r WHERE rank <= 10
-       |""".stripMargin
 }

@@ -2,10 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Spark-free gates for the two pure rules `graft.Bench` runs on: the
-  * matched-recall knob pick every sweep family's headline uses, and the
-  * rule that keeps a filtered run from replacing the committed full-run
-  * artifact. */
+/** Spark-free gates for the pure rules `graft.Bench` runs on: the
+  * matched-recall knob pick every sweep family's headline uses, the rule
+  * that keeps a filtered run from replacing the committed full-run
+  * artifact, and how a per-query window is timed. */
 class BenchSpec extends AnyFunSuite {
 
   test("pickKnob: smallest knob clearing 0.9, from unsorted points") {
@@ -44,5 +44,22 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.filterVars.toSet === Set("SPARK_GRAFT_TRACKS",
       "SPARK_GRAFT_IVF_FAMILIES", "SPARK_GRAFT_QPS_ONLY",
       "SPARK_GRAFT_SWEEP_CAP_PCT"))
+  }
+
+  test("timed: a throwing query is a failure with its exception, not a time") {
+    val r = Bench.timed(Map.empty)(throw new IllegalStateException("no \"table\"\nhere"))
+    assert(r === Left("java.lang.IllegalStateException: no 'table' here"))
+  }
+
+  test("timed: fixtures built inside the window are not the query's seconds") {
+    val fixtures = scala.collection.mutable.Map("built_before" -> 5.0)
+    val t0 = System.nanoTime()
+    val r = Bench.timed(fixtures.toMap) {
+      Thread.sleep(100)
+      fixtures("built_inside") = 0.08
+    }
+    val outer = (System.nanoTime() - t0) / 1e9
+    val sec = r.toOption.get
+    assert(sec >= 0.1 - 0.08 - 1e-3 && sec <= outer - 0.08, s"$sec of $outer")
   }
 }

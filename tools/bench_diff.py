@@ -13,15 +13,19 @@ Reported:
   1. key-set differences, recursively (dict keys; list lengths, and the
      dicts inside lists index by index). `--ignore queries` skips a
      subtree by dotted path (for the compact line, whose `queries` holds
-     only the slowest rows that fit its byte budget);
+     only the slowest rows that fit its byte budget). The timing loop's
+     own records (TIMING_PATHS: which rows took fewer passes) are not
+     compared here; section 5 lists them;
   2. value changes in qps.op and qps.recall, and in every sweep family's
      (knob, recall) pairs;
   3. streaming_replay checkpoints and recalls;
   4. per-row q/s (headline rows and sweep points), FLAGGED only when the
      ratio between the two medians exceeds the larger of the two rows'
      `spread` (max/min over the row's samples);
-  5. the per-query map's seconds — single-shot wall times, diagnostic
-     only (no spread exists to judge them by), listed and never flagged.
+  5. the timing loop's records (`qps.reps_capped`: rows that took fewer
+     passes, and how many) and the per-query map's seconds — sample
+     counts and single-shot wall times, diagnostic only (no spread exists
+     to judge them by), listed and never flagged.
 
 Exit status 0 when sections 1-3 show no difference (parity), 1 otherwise;
 timing sections never change the status.
@@ -31,6 +35,8 @@ import sys
 
 STAT_KEYS = {"qps", "spread", "recall", "gc_worst_ms", "cpu_frac_worst",
              "cpu_frac_med"}
+# records of how the timed loop sampled a run, not of what it computed
+TIMING_PATHS = {"qps.reps_capped"}
 
 
 def load(path):
@@ -119,7 +125,7 @@ def main(argv):
     differs = False
 
     out = []
-    key_diffs(A, B, "", ignore, out)
+    key_diffs(A, B, "", ignore | TIMING_PATHS, out)
     differs |= section("key sets", out)
 
     out = []
@@ -160,6 +166,13 @@ def main(argv):
     for (name, x, y, sp), flag in zip(rows, flags):
         print(f"{'  FLAG' if flag else '      '} {name:55s} {x:>12.1f} -> "
               f"{y:>12.1f}  x{(y / x if x else float('inf')):.2f}  spread {sp:.2f}")
+
+    ca, cb = qa.get("reps_capped", {}), qb.get("reps_capped", {})
+    print(f"== timing-loop records (reps_capped, never flagged): "
+          f"{len(ca)} -> {len(cb)} capped rows")
+    for k in sorted(set(ca) | set(cb)):
+        if ca.get(k) != cb.get(k):
+            print(f"       {k:55s} {str(ca.get(k, '-')):>8s} -> {str(cb.get(k, '-')):>8s}")
 
     qsa, qsb = A.get("queries", {}), B.get("queries", {})
     common = sorted(set(qsa) & set(qsb), key=lambda k: -max(qsa[k], qsb[k]))
