@@ -2,8 +2,10 @@ package graft.index
 
 import graft.operators.TopK
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** One persisted row of a partition-local HNSW graph: the node's id, vector,
   * optional tag set, level, and adjacency per level, plus the owning
@@ -17,34 +19,188 @@ final case class HnswNodeRow(part: Int, seq: Int, id: Long, vec: Array[Float],
                              entryPoint: Int, maxLevel: Int,
                              metric: String)
 
-/** Executor-resident loaded HNSW index (see [[HnswKnn.loadResident]]):
-  * probes are narrow maps over persisted graph objects. Results equal
-  * [[HnswKnn.probeSaved]]/[[HnswKnn.knn]] on the same build. Call
-  * [[unload]] when done — the graphs hold executor storage until then. */
-final class HnswResident(spark: SparkSession,
-                         rdd: org.apache.spark.rdd.RDD[(HnswIndex, Map[Long, Array[Int]])],
-                         dim: Int) {
+/** One partition-local graph and the tag sets of its rows (only rows that
+  * carry tags are in the map). Every graph family — id-hash
+  * ([[HnswKnn]]), centroid-routed ([[HnswRouted]]) and the tag registry
+  * ([[TagSubindexes]]) — is a set of these shards, and the companion
+  * object holds each step they take: build, export, refill, pin. */
+private[index] final case class HnswShard(graph: HnswIndex,
+                                          tags: Map[Long, Array[Int]]) {
 
-  private def run(qs: Array[(Long, Array[Float], Array[Int])], k: Int,
-                  efSearch: Int, filtered: Boolean,
-                  tombstones: Set[Long] = Set.empty): DataFrame = {
+  /** The one shard search: top-k of the nodes that are not tombstones and
+    * whose tags hold every query tag. Blocked nodes are walked through,
+    * never admitted ([[HnswIndex.searchFiltered]]); with no tombstone and
+    * no query tag every node is admitted, the plain search. */
+  def search(qv: Array[Float], qtags: Array[Int], k: Int, ef: Int,
+             dead: Set[Long] = Set.empty): Array[(Long, Double)] =
+    graph.search(qv, k, ef, id => !dead.contains(id) && (qtags.isEmpty || {
+      val t = tags.getOrElse(id, HnswShard.noTags)
+      qtags.forall(t.contains)
+    }))
+}
+
+private[index] object HnswShard {
+
+  val noTags: Array[Int] = Array.emptyIntArray
+
+  /** Insert rows, in the order given, into a fresh graph (SQ8-coded with
+    * `quant`). */
+  def insert(rows: Iterator[(Long, Array[Float], Array[Int])], m: Int,
+             efConstruction: Int, metric: String,
+             quant: Option[(Array[Double], Array[Double])] = None): HnswShard = {
+    val g = new HnswIndex(m, efConstruction, metric, quant)
+    val tags = Map.newBuilder[Long, Array[Int]]
+    rows.foreach { case (id, v, t) =>
+      g.add(id, v)
+      if (t.nonEmpty) tags += id -> t
+    }
+    HnswShard(g, tags.result())
+  }
+
+  /** The id-hash build: `base` (id, vec, optional tags) hashes on id into
+    * `n` partitions and each partition inserts its rows in ascending id
+    * order, so the same base always yields the same graphs. Lazy: one
+    * (partition index, shard) per partition. */
+  def build(base: DataFrame, n: Int, m: Int, efConstruction: Int,
+            metric: String,
+            quant: Option[(Array[Double], Array[Double])] = None): RDD[(Int, HnswShard)] = {
+    val spark = base.sparkSession
     import spark.implicits._
-    val bq = spark.sparkContext.broadcast(qs)
-    val bt = spark.sparkContext.broadcast(tombstones)
-    val local = rdd.flatMap { case (idx, tagMap) =>
-      val dead = bt.value
+    val tags =
+      if (base.columns.contains("tags")) col("tags") else array().cast("array<int>")
+    base.select(col("id").cast("long"), col("vec"), tags.as("tags"))
+      .repartition(n, col("id"))
+      .sortWithinPartitions("id") // deterministic insertion order
+      .as[(Long, Array[Float], Array[Int])].rdd
+      .mapPartitionsWithIndex { (part, it) =>
+        Iterator.single((part, insert(it, m, efConstruction, metric, quant)))
+      }
+  }
+
+  /** The grouped builds' step ([[HnswRouted]] by cluster, the registry by
+    * (key, part)): one group's rows, inserted in ascending id order, as the
+    * node rows of graph `part`. */
+  def buildGroup(part: Int, rows: Iterator[(Long, Array[Float])], m: Int,
+                 efConstruction: Int, metric: String): Iterator[HnswNodeRow] =
+    export(part, insert(rows.toArray.sortBy(_._1).iterator
+      .map { case (id, v) => (id, v, noTags) }, m, efConstruction, metric),
+      metric)
+
+  /** A graph's nodes as [[HnswNodeRow]]s in insertion order (`seq`). */
+  def export(part: Int, s: HnswShard, metric: String): Iterator[HnswNodeRow] = {
+    val (ep, ml) = s.graph.entryState
+    s.graph.exportNodes.iterator.zipWithIndex.map {
+      case ((id, vec, level, links), seq) =>
+        HnswNodeRow(part, seq, id, vec, s.tags.getOrElse(id, noTags), level,
+          links, ep, ml, metric)
+    }
+  }
+
+  /** [[export]] for an SQ8-coded graph: codes instead of vectors. */
+  def exportSq8(part: Int, s: HnswShard,
+                metric: String): Iterator[HnswKnn.HnswSq8NodeRow] = {
+    val (ep, ml) = s.graph.entryState
+    s.graph.exportNodesSq8.iterator.zipWithIndex.map {
+      case ((id, codes, level, links), seq) =>
+        HnswKnn.HnswSq8NodeRow(part, seq, id, codes, level, links, ep, ml, metric)
+    }
+  }
+
+  /** Write node rows in the persisted layout, partitioned by `part`. */
+  def write(spark: SparkSession, nodes: RDD[HnswNodeRow], path: String): Unit =
+    spark.createDataset(nodes)(Encoders.product[HnswNodeRow])
+      .write.mode("overwrite").partitionBy("part").parquet(path)
+
+  /** Rebuild one graph from its node rows by array fill, no insertion:
+    * rows sort on `seq`, so the graph is the built one bit for bit. */
+  def refill(rows: Iterable[HnswNodeRow]): HnswShard = {
+    val a = rows.toArray.sortBy(_.seq)
+    HnswShard(HnswIndex.fromState(a.map(r => (r.id, r.vec, r.level, r.links))
+        .toIndexedSeq, a.head.entryPoint, a.head.maxLevel, a.head.metric),
+      a.iterator.filter(_.tags.nonEmpty).map(r => r.id -> r.tags).toMap)
+  }
+
+  /** [[refill]] for SQ8 rows, with the (mins, spans) they were coded by. */
+  def refillSq8(rows: Iterable[HnswKnn.HnswSq8NodeRow],
+                quant: (Array[Double], Array[Double])): HnswShard = {
+    val a = rows.toArray.sortBy(_.seq)
+    HnswShard(HnswIndex.fromStateSq8(a.map(r => (r.id, r.codes, r.level, r.links))
+        .toIndexedSeq, a.head.entryPoint, a.head.maxLevel, a.head.metric, quant),
+      Map.empty)
+  }
+
+  /** Load persisted node rows executor-resident, one graph per (`key`,
+    * part) — `nodes` holds the [[HnswNodeRow]] columns and whatever `key`
+    * reads. Each graph gets its own RDD partition by exact index: a hash
+    * partitioner co-locates colliding graphs (≈1/e of partitions empty when
+    * the graph count is near the partition count), and a probe task walks
+    * its partition's graphs serially, so collisions silently cap a batch's
+    * task fan. The graph universe costs one metadata-scale distinct. */
+  def pin[K: Encoder: Ordering](nodes: DataFrame, key: Column):
+      (RDD[(K, HnswShard)], Int, Map[K, Array[Int]]) = {
+    val node = Encoders.product[HnswNodeRow]
+    val keyed = nodes.select(key.as("_1"),
+        struct(node.schema.fieldNames.toSeq.map(col): _*).as("_2"))
+      .as(Encoders.tuple(implicitly[Encoder[K]], node))
+    val graphs = keyed.select(col("_1"), col("_2.part")).distinct()
+      .as(Encoders.tuple(implicitly[Encoder[K]], Encoders.scalaInt))
+      .collect().sorted
+    val index = graphs.zipWithIndex.toMap
+    val exact = new org.apache.spark.Partitioner {
+      def numPartitions: Int = math.max(1, graphs.length)
+      // the universe comes from a separate read than the groupBy below;
+      // nothing pins the two reads to one snapshot, so a graph present
+      // only in the second must land deterministically, not fail the job
+      def getPartition(g: Any): Int =
+        index.getOrElse(g.asInstanceOf[(K, Int)], math.floorMod(g.hashCode, numPartitions))
+    }
+    pinShards(keyed.rdd.groupBy((r: (K, HnswNodeRow)) => (r._1, r._2.part), exact)
+      .map { case ((k, _), rows) => (k, refill(rows.map(_._2))) })
+  }
+
+  /** Persist shards `MEMORY_AND_DISK` and materialize them: (the pinned
+    * RDD, their vector dimension, key → the partitions holding it). */
+  def pinShards[K](rdd: RDD[(K, HnswShard)]): (RDD[(K, HnswShard)], Int, Map[K, Array[Int]]) = {
+    val (dim, shardsOf) = ResidentServe.materializeKeyed(
+      rdd.persist(StorageLevel.MEMORY_AND_DISK))(_._1)(
+      s => Iterator(s._2.graph.dim).filter(_ >= 0))
+    (rdd, dim, shardsOf)
+  }
+
+  /** (qid, qvec, qtags) of a query frame; `qtags` empty unless `tagged`. */
+  def queries(df: DataFrame, tagged: Boolean): Array[(Long, Array[Float], Array[Int])] = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    df.select(col("qid").cast("long"), col("qvec"),
+        if (tagged) col("qtags") else array().cast("array<int>"))
+      .as[(Long, Array[Float], Array[Int])].collect()
+  }
+
+  /** The lazy probe of unpinned shards: every shard searches every query
+    * of the broadcast batch; (qid, id, dist) candidates, at most `k` per
+    * (query, shard). */
+  def candidates(shards: RDD[(Int, HnswShard)], queryFrame: DataFrame,
+                 tagged: Boolean, k: Int, ef: Int): DataFrame = {
+    val spark = queryFrame.sparkSession
+    import spark.implicits._
+    val bq = spark.sparkContext.broadcast(queries(queryFrame, tagged))
+    shards.flatMap { case (_, s) =>
       bq.value.iterator.flatMap { case (qid, qv, qt) =>
-        val res =
-          if (filtered || dead.nonEmpty)
-            idx.searchFiltered(qv, k, efSearch,
-              id => !dead.contains(id) &&
-                qt.forall(t => tagMap(id).contains(t)))
-          else idx.search(qv, k, efSearch)
-        res.iterator.map { case (id, d) => (qid, id, d) }
+        s.search(qv, qt, k, ef).iterator.map { case (id, d) => (qid, id, d) }
       }
     }.toDF("qid", "id", "dist")
-    TopK.aggTopK(local, "qid", "id", "dist", k)
   }
+}
+
+/** Executor-resident HNSW index, one graph per partition (see
+  * [[HnswKnn.loadResident]] and [[HnswKnn.buildResident]]). Every probe —
+  * the DataFrame forms too — is one served batch over the pinned graphs
+  * ([[ResidentServe]]); results equal [[HnswKnn.knn]] on the same build.
+  * Call [[unload]] when done — the graphs hold executor storage until
+  * then. */
+final class HnswResident private[index] (spark: SparkSession,
+                                         rdd: RDD[(Int, HnswShard)],
+                                         dim: Int) {
 
   /** Plain probe; `tombstones` are excluded IN-TRAVERSAL — the graph walks
     * through deleted nodes but never admits them (the reference's
@@ -52,23 +208,18 @@ final class HnswResident(spark: SparkSession,
     * streaming/diskann/diskann-str.py:83-99), so a persisted graph serves
     * post-delete workloads WITHOUT rebuild. The tombstone set is bounded by
     * the consolidation threshold (compaction rebuilds and clears it), so
-    * the broadcast stays small by construction. */
+    * the broadcast stays small by construction. Eager: the rows come back
+    * by value. */
   def probe(queries: DataFrame, k: Int, efSearch: Int = 64,
-            tombstones: Set[Long] = Set.empty): DataFrame = {
-    import spark.implicits._
-    val qs = queries.select(col("qid").cast("long"), col("qvec"))
-      .as[(Long, Array[Float])].collect()
-      .map { case (qid, qv) => (qid, qv, Array.empty[Int]) }
-    run(qs, k, efSearch, filtered = false, tombstones)
-  }
+            tombstones: Set[Long] = Set.empty): DataFrame =
+    ResidentServe.frame(spark, serve(HnswShard.queries(queries, tagged = false),
+      k, efSearch, tombstones, Array.empty, 64))
 
+  /** [[probe]] with conjunctive query tags (`queries` carries `qtags`). */
   def probeFiltered(queries: DataFrame, k: Int, efSearch: Int = 64,
-                    tombstones: Set[Long] = Set.empty): DataFrame = {
-    import spark.implicits._
-    val qs = queries.select(col("qid").cast("long"), col("qvec"), col("qtags"))
-      .as[(Long, Array[Float], Array[Int])].collect()
-    run(qs, k, efSearch, filtered = true, tombstones)
-  }
+                    tombstones: Set[Long] = Set.empty): DataFrame =
+    ResidentServe.frame(spark, serve(HnswShard.queries(queries, tagged = true),
+      k, efSearch, tombstones, Array.empty, 64))
 
   /** Serving-form batch probe: the query batch arrives as an in-memory
     * array and the ranked answers return as one — the unit of work a vector
@@ -92,7 +243,14 @@ final class HnswResident(spark: SparkSession,
   def probeBatch(qs: Array[(Long, Array[Float])], k: Int, efSearch: Int = 64,
                  tombstones: Set[Long] = Set.empty,
                  delta: Array[(Long, Array[Float])] = Array.empty,
-                 treeMergeAt: Int = 64): Array[(Long, Long, Double, Long)] = {
+                 treeMergeAt: Int = 64): Array[(Long, Long, Double, Long)] =
+    serve(qs.map { case (qid, qv) => (qid, qv, HnswShard.noTags) }, k,
+      efSearch, tombstones, delta, treeMergeAt)
+
+  private def serve(qs: Array[(Long, Array[Float], Array[Int])], k: Int,
+                    efSearch: Int, tombstones: Set[Long],
+                    delta: Array[(Long, Array[Float])],
+                    treeMergeAt: Int): Array[(Long, Long, Double, Long)] = {
     ResidentServe.validate(k, dim, qs.iterator.map(_._2))
     val nParts = math.max(rdd.getNumPartitions, 1)
     // per-query merge with id-dedup (an id can arrive from both the graph
@@ -101,39 +259,28 @@ final class HnswResident(spark: SparkSession,
     // Every partition gets a task: the delta is striped by partition id
     ResidentServe.probe(rdd, (qs, tombstones, delta), qs.length, k,
         treeMergeAt) { (shard, batch) =>
-      val (idx, _) = shard
       val (queries, dead, dArr) = batch
       // this shard's stripe of the delta buffer
       val mine = Iterator.range(TaskContext.getPartitionId(), dArr.length, nParts)
         .map(dArr).filterNot { case (id, _) => dead.contains(id) }.toArray
-      queries.iterator.flatMap { case (qid, qv) =>
-        val res =
-          if (dead.nonEmpty)
-            idx.searchFiltered(qv, k, efSearch, id => !dead.contains(id))
-          else idx.search(qv, k, efSearch)
+      queries.iterator.flatMap { case (qid, qv, qt) =>
         // k DISTINCT candidates per (query, partition): a re-inserted
         // graph-resident id shows up in both sources with bit-identical
         // distance, and counting it twice could evict a genuine k-th
         val top = new TopKBuffer(k)
-        res.foreach { case (id, d) => top.offer(d, id) }
+        shard._2.search(qv, qt, k, efSearch, dead)
+          .foreach { case (id, d) => top.offer(d, id) }
         mine.foreach { case (id, v) =>
-          if (!top.contains(id)) top.offer(idx.pairDist(qv, v), id)
+          if (!top.contains(id)) top.offer(shard._2.graph.pairDist(qv, v), id)
         }
         top.rows(qid)
       }
     }
   }
 
-  /** [[probeBatch]] with DataFrame plumbing on both ends. Results equal
-    * [[probe]] row-for-row (same (dist, id) ordering; IndexSpec asserts
-    * it). */
-  def probeLocal(queries: DataFrame, k: Int, efSearch: Int = 64): DataFrame = {
-    import spark.implicits._
-    val qs = queries.select(col("qid").cast("long"), col("qvec"))
-      .as[(Long, Array[Float])].collect()
-    spark.createDataFrame(probeBatch(qs, k, efSearch).toSeq)
-      .toDF("qid", "id", "dist", "rank")
-  }
+  /** [[probe]] without tombstones (the serving-form name). */
+  def probeLocal(queries: DataFrame, k: Int, efSearch: Int = 64): DataFrame =
+    probe(queries, k, efSearch)
 
   def numPartitions: Int = rdd.getNumPartitions
 
@@ -152,18 +299,16 @@ final class HnswResident(spark: SparkSession,
     * whole serving budget. */
   private[index] def withCandidateArrays[T](qs: Array[(Long, Array[Float])],
                                             k: Int, efSearch: Int)(
-      f: org.apache.spark.rdd.RDD[(Long, Array[(Long, Double)])] => T): T = {
+      f: RDD[(Long, Array[(Long, Double)])] => T): T = {
     ResidentServe.validate(k, dim, qs.iterator.map(_._2))
     ResidentServe.withBroadcast(rdd, qs) { bq =>
-      f(rdd.flatMap { case (idx, _) =>
+      f(rdd.flatMap { case (_, s) =>
         bq.value.iterator.map { case (qid, qv) =>
-          (qid, idx.search(qv, k, efSearch))
+          (qid, s.search(qv, HnswShard.noTags, k, efSearch))
         }
       })
     }
   }
-
-  private[index] def graphs: org.apache.spark.rdd.RDD[(HnswIndex, Map[Long, Array[Int]])] = rdd
 
   def unload(): Unit = rdd.unpersist()
 }
@@ -182,31 +327,19 @@ final class HnswResident(spark: SparkSession,
   * graph recall, independent of partition count.
   *
   * Builds are DETERMINISTIC: partitions hash on id and sort by id before
-  * insertion, so the same base always produces the same graphs — and the
-  * persisted index ([[buildAndSave]]/[[probeSaved]]) probes identically to
-  * the in-memory path.
+  * insertion ([[HnswShard.build]]), so the same base always produces the
+  * same graphs — and the persisted index ([[buildAndSave]]/[[probeSaved]])
+  * probes identically to the in-memory path.
   *
   * Persistence (S7/X4, the reference's saveIndex/loadIndex
   * hnswalg.h:1224-1362): [[buildAndSave]] writes each partition's graph as
-  * parquet rows partitioned by `part`; [[probeSaved]] rebuilds each graph
+  * parquet rows partitioned by `part`; [[loadResident]] rebuilds each graph
   * with O(n) array fills — no re-insertion — so the build cost is paid once
   * and every probe afterwards is search-only. Build-once/probe-many is the
   * economics that make an ANN index an index.
   */
 object HnswKnn {
 
-  private def subsetOf(qtags: Array[Int], tags: Array[Int]): Boolean = {
-    var i = 0
-    while (i < qtags.length) {
-      if (!tags.contains(qtags(i))) return false
-      i += 1
-    }
-    true
-  }
-
-  /** Plain ANN top-k join: (qid, id, dist, rank). `metric` = l2 | ip
-    * (negated max-inner-product — the OOD track's flagship metric,
-    * /root/reference/ood/base.py:3, diskann-in-mem.py:48-56). */
   /** Cosine-metric graph kNN: cos(q, x) = ⟨q̂, x̂⟩, so the ip graph over
     * unit-normalized vectors IS the cosine index (faiss's
     * METRIC_INNER_PRODUCT + pre-normalize convention — the reference's
@@ -240,57 +373,29 @@ object HnswKnn {
     TopK.aggTopK(exact, "qid", "id", "dist", k)
   }
 
+  /** Plain ANN top-k join: (qid, id, dist, rank). `metric` = l2 | ip
+    * (negated max-inner-product — the OOD track's flagship metric,
+    * /root/reference/ood/base.py:3, diskann-in-mem.py:48-56). */
   def knn(queries: DataFrame, base: DataFrame, k: Int, m: Int = 16,
           efConstruction: Int = 100, efSearch: Int = 64,
-          numPartitions: Int = 8, metric: String = "l2"): DataFrame = {
-    val spark = base.sparkSession
-    import spark.implicits._
-    val qs = queries
-      .select(col("qid").cast("long"), col("qvec"))
-      .as[(Long, Array[Float])].collect()
-    val bq = spark.sparkContext.broadcast(qs)
-    val local = base.select(col("id").cast("long"), col("vec"))
-      .repartition(numPartitions, col("id"))
-      .sortWithinPartitions("id") // deterministic insertion order
-      .as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        val idx = new HnswIndex(m, efConstruction, metric)
-        it.foreach { case (id, v) => idx.add(id, v) }
-        bq.value.iterator.flatMap { case (qid, qv) =>
-          idx.search(qv, k, efSearch).iterator.map { case (id, d) => (qid, id, d) }
-        }
-      }.toDF("qid", "id", "dist")
-    TopK.aggTopK(local, "qid", "id", "dist", k)
-  }
+          numPartitions: Int = 8, metric: String = "l2"): DataFrame =
+    TopK.aggTopK(HnswShard.candidates(
+      HnswShard.build(base, numPartitions, m, efConstruction, metric),
+      queries, tagged = false, k, efSearch), "qid", "id", "dist", k)
 
   /** Label-filtered ANN: the per-query label must equal the base row's
-    * label. One-stage semantics (J3): the beam widens until ≥ k allowed
-    * candidates are admitted, then exact ranking (see
-    * [[HnswIndex.searchFiltered]]). */
+    * label — the conjunctive-tag search with the label as a one-tag set
+    * (the same predicate, so the same traversal). One-stage semantics (J3):
+    * the beam widens until ≥ k allowed candidates are admitted, then exact
+    * ranking (see [[HnswIndex.searchFiltered]]). */
   def filteredKnn(queries: DataFrame, base: DataFrame, k: Int, m: Int = 16,
                   efConstruction: Int = 100, efSearch: Int = 64,
-                  numPartitions: Int = 8, metric: String = "l2"): DataFrame = {
-    val spark = base.sparkSession
-    import spark.implicits._
-    val qs = queries
-      .select(col("qid").cast("long"), col("qvec"), col("qlabel").cast("int"))
-      .as[(Long, Array[Float], Int)].collect()
-    val bq = spark.sparkContext.broadcast(qs)
-    val local = base.select(col("id").cast("long"), col("vec"), col("label").cast("int"))
-      .repartition(numPartitions, col("id"))
-      .sortWithinPartitions("id")
-      .as[(Long, Array[Float], Int)]
-      .mapPartitions { it =>
-        val idx = new HnswIndex(m, efConstruction, metric)
-        val labels = scala.collection.mutable.HashMap.empty[Long, Int]
-        it.foreach { case (id, v, lab) => labels(id) = lab; idx.add(id, v) }
-        bq.value.iterator.flatMap { case (qid, qv, qlab) =>
-          idx.searchFiltered(qv, k, efSearch, id => labels(id) == qlab)
-            .iterator.map { case (id, d) => (qid, id, d) }
-        }
-      }.toDF("qid", "id", "dist")
-    TopK.aggTopK(local, "qid", "id", "dist", k)
-  }
+                  numPartitions: Int = 8, metric: String = "l2"): DataFrame =
+    filteredKnnTags(
+      queries.select(col("qid"), col("qvec"),
+        array(col("qlabel").cast("int")).as("qtags")),
+      base.select(col("id"), col("vec"), array(col("label").cast("int")).as("tags")),
+      k, m, efConstruction, efSearch, numPartitions, metric)
 
   /** Conjunctive-tag filtered ANN — the reference's filter-track semantics
     * (1–2 query tags, ALL must be present on the base row,
@@ -300,72 +405,29 @@ object HnswKnn {
   def filteredKnnTags(queries: DataFrame, base: DataFrame, k: Int,
                       m: Int = 16, efConstruction: Int = 100,
                       efSearch: Int = 64, numPartitions: Int = 8,
-                      metric: String = "l2"): DataFrame = {
-    val spark = base.sparkSession
-    import spark.implicits._
-    val qs = queries
-      .select(col("qid").cast("long"), col("qvec"), col("qtags"))
-      .as[(Long, Array[Float], Array[Int])].collect()
-    val bq = spark.sparkContext.broadcast(qs)
-    val local = base.select(col("id").cast("long"), col("vec"), col("tags"))
-      .repartition(numPartitions, col("id"))
-      .sortWithinPartitions("id")
-      .as[(Long, Array[Float], Array[Int])]
-      .mapPartitions { it =>
-        val idx = new HnswIndex(m, efConstruction, metric)
-        val tagMap = scala.collection.mutable.HashMap.empty[Long, Array[Int]]
-        it.foreach { case (id, v, tg) => tagMap(id) = tg; idx.add(id, v) }
-        bq.value.iterator.flatMap { case (qid, qv, qt) =>
-          idx.searchFiltered(qv, k, efSearch, id => subsetOf(qt, tagMap(id)))
-            .iterator.map { case (id, d) => (qid, id, d) }
-        }
-      }.toDF("qid", "id", "dist")
-    TopK.aggTopK(local, "qid", "id", "dist", k)
-  }
+                      metric: String = "l2"): DataFrame =
+    TopK.aggTopK(HnswShard.candidates(
+      HnswShard.build(base, numPartitions, m, efConstruction, metric),
+      queries, tagged = true, k, efSearch), "qid", "id", "dist", k)
 
   /** Build per-partition graphs once and persist them as parquet rows
     * partitioned by `part`. `base` needs (id, vec) and may carry a
     * `tags ARRAY<INT>` column for filtered probes. */
   def buildAndSave(base: DataFrame, path: String, m: Int = 16,
                    efConstruction: Int = 100, numPartitions: Int = 8,
-                   metric: String = "l2"): Unit = {
-    val spark = base.sparkSession
-    import spark.implicits._
-    val withTags =
-      if (base.columns.contains("tags"))
-        base.select(col("id").cast("long"), col("vec"), col("tags"))
-      else
-        base.select(col("id").cast("long"), col("vec"),
-          array().cast("array<int>").as("tags"))
-    val nodes = withTags.as[(Long, Array[Float], Array[Int])]
-      .repartition(numPartitions, col("id"))
-      .sortWithinPartitions("id")
-      .mapPartitions { it =>
-        val part = TaskContext.getPartitionId()
-        val rows = it.toArray
-        val idx = new HnswIndex(m, efConstruction, metric)
-        rows.foreach { case (id, v, _) => idx.add(id, v) }
-        val (ep, ml) = idx.entryState
-        idx.exportNodes.iterator.zipWithIndex.map {
-          case ((id, vec, level, links), seq) =>
-            HnswNodeRow(part, seq, id, vec, rows(seq)._3, level, links, ep, ml,
-              metric)
-        }
-      }
-    nodes.toDF().write.mode("overwrite").partitionBy("part").parquet(path)
-  }
+                   metric: String = "l2"): Unit =
+    HnswShard.write(base.sparkSession,
+      HnswShard.build(base, numPartitions, m, efConstruction, metric)
+        .flatMap { case (part, s) => HnswShard.export(part, s, metric) }, path)
 
-  /** Probe a persisted index: plain top-k. Rebuilds each partition's graph
-    * by direct array fill (no insertion), probes with the broadcast query
-    * set. Results are identical to [[knn]] on the same base/partitioning. */
+  /** Probe a persisted index: plain top-k. Loads the graphs resident,
+    * probes them as one served batch and unloads; results are identical to
+    * [[knn]] on the same base/partitioning. */
   def probeSaved(spark: SparkSession, path: String, queries: DataFrame,
                  k: Int, efSearch: Int = 64,
                  tombstones: Set[Long] = Set.empty): DataFrame = {
-    import spark.implicits._
-    val qs = queries.select(col("qid").cast("long"), col("qvec"))
-      .as[(Long, Array[Float])].collect()
-      .map { case (qid, qv) => (qid, qv, Array.empty[Int]) }
-    probeImpl(spark, path, qs, k, efSearch, filtered = false, tombstones)
+    val r = loadResident(spark, path)
+    try r.probe(queries, k, efSearch, tombstones) finally r.unload()
   }
 
   /** Probe a persisted index with conjunctive tags (the saved rows must
@@ -373,20 +435,10 @@ object HnswKnn {
   def probeSavedFiltered(spark: SparkSession, path: String, queries: DataFrame,
                          k: Int, efSearch: Int = 64,
                          tombstones: Set[Long] = Set.empty): DataFrame = {
-    import spark.implicits._
-    val qs = queries.select(col("qid").cast("long"), col("qvec"), col("qtags"))
-      .as[(Long, Array[Float], Array[Int])].collect()
-    probeImpl(spark, path, qs, k, efSearch, filtered = true, tombstones)
+    val r = loadResident(spark, path)
+    try r.probeFiltered(queries, k, efSearch, tombstones) finally r.unload()
   }
 
-  /** Load the persisted graphs into an executor-RESIDENT index: the rebuild
-    * happens once and the built [[HnswIndex]] objects pin in executor
-    * storage as a persisted RDD; every subsequent probe is a NARROW map over
-    * the resident graphs — no parquet re-read, no shuffle, no rebuild. This
-    * is the serving shape: [[probeSaved]] pays one graph shuffle per batch
-    * (fine for occasional batches), resident probing amortizes load across
-    * a query stream the way the reference keeps its index in RAM between
-    * queries (faiss.py:196-205 load-or-build, then query-only). */
   /** Build per-partition graphs ONCE, pin them executor-resident, and write
     * the persisted artifact FROM the resident graphs — [[buildAndSave]]
     * followed by [[loadResident]] without the parquet round-trip in
@@ -400,74 +452,37 @@ object HnswKnn {
   def buildResidentAndSave(base: DataFrame, path: String, m: Int = 16,
                            efConstruction: Int = 100, numPartitions: Int = 8,
                            metric: String = "l2"): HnswResident = {
-    val spark = base.sparkSession
-    val resident = buildResident(base, m, efConstruction, numPartitions, metric)
-    val built = resident.graphs
-    val nodes = built.mapPartitionsWithIndex { case (part, it) =>
-      it.flatMap { case (idx, tagMap) =>
-        val (ep, ml) = idx.entryState
-        idx.exportNodes.iterator.zipWithIndex.map {
-          case ((id, vec, level, links), seq) =>
-            HnswNodeRow(part, seq, id, vec, tagMap(id), level, links, ep, ml,
-              metric)
-        }
-      }
-    }
-    spark.createDataset(nodes)(org.apache.spark.sql.Encoders.product[HnswNodeRow])
-      .toDF()
-      .write.mode("overwrite").partitionBy("part").parquet(path)
-    resident
+    val (rdd, dim, _) = HnswShard.pinShards(
+      HnswShard.build(base, numPartitions, m, efConstruction, metric))
+    HnswShard.write(base.sparkSession,
+      rdd.flatMap { case (part, s) => HnswShard.export(part, s, metric) }, path)
+    new HnswResident(base.sparkSession, rdd, dim)
   }
 
   /** [[buildResidentAndSave]] WITHOUT the persisted artifact: build the
     * per-partition graphs once and pin them executor-resident. For callers
     * that probe within the same session and never reload (the in-query ANN
     * composition gates; serving tiers that own their registry should
-    * persist). Same deterministic partitioning/insertion order as the
-    * saving form. */
+    * persist). An evicted graph rebuilds from lineage, identically. */
   def buildResident(base: DataFrame, m: Int = 16, efConstruction: Int = 100,
                     numPartitions: Int = 8,
                     metric: String = "l2"): HnswResident = {
-    val spark = base.sparkSession
-    import spark.implicits._
-    val withTags =
-      if (base.columns.contains("tags"))
-        base.select(col("id").cast("long"), col("vec"), col("tags"))
-      else
-        base.select(col("id").cast("long"), col("vec"),
-          array().cast("array<int>").as("tags"))
-    val built = withTags.as[(Long, Array[Float], Array[Int])]
-      .repartition(numPartitions, col("id"))
-      .sortWithinPartitions("id") // deterministic insertion order
-      .rdd
-      .mapPartitions { it =>
-        val idx = new HnswIndex(m, efConstruction, metric)
-        val tagMap = Map.newBuilder[Long, Array[Int]]
-        it.foreach { case (id, v, tg) => tagMap += id -> tg; idx.add(id, v) }
-        Iterator.single((idx, tagMap.result()))
-      }
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    new HnswResident(spark, built, materialize(built))
+    val (rdd, dim, _) = HnswShard.pinShards(
+      HnswShard.build(base, numPartitions, m, efConstruction, metric))
+    new HnswResident(base.sparkSession, rdd, dim)
   }
 
-  /** Pin freshly persisted graphs; returns their vector dimension. */
-  private def materialize(
-      rdd: org.apache.spark.rdd.RDD[(HnswIndex, Map[Long, Array[Int]])]): Int =
-    ResidentServe.materialize(rdd)(g => Iterator(g._1.dim).filter(_ >= 0))
-
+  /** Load the persisted graphs into an executor-RESIDENT index: the rebuild
+    * happens once and the built [[HnswIndex]] objects pin in executor
+    * storage, one per partition; every subsequent probe is a NARROW job over
+    * the resident graphs — no parquet re-read, no shuffle, no rebuild. This
+    * is the serving shape: the reference keeps its index in RAM between
+    * queries (faiss.py:196-205 load-or-build, then query-only). An evicted
+    * graph refills from the parquet rows. */
   def loadResident(spark: SparkSession, path: String): HnswResident = {
     import spark.implicits._
-    val rdd = spark.read.parquet(path).as[HnswNodeRow].rdd
-      .groupBy(_.part)
-      .map { case (_, rows) =>
-        val arr = rows.toArray.sortBy(_.seq)
-        val idx = HnswIndex.fromState(
-          arr.map(r => (r.id, r.vec, r.level, r.links)).toIndexedSeq,
-          arr.head.entryPoint, arr.head.maxLevel, arr.head.metric)
-        (idx, arr.map(r => r.id -> r.tags).toMap)
-      }
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    new HnswResident(spark, rdd, materialize(rdd))
+    val (rdd, dim, _) = HnswShard.pin[Int](spark.read.parquet(path), col("part"))
+    new HnswResident(spark, rdd, dim)
   }
 
   /** One persisted row of a QUANTIZED partition-local graph: uint8 codes
@@ -493,35 +508,21 @@ object HnswKnn {
              efConstruction: Int = 100, efSearch: Int = 64,
              numPartitions: Int = 8, metric: String = "l2"): DataFrame = {
     require(rerank >= k, s"rerank $rerank must be >= k $k")
-    val spark = base.sparkSession
-    import spark.implicits._
-    val qs = queries
-      .select(col("qid").cast("long"), col("qvec"))
-      .as[(Long, Array[Float])].collect()
-    val bq = spark.sparkContext.broadcast(qs)
-    val cand = base.select(col("id").cast("long"), col("vec"))
-      .repartition(numPartitions, col("id"))
-      .sortWithinPartitions("id")
-      .as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        val idx = new HnswIndex(m, efConstruction, metric, Some((mins, spans)))
-        it.foreach { case (id, v) => idx.add(id, v) }
-        bq.value.iterator.flatMap { case (qid, qv) =>
-          idx.search(qv, rerank, math.max(efSearch, rerank))
-            .iterator.map { case (id, _) => (qid, id) }
-        }
-      }.toDF("qid", "id")
-    rerankExact(cand, queries, base, k, metric)
+    rerankExact(HnswShard.build(base, numPartitions, m, efConstruction, metric,
+      Some((mins, spans))), queries, base, k, rerank, efSearch, metric)
   }
 
-  /** Exact re-rank of (qid, id) candidates against the float rows. */
-  private def rerankExact(cand: DataFrame, queries: DataFrame,
-                          base: DataFrame, k: Int, metric: String): DataFrame = {
+  /** Exact re-rank against the float rows of the SQ8 graphs' top-`rerank`
+    * (qid, id) candidates. */
+  private def rerankExact(shards: RDD[(Int, HnswShard)], queries: DataFrame,
+                          base: DataFrame, k: Int, rerank: Int, efSearch: Int,
+                          metric: String): DataFrame = {
     val mkMetric = metric match {
       case "ip" => graft.operators.Metric.Ip
       case _    => graft.operators.Metric.L2
     }
-    val exact = cand
+    val exact = HnswShard.candidates(shards, queries, tagged = false, rerank,
+        math.max(efSearch, rerank)).select("qid", "id")
       .join(base.select(col("id").cast("long"), col("vec")), "id")
       .join(broadcast(queries.select(col("qid").cast("long"), col("qvec"))), "qid")
       .withColumn("dist", graft.operators.Metric.distColumn(
@@ -537,21 +538,10 @@ object HnswKnn {
                       metric: String = "l2"): Unit = {
     val spark = base.sparkSession
     import spark.implicits._
-    val nodes = base.select(col("id").cast("long"), col("vec"))
-      .as[(Long, Array[Float])]
-      .repartition(numPartitions, col("id"))
-      .sortWithinPartitions("id")
-      .mapPartitions { it =>
-        val part = TaskContext.getPartitionId()
-        val idx = new HnswIndex(m, efConstruction, metric, Some((mins, spans)))
-        it.foreach { case (id, v) => idx.add(id, v) }
-        val (ep, ml) = idx.entryState
-        idx.exportNodesSq8.iterator.zipWithIndex.map {
-          case ((id, codes, level, links), seq) =>
-            HnswSq8NodeRow(part, seq, id, codes, level, links, ep, ml, metric)
-        }
-      }
-    nodes.toDF().write.mode("overwrite").partitionBy("part").parquet(path)
+    spark.createDataset(HnswShard.build(base, numPartitions, m, efConstruction,
+        metric, Some((mins, spans)))
+        .flatMap { case (part, s) => HnswShard.exportSq8(part, s, metric) })
+      .write.mode("overwrite").partitionBy("part").parquet(path)
     Seq((mins, spans)).toDF("mins", "spans")
       .write.mode("overwrite").parquet(path + ".quant")
   }
@@ -565,54 +555,11 @@ object HnswKnn {
     import spark.implicits._
     require(rerank >= k, s"rerank $rerank must be >= k $k")
     val qrow = spark.read.parquet(path + ".quant").head()
-    val quantParams = (qrow.getSeq[Double](0).toArray, qrow.getSeq[Double](1).toArray)
+    val quant = (qrow.getSeq[Double](0).toArray, qrow.getSeq[Double](1).toArray)
     val storedMetric =
       spark.read.parquet(path).select("metric").head().getString(0)
-    val qs = queries.select(col("qid").cast("long"), col("qvec"))
-      .as[(Long, Array[Float])].collect()
-    val bq = spark.sparkContext.broadcast(qs)
-    val cand = spark.read.parquet(path).as[HnswSq8NodeRow]
-      .groupByKey(_.part)
-      .flatMapGroups { (_, it) =>
-        val rows = it.toArray.sortBy(_.seq)
-        val idx = HnswIndex.fromStateSq8(
-          rows.map(r => (r.id, r.codes, r.level, r.links)).toIndexedSeq,
-          rows.head.entryPoint, rows.head.maxLevel, rows.head.metric,
-          quantParams)
-        bq.value.iterator.flatMap { case (qid, qv) =>
-          idx.search(qv, rerank, math.max(efSearch, rerank))
-            .iterator.map { case (id, _) => (qid, id) }
-        }
-      }.toDF("qid", "id")
-    rerankExact(cand, queries, base, k, storedMetric)
-  }
-
-  private def probeImpl(spark: SparkSession, path: String,
-                        qs: Array[(Long, Array[Float], Array[Int])],
-                        k: Int, efSearch: Int, filtered: Boolean,
-                        tombstones: Set[Long] = Set.empty): DataFrame = {
-    import spark.implicits._
-    val bq = spark.sparkContext.broadcast(qs)
-    val bt = spark.sparkContext.broadcast(tombstones)
-    val local = spark.read.parquet(path).as[HnswNodeRow]
-      .groupByKey(_.part)
-      .flatMapGroups { (_, it) =>
-        val rows = it.toArray.sortBy(_.seq)
-        val idx = HnswIndex.fromState(
-          rows.map(r => (r.id, r.vec, r.level, r.links)).toIndexedSeq,
-          rows.head.entryPoint, rows.head.maxLevel, rows.head.metric)
-        val tagMap: Long => Array[Int] =
-          if (filtered) rows.map(r => r.id -> r.tags).toMap else _ => Array.empty
-        val dead = bt.value
-        bq.value.iterator.flatMap { case (qid, qv, qt) =>
-          val res =
-            if (filtered || dead.nonEmpty)
-              idx.searchFiltered(qv, k, efSearch,
-                id => !dead.contains(id) && subsetOf(qt, tagMap(id)))
-            else idx.search(qv, k, efSearch)
-          res.iterator.map { case (id, d) => (qid, id, d) }
-        }
-      }.toDF("qid", "id", "dist")
-    TopK.aggTopK(local, "qid", "id", "dist", k)
+    val shards = spark.read.parquet(path).as[HnswSq8NodeRow].rdd
+      .groupBy(_.part).map { case (part, rows) => (part, HnswShard.refillSq8(rows, quant)) }
+    rerankExact(shards, queries, base, k, rerank, efSearch, storedMetric)
   }
 }

@@ -195,12 +195,6 @@ final class ResidentPostings(spark: SparkSession, rdd: RDD[PostingShard]) {
       .toDF("qid", "id", "score", "rank")
   }
 
-  /** Total postings held across shards — the budget grid's full-scan
-    * anchor (budget ≥ postings/shard is exact for every query). */
-  def totalPostings(): Long =
-    rdd.map(_.index.valuesIterator.map(_._1.length.toLong).sum)
-      .reduce(_ + _)
-
   /** Largest per-shard posting count: any budget ≥ this is EXACT on every
     * shard (the accumulate fast path), making it the honest top anchor of
     * a budget sweep — recall exactly 1.0 by construction, not by luck. */

@@ -3,6 +3,7 @@ package graft.index
 import org.apache.spark.TaskContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.reflect.ClassTag
 
 /** The one serving batch every executor-resident family runs: a
@@ -131,6 +132,11 @@ private[index] object ResidentServe {
         if (estRows >= 0L) estRows else nq.toLong * k * nParts)(
         ShardJob.kernel(bc, kernel))(ord, tree)
     }
+
+  /** Served rows as a driver-side (qid, id, dist, rank) frame: eager, so
+    * the shards it came from can unload before the frame is read. */
+  def frame(spark: SparkSession, rows: Array[(Long, Long, Double, Long)]): DataFrame =
+    spark.createDataFrame(rows.toSeq).toDF("qid", "id", "dist", "rank")
 
   /** Exact distance, smaller is better: squared L2, or the negated inner
     * product under `ip`. Double accumulation in component order, the same

@@ -1,9 +1,11 @@
 package graft.index
 
-/** Coarse-quantizer routing shared by the IVF-routed serving forms
-  * ([[ResidentIvfSq8]], [[ResidentIvfAdc]]): rank the C centroids by L2
-  * against a query (the coarse quantizer's own metric, as in faiss) and
-  * take either a fixed `nprobe` prefix or a mass-adaptive prefix.
+/** Coarse-quantizer routing shared by the routed serving forms
+  * ([[ResidentIvfSq8]], [[ResidentIvfAdc]], [[HnswRouted]]): rank the C
+  * centroids against a query — by L2 (the coarse quantizer's own metric, as
+  * in faiss), or under `ip` by negated dot (MIPS routes to the centroids of
+  * max inner product, the IVF-MIPS convention) — and take either a fixed
+  * `nprobe` prefix or a mass-adaptive prefix. Ties break to the lower cid.
   *
   * Mass-adaptive routing is the scale-correct knob shape: a fixed nprobe
   * probes a data-dependent row count (under cluster skew a query near a
@@ -13,8 +15,8 @@ package graft.index
   * recall actually trades against, so the serving knob is the corpus
   * fraction scanned (`minMass`); minMass = 1.0 degenerates to the full
   * fan-out, which with rerank ≥ n makes the probe exact (the hash-gate
-  * point). The same shape as the graph side's
-  * [[HnswRouted.routeByMass]].
+  * point). [[HnswRouted.probeBatchAuto]] routes the graph side the same
+  * way.
   *
   * Serializable so the whole router (C·d floats + C longs — ~0.5 MB even
   * at IVF16384×64f) broadcasts once at load for SHARD-SIDE routing: past a
@@ -31,7 +33,8 @@ package graft.index
   * faiss.py:617-645). */
 private[graft] final class CoarseRouter(
     val centroids: Array[(Int, Array[Float])],
-    val sizes: Map[Int, Long]) extends Serializable {
+    val sizes: Map[Int, Long],
+    ip: Boolean = false) extends Serializable {
 
   val totalMass: Long = sizes.valuesIterator.sum
 
@@ -40,13 +43,13 @@ private[graft] final class CoarseRouter(
   /** The routed index's vector dimension; -1 without centroids. */
   def dim: Int = centroids.headOption.fold(-1)(_._2.length)
 
-  /** All centroids ranked (L2 asc, cid asc). */
+  /** All centroids ranked (distance asc, cid asc). */
   private def rank(qv: Array[Float]): Array[(Double, Int)] = {
     val out = new Array[(Double, Int)](centroids.length)
     var c = 0
     while (c < centroids.length) {
       val (cid, cvec) = centroids(c)
-      out(c) = (ResidentServe.dist(qv, cvec, ip = false), cid)
+      out(c) = (ResidentServe.dist(qv, cvec, ip), cid)
       c += 1
     }
     java.util.Arrays.sort(out, Ordering[(Double, Int)])
@@ -100,13 +103,14 @@ private[graft] final class CoarseRouter(
     * so every rebuild yields the identical graph. Concurrent searches are
     * safe (all search scratch is per-call). */
   @transient private lazy val centroidGraph: HnswIndex = {
-    val g = new HnswIndex(m = 16, efConstruction = 100, metric = "l2")
+    val g = new HnswIndex(m = 16, efConstruction = 100,
+      metric = if (ip) "ip" else "l2")
     centroids.foreach { case (cid, cvec) => g.add(cid.toLong, cvec) }
     g
   }
 
-  /** Graph-ranked centroid prefix: up to `width` centroids as (L2 asc, cid
-    * asc), beam width `efRoute`. */
+  /** Graph-ranked centroid prefix: up to `width` centroids as (distance
+    * asc, cid asc), beam width `efRoute`. */
   private def rankGraph(qv: Array[Float], width: Int,
                         efRoute: Int): Array[(Double, Int)] =
     centroidGraph.search(qv, k = width, ef = efRoute)

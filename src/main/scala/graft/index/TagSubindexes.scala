@@ -1,6 +1,6 @@
 package graft.index
 
-import graft.operators.{TagFilter, TopK}
+import graft.operators.TagFilter
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * have. */
 final class ResidentTagRegistry private[index] (
     spark: SparkSession,
-    rdd: org.apache.spark.rdd.RDD[(String, HnswIndex)],
+    rdd: org.apache.spark.rdd.RDD[(String, HnswShard)],
     val keys: Set[String], dim: Int, shardsOf: Map[String, Array[Int]]) {
 
   /** Resident (key, part) graph count = the per-job task fan of a batch
@@ -26,31 +26,13 @@ final class ResidentTagRegistry private[index] (
     * when the batch's key set is narrower than the core count. */
   def numElements: Int = rdd.getNumPartitions
 
-  /** Probe query groups keyed by registry key, all in one narrow job;
-    * groups whose key has no subindex yield no rows (callers fall back to
-    * the posting path). Returns (qid, id, dist, rank) — row-identical to
-    * probing each key's artifact with [[HnswKnn.probeSaved]] and unioning,
-    * because each qid's candidates still come only from its own key's
-    * graph partitions and the same (dist asc, id asc) top-k merges them. */
-  def probeGroups(groups: Map[String, Array[(Long, Array[Float])]], k: Int,
-                  efSearch: Int): DataFrame = {
-    import spark.implicits._
-    val bq = spark.sparkContext.broadcast(groups)
-    val local = rdd.flatMap { case (key, idx) =>
-      bq.value.getOrElse(key, Array.empty[(Long, Array[Float])])
-        .iterator.flatMap { case (qid, qv) =>
-          idx.search(qv, k, efSearch).iterator
-            .map { case (id, d) => (qid, id, d) }
-        }
-    }.toDF("qid", "id", "dist")
-    TopK.aggTopK(local, "qid", "id", "dist", k)
-  }
-
-  /** Serving-form batch variant of [[probeGroups]]: query groups in, ranked
-    * (qid, id, dist, rank) rows out through the [[ProbeMerge]] fan-in — no
-    * DataFrame plumbing or exchange per batch, the unit a QPS loop times.
+  /** Probe query groups keyed by registry key, all in one narrow job:
+    * query groups in, ranked (qid, id, dist, rank) rows out through the
+    * [[ProbeMerge]] fan-in — the unit a QPS loop times. Groups whose key
+    * has no subindex yield no rows (callers fall back to the posting path).
     * Each qid routes to exactly one key, so its candidates come only from
-    * that key's graph partitions; rows equal [[probeGroups]]'s.
+    * that key's graph partitions — row-identical to probing each key's
+    * artifact with [[HnswKnn.probeSaved]] and unioning.
     *
     * `slices` > 1 runs the batch as that many CONCURRENT narrow jobs
     * ([[ProbeSlices.striped]]), each over a round-robin stripe of the
@@ -84,10 +66,10 @@ final class ResidentTagRegistry private[index] (
       ResidentServe.probe(rdd, g, stripe.length, k, treeMergeAt,
           parts = Some(parts)) {
         (shard, batch) =>
-          val (key, idx) = shard
+          val (key, s) = shard
           batch.getOrElse(key, Array.empty[(Long, Array[Float])])
             .iterator.flatMap { case (qid, qv) =>
-              idx.search(qv, k, efSearch).iterator
+              s.search(qv, HnswShard.noTags, k, efSearch).iterator
                 .map { case (id, d) => (qid, id, d) }
             }
       }
@@ -216,19 +198,10 @@ object TagSubindexes {
       .groupByKey { case (key, _, _, part) => (key, part) }
       .flatMapGroups { (kp: (String, Int),
                         it: Iterator[(String, Long, Array[Float], Int)]) =>
-        val (key, part) = kp
-        val rows = it.toArray.sortBy(_._2) // ascending id = insertion order
-        val idx = new HnswIndex(m, efConstruction, "l2")
-        rows.foreach { case (_, id, v, _) => idx.add(id, v) }
-        val (ep, ml) = idx.entryState
-        idx.exportNodes.iterator.zipWithIndex.map {
-          case ((id, vec, level, links), seq) =>
-            (key, part, seq, id, vec, Array.empty[Int], level, links, ep, ml,
-              "l2")
-        }
+        HnswShard.buildGroup(kp._2, it.map(r => (r._2, r._3)), m,
+          efConstruction, "l2").map(kp._1 -> _)
       }
-      .toDF(keyCol, "part", "seq", "id", "vec", "tags", "level", "links",
-        "entryPoint", "maxLevel", "metric")
+      .toDF(keyCol, "node").select(col(keyCol), col("node.*"))
     // partition the layout by key ONLY (pruning routes probes to one
     // subindex; `part` earns nothing as a directory — every probe of a key
     // reads all its parts — and doubling the directory count doubles the
@@ -255,49 +228,12 @@ object TagSubindexes {
     val keys = tagKeys ++ pairKeys
     if (keys.isEmpty)
       return new ResidentTagRegistry(spark,
-        spark.sparkContext.emptyRDD[(String, HnswIndex)], Set.empty, -1,
+        spark.sparkContext.emptyRDD[(String, HnswShard)], Set.empty, -1,
         Map.empty)
     val keyCol = if (tagKeys.nonEmpty) "tag" else "pair"
-    val rows = spark.read.parquet(path)
-      .select(col(keyCol).cast("string").as("key"), col("part"), col("seq"),
-        col("id"), col("vec"), col("level"), col("links"),
-        col("entryPoint"), col("maxLevel"), col("metric"))
-      .as[(String, Int, Int, Long, Array[Float], Int, Array[Array[Int]],
-        Int, Int, String)]
-    // one RDD partition PER (key, part) graph, by exact index — the default
-    // hash partitioner can co-locate several graphs in one partition, and a
-    // probe task walks its partition's graphs serially, so collisions
-    // silently cap a batch's task fan below the element count. The (key,
-    // part) universe is tiny (hot-tag vocabulary × parts) and known from
-    // the layout, so an exact map costs one metadata-scale distinct().
-    val kps = rows.select(col("key"), col("part")).distinct()
-      .as[(String, Int)].collect().sorted
-    val kpIdx = kps.zipWithIndex.toMap
-    val exact = new org.apache.spark.Partitioner {
-      def numPartitions: Int = math.max(1, kps.length)
-      // the map comes from a separate read of `rows` than the groupBy
-      // below; nothing pins the two reads to one snapshot, so a (key,
-      // part) present only in the second read must degrade to a
-      // deterministic co-located partition instead of failing the job
-      def getPartition(key: Any): Int = {
-        val kp = key.asInstanceOf[(String, Int)]
-        kpIdx.getOrElse(kp,
-          math.floorMod(kp._1.hashCode * 31 + kp._2, math.max(1, kps.length)))
-      }
-    }
-    val rdd = rows.rdd
-      .groupBy((r: (String, Int, Int, Long, Array[Float], Int,
-        Array[Array[Int]], Int, Int, String)) => (r._1, r._2), exact)
-      .map { case ((key, _), it) =>
-        val arr = it.toArray.sortBy(_._3)
-        val idx = HnswIndex.fromState(
-          arr.map(r => (r._4, r._5, r._6, r._7)).toIndexedSeq,
-          arr.head._8, arr.head._9, arr.head._10)
-        (key, idx)
-      }
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (dim, shardsOf) = ResidentServe.materializeKeyed(rdd)(_._1)(
-      g => Iterator(g._2.dim).filter(_ >= 0))
+    // one RDD partition PER (key, part) graph, recording which hold a key
+    val (rdd, dim, shardsOf) = HnswShard.pin[String](spark.read.parquet(path),
+      col(keyCol).cast("string"))
     new ResidentTagRegistry(spark, rdd, keys, dim, shardsOf)
   }
 
@@ -338,20 +274,10 @@ object TagSubindexes {
   private def probeResident(spark: SparkSession, path: String,
                             groups: Map[String, Array[(Long, Array[Float])]],
                             k: Int, efSearch: Int): DataFrame = {
-    import spark.implicits._
     val reg = loadResident(spark, path)
-    try {
-      val hit = groups.filter { case (key, _) => reg.keys(key) }
-      if (hit.isEmpty)
-        Seq.empty[(Long, Long, Double, Long)].toDF("qid", "id", "dist", "rank")
-      else {
-        val rows = reg.probeGroups(hit, k, efSearch)
-          .select(col("qid").cast("long"), col("id").cast("long"),
-            col("dist").cast("double"), col("rank").cast("long"))
-          .as[(Long, Long, Double, Long)].collect().toSeq
-        spark.createDataFrame(rows).toDF("qid", "id", "dist", "rank")
-      }
-    } finally reg.unload()
+    try ResidentServe.frame(spark, reg.probeGroupsBatch(
+      groups.filter { case (key, _) => reg.keys(key) }, k, efSearch))
+    finally reg.unload()
   }
 
   /** List the tags with a persisted subindex under `path`, via the Hadoop

@@ -551,9 +551,14 @@ final class RunbookExecutor(
           }
         }
       case "delete" =>
+        // a plan LEAF, materialized by the count below: left as a plan, each
+        // delete's branch embeds the whole insert log as of that delete, so
+        // the tombstone log's plan (and every liveIds task binary) grows
+        // with deletes × inserts
         val newTombstones =
           inserted.where(col("id") >= step.start && col("id") < step.end)
             .select(col("id"), lit(seq).as("seq")).distinct()
+            .localCheckpoint(eager = false)
         // count the rows actually tombstoned (ids never inserted don't
         // count; ids already tombstoned count once more only if re-marked)
         nTombstones += newTombstones.count()

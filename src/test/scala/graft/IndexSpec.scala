@@ -431,23 +431,24 @@ class IndexSpec extends AnyFunSuite with SparkSuite {
     HnswRouted.buildAndSave(base, path, c = 8, kmIters = 2)
     val routed = HnswRouted.loadResident(spark, path)
     // loadResident records cluster populations; they partition the corpus
-    assert(routed.clusterSizes.values.sum === base.count())
+    assert(routed.router.sizes.values.sum === base.count())
     // minMass = 1 + exhaustive beam: full fan-out = brute force
     val got = routed.probeLocalAuto(queries, 10, efSearch = 1 << 20, minMass = 1.0)
       .select("qid", "id", "rank").as[(Long, Long, Long)].collect().toSet
     val t = truth.select("qid", "id", "rank").as[(Long, Long, Long)].collect().toSet
     assert(got === t)
     // every route reaches the mass target (no cap in the way)
-    val total = routed.clusterSizes.values.sum.toDouble
+    val router = routed.router
+    val total = router.sizes.values.sum.toDouble
     val qs = queries.select($"qid".cast("long"), $"qvec")
       .as[(Long, Array[Float])].collect()
     qs.foreach { case (_, qv) =>
-      val r = routed.routeByMass(qv, 0.5, Int.MaxValue)
-      val mass = r.map(routed.clusterSizes.getOrElse(_, 0L)).sum.toDouble
+      val r = router.byMass(qv, 0.5)
+      val mass = r.map(router.sizes.getOrElse(_, 0L)).sum.toDouble
       assert(mass >= 0.5 * total, s"routed mass $mass < half of $total")
     }
     // maxNprobe caps the walk even short of the mass target
-    assert(routed.routeByMass(qs.head._2, 1.0, 2).length === 2)
+    assert(router.byMass(qs.head._2, 1.0, 2).length === 2)
     // recall trades monotonically against the mass knob, like nprobe
     def r(mm: Double) = Recall.mean(
       routed.probeLocalAuto(queries, 10, efSearch = 64, minMass = mm), truth, 10)
@@ -464,16 +465,37 @@ class IndexSpec extends AnyFunSuite with SparkSuite {
     // giant and starves queries in the tail; the mass walk adapts.
     val centroids = Array.tabulate(4)(c => (c, Array.fill(4)(10f * c)))
     val sizes = Map(0 -> 900L, 1 -> 50L, 2 -> 30L, 3 -> 20L)
-    val routed = new HnswRouted(spark,
-      spark.sparkContext.emptyRDD[(Int, HnswIndex)], centroids,
-      ipMetric = false, shardsOf = Map.empty, clusterSizes = sizes)
+    val router = new CoarseRouter(centroids, sizes)
     // near the giant: its 90% mass clears the target in one probe
-    val nBlob = routed.routeByMass(Array.fill(4)(0f), 0.4, Int.MaxValue).length
+    val nBlob = router.byMass(Array.fill(4)(0f), 0.4).length
     // deep in the tail: 20 + 30 + 50 of 1000 never reach 40% — the walk
     // must run all the way back to the giant
-    val nOut = routed.routeByMass(Array.fill(4)(30f), 0.4, Int.MaxValue).length
+    val nOut = router.byMass(Array.fill(4)(30f), 0.4).length
     assert(nBlob === 1, s"blob probes $nBlob")
     assert(nOut === 4, s"outlier probes $nOut")
+  }
+
+  test("coarse router under ip routes by the brute-force negated-dot rank, " +
+       "fixed nprobe and mass walk alike") {
+    val rnd = new scala.util.Random(7)
+    val centroids = Array.tabulate(24)(c => (c, Array.fill(6)(rnd.nextGaussian().toFloat)))
+    val sizes = centroids.map { case (c, _) => c -> (1L + rnd.nextInt(50)) }.toMap
+    val router = new CoarseRouter(centroids, sizes, ip = true)
+    val total = sizes.values.sum
+    (0 until 20).foreach { _ =>
+      val qv = Array.fill(6)(rnd.nextGaussian().toFloat)
+      val rank = centroids.map { case (c, v) =>
+        (-qv.indices.map(i => qv(i).toDouble * v(i)).sum, c) }.sorted.map(_._2)
+      assert(router.byNprobe(qv, 5).toSeq === rank.take(5).toSeq)
+      // the mass walk: the shortest rank prefix holding >= 40% of the rows
+      val need = 0.4 * total
+      val cum = rank.scanLeft(0L)(_ + sizes(_)).tail
+      val want = rank.take(cum.indexWhere(_ >= need) + 1)
+      assert(router.byMass(qv, 0.4).toSeq === want.toSeq)
+      // efRoute >= C is the linear rank verbatim
+      assert(router.byNprobeGraph(qv, 5, efRoute = 24).toSeq === rank.take(5).toSeq)
+      assert(router.byMassGraph(qv, 0.4, efRoute = 24).toSeq === want.toSeq)
+    }
   }
 
   test("routed graphs under ip route by max inner product and stay exact at the degenerate point") {
@@ -718,6 +740,45 @@ class IndexSpec extends AnyFunSuite with SparkSuite {
     resident.unload()
   }
 
+  test("an evicted resident graph re-probes to identical rows: lineage " +
+       "rebuild, parquet refill, routed graphs and the tag registry") {
+    val qs = queries.select($"qid".cast("long"), $"qvec")
+      .as[(Long, Array[Float])].collect()
+    def tmp(p: String) =
+      java.nio.file.Files.createTempDirectory(p).resolve("idx").toString
+    // probe, drop the pinned graphs, probe again: the second probe runs on
+    // graphs rebuilt from the RDD's lineage
+    def reprobe(what: String, unload: () => Unit)(
+        probe: => Array[(Long, Long, Double, Long)]): Unit =
+      try {
+        val before = probe
+        assert(before.nonEmpty, what)
+        unload()
+        assert(probe.toSeq === before.toSeq, what)
+      } finally unload()
+    val built = HnswKnn.buildResident(base, numPartitions = 4)
+    reprobe("buildResident", built.unload)(
+      built.probeBatch(qs, 10, 32, tombstones = Set(0L, 1L)))
+    val fp = tmp("graft-evict-flat")
+    HnswKnn.buildAndSave(base, fp, numPartitions = 4)
+    val loaded = HnswKnn.loadResident(spark, fp)
+    reprobe("loadResident", loaded.unload)(loaded.probeBatch(qs, 10, 32))
+    val rp = tmp("graft-evict-routed")
+    HnswRouted.buildAndSave(base, rp, c = 6, kmIters = 2)
+    val routed = HnswRouted.loadResident(spark, rp)
+    reprobe("HnswRouted", routed.unload)(routed.probeBatch(qs, 10, 32, nprobe = 2))
+    val tp = tmp("graft-evict-tags")
+    TagSubindexes.build(TagFilter.withTags(emb), tp, minFreqBp = 500,
+      numPartitions = 2)
+    val reg = TagSubindexes.loadResident(spark, tp)
+    val groups = emb.where($"vec_id" < 20)
+      .select($"vec_id".cast("long"), $"embedding", $"label".cast("int"))
+      .as[(Long, Array[Float], Int)].collect()
+      .groupBy(_._3.toString)
+      .map { case (key, rows) => key -> rows.map(r => (r._1, r._2)) }
+    reprobe("registry", reg.unload)(reg.probeGroupsBatch(groups, 10, 32))
+  }
+
   test("routed planner with live graph branch: both regimes, recall >= 0.9") {
     val b = TagFilter.withTags(emb)
     val twoTag = TagFilter.tagQueries(emb, 10) // rarest ~1000bp → exact branch
@@ -813,11 +874,10 @@ class IndexSpec extends AnyFunSuite with SparkSuite {
           key -> rows.map { case (qid, qv, _) => (qid, qv) } }
       val viaBatch = reg.probeGroupsBatch(groups, k = 10, efSearch = 64)
         .map(t => (t._1, t._2, t._4)).toSet
-      val viaDf = reg.probeGroups(groups, k = 10, efSearch = 64)
-        .select($"qid".cast("long"), $"id".cast("long"), $"rank".cast("long"))
-        .as[(Long, Long, Long)].collect().toSet
-      assert(viaBatch === viaDf,
-        "probeGroupsBatch must equal probeGroups row-for-row")
+      val viaProbe = got.select($"qid".cast("long"), $"id".cast("long"),
+        $"rank".cast("long")).as[(Long, Long, Long)].collect().toSet
+      assert(viaBatch === viaProbe,
+        "a held-open registry must serve TagSubindexes.probe's rows")
     } finally reg.unload()
   }
 

@@ -61,6 +61,13 @@ class ResidentJobSpec extends AnyFunSuite with SparkSuite {
     assert(jobs.head._2 === tasks, s"$what: tasks per batch")
   }
 
+  /** Elements in each partition of the one RDD a loader pinned. */
+  private def perPartition(rdds: Set[Int]): Seq[Int] = {
+    assert(rdds.size === 1, s"pinned RDDs $rdds")
+    spark.sparkContext.getPersistentRDDs(rdds.head)
+      .mapPartitions(it => Iterator.single(it.size)).collect().toSeq
+  }
+
   private def centroidRank(qv: Array[Float],
                            cs: Array[(Int, Array[Float])]): Array[Int] =
     cs.map { case (cid, c) =>
@@ -109,7 +116,7 @@ class ResidentJobSpec extends AnyFunSuite with SparkSuite {
       // two queries, two clusters each: the shards they route to
       val batch = qs.take(2)
       val routes = batch.map { case (qid, qv) =>
-        qid -> centroidRank(qv, routed.centroids).take(2).toSet }.toMap
+        qid -> centroidRank(qv, routed.router.centroids).take(2).toSet }.toMap
       val shards = routes.values.flatten.toSet
       assert(shards.size < 6, "the batch must leave some shard unrouted")
       var got = Array.empty[(Long, Long, Double, Long)]
@@ -156,5 +163,34 @@ class ResidentJobSpec extends AnyFunSuite with SparkSuite {
       assert(got.toSeq ===
         reg.probeGroupsBatch(groups, k = 10, efSearch = 64, treeMergeAt = 1).toSeq)
     } finally reg.unload()
+  }
+
+  test("every graph loader pins exactly one graph per partition") {
+    base.count()
+    def tmp(p: String) =
+      java.nio.file.Files.createTempDirectory(p).resolve("idx").toString
+    // id-hash graphs: one per built partition, whatever the parquet splits
+    val fp = tmp("graft-place-flat")
+    HnswKnn.buildAndSave(base, fp, numPartitions = 5)
+    val (flat, flatRdd) = pinned(HnswKnn.loadResident(spark, fp))
+    try assert(perPartition(flatRdd) === Seq.fill(5)(1), "HnswKnn")
+    finally flat.unload()
+    // routed graphs: one per cluster
+    val rp = tmp("graft-place-routed")
+    HnswRouted.buildAndSave(base, rp, c = 6, kmIters = 2)
+    val clusters = spark.read.parquet(rp).select("part").distinct().count()
+    val (routed, routedRdd) = pinned(HnswRouted.loadResident(spark, rp))
+    try assert(perPartition(routedRdd) === Seq.fill(clusters.toInt)(1),
+      "HnswRouted")
+    finally routed.unload()
+    // tag registry: one per (key, part)
+    val tp = tmp("graft-place-tags")
+    TagSubindexes.build(TagFilter.withTags(emb), tp, minFreqBp = 500,
+      numPartitions = 2)
+    val elements = spark.read.parquet(tp).select("tag", "part").distinct().count()
+    val (reg, regRdd) = pinned(TagSubindexes.loadResident(spark, tp))
+    try assert(perPartition(regRdd) === Seq.fill(elements.toInt)(1),
+      "TagSubindexes")
+    finally reg.unload()
   }
 }
