@@ -562,12 +562,11 @@ object Bench {
     val base = emb.select(col("vec_id").as("id"), col("embedding").as("vec"))
     val queries = emb.where(col("vec_id") < nq)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val qsFloat = queries.select(col("qid").cast("long"), col("qvec"))
-      .as[(Long, Array[Float])].collect()
+    val qsFloat = index.ResidentServe.queries(queries)
     def probeF(parts: Int)(one: Array[(Long, Array[Float])] =>
         Array[(Long, Long, Double, Long)]): Unit = probe(qsFloat, parts)(one)
     def frame(rows: Array[(Long, Long, Double, Long)]): DataFrame =
-      spark.createDataFrame(rows.toSeq).toDF("qid", "id", "dist", "rank")
+      index.ResidentServe.frame(spark, rows)
     def rec(got: DataFrame, truth: DataFrame): Double =
       operators.Recall.mean(got, truth, 10)
     // exact truths, collected to LOCAL relations: per-track clearCache
@@ -1050,7 +1049,7 @@ object Bench {
     // code scan stops being a headline row there and its bench wall goes to
     // the scale runs instead (r10 verdict item 6).
     if (famOn("adc") && n <= 2000000L) {
-    val adcServed = index.ResidentAdc.load(base, pqCb, numPartitions = serveShards)
+    val adcServed = index.ResidentCodes.loadAdc(base, pqCb, numPartitions = serveShards)
     deferUnload(adcServed.unload())
     // refine-budget sweep: rerank is the ADC knob (faiss's k_factor·k).
     // The r8 grid was a FIXED 20–640, and at 10M uniform rows the family
@@ -1149,7 +1148,7 @@ object Bench {
     lazy val benchIvf =
       index.IvfIndex.buildAtScale(base, c = benchC, iters = 3, n)
     if (famOn("ivfadc")) {
-      val served = index.ResidentIvfAdc.load(base, benchIvf, pqCb,
+      val served = index.ResidentCodes.loadIvfAdc(base, benchIvf, pqCb,
         numPartitions = serveShards)
       deferUnload(served.unload())
       ivfMassFamily("ann_ivfadc_served", "ivf_rerank_adc", 160,
@@ -1165,7 +1164,7 @@ object Bench {
     if (famOn("residual")) {
       val ivfPqRes = index.IvfPq.buildResidualWith(benchIvf, base, m = 8,
         ksub = 32, iters = 3)
-      val served = index.ResidentIvfAdc.loadResidual(base, ivfPqRes,
+      val served = index.ResidentCodes.loadIvfResidual(base, ivfPqRes,
         numPartitions = serveShards)
       deferUnload(served.unload())
       ivfMassFamily("ann_ivfadc_residual_served", "ivf_rerank_adc_residual",
@@ -1181,7 +1180,7 @@ object Bench {
     // SQ8 codes need only rerank=80 where PQ needs 160.
     if (famOn("sq8")) {
     val (sq8Mins, sq8Spans) = index.Sq8.train(base)
-    val ivfSq8Served = index.ResidentIvfSq8.load(base, benchIvf, sq8Mins,
+    val ivfSq8Served = index.ResidentCodes.loadIvfSq8(base, benchIvf, sq8Mins,
       sq8Spans, numPartitions = serveShards)
     deferUnload(ivfSq8Served.unload())
     val (sq8, sq8Rerank) = ivfMassFamily("ann_ivfsq8_served",

@@ -125,14 +125,11 @@ object OodTrack {
     knnResult(f(embQueries(s, dir, 10), embBase(s, dir)))
 
   /** The first 10 embeddings as a driver-side query batch. */
-  private def queryArray(s: SparkSession, dir: String): Array[(Long, Array[Float])] = {
-    import s.implicits._
-    embQueries(s, dir, 10).select(col("qid").cast("long"), col("qvec"))
-      .as[(Long, Array[Float])].collect()
-  }
+  private def queryArray(s: SparkSession, dir: String): Array[(Long, Array[Float])] =
+    ResidentServe.queries(embQueries(s, dir, 10))
 
   private def rowsFrame(s: SparkSession, rows: Array[(Long, Long, Double, Long)]): DataFrame =
-    knnResult(s.createDataFrame(rows.toSeq).toDF("qid", "id", "dist", "rank"))
+    knnResult(ResidentServe.frame(s, rows))
 
   private val dotSql = "sum(CAST(x AS DOUBLE) * CAST(y AS DOUBLE))"
   // Hamming over sign bits: count of coordinates whose signs disagree —
@@ -504,7 +501,7 @@ object OodTrack {
     // served batch hash-matches brute force — the serving twin of
     // ann_pq_exact (codes in memory, floats touched only by the re-rank).
     Entry("ann_pq_served_exact", (s, dir) => {
-      val served = ResidentAdc.load(embBase(s, dir), pqLossless(s, dir, 4),
+      val served = ResidentCodes.loadAdc(embBase(s, dir), pqLossless(s, dir, 4),
         numPartitions = 4)
       try knnResult(served.probeLocal(embQueries(s, dir, 10), 10, rerank = 20))
       finally served.unload()
@@ -516,7 +513,7 @@ object OodTrack {
     // plumbing in the loop).
     Entry("ann_opq_served_exact", (s, dir) => {
       val (rot, cb) = opqLossless(s, dir, 4)
-      val served = ResidentAdc.loadRotated(embBase(s, dir), rot, cb,
+      val served = ResidentCodes.loadAdcRotated(embBase(s, dir), rot, cb,
         numPartitions = 4)
       try knnResult(served.probeLocal(embQueries(s, dir, 10), 10, rerank = 20))
       finally served.unload()
@@ -526,7 +523,7 @@ object OodTrack {
     // exact-degenerate point: nprobe = C scans every cluster, the lossless
     // codebook makes ADC exact — hash-matches brute force end to end.
     Entry("ann_ivfadc_served_exact", (s, dir) => {
-      val served = ResidentIvfAdc.load(embBase(s, dir), ivf8(s, dir),
+      val served = ResidentCodes.loadIvfAdc(embBase(s, dir), ivf8(s, dir),
         pqLossless(s, dir, 4), numPartitions = 4)
       try knnResult(served.probeLocal(embQueries(s, dir, 10), 10,
         nprobe = served.numClusters, rerank = 20))
@@ -540,7 +537,7 @@ object OodTrack {
     // codes (loading is a join, not a re-encode).
     Entry("ann_ivfadc_residual_served_exact", (s, dir) => {
       val idx = ivfPqResidualLossless(s, dir, c = 8, iters = 3, m = 4)
-      val served = ResidentIvfAdc.loadResidual(embBase(s, dir), idx,
+      val served = ResidentCodes.loadIvfResidual(embBase(s, dir), idx,
         numPartitions = 4)
       try knnResult(served.probeLocal(embQueries(s, dir, 10), 10,
         nprobe = served.numClusters, rerank = 20))
@@ -556,7 +553,7 @@ object OodTrack {
     Entry("ann_ivfsq8_served_exact", (s, dir) => {
       val b = embBase(s, dir)
       val (mins, spans) = sq8Train(s, dir)
-      val served = ResidentIvfSq8.load(b, ivf8(s, dir), mins, spans,
+      val served = ResidentCodes.loadIvfSq8(b, ivf8(s, dir), mins, spans,
         numPartitions = 4)
       try knnResult(served.probeLocal(embQueries(s, dir, 10), 10,
         nprobe = served.numClusters, rerank = b.count().toInt))
@@ -572,7 +569,7 @@ object OodTrack {
     Entry("ann_ivfsq8_mass_exact", (s, dir) => {
       val b = embBase(s, dir)
       val (mins, spans) = sq8Train(s, dir)
-      val served = ResidentIvfSq8.load(b, ivf8(s, dir), mins, spans,
+      val served = ResidentCodes.loadIvfSq8(b, ivf8(s, dir), mins, spans,
         numPartitions = 4)
       try rowsFrame(s, served.probeBatchMass(queryArray(s, dir), 10,
         minMass = 1.0, rerank = b.count().toInt, shardRoute = Some(true)))
@@ -590,7 +587,7 @@ object OodTrack {
     Entry("ann_ivfsq8_graphroute_exact", (s, dir) => {
       val b = embBase(s, dir)
       val (mins, spans) = sq8Train(s, dir)
-      val served = ResidentIvfSq8.load(b, IvfIndex.build(b, c = 64, iters = 2),
+      val served = ResidentCodes.loadIvfSq8(b, IvfIndex.build(b, c = 64, iters = 2),
         mins, spans, numPartitions = 4)
       try rowsFrame(s, served.probeBatchMass(queryArray(s, dir), 10,
         minMass = 1.0, rerank = b.count().toInt, shardRoute = Some(true),

@@ -190,7 +190,7 @@ object Pq {
 
   /** Driver/executor-local LUT builder — the same table [[lutCol]] computes
     * inside the plan, for serving paths that prepare query batches outside
-    * it ([[ResidentAdc]]). */
+    * it ([[ResidentCodes]]). */
   def lutLocal(q: Array[Float], cb: Codebook, metric: String): Array[Double] =
     lutOf(q, cb.books, cb.dsub, cb.stride, metric == Metric.Ip)
 

@@ -7,10 +7,11 @@ package graft.index
   * idle no matter how many queries it carries).
   *
   * [[striped]] splits the query array into `slices` round-robin stripes and
-  * runs each stripe as its own concurrent Spark job from a dedicated thread
-  * pool (the reference serves with a thread pool over queries for the same
-  * reason, filter/faiss/faiss.py:420-426 — and the r11 filter-track
-  * subindex striping measured 2.7× at 10M rows from exactly this shape).
+  * runs each stripe as its own concurrent Spark job on a long-lived stripe
+  * pool, under one job group per batch (the reference serves with a thread
+  * pool over queries for the same reason, filter/faiss/faiss.py:420-426 —
+  * and the r11 filter-track subindex striping measured 2.7× at 10M rows
+  * from exactly this shape).
   * Total probe work is unchanged: each qid is still probed exactly once,
   * and the per-qid result never depends on which other qids share its job,
   * so the concatenated output re-sorted by (qid, rank) is IDENTICAL to the
@@ -73,37 +74,59 @@ object ProbeSlices {
     run(qs, stripes, one, key)
   }
 
+  /** The stripe threads, shared by every striped batch: daemon threads
+    * (an idle pool never holds the JVM open), created on demand and reused
+    * while idle, so the serving loop builds no pool per batch and a batch
+    * never waits on a thread another batch (or nested striping) holds —
+    * job submission blocks per stripe. Threads do not inherit the creating
+    * caller's Spark local properties: a reused thread would otherwise
+    * carry the properties of whichever batch created it. */
+  private lazy val pool = java.util.concurrent.Executors.newCachedThreadPool {
+    val n = new java.util.concurrent.atomic.AtomicLong
+    r => {
+      val t = new Thread(null, r, s"probe-stripe-${n.incrementAndGet()}", 0L,
+        false)
+      t.setDaemon(true)
+      t
+    }
+  }
+
+  private val batches = new java.util.concurrent.atomic.AtomicLong
+
   private def run[Q, R](qs: Array[Q], stripes: Seq[Array[Q]],
                         one: Array[Q] => Array[R],
                         key: R => (Long, Long))
                        (implicit ct: scala.reflect.ClassTag[R]): Array[R] = {
     if (stripes.length <= 1) return one(qs)
-    // dedicated pool: Spark job submission blocks per stripe, and the
-    // global ExecutionContext is shared with caller code — a serving loop
-    // must not deadlock on someone else's starved pool
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(stripes.length)
-    try {
-      implicit val ec: scala.concurrent.ExecutionContextExecutorService =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      val fs = stripes.map(st => scala.concurrent.Future(one(st)))
-      // fail fast (ADVICE r12): Future.sequence fails as soon as ANY stripe
-      // fails, instead of awaiting each stripe in submission order — and the
-      // catch cancels queued-but-unstarted stripe thunks (shutdownNow) so a
-      // failing batch doesn't keep launching the rest of its Spark jobs
-      // behind the caller's back. Stripes already in flight run out; their
-      // results are discarded with the pool.
-      val parts =
-        try scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(fs),
-          scala.concurrent.duration.Duration.Inf)
-        catch { case e: Throwable => pool.shutdownNow(); throw e }
-      // stripes partition qids — concatenate and restore (qid, rank) order
-      val all = Array.concat(parts: _*)
-      scala.util.Sorting.stableSort(all, (a: R, b: R) => {
-        val (ka, kb) = (key(a), key(b))
-        ka._1 < kb._1 || (ka._1 == kb._1 && ka._2 < kb._2)
-      })
-      all
-    } finally pool.shutdown()
+    // the batch's stripes run as one Spark job group, so one throwing
+    // stripe can cancel its siblings' jobs — the in-flight ones (their
+    // tasks interrupted) and any a sibling submits after the cancel
+    val sc = org.apache.spark.SparkContext.getOrCreate()
+    val group = s"graft-probe-stripes-${batches.incrementAndGet()}"
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.fromExecutor(pool)
+    val fs = stripes.map { st =>
+      scala.concurrent.Future {
+        sc.setJobGroup(group, "striped probe batch", interruptOnCancel = true)
+        try one(st) finally sc.clearJobGroup()
+      }
+    }
+    // fail fast: Future.sequence fails as soon as ANY stripe fails,
+    // instead of awaiting each stripe in submission order
+    val parts =
+      try scala.concurrent.Await.result(scala.concurrent.Future.sequence(fs),
+        scala.concurrent.duration.Duration.Inf)
+      catch {
+        case e: Throwable =>
+          sc.cancelJobGroupAndFutureJobs(group, "a sibling stripe failed")
+          throw e
+      }
+    // stripes partition qids — concatenate and restore (qid, rank) order
+    val all = Array.concat(parts: _*)
+    scala.util.Sorting.stableSort(all, (a: R, b: R) => {
+      val (ka, kb) = (key(a), key(b))
+      ka._1 < kb._1 || (ka._1 == kb._1 && ka._2 < kb._2)
+    })
+    all
   }
 }

@@ -10,7 +10,7 @@ import org.apache.spark.storage.StorageLevel
   * dims — a 64-d float row is ONE machine word here, 32× smaller than the
   * float form a [[ScanShard]] pins). `vecs` is empty unless the shard was
   * loaded with `pinFloats` for the two-tier re-rank probe (the
-  * [[ResidentAdc]] codes-plus-refine layout, binary edition). */
+  * [[ResidentCodes]] codes-plus-refine layout, binary edition). */
 final case class BinaryShard(ids: Array[Long], codes: Array[Array[Long]],
                              vecs: Array[Array[Float]])
 
@@ -106,8 +106,7 @@ final class ResidentBinary(spark: SparkSession, rdd: RDD[BinaryShard],
       .select(col("qid").cast("long"), vecSignPack(col("qvec")).as("qcode"),
         col("qvec"))
       .as[(Long, Array[Long], Array[Float])].collect()
-    spark.createDataFrame(probeBatchRerank(qs, k, c, metric = metric).toSeq)
-      .toDF("qid", "id", "dist", "rank")
+    ResidentServe.frame(spark, probeBatchRerank(qs, k, c, metric = metric))
   }
 
   /** [[probeBatch]] with DataFrame plumbing: `queries` needs (qid, qvec);
@@ -119,8 +118,7 @@ final class ResidentBinary(spark: SparkSession, rdd: RDD[BinaryShard],
     val qs = queries
       .select(col("qid").cast("long"), vecSignPack(col("qvec")).as("qcode"))
       .as[(Long, Array[Long])].collect()
-    spark.createDataFrame(probeBatch(qs, k).toSeq)
-      .toDF("qid", "id", "dist", "rank")
+    ResidentServe.frame(spark, probeBatch(qs, k))
   }
 
   def unload(): Unit = rdd.unpersist()

@@ -104,8 +104,7 @@ final class ResidentScan(spark: SparkSession, rdd: RDD[ScanShard],
       .select(col("qid").cast("long"), col("qvec"), col("qtags"),
         col("qsig").cast("long"))
       .as[(Long, Array[Float], Array[Int], Long)].collect()
-    spark.createDataFrame(probeBatch(qs, k).toSeq)
-      .toDF("qid", "id", "dist", "rank")
+    ResidentServe.frame(spark, probeBatch(qs, k))
   }
 
   def unload(): Unit = rdd.unpersist()

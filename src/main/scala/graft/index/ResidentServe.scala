@@ -4,6 +4,7 @@ import org.apache.spark.TaskContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import scala.reflect.ClassTag
 
 /** The one serving batch every executor-resident family runs: a
@@ -35,7 +36,7 @@ import scala.reflect.ClassTag
   * warm JVM — and the per-batch `flatMap` a third, on an RDD thrown away
   * after one job. `runJob` cleans one closure, defined in [[ShardJob]],
   * whose class file is a few KB. */
-private[index] object ResidentServe {
+private[graft] object ResidentServe {
 
   /** Batch check on the driver, before any preparation or broadcast:
     * `k` ≥ 1 and every query vector finite and (`dim` ≥ 0) of the index
@@ -137,6 +138,13 @@ private[index] object ResidentServe {
     * the shards it came from can unload before the frame is read. */
   def frame(spark: SparkSession, rows: Array[(Long, Long, Double, Long)]): DataFrame =
     spark.createDataFrame(rows.toSeq).toDF("qid", "id", "dist", "rank")
+
+  /** A (qid, qvec) query frame as the driver-side batch a probe takes. */
+  def queries(df: DataFrame): Array[(Long, Array[Float])] = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    df.select(col("qid").cast("long"), col("qvec")).as[(Long, Array[Float])].collect()
+  }
 
   /** Exact distance, smaller is better: squared L2, or the negated inner
     * product under `ip`. Double accumulation in component order, the same

@@ -1,9 +1,9 @@
 package graft.index
 
 /** Coarse-quantizer routing shared by the routed serving forms
-  * ([[ResidentIvfSq8]], [[ResidentIvfAdc]], [[HnswRouted]]): rank the C
-  * centroids against a query — by L2 (the coarse quantizer's own metric, as
-  * in faiss), or under `ip` by negated dot (MIPS routes to the centroids of
+  * ([[ResidentCodes]], [[HnswRouted]]): rank the C centroids against a
+  * query — by L2 (the coarse quantizer's own metric, as in faiss), or under
+  * `ip` by negated dot (MIPS routes to the centroids of
   * max inner product, the IVF-MIPS convention) — and take either a fixed
   * `nprobe` prefix or a mass-adaptive prefix. Ties break to the lower cid.
   *

@@ -20,7 +20,6 @@ object ProbeDiag {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
 
     val emb = Tables.embeddings(spark, sfDir)
     val n = emb.count()
@@ -28,8 +27,7 @@ object ProbeDiag {
     val base = emb.select(col("vec_id").as("id"), col("embedding").as("vec"))
     val queries = emb.where(col("vec_id") < nq)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val qs = queries.select(col("qid").cast("long"), col("qvec"))
-      .as[(Long, Array[Float])].collect()
+    val qs = graft.index.ResidentServe.queries(queries)
 
     def gcMillis(): Long = {
       import scala.jdk.CollectionConverters._

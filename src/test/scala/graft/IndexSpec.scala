@@ -612,7 +612,7 @@ class IndexSpec extends AnyFunSuite with SparkSuite {
        "dataflow composition row-for-row at pruned knobs") {
     val ivf = IvfIndex.build(base, c = 8, iters = 2)
     val (mins, spans) = Sq8.train(base)
-    val served = ResidentIvfSq8.load(base, ivf, mins, spans, numPartitions = 4)
+    val served = ResidentCodes.loadIvfSq8(base, ivf, mins, spans, numPartitions = 4)
     try {
       def rs(df: DataFrame) =
         df.select("qid", "id", "rank").as[(Long, Long, Long)].collect().toSet
@@ -642,9 +642,12 @@ class IndexSpec extends AnyFunSuite with SparkSuite {
        "shard-side routing identical, ADC twin agrees at the same mass") {
     val ivf = IvfIndex.build(base, c = 8, iters = 2)
     val (mins, spans) = Sq8.train(base)
-    val served = ResidentIvfSq8.load(base, ivf, mins, spans, numPartitions = 4)
+    val served = ResidentCodes.loadIvfSq8(base, ivf, mins, spans, numPartitions = 4)
     val cb = Pq.train(base, m = 4, ksub = 16, iters = 2)
-    val adc = ResidentIvfAdc.load(base, ivf, cb, numPartitions = 4)
+    val adc = ResidentCodes.loadIvfAdc(base, ivf, cb, numPartitions = 4)
+    val res = ResidentCodes.loadIvfResidual(base,
+      IvfPq.buildResidualWith(ivf, base, m = 4, ksub = 16, iters = 2),
+      numPartitions = 4)
     try {
       def rs(df: DataFrame) =
         df.select("qid", "id", "rank").as[(Long, Long, Long)].collect().toSet
@@ -656,14 +659,17 @@ class IndexSpec extends AnyFunSuite with SparkSuite {
       assert(rs(adc.probeLocalMass(queries, 10, minMass = 1.0,
         rerank = n)) === rs(truth))
       // pruned mass: shard-side routing (the large-C serving path) must
-      // produce the client-side rows verbatim — same router, same order
+      // produce the client-side rows verbatim — same router, same order —
+      // for every routed code type (one front end serves them all)
       val qs = queries.select($"qid".cast("long"), $"qvec")
         .as[(Long, Array[Float])].collect()
-      val client = served.probeBatchMass(qs, 10, minMass = 0.5, rerank = 40,
-        shardRoute = Some(false))
-      val shardSide = served.probeBatchMass(qs, 10, minMass = 0.5,
-        rerank = 40, shardRoute = Some(true))
-      assert(client.toSeq === shardSide.toSeq)
+      for ((what, s) <- Seq("sq8" -> served, "ivfadc" -> adc, "residual" -> res)) {
+        val client = s.probeBatchMass(qs, 10, minMass = 0.5, rerank = 40,
+          shardRoute = Some(false))
+        val shardSide = s.probeBatchMass(qs, 10, minMass = 0.5,
+          rerank = 40, shardRoute = Some(true))
+        assert(client.toSeq === shardSide.toSeq, what)
+      }
       // mass routing scans at least the requested fraction's best clusters,
       // so at equal (mass ≈ nprobe/C) budgets recall is comparable to the
       // fixed-nprobe route on this near-uniform corpus
@@ -674,6 +680,7 @@ class IndexSpec extends AnyFunSuite with SparkSuite {
     } finally {
       served.unload()
       adc.unload()
+      res.unload()
     }
   }
 
@@ -682,9 +689,12 @@ class IndexSpec extends AnyFunSuite with SparkSuite {
     // C large enough that the centroid HNSW is a real graph, not a clique
     val ivf = IvfIndex.build(base, c = 64, iters = 2)
     val (mins, spans) = Sq8.train(base)
-    val served = ResidentIvfSq8.load(base, ivf, mins, spans, numPartitions = 4)
+    val served = ResidentCodes.loadIvfSq8(base, ivf, mins, spans, numPartitions = 4)
     val cb = Pq.train(base, m = 4, ksub = 16, iters = 2)
-    val adc = ResidentIvfAdc.load(base, ivf, cb, numPartitions = 4)
+    val adc = ResidentCodes.loadIvfAdc(base, ivf, cb, numPartitions = 4)
+    val res = ResidentCodes.loadIvfResidual(base,
+      IvfPq.buildResidualWith(ivf, base, m = 4, ksub = 16, iters = 2),
+      numPartitions = 4)
     try {
       def rs(df: DataFrame) =
         df.select("qid", "id", "rank").as[(Long, Long, Long)].collect().toSet
@@ -698,14 +708,20 @@ class IndexSpec extends AnyFunSuite with SparkSuite {
         efRoute = adc.numClusters)) === rs(truth))
       // pruned beam: routing goes through the centroid graph. Client- and
       // shard-side routing build the same deterministic graph (level draws
-      // key on cid), so the rows must match verbatim.
+      // key on cid), so the rows must match verbatim — for every routed
+      // code type, by mass and by a fixed count.
       val qs = queries.select($"qid".cast("long"), $"qvec")
         .as[(Long, Array[Float])].collect()
-      val client = served.probeBatchMass(qs, 10, minMass = 0.3, rerank = 40,
-        shardRoute = Some(false), efRoute = 32)
-      val shardSide = served.probeBatchMass(qs, 10, minMass = 0.3, rerank = 40,
-        shardRoute = Some(true), efRoute = 32)
-      assert(client.toSeq === shardSide.toSeq)
+      for ((what, s) <- Seq("sq8" -> served, "ivfadc" -> adc, "residual" -> res)) {
+        val client = s.probeBatchMass(qs, 10, minMass = 0.3, rerank = 40,
+          shardRoute = Some(false), efRoute = 32)
+        val shardSide = s.probeBatchMass(qs, 10, minMass = 0.3, rerank = 40,
+          shardRoute = Some(true), efRoute = 32)
+        assert(client.toSeq === shardSide.toSeq, what)
+        assert(s.probeBatch(qs, 10, nprobe = 16, rerank = 40, efRoute = 32,
+          shardRoute = Some(false)).toSeq === s.probeBatch(qs, 10, nprobe = 16,
+          rerank = 40, efRoute = 32, shardRoute = Some(true)).toSeq, what)
+      }
       // end-to-end recall at the pruned beam stays within eps of the
       // linear rank at the same scan mass (graph routing error only)
       val lin = Recall.mean(served.probeLocalMass(queries, 10,
@@ -722,6 +738,7 @@ class IndexSpec extends AnyFunSuite with SparkSuite {
     } finally {
       served.unload()
       adc.unload()
+      res.unload()
     }
   }
 
@@ -1130,7 +1147,7 @@ class IndexSpec extends AnyFunSuite with SparkSuite {
       .as[(Long, Array[Float])].collect()
     val ivf = IvfIndex.build(base, c = 8, iters = 2)
     val cb = Pq.train(base, m = 4, ksub = 16, iters = 2)
-    val adc = ResidentIvfAdc.load(base, ivf, cb, numPartitions = 4)
+    val adc = ResidentCodes.loadIvfAdc(base, ivf, cb, numPartitions = 4)
     try {
       assert(ProbeSlices.striped(qs, 3)(
         st => adc.probeBatchMass(st, 10, minMass = 0.5, rerank = 40))(
@@ -1186,9 +1203,34 @@ class IndexSpec extends AnyFunSuite with SparkSuite {
       assert(flat.probeBatch(Array.empty[(Long, Array[Float])], 10, 64).isEmpty)
     } finally flat.unload()
     val cb = Pq.train(base, m = 4, ksub = 16, iters = 2)
-    val adc = ResidentAdc.load(base, cb, numPartitions = 2)
+    val adc = ResidentCodes.loadAdc(base, cb, numPartitions = 2)
     try rejects("ADC")(adc.probeBatch(_, 10, rerank = 20))
     finally adc.unload()
+  }
+
+  test("every code loader refuses a corpus of mixed dimension") {
+    // one more row, a component longer; it reuses a base id, so the IVF
+    // loads' assignment join keeps it
+    val (id0, v0) = base.select($"id".cast("long"), $"vec")
+      .as[(Long, Array[Float])].head()
+    val mixed = base.select($"id".cast("long"), $"vec")
+      .union(Seq((id0, v0 :+ 0.5f)).toDF("id", "vec"))
+    val ivf = IvfIndex.build(base, c = 8, iters = 2)
+    val cb = Pq.train(base, m = 4, ksub = 16, iters = 2)
+    val (rot, rcb) = Opq.trainRotatedLossless(base, m = 4)
+    val idx = IvfPq.buildResidualWith(ivf, base, m = 4, ksub = 16, iters = 2)
+    val (mins, spans) = Sq8.train(base)
+    def refuses(what: String)(load: => ResidentCodes[_]): Unit =
+      assert(intercept[IllegalArgumentException](load).getMessage
+        .contains("mix dimensions"), what)
+    refuses("flat")(ResidentCodes.loadAdc(mixed, cb, numPartitions = 2))
+    refuses("rotated")(
+      ResidentCodes.loadAdcRotated(mixed, rot, rcb, numPartitions = 2))
+    refuses("IVF raw")(ResidentCodes.loadIvfAdc(mixed, ivf, cb, numPartitions = 2))
+    refuses("IVF residual")(
+      ResidentCodes.loadIvfResidual(mixed, idx, numPartitions = 2))
+    refuses("IVF-SQ8")(
+      ResidentCodes.loadIvfSq8(mixed, ivf, mins, spans, numPartitions = 2))
   }
 
   test("ProbeSlices.auto adapts stripes to partitions, cores and batch size") {

@@ -125,7 +125,7 @@ class OpqSpec extends AnyFunSuite with SparkSuite {
 
   test("rotated resident ADC equals brute force at the lossless point (original-space distances)") {
     val (rot, cb) = Opq.trainRotatedLossless(base, m = 4)
-    val served = graft.index.ResidentAdc.loadRotated(base, rot, cb,
+    val served = graft.index.ResidentCodes.loadAdcRotated(base, rot, cb,
       numPartitions = 4)
     try {
       val got = served.probeLocal(queries, 10, rerank = 20)

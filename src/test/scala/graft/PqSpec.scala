@@ -125,20 +125,20 @@ class PqSpec extends AnyFunSuite with SparkSuite {
   test("resident ADC serving: exact at the lossless point, recall >= dataflow when lossy") {
     // lossless: the served batch must equal brute force rank-for-rank
     val cbL = Pq.trainLossless(base, m = 4)
-    val servedL = graft.index.ResidentAdc.load(base, cbL, numPartitions = 4)
+    val servedL = graft.index.ResidentCodes.loadAdc(base, cbL, numPartitions = 4)
     try {
       val truth = Knn.knnJoin(queries, base, 10, Metric.L2)
       assert(ids(servedL.probeLocal(queries, 10, rerank = 20)) === ids(truth))
       // tree-merge parity on the serving fan-in
       val qs = queries.select(col("qid").cast("long"), col("qvec"))
         .as[(Long, Array[Float])].collect()
-      assert(servedL.probeBatch(qs, 10, 20).toSeq ===
-        servedL.probeBatch(qs, 10, 20, treeMergeAt = 1).toSeq)
+      assert(servedL.probeBatch(qs, 10, rerank = 20).toSeq ===
+        servedL.probeBatch(qs, 10, rerank = 20, treeMergeAt = 1).toSeq)
     } finally servedL.unload()
     // trained (lossy): per-shard rerank buffers union to a SUPERSET of the
     // dataflow's global rerank set, so serving recall >= the dataflow's
     val cb = Pq.train(base, m = 8, ksub = 32, iters = 3)
-    val served = graft.index.ResidentAdc.load(base, cb, numPartitions = 4)
+    val served = graft.index.ResidentCodes.loadAdc(base, cb, numPartitions = 4)
     try {
       val truth = Knn.knnJoin(queries, base, 10, Metric.L2)
       val flowR = Recall.mean(
@@ -154,7 +154,7 @@ class PqSpec extends AnyFunSuite with SparkSuite {
   test("routed resident ADC: exact at nprobe=C lossless; recall monotone in nprobe") {
     val ivf = IvfIndex.build(base, c = 8, iters = 3)
     val cbL = Pq.trainLossless(base, m = 4)
-    val served = graft.index.ResidentIvfAdc.load(base, ivf, cbL, numPartitions = 4)
+    val served = graft.index.ResidentCodes.loadIvfAdc(base, ivf, cbL, numPartitions = 4)
     try {
       val truth = Knn.knnJoin(queries, base, 10, Metric.L2)
       // degenerate point: every cluster scanned, codes lossless → exact
@@ -182,7 +182,7 @@ class PqSpec extends AnyFunSuite with SparkSuite {
     // residual LUTs must reproduce brute force rank-for-rank
     val idxL = IvfPq.buildResidual(base, c = 8, iters = 3, m = 4, ksub = 0,
       lossless = true)
-    val servedL = graft.index.ResidentIvfAdc.loadResidual(base, idxL,
+    val servedL = graft.index.ResidentCodes.loadIvfResidual(base, idxL,
       numPartitions = 4)
     try assert(ids(servedL.probeLocal(queries, 10, servedL.numClusters, 20)) ===
       ids(truth))
@@ -191,10 +191,10 @@ class PqSpec extends AnyFunSuite with SparkSuite {
     // residual codes carry more information than raw-vector codes from the
     // same (m, ksub) — serving recall must reflect that ordering
     val idx = IvfPq.buildResidual(base, c = 8, iters = 3, m = 4, ksub = 16)
-    val served = graft.index.ResidentIvfAdc.loadResidual(base, idx,
+    val served = graft.index.ResidentCodes.loadIvfResidual(base, idx,
       numPartitions = 4)
     val cbRaw = Pq.train(base, m = 4, ksub = 16, iters = 3)
-    val servedRaw = graft.index.ResidentIvfAdc.load(base, idx.ivf, cbRaw,
+    val servedRaw = graft.index.ResidentCodes.loadIvfAdc(base, idx.ivf, cbRaw,
       numPartitions = 4)
     try {
       val rRes = Recall.mean(

@@ -3,7 +3,8 @@ package graft
 import graft.index._
 import graft.operators._
 import org.apache.spark.GraftTestBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{JobFailed, SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerTaskEnd}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.collection.mutable
 
@@ -192,5 +193,40 @@ class ResidentJobSpec extends AnyFunSuite with SparkSuite {
     try assert(perPartition(regRdd) === Seq.fill(elements.toInt)(1),
       "TagSubindexes")
     finally reg.unload()
+  }
+
+  test("a throwing stripe cancels its sibling stripes' in-flight jobs") {
+    val sc = spark.sparkContext
+    val tag = "graft.test.stripe"
+    val sibling = new java.util.concurrent.CompletableFuture[Int]
+    val failed = new java.util.concurrent.CompletableFuture[Int]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty(tag) != null) sibling.complete(e.jobId)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = e.jobResult match {
+        case _: JobFailed if sibling.getNow(-1) == e.jobId => failed.complete(e.jobId)
+        case _ =>
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      // stripe 0 throws once stripe 1's job has started; that job's one
+      // task sleeps, interruptibly, far longer than the test waits
+      val e = intercept[IllegalStateException] {
+        ProbeSlices.striped(Array(0L, 1L), 2) { st =>
+          if (st.head == 0L) {
+            sibling.get(60, java.util.concurrent.TimeUnit.SECONDS)
+            throw new IllegalStateException("stripe 0 failed")
+          }
+          sc.setLocalProperty(tag, "sleeper")
+          try sc.parallelize(Seq(1), 1).map { x => Thread.sleep(120000L); x }
+            .collect().map(_.toLong)
+          finally sc.setLocalProperty(tag, null)
+        }(r => (r, 0L))
+      }
+      assert(e.getMessage === "stripe 0 failed")
+      assert(failed.get(60, java.util.concurrent.TimeUnit.SECONDS) ===
+        sibling.get(), "the sibling stripe's job must fail, not run on")
+    } finally sc.removeSparkListener(listener)
   }
 }
