@@ -1242,37 +1242,28 @@ object Bench {
     }
 
     // binary sign-hash tier: ONE resident load (floats pinned) serves both
-    // the codes-only exact Hamming scan row and the two-tier re-rank rows.
+    // the codes-only exact Hamming scan row and the two-tier re-rank rows;
+    // the ip-refine sweep loads its own (the refine metric is fixed at load)
     if (trackOn("hamming")) {
-    val binServed = index.ResidentBinary.load(base, numPartitions = serveShards,
-      pinFloats = true)
+    val binServed = index.ResidentCodes.loadHamming(base,
+      numPartitions = serveShards, pinFloats = true)
     deferUnload(binServed.unload())
     // codes-only exact Hamming scan — QPS plus binarization fidelity
     // (recall of Hamming top-10 vs float truth; the Hamming ranking itself
     // is exact, see knn_hamming's gate). Sign codes are angle-only (norms
     // are gone), so fidelity against the COSINE truth is the tier's
     // natural grade; L2 fidelity is reported too as the honest
-    // cross-metric number
-    val hamQs = {
-      import graft.functions.vectors._
-      queries.select(col("qid").cast("long"),
-        vecSignPack(col("qvec")).as("qcode")).as[(Long, Array[Long])].collect()
-    }
+    // cross-metric number. Each batch packs its queries' sign words on the
+    // client inside the timed window.
     reg.register("hamming_served", nq) {
-      probe(hamQs, serveShards)(st => binServed.probeBatch(st, k = 10))
+      probeF(serveShards)(st => binServed.probeBatchCodes(st, k = 10))
     }.withRecall(
-      "hamming_served_l2_fidelity" -> rec(binServed.probeLocal(queries, 10), truthL2),
-      "hamming_served_cos_fidelity" -> rec(binServed.probeLocal(queries, 10), truthCos))
+      "hamming_served_l2_fidelity" -> rec(binServed.probeLocalCodes(queries, 10), truthL2),
+      "hamming_served_cos_fidelity" -> rec(binServed.probeLocalCodes(queries, 10), truthCos))
     // two-tier resident: binary top-c first pass + in-shard float re-rank —
     // fidelity is vs exact float L2 (matched-recall picked c); the
     // ip-refine sweep grades the SAME two-tier probe against exact-MIPS
     // truth (the OOD track's metric — text2image-style serving)
-    val ham2Qs = {
-      import graft.functions.vectors._
-      queries.select(col("qid").cast("long"),
-        vecSignPack(col("qvec")).as("qcode"), col("qvec"))
-        .as[(Long, Array[Long], Array[Float])].collect()
-    }
     // candidate-budget sweep: c is the binary tier's recall knob; the
     // candidate set must cover a corpus-sized answer set, so
     // corpus-relative points ride alongside the absolute ones and the
@@ -1280,16 +1271,16 @@ object Bench {
     val cGrid = (Seq(25, 50, 100) ++
       Seq(25 * knobScale, 50 * knobScale, 100 * knobScale)).distinct.sorted
     reg.sweepPick("hamming_rerank_served", "c")(cGrid, nq,
-      c => rec(binServed.probeLocalRerank(queries, 10, c = c), truthL2),
+      c => rec(binServed.probeLocal(queries, 10, rerank = c), truthL2),
       recallKey = "hamming_rerank_served_l2_fidelity") { c =>
-      probe(ham2Qs, serveShards)(st => binServed.probeBatchRerank(st, k = 10, c = c))
+      probeF(serveShards)(st => binServed.probeBatch(st, k = 10, rerank = c))
     }
-    val ip = operators.Metric.Ip
+    val ipServed = index.ResidentCodes.loadHamming(base,
+      numPartitions = serveShards, pinFloats = true, metric = operators.Metric.Ip)
+    deferUnload(ipServed.unload())
     reg.sweep("hamming_rerank_served_ip", "c")(cGrid, nq,
-      c => rec(binServed.probeLocalRerank(queries, 10, c = c, metric = ip),
-        truthIp)) { c =>
-      probe(ham2Qs, serveShards)(st => binServed.probeBatchRerank(st, k = 10,
-        c = c, metric = ip))
+      c => rec(ipServed.probeLocal(queries, 10, rerank = c), truthIp)) { c =>
+      probeF(serveShards)(st => ipServed.probeBatch(st, k = 10, rerank = c))
     }
     }
 

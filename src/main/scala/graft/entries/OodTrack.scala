@@ -232,8 +232,8 @@ object OodTrack {
            |""".stripMargin)),
     // the binary tier's resident serving form — same rows as knn_hamming
     Entry("knn_hamming_served", (s, dir) => {
-      val served = ResidentBinary.load(embBase(s, dir), numPartitions = 4)
-      try knnResult(served.probeLocal(embQueries(s, dir, 10), 10))
+      val served = ResidentCodes.loadHamming(embBase(s, dir), numPartitions = 4)
+      try knnResult(served.probeLocalCodes(embQueries(s, dir, 10), 10))
       finally served.unload()
     }, SameOracleAs("knn_hamming")),
     // binary kind through the unified registry: build → save → load →
@@ -255,10 +255,10 @@ object OodTrack {
     // the two-tier resident form at its degenerate point: the per-shard
     // rerank budget covers every row → exact float kNN (knn_l2's oracle)
     Entry("knn_hamming_rerank_served_exact", (s, dir) => {
-      val served = ResidentBinary.load(embBase(s, dir),
+      val served = ResidentCodes.loadHamming(embBase(s, dir),
         numPartitions = 4, pinFloats = true)
-      try knnResult(served.probeLocalRerank(embQueries(s, dir, 10), 10,
-        c = Int.MaxValue))
+      try knnResult(served.probeLocal(embQueries(s, dir, 10), 10,
+        rerank = Int.MaxValue))
       finally served.unload()
     }, SameOracleAs("knn_l2")),
     // late-interaction (ColBERT maxsim) retrieval over synthetic bags:

@@ -237,35 +237,31 @@ case class VecSignPack(child: Expression) extends UnaryExpression {
       s"$prettyName expects ARRAY<FLOAT>, got ${other.simpleString}")
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val a = input.asInstanceOf[ArrayData]
-    val n = a.numElements()
-    val packed = new Array[Long]((n + 63) >>> 6)
-    var i = 0
-    while (i < n) {
-      if (a.getFloat(i) > 0.0f) packed(i >>> 6) |= 1L << (i & 63)
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(packed)
-  }
+  override def nullSafeEval(input: Any): Any =
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      VecSignPack.pack(input.asInstanceOf[ArrayData].toFloatArray()))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val w = ctx.freshName("w")
-      s"""
-         |final int $n = $a.numElements();
-         |final long[] $w = new long[($n + 63) >>> 6];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($a.getFloat($i) > 0.0f) $w[$i >>> 6] |= (1L << ($i & 63));
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($w);
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, a =>
+      s"""${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
+         |  graft.functions.VecSignPack.pack($a.toFloatArray()));""".stripMargin)
 
   override protected def withNewChildInternal(newChild: Expression): VecSignPack =
     copy(child = newChild)
+}
+
+object VecSignPack {
+  /** The packing rule, shared by both eval paths and by client-side query
+    * prep: bit i set iff `v(i) > 0f`, one long per 64 components. */
+  def pack(v: Array[Float]): Array[Long] = {
+    val w = new Array[Long]((v.length + 63) >>> 6)
+    var i = 0
+    while (i < v.length) {
+      if (v(i) > 0.0f) w(i >>> 6) |= 1L << (i & 63)
+      i += 1
+    }
+    w
+  }
 }
 
 /** Hamming distance between packed sign codes (ARRAY<BIGINT> from

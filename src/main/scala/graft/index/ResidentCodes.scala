@@ -1,5 +1,6 @@
 package graft.index
 
+import graft.functions.VecSignPack
 import graft.operators.Metric
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
@@ -8,29 +9,29 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 /** One executor-resident shard of a quantized-code family: this
-  * partition's rows grouped by IVF cluster (the flat ADC form puts every
-  * row in cluster 0), each cluster a struct-of-arrays block — ids, flat
-  * codes (`width` shorts a row, row-major), floats for the refine. Rows
-  * hash-shard by id, so every shard holds a slice of many clusters and
+  * partition's rows grouped by IVF cluster (the flat forms put every row in
+  * cluster 0), each cluster a struct-of-arrays block — ids, flat codes
+  * (`width` shorts a row, row-major), floats for the refine (null rows in a
+  * codes-only load). `dims` lists the float dimensions of the shard's rows.
+  * Rows hash-shard by id, so every shard holds a slice of many clusters and
   * cluster skew spreads across the fleet instead of pinning one hot
   * executor. */
 final case class CodeShard(
     clusters: Map[Int, (Array[Long], Array[Short], Array[Array[Float]])],
-    width: Int)
+    width: Int, dims: Array[Int])
 
 /** The shard-side half of a code type: `scanner(width)` offers every row
   * of one cluster block to the rerank buffer at its code distance, given
-  * the query's client-side prep `P` (its SQ8 code or its PQ LUT). A scanner
-  * is built once per (shard, batch), so it may own scratch; the code type
-  * is chosen once per block, never per row. */
+  * the query's client-side prep `P` (its SQ8 code, its PQ LUT or its sign
+  * words). A scanner is built once per (shard, batch), so it may own
+  * scratch; the code type is chosen once per block, never per row. */
 private[index] sealed trait BlockScan[P] extends Serializable {
   def scanner(width: Int): ResidentCodes.Scan[P]
 }
 
-/** A code type as a loader picks it: the code width of a row, whether the
-  * refine ranks by inner product, the client-side query prep and the
-  * shard-side block scan. */
-private[index] final case class CodeType[P](width: Int, ip: Boolean,
+/** A code type as a loader picks it: whether the refine ranks by inner
+  * product, the client-side query prep and the shard-side block scan. */
+private[index] final case class CodeType[P](ip: Boolean,
                                             prep: Array[Float] => P,
                                             scan: BlockScan[P])
 
@@ -109,6 +110,30 @@ private[index] final case class PqScan(
   }
 }
 
+/** Hamming: XOR + popcount between the query's packed sign words and each
+  * row's, stored four shorts a word (low half first). Exact in Int. */
+private[index] case object HammingScan extends BlockScan[Array[Long]] {
+  def scanner(width: Int): ResidentCodes.Scan[Array[Long]] = {
+    (_, qw, _, block, buf) =>
+      val (ids, codes, vecs) = block
+      var row = 0
+      while (row < ids.length) {
+        val off = row * width
+        var acc = 0
+        var j = 0
+        while (j < qw.length) {
+          val o = off + 4 * j
+          val w = (codes(o) & 0xFFFFL) | (codes(o + 1) & 0xFFFFL) << 16 |
+            (codes(o + 2) & 0xFFFFL) << 32 | codes(o + 3).toLong << 48
+          acc += java.lang.Long.bitCount(qw(j) ^ w)
+          j += 1
+        }
+        buf.offer(acc.toDouble, ids(row), vecs(row))
+        row += 1
+      }
+  }
+}
+
 /** Executor-resident serving of quantized codes with a float refine — the
   * reference baseline's index composition, `indexkey=IVF16384,SQ8` plus
   * refine (filter/faiss/config.yaml:50-53): coarse routing × in-RAM codes ×
@@ -126,7 +151,9 @@ private[index] final case class PqScan(
   *  - [[ResidentCodes.loadIvfResidual]]: faiss's true IVFPQ, codes of the
   *    residual against the row's centroid;
   *  - [[ResidentCodes.loadIvfSq8]]: IVF routing over SQ8 codes, the
-  *    reference's literal composition.
+  *    reference's literal composition;
+  *  - [[ResidentCodes.loadHamming]]: flat packed sign codes (faiss
+  *    IndexBinaryFlat), the refine optional.
   *
   * A batch routes each query to its nearest centroids — a fixed `nprobe`
   * ([[probeBatch]]) or a corpus fraction `minMass` ([[probeBatchMass]],
@@ -143,10 +170,12 @@ private[index] final case class PqScan(
   * top-k then one global merge.
   *
   * Results: (qid, id, dist, rank), dist the exact metric distance of the
-  * refined rows, (dist asc, id asc) ranking. With a lossless codebook and
-  * every cluster routed, ADC is exact squared L2; with every cluster routed
-  * and rerank ≥ n, every row reaches the exact refine. Either way the
-  * served batch hash-matches brute force (the `_served_exact` gates).
+  * refined rows, (dist asc, id asc) ranking; [[probeBatchCodes]] ranks by
+  * the code distance alone (for Hamming codes, exact Hamming kNN). With a
+  * lossless codebook and every cluster routed, ADC is exact squared L2;
+  * with every cluster routed and rerank ≥ n, every row reaches the exact
+  * refine. Either way the served batch hash-matches brute force (the
+  * `_served_exact` gates).
   *
   * Regime bounds (measured, 10M-row decade): the refine budget must scale
   * with the SCANNED population, because the code scan's false positives
@@ -157,7 +186,8 @@ private[index] final case class PqScan(
   * byte-budget comparison points and the exact degenerate gates. */
 final class ResidentCodes[P] private (
     spark: SparkSession, rdd: RDD[CodeShard], router: Option[CoarseRouter],
-    dim: Int, code: CodeType[P], tables: Option[Broadcast[_]]) {
+    dim: Int, code: CodeType[P], tables: Option[Broadcast[_]],
+    floats: Boolean) {
 
   private val routerBc = router.map(spark.sparkContext.broadcast(_))
 
@@ -171,6 +201,14 @@ final class ResidentCodes[P] private (
                  shardRoute: Option[Boolean] = None): Array[(Long, Long, Double, Long)] =
     serve(qs, k, rerank, treeMergeAt, efRoute, shardRoute)(
       (rt, qv) => rt.byNprobeGraph(qv, nprobe, efRoute))
+
+  /** Every cluster's rows ranked by their code distance alone, with no
+    * refine: (qid, qvec) in, (qid, id, code distance, rank) out. Needs no
+    * pinned floats. */
+  def probeBatchCodes(qs: Array[(Long, Array[Float])], k: Int,
+                      treeMergeAt: Int = 64): Array[(Long, Long, Double, Long)] =
+    serve(qs, k, k, treeMergeAt, Int.MaxValue, None, refine = false)(
+      (rt, qv) => rt.byNprobe(qv, rt.numClusters))
 
   /** [[probeBatch]] with MASS-ADAPTIVE routing: the knob is the corpus
     * fraction scanned, which keeps its meaning at every C and corpus size;
@@ -190,6 +228,10 @@ final class ResidentCodes[P] private (
     ResidentServe.frame(spark, probeBatch(ResidentServe.queries(queries), k,
       nprobe, rerank, efRoute = efRoute))
 
+  /** [[probeBatchCodes]] with DataFrame plumbing on both ends. */
+  def probeLocalCodes(queries: DataFrame, k: Int): DataFrame =
+    ResidentServe.frame(spark, probeBatchCodes(ResidentServe.queries(queries), k))
+
   /** [[probeBatchMass]] with DataFrame plumbing on both ends. */
   def probeLocalMass(queries: DataFrame, k: Int, minMass: Double,
                      rerank: Int, efRoute: Int = Int.MaxValue): DataFrame =
@@ -197,9 +239,11 @@ final class ResidentCodes[P] private (
       k, minMass, rerank, efRoute = efRoute))
 
   private def serve(qs: Array[(Long, Array[Float])], k: Int, rerank: Int,
-                    treeMergeAt: Int, efRoute: Int, shardRoute: Option[Boolean])(
+                    treeMergeAt: Int, efRoute: Int, shardRoute: Option[Boolean],
+                    refine: Boolean = true)(
       route: (CoarseRouter, Array[Float]) => Array[Int]): Array[(Long, Long, Double, Long)] = {
     require(rerank >= k, s"rerank $rerank must be >= k $k")
+    require(floats || !refine, "a refined probe needs pinFloats = true at load")
     ResidentServe.validate(k, dim, qs.iterator.map(_._2))
     // graph routing drops the per-query routing term from O(C·d) to
     // O(efRoute·log C), so the shard-route bound scales by the work the
@@ -222,13 +266,18 @@ final class ResidentCodes[P] private (
     ResidentServe.probe(rdd, prepped, qs.length, k, treeMergeAt) { (shard, batch) =>
       val block = bs.scanner(shard.width)
       batch.iterator.flatMap { case (qid, qv, p, routed) =>
-        val coarse = new TopKBuffer(rerank, carryVecs = true)
         val cids = if (routed != null) routed else route(rb.value, qv)
+        // never larger than the routed rows: rerank = ∞ is the exact
+        // degenerate point, not a giant allocation
+        val rows = cids.iterator.flatMap(shard.clusters.get).map(_._1.length).sum
+        val coarse = new TopKBuffer(math.max(1, math.min(rerank, rows)),
+          carryVecs = refine)
         cids.foreach(cid =>
           shard.clusters.get(cid).foreach(block(qv, p, cid, _, coarse)))
         // exact refine of the survivors (the reference's refine step),
         // then emit only this shard's k best
-        coarse.refine(k)(ResidentServe.dist(qv, _, ip)).rows(qid)
+        if (refine) coarse.refine(k)(ResidentServe.dist(qv, _, ip)).rows(qid)
+        else coarse.rows(qid)
       }
     }
   }
@@ -282,11 +331,12 @@ object ResidentCodes {
     val rt = router(idx.ivf)
     val tables = base.sparkSession.sparkContext.broadcast(
       residualTables(rt.centroids, idx.cb))
-    pin(idx.codes
+    try pin(idx.codes
         .select(col("id").cast("long"), col("cid").cast("int"), col("codes"))
         .join(base.select(col("id").cast("long"), col("vec")), "id"),
       numPartitions, Some(rt), Some(tables))(
       pq(idx.cb, Metric.L2, identity, Some(tables)))
+    catch { case e: Exception => tables.destroy(); throw e }
   }
 
   /** IVF routing over SQ8 codes: assign `base` to `ivf`'s clusters,
@@ -300,50 +350,77 @@ object ResidentCodes {
     // with nulls), so the load's dimension check is what refuses it
     pin(assigned(ivf, base).withColumn("codes", when(
         size(col("vec")) === mins.length, Sq8.encodeCol(col("vec"), mins, spans))),
-      numPartitions, Some(router(ivf)))(CodeType(mins.length, ip = false,
+      numPartitions, Some(router(ivf)))(CodeType(ip = false,
       qv => Array.tabulate(qv.length)(i =>
         math.round(255.0 * (qv(i).toDouble - mins(i)) / spans(i)).toShort),
       Sq8Scan))
+
+  /** Flat Hamming over packed sign codes (faiss IndexBinaryFlat): each
+    * row's [[VecSignPack]] words, and the query's packed by the same rule
+    * on the client. [[probeBatchCodes]] is
+    * exact Hamming kNN, integer distances carried as double. `pinFloats`
+    * also pins the float rows for [[probeBatch]]: the Hamming top-`rerank`
+    * of each shard, refined by exact `metric` (at rerank ≥ the shard
+    * population, exact float kNN). Without it only the codes cross the
+    * exchange and occupy memory. */
+  def loadHamming(base: DataFrame, numPartitions: Int,
+                  pinFloats: Boolean = false,
+                  metric: String = Metric.L2): ResidentCodes[Array[Long]] = {
+    import graft.functions.vectors._
+    // each 64-bit word as four sign-extended 16-bit slices, low half first
+    val shorts = flatten(transform(vecSignPack(col("vec")), w =>
+      array((0 until 64 by 16).map(s =>
+        shiftright(shiftleft(w, 48 - s), 48).cast("short")): _*)))
+    pin(base.select(col("id").cast("long"), lit(0).as("cid"), col("vec"),
+        shorts.as("codes")), numPartitions, None, floats = pinFloats)(
+      CodeType(metric == Metric.Ip, VecSignPack.pack, HammingScan))
+  }
 
   /** A PQ code type: m codes a row, the LUT of the `view` of the query. */
   private def pq(cb: Pq.Codebook, metric: String,
                  view: Array[Float] => Array[Float],
                  residual: Option[Broadcast[Map[Int, (Array[Float], Array[Double])]]] = None) =
-    CodeType(cb.m, metric == Metric.Ip,
+    CodeType(metric == Metric.Ip,
       qv => Pq.lutLocal(view(qv), cb, metric),
       PqScan(cb.stride, cb.dsub, residual))
 
   /** The one load: (id, cid, vec, codes) → `repartition(n, id)` → group by
     * cid → persist → [[ResidentServe.materialize]], which refuses rows of
-    * mixed dimension. A row without codes pins zeros. */
+    * mixed dimension. A shard's code width is its longest code row; a
+    * shorter row, or one without codes, pads with zeros. Without `floats`
+    * only each row's dimension crosses the exchange with its codes. */
   private def pin[P](coded: DataFrame, numPartitions: Int,
                      router: Option[CoarseRouter],
-                     tables: Option[Broadcast[_]] = None)(
+                     tables: Option[Broadcast[_]] = None,
+                     floats: Boolean = true)(
       code: CodeType[P]): ResidentCodes[P] = {
     val spark = coded.sparkSession
     import spark.implicits._
-    val width = code.width
     val rdd = coded
-      .select(col("id"), col("cid"), col("vec"), col("codes"))
+      .select(col("id"), col("cid"),
+        if (floats) col("vec") else lit(null).cast("array<float>"),
+        col("codes"), size(col("vec")))
       .repartition(numPartitions, col("id"))
-      .as[(Long, Int, Array[Float], Array[Short])].rdd
+      .as[(Long, Int, Array[Float], Array[Short], Int)].rdd
       .mapPartitions { it =>
-        val clusters = it.toArray.groupBy(_._2).map { case (cid, rs) =>
+        val rows = it.toArray
+        val width = rows.iterator.map(r => if (r._4 == null) 0 else r._4.length)
+          .foldLeft(0)(math.max)
+        val clusters = rows.groupBy(_._2).map { case (cid, rs) =>
           val codes = new Array[Short](rs.length * width)
           var r = 0
           while (r < rs.length) {
             val c = rs(r)._4
-            if (c != null) System.arraycopy(c, 0, codes, r * width, width)
+            if (c != null) System.arraycopy(c, 0, codes, r * width, c.length)
             r += 1
           }
           cid -> ((rs.map(_._1), codes, rs.map(_._3)))
         }
-        Iterator.single(CodeShard(clusters, width))
+        Iterator.single(CodeShard(clusters, width, rows.map(_._5).distinct))
       }
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val dim = ResidentServe.materialize(rdd)(
-      _.clusters.valuesIterator.flatMap(_._3.iterator.map(_.length)))
-    new ResidentCodes(spark, rdd, router, dim, code, tables)
+    val dim = ResidentServe.materialize(rdd)(_.dims.iterator)
+    new ResidentCodes(spark, rdd, router, dim, code, tables, floats)
   }
 
   /** `base` rows with their `ivf` cluster: (id, cid, vec). */

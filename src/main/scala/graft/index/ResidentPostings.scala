@@ -92,7 +92,7 @@ final class ResidentPostings(spark: SparkSession, rdd: RDD[PostingShard]) {
     // Rejecting qv <= 0 at entry makes budgeted and exact candidate
     // domains agree by construction (tf weights are >= 1, so no real
     // caller is constrained).
-    ResidentServe.validateLens(k, -1, Iterator.empty)
+    ResidentServe.validate(k, -1, Iterator.empty)
     require(qs.forall(_._3.forall(_ > 0L)),
       "ResidentPostings serves strictly positive weights (tf domain): " +
         "negative query weights would invert the impact order of a " +

@@ -42,31 +42,25 @@ private[graft] object ResidentServe {
     * `k` ≥ 1 and every query vector finite and (`dim` ≥ 0) of the index
     * dimension. `dim` < 0 means the index holds no rows, so any finite
     * query is answerable (with nothing). */
-  def validate(k: Int, dim: Int, qvs: Iterator[Array[Float]]): Unit =
-    validateLens(k, dim, qvs.map { v =>
+  def validate(k: Int, dim: Int, qvs: Iterator[Array[Float]]): Unit = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    qvs.foreach { v =>
       var i = 0
       while (i < v.length) {
         require(java.lang.Float.isFinite(v(i)),
           s"query component $i is ${v(i)}: query values must be finite")
         i += 1
       }
-      v.length
-    })
-
-  /** [[validate]] over query lengths alone, for query forms with no float
-    * components (packed binary codes). */
-  def validateLens(k: Int, dim: Int, lens: Iterator[Int]): Unit = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    lens.foreach { l =>
-      require(dim < 0 || l == dim,
-        s"query dimension $l does not match the index dimension $dim")
+      require(dim < 0 || v.length == dim,
+        s"query dimension ${v.length} does not match the index dimension $dim")
     }
   }
 
   /** Materialize freshly persisted shards — the action that pins them
     * before the first probe — and return their common vector dimension
     * (-1 for an index with no rows). `lens` lists a shard's row
-    * dimensions; rows of differing dimension are refused at load. */
+    * dimensions; rows of differing dimension are refused at load, and a
+    * refused load unpersists the shards it filled. */
   def materialize[S](rdd: RDD[S])(lens: S => Iterator[Int]): Int =
     materializeKeyed(rdd)(_ => ())(lens)._1
 
@@ -86,6 +80,7 @@ private[graft] object ResidentServe {
     }.collect()
     val lo = perPart.iterator.map(_._3).foldLeft(Int.MaxValue)(math.min)
     val hi = perPart.iterator.map(_._4).foldLeft(-1)(math.max)
+    if (hi >= 0 && lo != hi) rdd.unpersist()
     require(hi < 0 || lo == hi, s"resident rows mix dimensions $lo and $hi")
     val where = perPart.toSeq
       .flatMap { case (p, keys, _, _) => keys.map(k => (k, p)) }

@@ -617,10 +617,13 @@ class IndexSpec extends AnyFunSuite with SparkSuite {
       def rs(df: DataFrame) =
         df.select("qid", "id", "rank").as[(Long, Long, Long)].collect().toSet
       // nprobe = C and rerank = n: every row reaches the exact float
-      // re-rank → brute force, quantization error irrelevant
+      // re-rank → brute force, quantization error irrelevant; an unbounded
+      // rerank is the same point (each shard's buffer is capped at the rows
+      // it routes to)
       val n = base.count().toInt
-      assert(rs(served.probeLocal(queries, 10, nprobe = served.numClusters,
-        rerank = n)) === rs(truth))
+      for (r <- Seq(n, Int.MaxValue))
+        assert(rs(served.probeLocal(queries, 10, nprobe = served.numClusters,
+          rerank = r)) === rs(truth), s"rerank = $r")
       // pruned knobs: the resident scan's survivor set equals the dataflow
       // form's (same integer coarse distances, same (dist, id) tie-break),
       // so the refined rows match exactly
@@ -1139,7 +1142,7 @@ class IndexSpec extends AnyFunSuite with SparkSuite {
   test("ProbeSlices.striped parity holds for the ADC-mass and binary-rerank " +
        "kernels") {
     // ADVICE r12: the bench stripes probeBatchMass (the IVF families) and
-    // probeBatchRerank (hamming rerank) too — pin their striping contract
+    // the refined Hamming probe too — pin their striping contract
     // alongside the flat/scan/routed/sparse/maxsim parities so a future
     // change to those kernels can't silently violate the qid-independence
     // assumption striping rests on.
@@ -1154,16 +1157,12 @@ class IndexSpec extends AnyFunSuite with SparkSuite {
         r => (r._1, r._4)).toSeq ===
         adc.probeBatchMass(qs, 10, minMass = 0.5, rerank = 40).toSeq)
     } finally adc.unload()
-    val bin = ResidentBinary.load(base, numPartitions = 4, pinFloats = true)
+    val bin = ResidentCodes.loadHamming(base, numPartitions = 4, pinFloats = true)
     try {
-      import graft.functions.vectors._
-      val bq = queries.select($"qid".cast("long"),
-        vecSignPack($"qvec").as("qcode"), $"qvec")
-        .as[(Long, Array[Long], Array[Float])].collect()
-      assert(ProbeSlices.striped(bq, 3)(
-        st => bin.probeBatchRerank(st, k = 10, c = 25))(
+      assert(ProbeSlices.striped(qs, 3)(
+        st => bin.probeBatch(st, k = 10, rerank = 25))(
         r => (r._1, r._4)).toSeq ===
-        bin.probeBatchRerank(bq, k = 10, c = 25).toSeq)
+        bin.probeBatch(qs, k = 10, rerank = 25).toSeq)
     } finally bin.unload()
   }
 
@@ -1206,6 +1205,21 @@ class IndexSpec extends AnyFunSuite with SparkSuite {
     val adc = ResidentCodes.loadAdc(base, cb, numPartitions = 2)
     try rejects("ADC")(adc.probeBatch(_, 10, rerank = 20))
     finally adc.unload()
+    // a query a component short packs to the same sign words, so the
+    // Hamming forms check the float query, codes-only load included
+    val codesOnly = ResidentCodes.loadHamming(base, numPartitions = 2)
+    try {
+      rejects("Hamming codes-only")(codesOnly.probeBatchCodes(_, 10))
+      assert(intercept[IllegalArgumentException](
+        codesOnly.probeBatch(good, 10, rerank = 20)).getMessage
+        .contains("pinFloats"))
+    } finally codesOnly.unload()
+    val pinned = ResidentCodes.loadHamming(base, numPartitions = 2,
+      pinFloats = true)
+    try {
+      rejects("Hamming floats-pinned")(pinned.probeBatchCodes(_, 10))
+      rejects("Hamming refined")(pinned.probeBatch(_, 10, rerank = 20))
+    } finally pinned.unload()
   }
 
   test("every code loader refuses a corpus of mixed dimension") {
@@ -1220,9 +1234,13 @@ class IndexSpec extends AnyFunSuite with SparkSuite {
     val (rot, rcb) = Opq.trainRotatedLossless(base, m = 4)
     val idx = IvfPq.buildResidualWith(ivf, base, m = 4, ksub = 16, iters = 2)
     val (mins, spans) = Sq8.train(base)
-    def refuses(what: String)(load: => ResidentCodes[_]): Unit =
+    // a refused load leaves nothing pinned
+    def refuses(what: String)(load: => ResidentCodes[_]): Unit = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
       assert(intercept[IllegalArgumentException](load).getMessage
         .contains("mix dimensions"), what)
+      assert(spark.sparkContext.getPersistentRDDs.keySet === before, what)
+    }
     refuses("flat")(ResidentCodes.loadAdc(mixed, cb, numPartitions = 2))
     refuses("rotated")(
       ResidentCodes.loadAdcRotated(mixed, rot, rcb, numPartitions = 2))
@@ -1231,6 +1249,10 @@ class IndexSpec extends AnyFunSuite with SparkSuite {
       ResidentCodes.loadIvfResidual(mixed, idx, numPartitions = 2))
     refuses("IVF-SQ8")(
       ResidentCodes.loadIvfSq8(mixed, ivf, mins, spans, numPartitions = 2))
+    refuses("Hamming codes-only")(
+      ResidentCodes.loadHamming(mixed, numPartitions = 2))
+    refuses("Hamming floats-pinned")(
+      ResidentCodes.loadHamming(mixed, numPartitions = 2, pinFloats = true))
   }
 
   test("ProbeSlices.auto adapts stripes to partitions, cores and batch size") {

@@ -300,9 +300,9 @@ class KnnSpec extends AnyFunSuite with SparkSuite {
     val brute = Knn.knnHamming(q, b, 10)
       .select($"qid", $"id", $"dist".cast("double"), $"rank")
       .as[(Long, Long, Double, Long)].collect().sortBy(r => (r._1, r._4))
-    val served = graft.index.ResidentBinary.load(b, numPartitions = 3)
+    val served = graft.index.ResidentCodes.loadHamming(b, numPartitions = 3)
     try {
-      val got = served.probeLocal(q, 10)
+      val got = served.probeLocalCodes(q, 10)
         .as[(Long, Long, Double, Long)].collect().sortBy(r => (r._1, r._4))
       assert(got.toSeq === brute.toSeq)
     } finally served.unload()
@@ -328,12 +328,14 @@ class KnnSpec extends AnyFunSuite with SparkSuite {
     // resident two-tier: per-shard top-c unions are a SUPERSET of the
     // global top-c candidates, so served fidelity dominates the dataflow's
     // at equal c; at c = ∞ (clamped per shard) the result is exact L2
-    val served = graft.index.ResidentBinary.load(b, numPartitions = 3,
+    val served = graft.index.ResidentCodes.loadHamming(b, numPartitions = 3,
       pinFloats = true)
+    val ipLoad = graft.index.ResidentCodes.loadHamming(b, numPartitions = 3,
+      pinFloats = true, metric = Metric.Ip)
     try {
-      val sFid = Recall.mean(served.probeLocalRerank(q, 10, 30), truth, 10)
+      val sFid = Recall.mean(served.probeLocal(q, 10, rerank = 30), truth, 10)
       assert(sFid >= lo - 1e-9, s"served fidelity $sFid < dataflow $lo at c=30")
-      val exactServed = served.probeLocalRerank(q, 10, Int.MaxValue)
+      val exactServed = served.probeLocal(q, 10, rerank = Int.MaxValue)
         .select($"qid", $"id", $"rank").as[(Long, Long, Long)].collect().toSet
       assert(exactServed === truth.select($"qid", $"id", $"rank")
         .as[(Long, Long, Long)].collect().toSet)
@@ -341,12 +343,11 @@ class KnnSpec extends AnyFunSuite with SparkSuite {
       // the OOD-track metric the reference's binary tier actually serves
       val ipTruth = Knn.knnJoin(q, b, 10, Metric.Ip)
         .select($"qid", $"id", $"rank").as[(Long, Long, Long)].collect().toSet
-      val ipServed = served
-        .probeLocalRerank(q, 10, Int.MaxValue, metric = Metric.Ip)
+      val ipServed = ipLoad.probeLocal(q, 10, rerank = Int.MaxValue)
         .select($"qid", $"id", $"rank").as[(Long, Long, Long)].collect().toSet
       assert(ipServed === ipTruth,
         "ip refine at c = infinity must equal exact MIPS")
-    } finally served.unload()
+    } finally { served.unload(); ipLoad.unload() }
   }
 
   test("BinaryIvf: total assignment, nprobe=C exact, recall monotone in nprobe") {

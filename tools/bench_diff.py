@@ -1,7 +1,12 @@
 #!/usr/bin/env python3
-"""Diff two graft.Bench artifacts (stdlib only).
+"""Diff graft.Bench artifacts of two trees, A and B (stdlib only).
 
     python3 tools/bench_diff.py A.json B.json [--ignore PATH ...]
+    python3 tools/bench_diff.py A1.json A2.json [...] --vs B1.json B2.json [...]
+        [--control ROW ...] [--ignore PATH ...]
+
+With two or more artifacts a side, run them in alternating order (A B B A
+...), so slow drift of the host lands on both sides alike.
 
 An artifact is a file holding one Bench JSON object: the full object
 Bench writes to BENCH_METRICS.json / SPARK_GRAFT_BENCH_OUT, or the
@@ -19,16 +24,25 @@ Reported:
   2. value changes in qps.op and qps.recall, and in every sweep family's
      (knob, recall) pairs;
   3. streaming_replay checkpoints and recalls;
-  4. per-row q/s (headline rows and sweep points), FLAGGED only when the
-     ratio between the two medians exceeds the larger of the two rows'
-     `spread` (max/min over the row's samples);
+  4. per-row q/s (headline rows and sweep points). With one artifact a
+     side a row is FLAGGED only when the ratio between the two medians
+     exceeds the larger of the two rows' `spread` (max/min over the row's
+     samples). With repeats it is FLAGGED only when every cross-side ratio
+     (each B run over each A run) lies outside the range of the same-side
+     ratios (each run over another run of its own side), all above it or
+     all below. The row's ratio is the median cross-side ratio.
+     `--control ROW ...` names rows the change does not touch (e.g.
+     route_linear_c65536, client-side only): each row's ratio is also
+     printed divided by the median ratio of the control rows, which takes
+     out drift the whole host shared;
   5. the timing loop's records (`qps.reps_capped`: rows that took fewer
      passes, and how many) and the per-query map's seconds — sample
      counts and single-shot wall times, diagnostic only (no spread exists
      to judge them by), listed and never flagged.
 
-Exit status 0 when sections 1-3 show no difference (parity), 1 otherwise;
-timing sections never change the status.
+Sections 1-3 and 5 compare the first artifact of each side. Exit status
+0 when sections 1-3 show no difference (parity), 1 otherwise; timing
+sections never change the status.
 """
 import json
 import sys
@@ -96,6 +110,24 @@ def sweep_pairs(points):
     return pairs
 
 
+def median(xs):
+    xs = sorted(xs)
+    n = len(xs)
+    return (xs[n // 2] + xs[(n - 1) // 2]) / 2
+
+
+def row_qps(art):
+    """Every q/s row of one artifact: name -> (q/s, within-run spread)."""
+    q = art.get("qps", {})
+    sp = q.get("spread", {})
+    rows = {k: (v, sp[k]) for k, v in q.items()
+            if isinstance(v, (int, float)) and k in sp}
+    for fam, pts in q.get("sweep", {}).items():
+        for (_, knob, _), p in zip(sweep_pairs(pts), pts):
+            rows[f"sweep.{fam}:{knob}"] = (p["qps"], p["spread"])
+    return rows
+
+
 def ratio(x, y):
     if not x or not y:
         return float("inf") if (x or y) else 1.0
@@ -111,16 +143,25 @@ def section(title, out):
 
 
 def main(argv):
-    args, ignore = [], set()
+    sides, ignore, control, dest = [[], []], set(), [], None
     it = iter(argv)
     for a in it:
         if a == "--ignore":
             ignore.add(next(it))
+        elif a == "--vs":
+            dest = sides[1]
+        elif a == "--control":
+            dest = control
+        elif dest is not None:
+            dest.append(a)
         else:
-            args.append(a)
-    if len(args) != 2:
+            sides[0].append(a)
+    if not sides[1] and len(sides[0]) == 2:
+        sides = [sides[0][:1], sides[0][1:]]
+    if not sides[0] or not sides[1]:
         sys.exit(__doc__)
-    A, B = load(args[0]), load(args[1])
+    runs_a, runs_b = ([load(p) for p in s] for s in sides)
+    A, B = runs_a[0], runs_b[0]
     qa, qb = A.get("qps", {}), B.get("qps", {})
     differs = False
 
@@ -148,24 +189,40 @@ def main(argv):
                 out.append(f"  streaming_replay.{k}: {ra.get(k)} -> {rb.get(k)}")
     differs |= section("streaming_replay checkpoints/recalls", out)
 
+    per_a, per_b = [row_qps(r) for r in runs_a], [row_qps(r) for r in runs_b]
+    names = sorted(set.intersection(*(set(r) for r in per_a + per_b)))
+    repeats = len(runs_a) > 1 or len(runs_b) > 1
     rows = []
-    spa, spb = qa.get("spread", {}), qb.get("spread", {})
-    for k in sorted(set(qa) & set(qb)):
-        if isinstance(qa[k], (int, float)) and k in spa and k in spb:
-            rows.append((k, qa[k], qb[k], max(spa[k], spb[k])))
-    for fam in sorted(set(sa) & set(sb)):
-        pts_b = {knob: p for (_, knob, _), p in zip(sweep_pairs(sb[fam]), sb[fam])}
-        for (_, knob, _), p in zip(sweep_pairs(sa[fam]), sa[fam]):
-            if knob in pts_b:
-                q = pts_b[knob]
-                rows.append((f"sweep.{fam}:{knob}", p["qps"], q["qps"],
-                             max(p["spread"], q["spread"])))
-    flags = [ratio(x, y) > max(sp, 1.0) for _, x, y, sp in rows]
-    print(f"== q/s per row: {len(rows)} rows, {sum(flags)} flagged "
-          f"(median ratio > larger spread)")
-    for (name, x, y, sp), flag in zip(rows, flags):
+    for name in names:
+        xs, ys = [r[name][0] for r in per_a], [r[name][0] for r in per_b]
+        if repeats:
+            cross = [y / x if x else float("inf") for x in xs for y in ys]
+            same = max(ratio(u, v) for side in (xs, ys) for u in side
+                       for v in side)
+            flag = min(cross) > same or max(cross) < 1 / same
+            rows.append((name, median(xs), median(ys), median(cross),
+                         f"repeats x{1 / same:.2f}..x{same:.2f}", flag))
+        else:
+            (x, spx), (y, spy) = per_a[0][name], per_b[0][name]
+            sp = max(spx, spy)
+            rows.append((name, x, y, y / x if x else float("inf"),
+                         f"spread {sp:.2f}", ratio(x, y) > max(sp, 1.0)))
+    ctrl = [r[3] for r in rows if r[0] in control]
+    if control and len(ctrl) < len(set(control)):
+        sys.exit(f"--control rows not in every artifact: "
+                 f"{sorted(set(control) - set(names))}")
+    drift = median(ctrl) if ctrl else None
+    rule = ("every cross-side ratio outside the same-side range" if repeats
+            else "median ratio > larger spread")
+    print(f"== q/s per row: {len(rows)} rows, "
+          f"{sum(r[5] for r in rows)} flagged ({rule}; "
+          f"{len(runs_a)} A, {len(runs_b)} B run(s))")
+    if drift is not None:
+        print(f"   control rows {sorted(set(control))}: median ratio x{drift:.2f}")
+    for name, x, y, r, band, flag in rows:
+        adj = f"  /control x{r / drift:.2f}" if drift else ""
         print(f"{'  FLAG' if flag else '      '} {name:55s} {x:>12.1f} -> "
-              f"{y:>12.1f}  x{(y / x if x else float('inf')):.2f}  spread {sp:.2f}")
+              f"{y:>12.1f}  x{r:.2f}  {band}{adj}")
 
     ca, cb = qa.get("reps_capped", {}), qb.get("reps_capped", {})
     print(f"== timing-loop records (reps_capped, never flagged): "
@@ -174,7 +231,7 @@ def main(argv):
         if ca.get(k) != cb.get(k):
             print(f"       {k:55s} {str(ca.get(k, '-')):>8s} -> {str(cb.get(k, '-')):>8s}")
 
-    qsa, qsb = A.get("queries", {}), B.get("queries", {})
+    qsa, qsb = A.get("queries", {}), B.get("queries", {})  # first runs
     common = sorted(set(qsa) & set(qsb), key=lambda k: -max(qsa[k], qsb[k]))
     print(f"== per-query seconds (single-shot, diagnostic, never flagged): "
           f"{len(common)} common")
